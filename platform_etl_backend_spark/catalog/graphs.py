@@ -811,7 +811,7 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = F.col("user_id").cast("bigint") % 50
     b = F.floor(F.col("value")).cast("bigint") % 50
     edges = ev.where(a != b).select(a.alias("src"), b.alias("dst")).distinct()
-    clo = transitive_closure(edges, "src", "dst", broadcast_edges=True)
+    clo = transitive_closure(edges, "src", "dst")
     nodes = (
         edges.select(F.col("src").alias("n"))
         .unionByName(edges.select(F.col("dst").alias("n")))

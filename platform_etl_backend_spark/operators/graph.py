@@ -5,13 +5,16 @@ the driver from a collected vertices/edges DataFrame and derives per-node
 ancestors, descendants, children, parents and all root-paths — used only for
 the Reactome pathway ontology (~2.6k vertices).
 
-Two ports:
-- ``driver_closure``: same collect-to-driver shape with networkx —
-  appropriate for small ontologies (the reference's actual workload).
-- ``transitive_closure`` / ``ancestors``: distributed iterative-join BFS —
-  the Spark-native scale path when the graph doesn't fit the driver. Each
-  round extends frontier paths by one hop (a shuffle join on the edge key);
-  terminates at fixpoint. Edge table is broadcast when small.
+Two closures, for two consumers:
+- ``driver_closure``: the same collect-to-driver shape with networkx. It is
+  the one source of every graph column the Reactome step writes (ancestors,
+  descendants, parents, children and root paths), from a single acyclic
+  graph — right for the reference's small ontologies, and size-guarded.
+- ``transitive_closure``: distributed iterative-join BFS over (ancestor,
+  descendant) pairs for the catalog queries (``q_graph_closure``,
+  ``q_scc``) on graphs that need not fit the driver. Each round extends
+  frontier paths by one hop (a broadcast join on the edge key) and it
+  terminates at fixpoint; ``method="double"`` doubles paths instead.
 """
 
 from __future__ import annotations
@@ -30,7 +33,6 @@ def transitive_closure(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    broadcast_edges: bool = True,
     method: str = "hop",
 ) -> DataFrame:
     """All (ancestor, descendant) pairs of a DAG by iterative join.
@@ -99,9 +101,8 @@ def transitive_closure(
         )
 
     def _fresh_paths() -> DataFrame:
-        step = F.broadcast(hop) if broadcast_edges else hop
         left = frontier.select("a", F.col("d").alias("j"))
-        nxt = left.join(step, "j").select("a", F.col("d2").alias("d")).distinct()
+        nxt = left.join(F.broadcast(hop), "j").select("a", F.col("d2").alias("d")).distinct()
         return nxt.join(closure, ["a", "d"], "left_anti").localCheckpoint()
 
     for _ in range(max_iter):
@@ -124,45 +125,6 @@ def transitive_closure(
             "or use method='double' (log2-depth rounds)"
         )
     return closure.select(F.col("a").alias("ancestor"), F.col("d").alias("descendant"))
-
-
-def closure_tables(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Per-node ancestors/descendants/parents/children arrays (sorted), via
-    the distributed closure — the Spark-native version of GraphNode's output
-    schema (GraphNode.scala:54-92)."""
-    clo = transitive_closure(edges, src, dst)
-    e = edges.select(F.col(src).alias("parent"), F.col(dst).alias("child")).distinct()
-    nodes = (
-        e.select(F.col("parent").alias("id"))
-        .unionByName(e.select(F.col("child").alias("id")))
-        .distinct()
-    )
-    ancestors = clo.groupBy(F.col("descendant").alias("id")).agg(
-        F.sort_array(F.collect_set("ancestor")).alias("ancestors")
-    )
-    descendants = clo.groupBy(F.col("ancestor").alias("id")).agg(
-        F.sort_array(F.collect_set("descendant")).alias("descendants")
-    )
-    parents = e.groupBy(F.col("child").alias("id")).agg(
-        F.sort_array(F.collect_set("parent")).alias("parents")
-    )
-    children = e.groupBy(F.col("parent").alias("id")).agg(
-        F.sort_array(F.collect_set("child")).alias("children")
-    )
-    empty = F.array().cast("array<string>")
-    out = (
-        nodes.join(ancestors, "id", "left")
-        .join(descendants, "id", "left")
-        .join(parents, "id", "left")
-        .join(children, "id", "left")
-    )
-    return out.select(
-        "id",
-        *[
-            F.coalesce(F.col(c).cast("array<string>"), empty).alias(c)
-            for c in ("ancestors", "descendants", "parents", "children")
-        ],
-    )
 
 
 def connected_components(
@@ -345,6 +307,30 @@ def connected_components(
     return labels.unionByName(roots)
 
 
+def _greedy_order(g) -> list:
+    """Node order of the Eades–Lin–Smyth greedy feedback-arc-set heuristic
+    (Inf. Process. Lett. 47(6), 1993) on a loop-free digraph: sinks are
+    peeled to the back, sources to the front, and when neither is left the
+    node with the largest out-degree minus in-degree goes to the front. The
+    edges pointing backward in the order break every cycle; a DAG gets a
+    topological order. Ties go to the smallest id, so the order is a
+    function of the graph alone."""
+    g = g.copy()
+    front, back = [], []
+    while g:
+        if sinks := sorted(n for n, d in g.out_degree() if d == 0):
+            back[:0] = sinks
+            g.remove_nodes_from(sinks)
+        elif sources := sorted(n for n, d in g.in_degree() if d == 0):
+            front += sources
+            g.remove_nodes_from(sources)
+        else:
+            n = max(sorted(g), key=lambda n: g.out_degree(n) - g.in_degree(n))
+            front.append(n)
+            g.remove_node(n)
+    return front + back
+
+
 def driver_closure(
     edges: DataFrame,
     src: str = "src",
@@ -355,38 +341,38 @@ def driver_closure(
     ontologies; GraphNode.scala:45-48 does exactly this collect).
 
     Returns dict: id -> {ancestors, descendants, parents, children,
-    path: list of root-paths}.
+    paths: list of root-paths}, with every endpoint of a non-null edge as
+    a key and every list sorted.
+
+    Back-edges are dropped, as GraphNode.scala:33-40 skips the edges that
+    would close a cycle, but by a rule that depends only on the edge SET
+    (never on collect order, i.e. partitioning): self-loops go, then every
+    edge pointing backward in :func:`_greedy_order` (which keeps all edges
+    of an acyclic input). The graph — and so every list derived from it —
+    is acyclic.
 
     This shape is legal ONLY for driver-sized graphs (the reference's
-    Reactome ontology is ~2.6k vertices): ``max_edges`` bounds the
-    distinct edge count BEFORE the collect and raises ``ValueError``
-    above it — use :func:`transitive_closure` / :func:`closure_tables`
-    (the distributed path-doubling route) for anything larger. The
-    root-path enumeration below is additionally exponential in dense
-    DAGs, so the bound is a guard, not a promise of tractability.
+    Reactome ontology is ~2.6k vertices): at most ``max_edges + 1``
+    distinct edges are collected, and ``ValueError`` is raised when more
+    than ``max_edges`` arrive — use :func:`transitive_closure` for
+    anything larger. The root-path enumeration below is additionally
+    exponential in dense DAGs, so the bound is a guard, not a promise of
+    tractability.
     """
     if nx is None:  # pragma: no cover
         raise ImportError("networkx unavailable")
-    distinct_edges = edges.select(src, dst).distinct()
-    n_edges = distinct_edges.count()
-    if n_edges > max_edges:
+    rows = edges.select(src, dst).dropna().distinct().limit(max_edges + 1).collect()
+    if len(rows) > max_edges:
         raise ValueError(
-            f"driver_closure: {n_edges} distinct edges exceed "
-            f"max_edges={max_edges} — this is the collect-to-driver "
-            "reference-parity path; use transitive_closure/closure_tables "
-            "for graphs that don't fit the driver"
+            f"driver_closure: distinct edges exceed max_edges={max_edges} — "
+            "this is the collect-to-driver reference-parity path; use "
+            "transitive_closure for graphs that don't fit the driver"
         )
     g = nx.DiGraph()
-    for row in distinct_edges.collect():
-        if row[0] is not None and row[1] is not None:
-            g.add_edge(row[0], row[1])
-    # drop cycles like GraphNode.scala:33-40 (log & skip back-edges)
-    while True:
-        try:
-            cycle = nx.find_cycle(g)
-        except nx.NetworkXNoCycle:
-            break
-        g.remove_edge(*cycle[-1][:2])
+    g.add_nodes_from(n for r in rows for n in r)
+    g.add_edges_from(r for r in rows if r[0] != r[1])
+    pos = {n: i for i, n in enumerate(_greedy_order(g))}
+    g.remove_edges_from([(u, v) for u, v in g.edges if pos[u] > pos[v]])
     roots = [n for n in g.nodes if g.in_degree(n) == 0]
     out = {}
     for n in g.nodes:
@@ -398,7 +384,7 @@ def driver_closure(
             "descendants": sorted(nx.descendants(g, n)),
             "parents": sorted(g.predecessors(n)),
             "children": sorted(g.successors(n)),
-            "paths": sorted(paths) if paths else ([[n]] if n in roots else []),
+            "paths": sorted(paths) if paths else [[n]],
         }
     return out
 

@@ -8,10 +8,11 @@ Reference dataflow (``backend/Reactome.scala:13-33`` +
    from roots;
 4. joined back onto the pathway labels.
 
-This port computes ancestors/descendants/children/parents with the
-DISTRIBUTED iterative closure (operators/graph.py) — scale-safe — and the
-root-paths (inherently exponential, only sane for small ontologies) with
-the reference-parity driver-side networkx closure.
+This port builds ONE acyclic networkx graph on the driver
+(``operators/graph.py::driver_closure``, the reference's collect-to-driver
+shape), turns all five graph columns into one ``createDataFrame`` and
+left-joins it onto the cleaned pathways. Pathways without a retained edge
+get the isolated-node defaults: empty lists and the single path ``[[id]]``.
 """
 
 from __future__ import annotations
@@ -21,7 +22,9 @@ from typing import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from platform_etl_backend_spark.operators.graph import closure_tables, driver_closure
+from platform_etl_backend_spark.operators.graph import driver_closure
+
+GRAPH_COLUMNS = ("ancestors", "descendants", "parents", "children")
 
 
 def clean_pathways(pathways: DataFrame, species: str = "Homo sapiens") -> DataFrame:
@@ -40,7 +43,6 @@ def reactome_step(
     spark: SparkSession,
     inputs: Mapping[str, DataFrame],
     species: str = "Homo sapiens",
-    with_paths: bool = True,
 ) -> Mapping[str, DataFrame]:
     pathways = clean_pathways(inputs["pathways"], species)
     rel_cols = inputs["relations"].columns
@@ -53,24 +55,20 @@ def reactome_step(
         edges.join(F.broadcast(ids), "src", "left_semi")
         .join(F.broadcast(ids.withColumnRenamed("src", "dst")), "dst", "left_semi")
     )
-    topo = closure_tables(edges, "src", "dst")
-    out = pathways.join(topo, "id", "left")
+    info = driver_closure(edges, "src", "dst")
+    graph = spark.createDataFrame(
+        [(n, *(d[c] for c in GRAPH_COLUMNS), d["paths"]) for n, d in info.items()],
+        "id: string, ancestors: array<string>, descendants: array<string>, "
+        "parents: array<string>, children: array<string>, path: array<array<string>>",
+    )
     empty = F.array().cast("array<string>")
-    for c in ("ancestors", "descendants", "parents", "children"):
-        out = out.withColumn(c, F.coalesce(F.col(c), empty))
-    out = out.withColumn(
-        "isRoot", F.size("parents") == 0
-    ).withColumn("isLeaf", F.size("children") == 0)
-
-    if with_paths:
-        info = driver_closure(edges, "src", "dst")
-        path_rows = [
-            (node, d["paths"]) for node, d in info.items()
-        ]
-        paths_df = spark.createDataFrame(
-            path_rows, "id: string, path: array<array<string>>"
-        )
-        out = out.join(paths_df, "id", "left").withColumn(
-            "path", F.coalesce(F.col("path"), F.array(F.array(F.col("id"))))
-        )
+    lists = {c: F.coalesce(F.col(c), empty) for c in GRAPH_COLUMNS}
+    out = pathways.join(graph, "id", "left").select(
+        "id",
+        "name",
+        *[col.alias(c) for c, col in lists.items()],
+        (F.size(lists["parents"]) == 0).alias("isRoot"),
+        (F.size(lists["children"]) == 0).alias("isLeaf"),
+        F.coalesce(F.col("path"), F.array(F.array(F.col("id")))).alias("path"),
+    )
     return {"reactome": out}

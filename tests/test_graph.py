@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 from platform_etl_backend_spark.operators.graph import (
-    closure_tables,
     driver_closure,
     transitive_closure,
 )
@@ -25,18 +24,14 @@ def test_transitive_closure(spark):
     }
 
 
-def test_closure_tables(spark):
-    out = {r.id: r for r in closure_tables(edges_df(spark)).collect()}
-    assert out["c"].ancestors == ["a", "b", "r"]
-    assert out["c"].descendants == ["d"]
-    assert out["c"].parents == ["a", "b"]
-    assert out["c"].children == ["d"]
-    assert out["r"].ancestors == []
-    assert out["d"].descendants == []
-
-
 def test_driver_closure_paths(spark):
     info = driver_closure(edges_df(spark))
+    assert info["c"]["ancestors"] == ["a", "b", "r"]
+    assert info["c"]["descendants"] == ["d"]
+    assert info["c"]["parents"] == ["a", "b"]
+    assert info["c"]["children"] == ["d"]
+    assert info["r"]["ancestors"] == []
+    assert info["d"]["descendants"] == []
     assert info["d"]["ancestors"] == ["a", "b", "c", "r"]
     assert info["d"]["paths"] == [["r", "a", "c", "d"], ["r", "b", "c", "d"]]
     assert info["r"]["paths"] == [["r"]]

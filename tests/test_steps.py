@@ -176,6 +176,51 @@ def test_reactome_step(spark):
     assert rows["R-1"].path == [["R-1"]]
 
 
+def test_reactome_step_cyclic_input_is_acyclic_and_partition_invariant(spark):
+    """A 2-cycle, a self-loop, a null endpoint and a non-human pathway:
+    the five graph columns come from one acyclic graph, so no pathway is
+    its own ancestor and the lists agree with each other and with the
+    root paths — whatever the partitioning or the order the relations
+    arrive in."""
+    pathways = spark.createDataFrame(
+        [
+            ("r", "root", "Homo sapiens"),
+            ("a", "A", "Homo sapiens"),
+            ("b", "B", "Homo sapiens"),
+            ("x", "mouse thing", "Mus musculus"),
+        ],
+        ["_c0", "_c1", "_c2"],
+    )
+    rels = [("r", "a"), ("a", "b"), ("b", "a"), ("b", "b"), (None, "a"), ("r", "x")]
+
+    def run(relations):
+        out = run_step(spark, "reactome", {"pathways": pathways, "relations": relations})
+        return sorted(out["reactome"].collect())
+
+    schema = "_c0: string, _c1: string"
+    base = run(spark.createDataFrame(rels, schema))
+    rows = {r.id: r for r in base}
+    assert set(rows) == {"r", "a", "b"}
+    for r in base:
+        assert r.id not in r.ancestors
+        assert set(r.parents) <= set(r.ancestors)
+        assert set(r.children) <= set(r.descendants)
+        assert r.path
+        for p in r.path:
+            assert rows[p[0]].isRoot and p[-1] == r.id
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        for n in ("1", "32"):
+            spark.conf.set(key, n)
+            assert run(spark.createDataFrame(rels, schema)) == base
+    finally:
+        spark.conf.set(key, prev)
+    assert run(spark.createDataFrame(rels[::-1], schema)) == base
+    assert run(spark.createDataFrame(rels, schema).repartition(3)) == base
+
+
 def test_word2vec_deterministic_when_single_partition_seeded(spark):
     """Determinism contract (see train_word2vec docstring): with a fixed
     seed AND numPartitions=1 the trained vectors, their export, and the
