@@ -3,12 +3,13 @@
 Reference parity: ``backend/Configuration.scala`` — HOCON → pureconfig case
 classes. Here: plain dataclasses (optionally loadable from dict/JSON/YAML-ish
 nested dicts), with the same write-mode validation
-(``Configuration.scala:188-197`` checks against Spark's five modes).
+(``Configuration.scala:188-197`` checks against Spark's five modes). An IO
+block with a key that names no ``IOResourceConfig`` field is rejected.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from typing import Any, Mapping
 
 WRITE_MODES = frozenset({"error", "errorifexists", "append", "overwrite", "ignore"})
@@ -25,7 +26,8 @@ def validate_write_mode(mode: str) -> str:
 class IOResourceConfig:
     """One named input or output (reference ``IOResourceConfig``,
     Configuration.scala:205-210): format + path + reader/writer options +
-    optional partition columns."""
+    optional partition columns, plus the output layouts the steps use
+    (single-file coalesce, range clustering) and the write mode."""
 
     format: str
     path: str
@@ -43,23 +45,6 @@ class IOResourceConfig:
     # the file count (the reference pins 200); None lets AQE pick.
     range_partition_by: tuple[str, ...] = ()
     range_partitions: int | None = None
-    # Hash-bucketed table layout (Spark's bucketBy/sortBy): rows hashed on
-    # bucket_by into n_buckets files per partition, optionally sorted within
-    # each bucket. Two tables bucketed the same way join WITHOUT a shuffle —
-    # the amortize-one-shuffle-across-many-joins strategy for repeated
-    # big-big joins at 100 TB. Bucketed writes go through saveAsTable (a
-    # Spark requirement); the table name comes from ``table_name`` or the
-    # last path segment.
-    bucket_by: tuple[str, ...] = ()
-    n_buckets: int | None = None
-    sort_by: tuple[str, ...] = ()
-    table_name: str | None = None
-    # Z-order (Morton) clustering: multi-dimensional file skipping —
-    # min/max footers prune on ANY z-column, not just a single sort key
-    # (operators/layout.py). zorder_partitions bounds the file count.
-    zorder_by: tuple[str, ...] = ()
-    zorder_partitions: int | None = None
-    zorder_bits: int = 12
 
     def __post_init__(self) -> None:
         validate_write_mode(self.write_mode)
@@ -69,21 +54,15 @@ class IOResourceConfig:
             raise ValueError(
                 "coalesce would collapse range clustering; set one or the other"
             )
-        if self.bucket_by and not self.n_buckets:
-            raise ValueError("bucket_by requires n_buckets")
-        if self.sort_by and not self.bucket_by:
-            raise ValueError("sort_by requires bucket_by (Spark sortBy is per-bucket)")
-        if self.bucket_by and (self.range_partition_by or self.coalesce):
-            raise ValueError("bucket_by excludes range clustering / coalesce")
-        if self.zorder_by and len(self.zorder_by) < 2:
-            raise ValueError("zorder_by needs at least 2 columns")
-        if self.zorder_by and (
-            self.range_partition_by or self.bucket_by or self.coalesce
-        ):
-            raise ValueError("zorder_by excludes other physical layouts")
 
     @classmethod
     def from_dict(cls, d: Mapping[str, Any]) -> "IOResourceConfig":
+        """Build from a config block; a key that is not a field (a typo such
+        as ``write_mod``) raises instead of being silently ignored."""
+        known = [f.name for f in fields(cls)]
+        unknown = sorted(set(d) - set(known))
+        if unknown:
+            raise ValueError(f"unknown IO config keys {unknown}; known: {known}")
         return cls(
             format=d["format"],
             path=d["path"],
@@ -93,13 +72,6 @@ class IOResourceConfig:
             coalesce=d.get("coalesce"),
             range_partition_by=tuple(d.get("range_partition_by", ())),
             range_partitions=d.get("range_partitions"),
-            bucket_by=tuple(d.get("bucket_by", ())),
-            n_buckets=d.get("n_buckets"),
-            sort_by=tuple(d.get("sort_by", ())),
-            table_name=d.get("table_name"),
-            zorder_by=tuple(d.get("zorder_by", ())),
-            zorder_partitions=d.get("zorder_partitions"),
-            zorder_bits=d.get("zorder_bits", 12),
         )
 
 

@@ -2,10 +2,14 @@
 
 Reference parity: ``spark/IoHelpers.scala`` —
 - ``IOResource`` (:14) couples a DataFrame with its IO config.
-- ``readFrom`` (:48-72): each configured input becomes a lazy scan.
-- ``writeTo`` (:98-196): partitionBy + options + mode + save, with optional
-  duplicate outputs in extra formats, caching the plan once so it isn't
-  recomputed per format (:141-166).
+- ``readFrom`` (:48-72): each configured input becomes a lazy scan —
+  ``format`` + ``path`` + options, through Spark's own sources. Two
+  engine formats sit beside them: ``obo`` (ontology stanzas, parsed on the
+  driver like the reference) and ``record_text`` (UniprotKB-style records
+  through Spark's text source with a custom record delimiter).
+- ``writeTo`` (:98-196): partitionBy + options + mode + save. The
+  reference's duplicate outputs in extra formats are not ported: no config
+  uses them.
 
 Scale notes: writes go through ``partitionBy`` for partition-pruned
 downstream scans; single-file outputs use ``coalesce(1)`` only when the
@@ -52,16 +56,6 @@ def read_single(spark: SparkSession, conf: IOResourceConfig) -> DataFrame:
 
         delim = dict(conf.options).get("delimiter", "//\n")
         return read_delimited_records(spark, conf.path, delim)
-    if conf.format == "flat_record":
-        # Python DataSource API variant of record_text (same rows; byte-range
-        # partitioned). Registration is idempotent per session.
-        from platform_etl_backend_spark.sources.pydatasource import register
-
-        register(spark)
-        reader = spark.read.format("flat_record").option("path", conf.path)
-        if conf.options:
-            reader = reader.options(**dict(conf.options))
-        return reader.load()
     reader = spark.read.format(conf.format)
     if conf.options:
         reader = reader.options(**dict(conf.options))
@@ -75,62 +69,30 @@ def read_from(
     return {name: IOResource(read_single(spark, c), c) for name, c in inputs.items()}
 
 
-def write_single(resource: IOResource, extra_formats: tuple[str, ...] = ()) -> None:
-    """Write one resource; optionally duplicate to extra formats.
-
-    Mirrors IoHelpers.scala:106-166 — when extra formats are requested the
-    plan is cached so each format's write reuses the computed data instead
-    of re-running the whole dataflow.
-    """
-    df, conf = resource.data, resource.configuration
-    if extra_formats:
-        df = df.cache()
-    _write(df, conf, conf.format, conf.path)
-    for fmt in extra_formats:
-        _write(df, conf, fmt, f"{conf.path.rstrip('/')}_{fmt}")
-    if extra_formats:
-        df.unpersist()
-
-
 def apply_output_layout(df: DataFrame, conf: IOResourceConfig) -> DataFrame:
     """Physical layout requested by the config, applied just before the
     write: range clustering (Interaction.scala:440 — each output file a
-    disjoint key range; one range exchange, no semantic change) and/or the
+    disjoint key range; one range exchange, no semantic change) or the
     single-file coalesce."""
     if conf.range_partition_by:
         if conf.range_partitions:
             df = df.repartitionByRange(conf.range_partitions, *conf.range_partition_by)
         else:
             df = df.repartitionByRange(*conf.range_partition_by)
-    if conf.zorder_by:
-        from platform_etl_backend_spark.operators.layout import zorder_cluster
-
-        n = conf.zorder_partitions or df.sparkSession.sparkContext.defaultParallelism
-        df = zorder_cluster(df, list(conf.zorder_by), n, bits=conf.zorder_bits)
     if conf.coalesce:
         df = df.coalesce(conf.coalesce)
     return df
 
 
-def _write(df: DataFrame, conf: IOResourceConfig, fmt: str, path: str) -> None:
-    df = apply_output_layout(df, conf)
-    writer = df.write.mode(conf.write_mode)
+def write_single(resource: IOResource) -> None:
+    """Write one resource (IoHelpers.scala:106-120)."""
+    conf = resource.configuration
+    writer = apply_output_layout(resource.data, conf).write.mode(conf.write_mode)
     if conf.partition_by:
         writer = writer.partitionBy(*conf.partition_by)
     if conf.options:
         writer = writer.options(**dict(conf.options))
-    if conf.bucket_by:
-        # Hash-bucketed layout: co-bucketed tables join shuffle-free
-        # (asserted in tests/test_bucketed_write.py). Spark requires
-        # bucketBy to go through the catalog, so the write is an EXTERNAL
-        # table at the configured path.
-        table = conf.table_name or path.rstrip("/").rsplit("/", 1)[-1]
-        writer = writer.bucketBy(conf.n_buckets, *conf.bucket_by)
-        if conf.sort_by:
-            writer = writer.sortBy(*conf.sort_by)
-        writer.format(fmt).option("path", path).saveAsTable(table)
-        return
-    writer.format(fmt).save(path)
+    writer.format(conf.format).save(conf.path)
 
 
 def write_to(outputs: Mapping[str, IOResource]) -> None:

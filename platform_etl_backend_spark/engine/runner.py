@@ -38,24 +38,31 @@ def load_config(path: str) -> dict:
 
 def run_steps(step_names: list[str], config: Mapping[str, Any],
               spark: SparkSession | None = None) -> None:
-    """Run steps sequentially in the order given (Main.scala:33-40)."""
-    from platform_etl_backend_spark.steps import STEPS  # late: avoid cycles
+    """Run steps sequentially in the order given (Main.scala:33-40). Every
+    step name and IO config block is checked before a session starts or any
+    step runs, so a bad name or key late in the list writes nothing."""
+    from platform_etl_backend_spark.steps import STEPS, run_step  # late: avoid cycles
 
+    unknown = [n for n in step_names if n not in STEPS]
+    if unknown:
+        raise ValueError(f"unknown step {unknown}; known: {sorted(STEPS)}")
     steps_conf = config.get("steps", {})
+    plan = []
+    for name in step_names:
+        conf = steps_conf.get(name, {})
+        out_conf = {
+            k: IOResourceConfig.from_dict(v) for k, v in conf.get("output", {}).items()
+        }
+        plan.append((name, parse_input_map(conf.get("input", {})), out_conf,
+                     conf.get("params", {})))
     own_session = spark is None
     if spark is None:
         spark = get_spark(extra_conf=config.get("spark", {}))
     try:
-        for name in step_names:
-            if name not in STEPS:
-                raise ValueError(f"unknown step '{name}'; known: {sorted(STEPS)}")
-            conf = steps_conf.get(name, {})
-            inputs = read_from(spark, parse_input_map(conf.get("input", {})))
-            dfs = {k: r.data for k, r in inputs.items()}
-            outputs = STEPS[name](spark, dfs, **conf.get("params", {}))
-            out_conf = {
-                k: IOResourceConfig.from_dict(v) for k, v in conf.get("output", {}).items()
-            }
+        for name, in_conf, out_conf, params in plan:
+            inputs = read_from(spark, in_conf)
+            outputs = run_step(spark, name, {k: r.data for k, r in inputs.items()},
+                               **params)
             write_to(
                 {
                     k: IOResource(df, out_conf[k])

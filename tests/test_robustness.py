@@ -54,6 +54,44 @@ def test_csv_malformed_rows_dropped(spark, tmp_path):
     assert [(r.id, r.v) for r in df.orderBy("id").collect()] == [("1", "a"), ("2", "b")]
 
 
+def test_record_text_reader_is_split_invariant(spark, tmp_path):
+    """format=record_text gives the same records whether the file is one
+    split or ~50 splits of 97 bytes (records cut mid-delimiter, at record
+    start, at split end): the trailing undelimited record is kept, records
+    of spaces only are dropped, and an empty file has no rows."""
+    from platform_etl_backend_spark.engine.session import session_scoped_conf
+
+    delim = "//\n"
+    parts = []
+    for i in range(200):
+        if i % 17 == 0:
+            parts.append("   ")  # spaces only: dropped
+        elif i % 23 == 0:
+            parts.append("")  # empty: dropped
+        else:
+            parts.append(f"ID   rec{i}\n" + "x" * (i % 11) + "\n")
+    body = delim.join(parts) + delim + "tail-no-delim\n"
+    p = tmp_path / "recs.txt"
+    p.write_text(body)
+    empty = tmp_path / "empty.txt"
+    empty.write_text("")
+    want = sorted(r for r in body.split(delim) if r.strip(" "))
+    assert "tail-no-delim\n" in want and "   " not in want
+
+    def read(path):
+        conf = IOResourceConfig(format="record_text", path=str(path),
+                                options={"delimiter": delim})
+        return read_single(spark, conf)
+
+    assert sorted(r.record for r in read(p).collect()) == want
+    assert read(empty).count() == 0
+    with session_scoped_conf(spark, {"spark.sql.files.maxPartitionBytes": "97"}):
+        split = read(p)
+        assert split.rdd.getNumPartitions() > 10
+        assert sorted(r.record for r in split.collect()) == want
+        assert read(empty).count() == 0
+
+
 def test_embedding_step_via_runner(spark, tmp_path):
     pubs = spark.createDataFrame(
         [("spark query engine",), ("spark fast engine",)] * 5, ["text"]

@@ -83,6 +83,37 @@ def test_unknown_step_raises(spark, config):
         run_steps(["nope"], load_config(str(conf_path)), spark=spark)
 
 
+def test_unknown_step_raises_before_any_step_runs(spark, config):
+    """A bad name late in the list fails the call before the valid steps
+    ahead of it write anything."""
+    conf_path, tmp_path = config
+    with pytest.raises(ValueError, match="unknown step.*nope"):
+        run_steps(["reactome", "nope"], load_config(str(conf_path)), spark=spark)
+    assert not (tmp_path / "out" / "reactome").exists()
+
+
+def test_io_config_rejects_unknown_keys(spark, config):
+    """A misspelt IO key (``write_mod``) or a removed layout knob raises a
+    ValueError naming it, instead of being silently dropped — and the
+    runner raises it before writing any output."""
+    from platform_etl_backend_spark.engine.config import IOResourceConfig
+
+    with pytest.raises(ValueError, match="write_mod"):
+        IOResourceConfig.from_dict(
+            {"format": "parquet", "path": "/tmp/x", "write_mod": "overwrite"}
+        )
+    with pytest.raises(ValueError, match="table_name"):
+        IOResourceConfig.from_dict(
+            {"format": "parquet", "path": "/tmp/x", "table_name": "t"}
+        )
+    conf_path, tmp_path = config
+    conf = load_config(str(conf_path))
+    conf["steps"]["go"]["output"]["go"]["write_mod"] = "overwrite"
+    with pytest.raises(ValueError, match="write_mod"):
+        run_steps(["reactome", "go"], conf, spark=spark)
+    assert not (tmp_path / "out" / "reactome").exists()
+
+
 def test_csv_reader_options(spark, tmp_path):
     """S2 coverage: sep/comment/nullValue/header reader options."""
     from platform_etl_backend_spark.engine.config import IOResourceConfig
