@@ -5,35 +5,6 @@ the bucket key into a local sort-merge."""
 
 from __future__ import annotations
 
-import pytest
-
-from platform_etl_backend_spark.engine.config import IOResourceConfig
-from platform_etl_backend_spark.engine.io import IOResource, write_single
-
-
-def test_bucket_config_round_trip_and_validation():
-    conf = IOResourceConfig.from_dict(
-        {
-            "format": "parquet",
-            "path": "/tmp/t",
-            "write_mode": "overwrite",
-            "bucket_by": ["k"],
-            "n_buckets": 8,
-            "sort_by": ["k"],
-            "table_name": "t",
-        }
-    )
-    assert conf.bucket_by == ("k",) and conf.n_buckets == 8
-    assert conf.sort_by == ("k",) and conf.table_name == "t"
-    with pytest.raises(ValueError, match="n_buckets"):
-        IOResourceConfig(format="parquet", path="/t", bucket_by=("k",))
-    with pytest.raises(ValueError, match="sort_by"):
-        IOResourceConfig(format="parquet", path="/t", sort_by=("k",))
-    with pytest.raises(ValueError, match="excludes"):
-        IOResourceConfig(
-            format="parquet", path="/t", bucket_by=("k",), n_buckets=4, coalesce=1
-        )
-
 
 def test_cobucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     """lineitem and orders bucketed on the order key: the join plan must
@@ -50,20 +21,8 @@ def test_cobucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         ("bkt_orders", orders, "o_orderkey"),
     ):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        write_single(
-            IOResource(
-                df,
-                IOResourceConfig(
-                    format="parquet",
-                    path=str(tmp_path / name),
-                    write_mode="overwrite",
-                    bucket_by=(key,),
-                    n_buckets=8,
-                    sort_by=(key,),
-                    table_name=name,
-                ),
-            )
-        )
+        (df.write.mode("overwrite").option("path", str(tmp_path / name))
+         .bucketBy(8, key).sortBy(key).saveAsTable(name))
     a = spark.table("bkt_lineitem")
     b = spark.table("bkt_orders")
     with_conf = spark.conf

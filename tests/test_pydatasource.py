@@ -1,29 +1,39 @@
-"""Python DataSource API reader (sources/pydatasource.py): byte-range split
-correctness vs the Hadoop-conf reader, at every tricky split size."""
+"""Record-delimited text reader (``format: record_text``): byte-range split
+correctness against Hadoop's TextInputFormat with the same record
+delimiter, at every tricky split size."""
 
 from __future__ import annotations
 
 import pytest
 
-from platform_etl_backend_spark.sources.flatfile import read_delimited_records
-from platform_etl_backend_spark.sources.pydatasource import register
-
-REF = "/root/reference/src/test/resources"
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _register(spark):
-    register(spark)
+from platform_etl_backend_spark.engine.config import IOResourceConfig
+from platform_etl_backend_spark.engine.io import read_single
+from platform_etl_backend_spark.engine.session import session_scoped_conf
 
 
-def _py_read(spark, path, split_bytes, delimiter="//\n"):
-    return (
-        spark.read.format("flat_record")
-        .option("path", path)
-        .option("delimiter", delimiter)
-        .option("split_bytes", str(split_bytes))
-        .load()
-    )
+def _read(spark, path, split_bytes, delimiter="//\n"):
+    """Read through the config-driven reader with files split every
+    ``split_bytes`` bytes."""
+    conf = IOResourceConfig(format="record_text", path=str(path),
+                            options={"delimiter": delimiter})
+    with session_scoped_conf(
+        spark, {"spark.sql.files.maxPartitionBytes": str(split_bytes)}
+    ):
+        df = read_single(spark, conf)
+        return df.rdd.getNumPartitions(), sorted(r.record for r in df.collect())
+
+
+def _hadoop_records(spark, path, delimiter="//\n"):
+    """The same file through Hadoop TextInputFormat with a custom record
+    delimiter, dropping records of spaces only."""
+    recs = spark.sparkContext.newAPIHadoopFile(
+        str(path),
+        "org.apache.hadoop.mapreduce.lib.input.TextInputFormat",
+        "org.apache.hadoop.io.LongWritable",
+        "org.apache.hadoop.io.Text",
+        conf={"textinputformat.record.delimiter": delimiter},
+    ).values().collect()
+    return sorted(r for r in recs if r.strip(" "))
 
 
 @pytest.mark.parametrize("split_bytes", [1, 7, 64, 1024, 10**7])
@@ -34,155 +44,36 @@ def test_matches_hadoop_reader_at_any_split(spark, tmp_path, split_bytes):
     p = tmp_path / "recs.txt"
     body = "".join(f"line{i}a\nline{i}b\n//\n" for i in range(25)) + "tail-no-delim\n"
     p.write_text(body)
-    expected = sorted(
-        r.record for r in read_delimited_records(spark, str(p)).collect()
-    )
-    got = sorted(r.record for r in _py_read(spark, str(p), split_bytes).collect())
+    expected = _hadoop_records(spark, p)
+    assert len(expected) == 26 and "tail-no-delim\n" in expected
+    _, got = _read(spark, p, split_bytes)
     assert got == expected
 
 
 def test_partition_count_scales_with_file_size(spark, tmp_path):
     p = tmp_path / "big.txt"
     p.write_text("".join(f"rec{i}\n//\n" for i in range(200)))
-    df = _py_read(spark, str(p), split_bytes=100)
-    assert df.rdd.getNumPartitions() > 10  # genuinely split, not one task
-    n_all = _py_read(spark, str(p), split_bytes=10**7).count()
-    assert df.count() == n_all == 200
-
-
-def test_uniprot_fixture_parity(spark):
-    """The reference's own uniprot sample reads identically through the
-    DataSource-API reader and the Hadoop-conf reader."""
-    path = f"{REF}/uniprot/sample_10.txt"
-    hadoop = sorted(r.record for r in read_delimited_records(spark, path).collect())
-    pyds = sorted(r.record for r in _py_read(spark, path, split_bytes=2048).collect())
-    assert pyds == hadoop
-    assert len(pyds) == 10
+    n_parts, split = _read(spark, p, split_bytes=100)
+    assert n_parts > 10  # genuinely split, not one task
+    _, whole = _read(spark, p, split_bytes=10**7)
+    assert split == whole and len(whole) == 200
 
 
 def test_empty_file(spark, tmp_path):
     p = tmp_path / "empty.txt"
     p.write_text("")
-    assert _py_read(spark, str(p), split_bytes=64).count() == 0
+    assert _read(spark, p, split_bytes=64)[1] == []
 
 
 def test_flat_record_through_engine_io(spark, tmp_path):
-    """The config-driven reader accepts format=flat_record."""
-    from platform_etl_backend_spark.engine.config import IOResourceConfig
-    from platform_etl_backend_spark.engine.io import read_single
-
+    """A flat file of ``//``-delimited records reads through the
+    config-driven reader as one row per record, in a ``record`` column."""
     p = tmp_path / "r.txt"
     p.write_text("a\n//\nb\n//\n")
     df = read_single(
         spark,
-        IOResourceConfig(format="flat_record", path=str(p),
+        IOResourceConfig(format="record_text", path=str(p),
                          options=(("delimiter", "//\n"),)),
     )
+    assert df.columns == ["record"]
     assert sorted(r.record for r in df.collect()) == ["a\n", "b\n"]
-
-
-def test_writer_roundtrip_with_commit_protocol(spark, tmp_path):
-    """write via the DataSource commit protocol -> read back identical;
-    _SUCCESS manifest records the committed count, no _tmp leftovers."""
-    import os
-
-    src = tmp_path / "in.txt"
-    src.write_text("".join(f"r{i}\n//\n" for i in range(40)))
-    df = _py_read(spark, str(src), split_bytes=64)
-    out = str(tmp_path / "out")
-    (df.repartition(4).write.format("flat_record")
-       .option("path", out).option("delimiter", "//\n").mode("append").save())
-    assert os.path.exists(f"{out}/_SUCCESS")
-    assert open(f"{out}/_SUCCESS").read().strip() == "40"
-    assert not os.path.exists(f"{out}/_tmp")
-    back = _py_read(spark, f"{out}/part-*.txt", split_bytes=10**6)
-    assert sorted(r.record for r in back.collect()) == sorted(
-        r.record for r in df.collect()
-    )
-
-
-def test_stream_reader_tails_appended_records(spark, tmp_path):
-    """The streaming source emits exactly the complete records appended
-    since the last offset — a tail-follow of a growing flat file."""
-    import time
-
-    p = tmp_path / "grow.txt"
-    p.write_text("a1\n//\na2\n//\npartial-without-delim")
-    stream = (
-        spark.readStream.format("flat_record")
-        .option("path", str(p)).option("delimiter", "//\n").load()
-    )
-    q = (
-        stream.writeStream.format("memory").queryName("tailf")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-        got1 = {r.record for r in spark.table("tailf").collect()}
-        assert got1 == {"a1\n", "a2\n"}  # incomplete tail not emitted
-        with open(p, "a") as fh:
-            fh.write("-done\n//\nb2\n//\n")  # completes the partial + one more
-        q.processAllAvailable()
-        got2 = {r.record for r in spark.table("tailf").collect()}
-        assert got2 == {"a1\n", "a2\n", "partial-without-delim-done\n", "b2\n"}
-    finally:
-        q.stop()
-
-
-def test_obo_udtf_matches_driver_parser(spark, tmp_path):
-    """flat_record + ParseOboTerm UDTF (executor-side) == read_obo
-    (driver-side) on the same ontology."""
-    from platform_etl_backend_spark.functions.udtfs import read_obo_distributed
-    from platform_etl_backend_spark.sources.flatfile import read_obo
-
-    obo = (
-        "format-version: 1.2\nontology: go\n\n"
-        "[Term]\nid: GO:0000001\nname: mitochondrion inheritance\n"
-        "is_a: GO:0048308 ! organelle inheritance\n"
-        "is_a: GO:0048311 ! mitochondrion distribution\n\n"
-        "[Term]\nid: GO:0000002\nname: old thing\nis_obsolete: true\n\n"
-        "[Typedef]\nid: part_of\nname: part of\n"
-    )
-    p = tmp_path / "go.obo"
-    p.write_text(obo)
-    driver = {
-        (r.id, r.name, tuple(r.is_a), r.obsolete)
-        for r in read_obo(spark, str(p)).collect()
-    }
-    dist = {
-        (r.id, r.name, tuple(r.is_a), r.obsolete)
-        for r in read_obo_distributed(spark, str(p)).collect()
-    }
-    assert dist == driver
-    assert ("GO:0000001", "mitochondrion inheritance",
-            ("GO:0048308", "GO:0048311"), False) in dist
-    assert ("GO:0000002", "old thing", (), True) in dist
-
-
-def test_stream_writer_commits_per_batch_exactly_once(spark, tmp_path):
-    """End-to-end plug-in streaming: flat_record stream source -> flat_record
-    stream sink; records appended between microbatches land in distinct
-    committed batch files, each exactly once."""
-    src = tmp_path / "src.txt"
-    src.write_text("s1\n//\ns2\n//\n")
-    out = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.format("flat_record")
-        .option("path", str(src)).option("delimiter", "//\n").load()
-    )
-    q = (
-        stream.writeStream.format("flat_record")
-        .option("path", out).option("delimiter", "//\n")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-        with open(src, "a") as fh:
-            fh.write("s3\n//\n")
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    back = _py_read(spark, f"{out}/batch-*.txt", split_bytes=10**6)
-    assert sorted(r.record for r in back.collect()) == ["s1\n", "s2\n", "s3\n"]
