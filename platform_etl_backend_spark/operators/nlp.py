@@ -80,23 +80,13 @@ def stem(tokens: Column) -> Column:
     return F.transform(tokens, stem_token)
 
 
-def label_key(c: Column | str, exact: bool = False) -> Column:
+def label_key(c: Column | str) -> Column:
     """``labelN`` grounding join key: normalize → tokenize → de-stop → stem →
-    sorted distinct → joined (Grounding.scala:380-400 contract).
-
-    ``exact=True`` swaps the Catalyst regexp-chain stemmer for the
-    char-exact Porter pandas UDF (``operators/porter.py``) matching the
-    reference's Spark-NLP Stemmer. The choice is global per pipeline run:
-    LUT build and mention matching must use the same stemmer or the labelN
-    join keys diverge.
+    sorted distinct → space-joined (Grounding.scala:380-400 contract), with
+    the Catalyst regexp-chain stemmer. The char-exact Porter pipeline is
+    ``reference_label_key``.
     """
-    clean = remove_stopwords(tokenize(normalize(c)))
-    if exact:
-        from platform_etl_backend_spark.operators.porter import porter_stem_tokens
-
-        toks = porter_stem_tokens(clean)
-    else:
-        toks = stem(clean)
+    toks = stem(remove_stopwords(tokenize(normalize(c))))
     return F.concat_ws(" ", F.sort_array(F.array_distinct(toks)))
 
 

@@ -4,8 +4,8 @@ nested tissue documents.
 Reference dataflow (``backend/Expression.scala``): literal-map column
 application for reliability/level codes (:21-51), melt of three wide
 matrices + union + group-max merge (:64-90), tissue→EFO mapping via full
-joins with an except-based fallback for unlabeled tissues (:95-145), and
-nested tissue-struct assembly per gene (:188-259).
+joins matched on label or expression id (:95-145; unmatched tissues are
+dropped), and nested tissue-struct assembly per gene (:188-259).
 """
 
 from __future__ import annotations
@@ -124,27 +124,17 @@ def generate_baseline_info(normal_tissue: DataFrame, baseline: DataFrame) -> Dat
 
 
 def select_tissues(tissues: DataFrame, efo_map: DataFrame) -> DataFrame:
-    """Label resolution with except-based fallback (Expression.scala:112-145)."""
-    by_label = tissues.join(efo_map, F.col("labelNew") == F.col("Tissue"), "left")
-    by_expr_id = tissues.join(efo_map, F.col("expressionId") == F.col("Tissue"), "left")
-    both = by_label.unionByName(by_expr_id)
-
-    empty_labels = (
-        both.where(F.col("labelNew").isNull())
-        .withColumn("TissueDef", F.col("Tissue"))
-        .select("Gene", "TissueDef")
-    )
-    has_labels = both.where(F.col("labelNew").isNotNull())
-    missing = empty_labels.subtract(
-        has_labels.withColumnRenamed("Tissue", "TissueDef").select("Gene", "TissueDef")
-    )
-    missing_records = (
-        both.join(missing, ["Gene"], "right")
-        .where(F.col("TissueDef") == F.col("Tissue"))
-        .withColumnRenamed("TissueDef", "labelDef")
-    )
-    return has_labels.withColumn("labelDef", F.col("labelNew")).unionByName(
-        missing_records, allowMissingColumns=True
+    """Label resolution: match each tissue to the EFO map by label or by
+    expression id (Expression.scala:112-145). Unmatched tissues are dropped;
+    the reference's except-based fallback for them yields only null efoIds,
+    which ``generate_expressions`` filters out (:205)."""
+    # full, not inner, joins keep the nullable fields of the reference's right join
+    by_label = tissues.join(efo_map, F.col("labelNew") == F.col("Tissue"), "full")
+    by_expr_id = tissues.join(efo_map, F.col("expressionId") == F.col("Tissue"), "full")
+    return (
+        by_label.unionByName(by_expr_id)
+        .where(F.col("Tissue").isNotNull() & F.col("labelNew").isNotNull())
+        .withColumn("labelDef", F.col("labelNew"))
     )
 
 

@@ -23,18 +23,18 @@ from platform_etl_backend_spark.functions.columns import harmonic_fn
 from platform_etl_backend_spark.operators.nlp import label_key, reference_label_key
 
 
-def _grounding_key(c, exact_stemmer: bool, key_mode: str):
+def _grounding_key(c, key_mode: str):
     """labelN key used by BOTH the LUT build and the sentence matcher —
     the two sides must always agree or the grounding join silently loses
     matches. ``key_mode='engine'`` is the default oracle-checkable pipeline
-    (space-joined, optional exact Porter); ``'reference'`` is the char-exact
+    (space-joined, regexp-chain stemmer); ``'reference'`` is the char-exact
     reference contract (operators/nlp.py reference_label_key: Google stop
     list, split-char tokenization, Porter, ''-joined — Grounding.scala
     parity, see tests/test_grounding_parity.py)."""
     if key_mode == "reference":
         return reference_label_key(c, "LT")
     if key_mode == "engine":
-        return label_key(c, exact=exact_stemmer)
+        return label_key(c)
     raise ValueError(f"key_mode must be 'engine' or 'reference', got {key_mode!r}")
 
 # (section, rank, weight) — reference.conf:700-708 publication_section_ranks
@@ -113,17 +113,13 @@ def preprocess_epmc(epmc: DataFrame) -> DataFrame:
     )
 
 
-def build_entity_lut(
-    entities: DataFrame, exact_stemmer: bool = False, key_mode: str = "engine"
-) -> DataFrame:
+def build_entity_lut(entities: DataFrame, key_mode: str = "engine") -> DataFrame:
     """(id, name, type) + synonyms → (keywordId, type, labelN) grounding LUT.
 
     Keeps the best keyword per normalized label via dense_rank (the
     reference's ambiguity resolution, Grounding.scala:187-194).
-    ``exact_stemmer`` selects the char-exact Porter path (operators/porter.py)
-    matching the reference's Spark-NLP Stemmer; ``key_mode='reference'``
-    switches the WHOLE key pipeline to the char-exact reference contract.
-    LUT and matcher must agree on both flags.
+    ``key_mode='reference'`` switches the WHOLE key pipeline to the
+    char-exact reference contract. LUT and matcher must agree on it.
     """
     base = entities.select(
         F.col("id").alias("keywordId"),
@@ -135,7 +131,7 @@ def build_entity_lut(
         F.coalesce(F.col("priority"), F.lit(1.0)).alias("score"),
     )
     keyed = base.withColumn(
-        "labelN", _grounding_key(F.col("label"), exact_stemmer, key_mode)
+        "labelN", _grounding_key(F.col("label"), key_mode)
     ).where(F.col("labelN") != "")
     w = Window.partitionBy("type", "labelN").orderBy(F.desc("score"), F.asc("keywordId"))
     return (
@@ -156,8 +152,7 @@ def split_sentences(publications: DataFrame, text_col: str = "text") -> DataFram
 
 
 def match_sentences(
-    sentences: DataFrame, lut: DataFrame, max_ngram: int = 3,
-    exact_stemmer: bool = False, key_mode: str = "engine",
+    sentences: DataFrame, lut: DataFrame, max_ngram: int = 3, key_mode: str = "engine",
 ) -> DataFrame:
     """Ground candidate n-gram spans against the LUT on labelN keys.
 
@@ -182,7 +177,7 @@ def match_sentences(
     candidates = sentences.select(
         "pmid", "section", "sentence_idx", F.explode(F.array_distinct(spans)).alias("span")
     ).withColumn(
-        "labelN", _grounding_key(F.col("span"), exact_stemmer, key_mode)
+        "labelN", _grounding_key(F.col("span"), key_mode)
     ).where(F.col("labelN") != "")
     return (
         candidates.join(F.broadcast(lut), "labelN")
@@ -391,8 +386,7 @@ def epmc_annotations(raw: DataFrame, uris: Mapping[str, str] | None = None) -> D
 
 
 def literature_step(
-    spark: SparkSession, inputs: Mapping[str, DataFrame],
-    exact_stemmer: bool = False,
+    spark: SparkSession, inputs: Mapping[str, DataFrame]
 ) -> Mapping[str, DataFrame]:
     out: dict[str, DataFrame] = {}
     if {"abstracts", "fulltexts", "epmc_ids"} <= set(inputs):
@@ -403,9 +397,9 @@ def literature_step(
         )
         out["epmc_publications"] = replace_spaces_schema(preprocess_epmc(merged))
     if "entities" in inputs and "publications" in inputs:
-        lut = build_entity_lut(inputs["entities"], exact_stemmer=exact_stemmer)
+        lut = build_entity_lut(inputs["entities"])
         sentences = split_sentences(inputs["publications"])
-        matches = match_sentences(sentences, lut, exact_stemmer=exact_stemmer)
+        matches = match_sentences(sentences, lut)
         out.update(
             {
                 "matches": matches,

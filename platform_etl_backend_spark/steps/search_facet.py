@@ -22,9 +22,10 @@ Parity notes per family (datasourceId semantics differ by family):
   disease table (TA ids are disease ids), datasourceId = TA id.
 
 Scale: every family is a map-side explode + one hash aggregation on
-(label, category, datasourceId); the GO/TA lookups are broadcast joins so
-no family adds more than one shuffle. The reference's coalesce(200) output
-hygiene lives in the writer config, not here.
+(label, category, datasourceId), so its keys are unique without a distinct;
+the GO/TA lookups are broadcast joins so no family adds more than one
+shuffle. The reference's coalesce(200) output hygiene lives in the writer
+config, not here.
 """
 
 from __future__ import annotations
@@ -75,7 +76,6 @@ def simple_facet(df: DataFrame, label_field: str, category: str, id_field: str) 
         .agg(F.collect_set("id").alias("entityIds"))
         .withColumn("datasourceId", F.lit(None).cast("string"))
         .select(*FACET_SCHEMA_COLS)
-        .distinct()
     )
 
 
@@ -100,7 +100,6 @@ def array_facet(
         .groupBy("label", "category", "datasourceId")
         .agg(F.collect_set("id").alias("entityIds"))
         .select(*FACET_SCHEMA_COLS)
-        .distinct()
     )
 
 
@@ -123,7 +122,6 @@ def tractability_facets(targets: DataFrame) -> DataFrame:
         .agg(F.collect_set("id").alias("entityIds"))
         .withColumn("datasourceId", F.lit(None).cast("string"))
         .select(*FACET_SCHEMA_COLS)
-        .distinct()
     )
 
 
@@ -153,7 +151,6 @@ def go_facets(targets: DataFrame, go: DataFrame) -> DataFrame:
         .groupBy("label", "category", "datasourceId")
         .agg(F.collect_set("ensemblGeneId").alias("entityIds"))
         .select(*FACET_SCHEMA_COLS)
-        .distinct()
     )
 
 
@@ -204,7 +201,6 @@ def therapeutic_area_facets(diseases: DataFrame) -> DataFrame:
         .groupBy("label", "category", "datasourceId")
         .agg(F.collect_set("diseaseId").alias("entityIds"))
         .select(*FACET_SCHEMA_COLS)
-        .distinct()
     )
 
 
@@ -221,7 +217,6 @@ def disease_name_facets(diseases: DataFrame) -> DataFrame:
         .groupBy("label", "category", "datasourceId")
         .agg(F.collect_set("id").alias("entityIds"))
         .select(*FACET_SCHEMA_COLS)
-        .distinct()
     )
 
 

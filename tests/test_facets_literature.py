@@ -70,6 +70,37 @@ def test_search_facet_step(spark):
     assert ta.datasourceId == "EFO_CANCER" and ta.entityIds == ["EFO_1"]
 
 
+def test_search_facet_keys_are_unique(spark):
+    """Each facet family aggregates on (label, category, datasourceId), so
+    both outputs have one row per key, null labels included."""
+    base = _targets(spark)
+    targets = base.unionByName(spark.createDataFrame(
+        [("ENSG3", "BRCA1", None,
+          [{"location": "nucleus", "source": "UniProt", "termSl": "SL-0191"},
+           {"location": "nucleus", "source": "HPA", "termSl": "SL-0191"}],
+          [{"label": "Enzyme", "level": "l2"}, {"label": None, "level": "l1"}],
+          [{"pathway": "DNA Repair", "pathwayId": "R-1"}] * 2,
+          [{"id": "GO:1", "aspect": "P"}, {"id": "GO:2", "aspect": "P"}],
+          [{"modality": "SM", "id": "High-Quality Pocket", "value": True}] * 2),
+         ("ENSG4", None, None, None, None, None, None, None)],
+        base.schema,
+    ))
+    go = spark.createDataFrame([("GO:1", "DNA repair")], ["id", "name"])
+    diseases = spark.createDataFrame(
+        [("EFO_1", "breast carcinoma", ["EFO_CANCER", "EFO_CANCER"]),
+         ("EFO_2", "breast carcinoma", ["EFO_CANCER"]),
+         ("EFO_3", None, None),
+         ("EFO_CANCER", "cancer or benign tumor", None)],
+        "id: string, name: string, therapeuticAreas: array<string>",
+    )
+    out = run_step(spark, "search_facet", {
+        "targets": targets.repartition(3), "go": go, "diseases": diseases.repartition(3),
+    })
+    for name in ("facets_target", "facets_disease"):
+        keys = [(r.label, r.category, r.datasourceId) for r in out[name].collect()]
+        assert len(keys) == len(set(keys)), name
+
+
 def test_search_step(spark):
     targets = spark.createDataFrame(
         [("ENSG1", "BRCA1", "breast cancer gene 1",

@@ -24,7 +24,9 @@ import json
 import textwrap
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
+from platform_etl_backend_spark.engine.session import session_scoped_conf
 from platform_etl_backend_spark.steps import run_step
 
 OBO_SAMPLE = textwrap.dedent("""\
@@ -369,6 +371,71 @@ def test_step_golden_snapshot(spark, tmp_path, step):
         "`python -m tests.test_golden_snapshots` and commit the digests"
     )
     assert _compute(spark, tmp_path, step) == GOLDEN[step]
+
+
+# Pinned ``schema.json()`` digests, nullability included, which the
+# ``simpleString`` types in ``snapshot_digest`` do not see. A change here
+# changes the parquet schema every consumer reads.
+SCHEMA_PINS: dict[str, dict[str, str]] = {
+    "expression": {"expressions": "e1dce44beff98e60"},
+    "go": {"go": "138aaf80ae368e86"},
+    "interaction": {
+        "interaction_evidences": "8e520ed306dc5487",
+        "interactions_agg": "4609ae43fc078721",
+        "interactions_unmatched": "6877ffa55d15a436",
+    },
+    "literature": {
+        "cooccurrences": "e9a6ab3d2589620c",
+        "matches": "1b263f2fe8db7444",
+        "relevance": "586c5864492e2c0e",
+    },
+    "openfda": {"significant": "5cc6fdabbe065a32", "unfiltered": "0f37b3a6911e7ebb"},
+    "otar": {"otar_projects": "a6e56c96e5870163"},
+    "reactome": {"reactome": "616dfe341ecaa403"},
+    "search": {
+        "associations_with_drugs": "dde664fd36857b8b",
+        "search_disease": "c160e35003a0e8b6",
+        "search_target": "c160e35003a0e8b6",
+    },
+    "search_ebi": {
+        "ebisearchAssociations": "8c98c8080072fe2f",
+        "ebisearchEvidence": "8c98c8080072fe2f",
+    },
+    "search_facet": {"facets_disease": "acbceb59d393f373", "facets_target": "fd86595fe502e3aa"},
+    "target": {"target": "7a419d6d64ecde0b"},
+}
+
+
+def schema_digest(df) -> str:
+    return hashlib.sha256(df.schema.json().encode("utf-8")).hexdigest()[:16]
+
+
+@pytest.mark.parametrize("step", sorted(BUILDERS))
+def test_step_output_schema_pinned(spark, tmp_path, step):
+    outputs = run_step(spark, step, BUILDERS[step](spark, tmp_path))
+    got = {name: schema_digest(df) for name, df in sorted(outputs.items())}
+    assert got == SCHEMA_PINS[step]
+
+
+_CODEGEN_XFAIL = {
+    "openfda": pytest.mark.xfail(
+        strict=True, raises=Py4JJavaError,
+        reason="ROADMAP item 4(a): the LLR projection's generated code grows "
+               "beyond 64 KB",
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "step", [pytest.param(s, marks=_CODEGEN_XFAIL.get(s, ())) for s in sorted(BUILDERS)]
+)
+def test_step_outputs_compile_without_codegen_fallback(spark, tmp_path, step):
+    """Every output write compiles whole-stage codegen; with the fallback
+    off, a plan that would drop to interpreted code fails the write."""
+    outputs = run_step(spark, step, BUILDERS[step](spark, tmp_path))
+    with session_scoped_conf(spark, {"spark.sql.codegen.fallback": "false"}):
+        for name, df in outputs.items():
+            df.write.parquet(str(tmp_path / "out" / name))
 
 
 def test_snapshot_digest_is_partitioning_invariant(spark, tmp_path):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from platform_etl_backend_spark.operators.porter import porter_stem, porter_stem_tokens
-from platform_etl_backend_spark.operators.nlp import label_key, stem_token
+from platform_etl_backend_spark.operators.nlp import stem_token
 
 # (word, canonical whole-algorithm Porter output)
 VECTORS = [
@@ -75,16 +75,3 @@ def test_catalyst_stemmer_divergence_characterized(spark):
     # and on all simple plurals; pin a floor so regressions surface
     assert agree >= 15, f"lite/Porter agreement collapsed: {agree}/{len(rows)}"
 
-
-def test_label_key_exact_contract(spark):
-    """labelN contract with the exact stemmer: normalize → tokenize →
-    de-stop → Porter → sorted distinct join; LUT build and matching agree."""
-    df = spark.createDataFrame(
-        [("Activated B-cell receptors",), ("receptor activation in B cells",)],
-        ["label"],
-    )
-    keys = [r.k for r in df.select(label_key("label", exact=True).alias("k")).collect()]
-    # 'activated'→activ / 'activation'→activ, 'receptors'/'receptor'→receptor,
-    # 'cells'/'cell'→cell, 'b' kept, 'in' stopworded
-    assert keys[0] == "activ b cell receptor"
-    assert keys[1] == "activ b cell receptor"

@@ -293,9 +293,9 @@ def test_expression_step(spark):
 def test_expression_efo_fallback(spark):
     """Expression.scala:95-145 fallback semantics: a tissue known only to the
     expression LUT (not the EFO map) keeps its own name as efoId through the
-    full-join fallback; a tissue known to neither map reaches the except-based
-    missing-label path with a null efoId and is dropped (:205 filter, the
-    reference's 'Missing tissues. Fixme.' behavior)."""
+    full-join fallback; a tissue known to neither map has a null efoId and is
+    dropped (:205 filter, the reference's 'Missing tissues. Fixme.'
+    behavior); an EFO map row that no tissue matches yields no document."""
     inputs = _expression_inputs(spark)
     inputs["tissues"] = spark.createDataFrame(
         [
@@ -307,6 +307,10 @@ def test_expression_efo_fallback(spark):
     inputs["exprmap"] = spark.createDataFrame(
         [("liver", "liver"), ("heart", "heart")], ["_c0", "_c1"]
     )
+    inputs["efomap"] = inputs["efomap"].unionByName(spark.createDataFrame(
+        [("lung", "UBERON_0002048", "lung", ["respiratory"], ["lung organ"])],
+        ["tissue_id", "efo_code", "label", "anatomical_systems", "organs"],
+    ))
     rows = {
         r.id: r.tissues
         for r in run_step(spark, "expression", inputs)["expressions"].collect()
@@ -317,6 +321,9 @@ def test_expression_efo_fallback(spark):
     assert heart.label == "heart" and heart.organs == []
     assert heart.protein.cell_type[0].name == "myocytes"
     assert "kidney" not in by_efo and None not in by_efo  # unmapped dropped
+    # the unmatched EFO row adds no document and no tissue entry
+    assert set(rows) == {"G1", "G2"}
+    assert all(t.efo_code != "UBERON_0002048" for ts in rows.values() for t in ts)
 
 
 def test_interaction_generate_mapping(spark):
