@@ -15,7 +15,6 @@ opentargets/platform-etl-backend (reference: /root/reference, Scala/Spark
 - ``plans``      — physical-plan introspection/assertions (broadcast,
                    pushdown) used to keep 100TB-scale plans honest
 - ``steps``      — end-to-end step dataflows mirroring the reference's CLI
-- ``streaming``  — Structured Streaming variants of the batch operators
 
 Everything is declarative DataFrame/SQL first; Python UDFs appear only where
 Catalyst genuinely cannot express the semantics (seeded Monte-Carlo

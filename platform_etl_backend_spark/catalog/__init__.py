@@ -152,68 +152,73 @@ from platform_etl_backend_spark.catalog import vectors  # noqa: E402,F401
 # prefix of the round-4-latest cohort (q_agg_basic .. q_weighted_sample).
 # Changed plans added mid-round front by displacing from the BACK of the
 # prefix — the rotation test recomputes the exact expected set.
+#
+# ROUND-13 WINDOW: the two round-12 dedup plan changes that were never
+# recorded (q_prefix_jaccard, q_containment_join) are fronted, and the
+# other 48 slots take the stale rotation prefix: the round-4-latest tail
+# (q_value_histogram, q_weighted_sample, q_winsorized_mean), the whole
+# round-5-latest cohort, and the alphabetical front of round 6.
 # ---------------------------------------------------------------------------
 
 _DRIVER_WINDOW: tuple[str, ...] = (
-    # -- round-12 changed plans (first batch): recall-eval verify derived
-    #    from the truth pass; closure-double batched materialization.
-    #    Seats displace the BACK of the stale prefix (q_value_histogram,
-    #    q_weighted_sample -> next rotation).
-    "q_minhash_recall",
-    "q_weighted_minhash_recall",
+    # -- round-12 changed plans carried over: prefix_filtered_jaccard_pairs
+    #    and containment_pairs replaced the df rollup + join-back with a
+    #    shingle window count (operators/dedup.py).
+    "q_prefix_jaccard",
+    "q_containment_join",
     # -- stale rotation prefix, deterministic order (evidence round asc,
     #    then name) — derived by tests/test_evidence_freshness.py.
-    # round-2-latest:
-    "q_topk_banded_labels",
-    # round-3-latest:
-    "q_asof_join",
-    "q_audio_decode",
-    "q_image_decode",
-    "q_range_join",
-    # round-4-latest, alphabetical prefix:
-    "q_agg_basic",
-    "q_assoc_rules",
-    "q_autocorr_lag1",
-    "q_benford_profile",
-    "q_bloom_probe",
-    "q_bm25_top_terms",
-    "q_bpe_encode",
-    "q_bpe_vocab",
-    "q_cdc_chunks",
-    "q_chi_square",
-    "q_conversion_latency",
-    "q_count_min_narrow",
-    "q_dedup_keep_best",
-    "q_embedding_covariance",
-    "q_feature_hashing",
-    "q_funnel_windowed",
-    "q_hard_negatives",
-    "q_hll_estimate",
-    "q_interp_lm",
-    "q_interval_overlap",
-    "q_item_cooccur",
-    "q_kl_divergence",
-    "q_linear_trend",
-    "q_llr_contingency",
-    "q_lm_quantile_filter",
-    "q_mode_per_group",
-    "q_ohlc_bars",
-    "q_png_decode",
-    "q_profile_table",
-    "q_rag_retrieve",
-    "q_rouge_overlap",
-    "q_sentence_split",
-    "q_sequence_match",
-    "q_skipgram_pairs",
-    "q_snapshot_diff",
-    "q_sssp",
-    "q_text_normalize",
-    "q_tfidf_top_terms",
-    "q_tpch_q14",
-    "q_tpch_q18",
-    "q_tpch_q3",
-    "q_tpch_q5",
-    "q_unigram_surprisal",
+    # round-4-latest:
+    "q_value_histogram",
+    "q_weighted_sample",
+    "q_winsorized_mean",
+    # round-5-latest:
+    "q_ab_ztest",
+    "q_bloom_build",
+    "q_bmp_decode",
+    "q_cohort_ltv",
+    "q_conversion_paths",
+    "q_cuped",
+    "q_cusum_changepoint",
+    "q_dq_checks",
+    "q_gif_roundtrip",
+    "q_gini",
+    "q_hll_registers",
+    "q_html_extract",
+    "q_jl_projection",
+    "q_kaplan_meier",
+    "q_kmv_set_estimates",
+    "q_linear_interpolate",
+    "q_merge_upsert",
+    "q_moving_median",
+    "q_rfm_segments",
+    "q_rolling_zscore",
+    "q_rrf_fusion",
+    "q_seasonal_naive",
+    "q_tpch_q11",
+    "q_tpch_q13",
+    "q_tpch_q15",
+    "q_tpch_q16",
+    "q_tpch_q17",
+    "q_tpch_q19",
+    "q_tpch_q2",
+    "q_tpch_q20",
+    "q_tpch_q21",
+    "q_tpch_q22",
+    "q_tpch_q4",
+    "q_tpch_q6",
+    "q_tpch_q7",
+    "q_tpch_q8",
+    "q_tpch_q9",
+    "q_window_distribution",
+    "q_zipf_fit",
+    # round-6-latest, alphabetical prefix:
+    "q_acf_multilag",
+    "q_adamic_adar",
+    "q_ams_sketch",
+    "q_anova_f",
+    "q_attribution",
+    "q_bh_fdr",
 )
 
 

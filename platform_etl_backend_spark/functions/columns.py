@@ -104,10 +104,6 @@ def union_dataframe_different_schema(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b, allowMissingColumns=True)
 
 
-def _rename_field(name: str, fn) -> str:
-    return fn(name)
-
-
 def _rename_datatype(dt: T.DataType, fn) -> T.DataType:
     if isinstance(dt, T.StructType):
         return T.StructType([
@@ -153,28 +149,6 @@ def snake_to_lower_camel_schema(df: DataFrame) -> DataFrame:
 def replace_spaces_schema(df: DataFrame, replacement: str = "_") -> DataFrame:
     """Helpers.scala:286-295."""
     return rename_all_cols(df, lambda n: n.replace(" ", replacement))
-
-
-def bucket_columns_to_structs(
-    df: DataFrame, pattern: str, value_cols_to: str = "buckets"
-) -> DataFrame:
-    """Column-name-driven reshape (U8; Tractability.scala:17-39): columns
-    whose names match ``pattern`` (regex with groups ``modality`` and ``id``)
-    collapse into one ``array<struct<modality,id,value>>`` column.
-    """
-    rx = re.compile(pattern)
-    matched = [(c, rx.match(c)) for c in df.columns]
-    structs = [
-        F.struct(
-            F.lit(m.group("modality")).alias("modality"),
-            F.lit(m.group("id")).alias("id"),
-            F.col(c).cast("double").alias("value"),
-        )
-        for c, m in matched
-        if m
-    ]
-    drop = [c for c, m in matched if m]
-    return df.withColumn(value_cols_to, F.array(*structs)).drop(*drop)
 
 
 def priority_dedup_array(

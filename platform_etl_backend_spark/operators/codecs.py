@@ -39,15 +39,6 @@ import numpy as np
 # ---------------------------------------------------------------------------
 
 
-def encode_ppm(pixels: np.ndarray, maxval: int = 255) -> bytes:
-    """(H, W, 3) uint8 array → binary PPM."""
-    if pixels.ndim != 3 or pixels.shape[2] != 3:
-        raise ValueError(f"expected (H, W, 3), got {pixels.shape}")
-    h, w, _ = pixels.shape
-    header = f"P6\n{w} {h}\n{maxval}\n".encode("ascii")
-    return header + pixels.astype(np.uint8).tobytes()
-
-
 def _read_header_token(buf: bytes, pos: int) -> tuple[bytes, int]:
     """Next whitespace-delimited header token, skipping '#' comments."""
     n = len(buf)
@@ -85,14 +76,6 @@ def decode_ppm(payload: bytes) -> np.ndarray:
     if len(raster) != need:
         raise ValueError(f"truncated raster: need {need}, have {len(raster)}")
     return np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
-
-
-def resize_nearest(pixels: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize — deterministic integer index math only."""
-    h, w = pixels.shape[:2]
-    rows = (np.arange(out_h) * h) // out_h
-    cols = (np.arange(out_w) * w) // out_w
-    return pixels[rows][:, cols]
 
 
 def image_features(pixels: np.ndarray) -> dict[str, float]:
@@ -159,27 +142,8 @@ def audio_features(samples: np.ndarray) -> dict[str, float]:
 # BMP (Windows DIB, BITMAPINFOHEADER — public spec). Uncompressed 24-bit
 # BGR, bottom-up row order, rows padded to 4-byte boundaries: trivial but
 # REAL — the format data-lake image dumps actually contain alongside
-# PNG/JPEG. Encoder + decoder, byte-exact roundtrips.
+# PNG/JPEG.
 # ---------------------------------------------------------------------------
-
-
-def encode_bmp(pixels: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 RGB -> 24-bit BMP (BGR, bottom-up, padded rows)."""
-    import struct
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim != 3 or px.shape[2] != 3:
-        raise ValueError(f"expected (H,W,3) RGB, got {px.shape}")
-    h, w, _ = px.shape
-    row_bytes = w * 3
-    pad = (-row_bytes) % 4
-    bgr = px[::-1, :, ::-1]  # bottom-up, RGB->BGR
-    body = b"".join(row.tobytes() + b"\x00" * pad for row in bgr.reshape(h, row_bytes))
-    data_offset = 14 + 40
-    file_size = data_offset + len(body)
-    header = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, data_offset)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    return header + dib + body
 
 
 def decode_bmp(payload: bytes) -> np.ndarray:
@@ -408,32 +372,6 @@ def mp4_tkhd_payload(duration: int, width: int, height: int) -> bytes:
         + _MP4_UNITY_MATRIX
         + struct.pack(">II", width << 16, height << 16)
     )
-
-
-def build_mp4(
-    duration: int,
-    timescale: int = 1000,
-    width: int = 640,
-    height: int = 360,
-    mdat_len: int = 64,
-    free: bool = False,
-    mdat_largesize: bool = False,
-) -> bytes:
-    """Synthesize a structurally-valid minimal MP4: ftyp + (free) +
-    moov(mvhd + trak(tkhd)) + mdat. Media SAMPLE decoding is out of scope
-    (codec-library-bound); the container walk is the real, testable part."""
-    ftyp = _mp4_box(b"ftyp", b"isom" + b"\x00\x00\x02\x00" + b"isomiso2mp41")
-    moov = _mp4_box(
-        b"moov",
-        _mp4_box(b"mvhd", mp4_mvhd_payload(timescale, duration))
-        + _mp4_box(b"trak", _mp4_box(b"tkhd", mp4_tkhd_payload(duration, width, height))),
-    )
-    parts = [ftyp]
-    if free:
-        parts.append(_mp4_box(b"free", b"\x00" * 8))
-    parts.append(moov)
-    parts.append(_mp4_box(b"mdat", b"\x00" * mdat_len, largesize=mdat_largesize))
-    return b"".join(parts)
 
 
 def mp4_box_walk(payload: bytes) -> dict:

@@ -299,31 +299,6 @@ def minhash_signatures(
     )
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-) -> DataFrame:
-    """LSH banding: docs sharing any band key become candidate pairs.
-
-    The scale path: no all-pairs join — only within-bucket joins.
-    """
-    assert num_hashes % bands == 0
-    sig = minhash_signatures(df, id_col, text_col, k, num_hashes)
-    keyed = _banded_keys(sig, id_col, num_hashes, bands)
-    a = keyed.select(F.col(id_col).alias("id_a"), "band", "key")
-    b = keyed.select(F.col(id_col).alias("id_b"), "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def _banded_keys(sig: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
     rows_per_band = num_hashes // bands
     band_structs = F.array(*[
@@ -969,104 +944,15 @@ def containment_pairs(
     )
 
 
-def weighted_shingle_tf(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
-) -> DataFrame:
-    """(id, wsh: array<struct<g,w>>) — tf-WEIGHTED k-shingles per doc,
-    computed entirely map-side (distinct grams + an in-array occurrence
-    count; O(D·L) per doc, D = distinct grams, L = gram count). For very
-    long documents the explode→groupBy tf rollup (the wordcount shape)
-    bounds per-row cost instead — same output, one keyed shuffle."""
-    toks = ws_tokens(text_col)
-    whole = F.array(F.concat_ws(" ", toks))
-    grams = F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        ),
-    ).otherwise(whole)
-    pairs = F.transform(
-        F.array_distinct(grams),
-        lambda g: F.struct(
-            g.alias("g"),
-            F.size(F.filter(grams, lambda x: x == g)).cast("bigint").alias("w"),
-        ),
-    )
-    return spread(df, id_col).select(F.col(id_col), pairs.alias("wsh"))
-
-
-def _w_min_hash(wsh: Column, seed: int) -> Column:
-    """min over md5(seed:gram:i), i = 1..w — the integer-weight replica
-    expansion of consistent weighted sampling: for INTEGER weights,
-    weighted Jaccard over (gram, w) multisets EQUALS plain Jaccard over
-    the replica sets {(gram, 1..w)}, so min-hashing the replicas is an
-    EXACT weighted MinHash (collision probability = weighted Jaccard) —
-    no Gamma sampling / exp / ln, hence engine-portable by construction
-    (the ICWS real-weight generalization needs transcendentals; integer
-    tf weights don't)."""
-    return F.array_min(
-        F.flatten(
-            F.transform(
-                wsh,
-                lambda p: F.transform(
-                    F.sequence(F.lit(1), p["w"]),
-                    lambda i: F.md5(
-                        F.concat(
-                            F.lit(f"{seed}:"), p["g"], F.lit(":"),
-                            i.cast("string"),
-                        )
-                    ),
-                ),
-            )
-        )
-    )
-
-
-def weighted_minhash_sigs_from_docs(
-    docs: DataFrame, id_col: str, num_hashes: int = 8
-) -> DataFrame:
-    """H exact weighted min-hashes from a (id, wsh) frame via the
-    EXPLODE + codegen shape: the replica array ("g:i" strings) is built
-    ONCE per doc (one HOF pass), exploded to rows, and every seed's md5
-    + min then runs as ordinary codegen'd aggregation expressions with
-    map-side partial mins — one skinny keyed shuffle. The first
-    formulation evaluated the nested HOF expansion PER SEED (Spark does
-    not codegen lambda HOFs — the CDC lesson); bench caught it at 16 s
-    at sf0.1, this shape runs the identical md5 count in ~2 s."""
-    reps = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("wsh"),
-                    lambda p: F.transform(
-                        F.sequence(F.lit(1), p["w"]),
-                        lambda i: F.concat(
-                            p["g"], F.lit(":"), i.cast("string")
-                        ),
-                    ),
-                )
-            )
-        ).alias("rep"),
-    )
-    return reps.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("rep")))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def weighted_shingle_tf_rows(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
     """(id, g, w) tf-weighted k-shingle ROWS via the wordcount shape
-    (explode + keyed count): one codegen'd shuffle. The array-building
-    twin (weighted_shingle_tf) counts occurrences with an O(D*L)
-    in-array filter per doc — interpreted HOF lambdas made that the
-    dominant cost at sf0.1 (bench: 16 s); every multi-consumer catalog
-    query should start from THIS frame and derive arrays only if needed."""
+    (explode + keyed count): one codegen'd shuffle. Counting occurrences
+    inside a per-doc array instead (an O(D*L) in-array filter) ran as
+    interpreted HOF lambdas and was the dominant cost at sf0.1 (bench:
+    16 s); every multi-consumer catalog query should start from THIS
+    frame and derive arrays only if needed."""
     toks = ws_tokens(text_col)
     whole = F.array(F.concat_ws(" ", toks))
     grams = F.when(
@@ -1089,7 +975,13 @@ def weighted_minhash_sigs_from_tf(
 ) -> DataFrame:
     """H exact weighted min-hashes from a (id, g, w) row frame: replica
     rows ("g:i", i = 1..w) explode off a tiny per-row sequence, then the
-    md5 mins aggregate map-side as plain codegen expressions."""
+    md5 mins aggregate map-side as plain codegen expressions.
+
+    For INTEGER weights, weighted Jaccard over (gram, w) multisets equals
+    plain Jaccard over the replica sets {(gram, 1..w)}, so min-hashing the
+    replicas is an exact weighted MinHash (collision probability =
+    weighted Jaccard) with no Gamma sampling / exp / ln, hence
+    engine-portable by construction."""
     reps = wtf.select(
         F.col(id_col),
         F.explode(
@@ -1105,13 +997,3 @@ def weighted_minhash_sigs_from_tf(
             for i in range(num_hashes)
         ]
     )
-
-
-def weighted_minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 8
-) -> DataFrame:
-    """H exact weighted min-hashes per doc over tf-weighted k-shingles
-    (wordcount-shape tf + codegen md5 aggregation — see
-    weighted_minhash_sigs_from_tf)."""
-    wtf = weighted_shingle_tf_rows(df, id_col, text_col, k)
-    return weighted_minhash_sigs_from_tf(wtf, id_col, num_hashes)

@@ -355,9 +355,10 @@ def driver_closure(
     Reactome ontology is ~2.6k vertices): at most ``max_edges + 1``
     distinct edges are collected, and ``ValueError`` is raised when more
     than ``max_edges`` arrive — use :func:`transitive_closure` for
-    anything larger. The root-path enumeration below is additionally
-    exponential in dense DAGs, so the bound is a guard, not a promise of
-    tractability.
+    anything larger. The number of root paths grows exponentially with
+    depth in a dense DAG, so it is counted first (one pass in topological
+    order) and held to the same ``max_edges`` bound before any path is
+    built.
     """
     if nx is None:  # pragma: no cover
         raise ImportError("networkx unavailable")
@@ -373,20 +374,32 @@ def driver_closure(
     g.add_edges_from(r for r in rows if r[0] != r[1])
     pos = {n: i for i, n in enumerate(_greedy_order(g))}
     g.remove_edges_from([(u, v) for u, v in g.edges if pos[u] > pos[v]])
-    roots = [n for n in g.nodes if g.in_degree(n) == 0]
-    out = {}
-    for n in g.nodes:
-        paths = []
-        for r in roots:
-            paths.extend(nx.all_simple_paths(g, r, n))
-        out[n] = {
+    order = list(nx.topological_sort(g))
+    n_paths: dict = {}
+    for n in order:
+        n_paths[n] = sum(n_paths[u] for u in g.predecessors(n)) or 1
+    total = sum(n_paths.values())
+    if total > max_edges:
+        raise ValueError(
+            f"driver_closure: root paths exceed max_edges={max_edges} "
+            f"({total} paths over {g.number_of_edges()} edges) — the graph is "
+            "too dense for per-node path lists; use transitive_closure"
+        )
+    # every root-to-n path is a root-to-parent path extended by n; a root's
+    # only path is itself
+    paths: dict = {}
+    for n in order:
+        paths[n] = [p + [n] for u in g.predecessors(n) for p in paths[u]] or [[n]]
+    return {
+        n: {
             "ancestors": sorted(nx.ancestors(g, n)),
             "descendants": sorted(nx.descendants(g, n)),
             "parents": sorted(g.predecessors(n)),
             "children": sorted(g.successors(n)),
-            "paths": sorted(paths) if paths else [[n]],
+            "paths": sorted(paths[n]),
         }
-    return out
+        for n in g.nodes
+    }
 
 
 def pagerank(

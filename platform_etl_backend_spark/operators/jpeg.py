@@ -259,18 +259,6 @@ def _ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def _blocks(plane: np.ndarray) -> np.ndarray:
-    """(H, W) float plane padded by edge replication → (n, 8, 8) blocks in
-    raster MCU order."""
-    h, w = plane.shape
-    ph, pw = -h % 8, -w % 8
-    p = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
-    hh, ww = p.shape
-    return (
-        p.reshape(hh // 8, 8, ww // 8, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    )
-
-
 def _emit_block(w: _BitWriter, zz: np.ndarray, pred: list[int], ci: int,
                 dc_tab: dict, ac_tab: dict) -> None:
     diff = int(zz[0]) - pred[ci]

@@ -210,45 +210,6 @@ def two_pass_cumsum(
     return out.select(*keep)
 
 
-def two_pass_lead(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    value_col: str,
-    lead_col: str,
-    num_partitions: int | None = None,
-    _pre_ranged: DataFrame | None = None,
-) -> DataFrame:
-    """Global LEAD(value) over a total order, two-pass.
-
-    LEAD within each range partition; the last row of partition i borrows
-    the FIRST value of the next non-empty partition, carried on the tiny
-    per-partition frame (min over an ascending range = first in order;
-    ``value_col`` must be the leading order column or a function of the
-    row that the caller accepts partition-boundary semantics for — here it
-    is always the order key itself).
-    """
-    d = _pre_ranged if _pre_ranged is not None else ranged_with_pid(
-        df, order_cols, num_partitions
-    )
-    s_cols = list(dict.fromkeys([*order_cols, value_col]))
-    firsts = d.groupBy(PID).agg(F.min(F.struct(*s_cols)).alias("__s"))
-    w_pid = Window.orderBy(PID)
-    nxt = firsts.select(
-        PID, F.lead(F.col(f"__s.{value_col}")).over(w_pid).alias("__next_first")
-    )
-    w_local = Window.partitionBy(PID).orderBy(*order_cols)
-    out = (
-        d.join(F.broadcast(nxt), PID)
-        .withColumn(
-            lead_col,
-            F.coalesce(
-                F.lead(value_col).over(w_local), F.col("__next_first")
-            ),
-        )
-    )
-    return out.select(*list(df.columns), lead_col)
-
-
 def two_pass_cdf(
     df: DataFrame,
     order_cols: Sequence[str],

@@ -559,11 +559,6 @@ def kmv_hashes(df: DataFrame, key_col: str) -> DataFrame:
     return df.select(F.col(key_col)).distinct().select(h.alias("hv")).distinct()
 
 
-def kmv_sketch(df: DataFrame, key_col: str, k: int = KMV_K) -> DataFrame:
-    """The sketch: k smallest hash values (TakeOrderedAndProject)."""
-    return kmv_hashes(df, key_col).orderBy("hv").limit(k)
-
-
 def _est(n_col: Column, max_col: Column, k: int) -> Column:
     """(k-1)*2^48 / h_(k) when the sketch is full, else the exact held
     count (the sketch IS the set below k elements)."""
@@ -686,10 +681,7 @@ def tput_topk(counts: DataFrame, k: int = 10) -> DataFrame:
     true global count lies in [lb, ub] where lb sums the shards that DID
     report it and ub adds the unreporting shards' thresholds.
 
-    Shared by the batch q_distributed_topk query and the streaming
-    maintenance twin (``streaming/jobs.py:topk_maintenance_stream``) so
-    both compute the identical phase over their count tables. SCALE:
-    the rank window partitions by shard (the partitioning the counts
+    Used by the q_distributed_topk query. SCALE: the rank window partitions by shard (the partitioning the counts
     already have); only k*shards candidate rows plus a shard-count-sized
     threshold broadcast cross the network.
     """

@@ -34,7 +34,7 @@ cut breaks frequency ties lexicographically.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
@@ -108,13 +108,6 @@ def seed_piece_costs(
         F.floor(portable_ln_ratio(F.col("total"), F.col("freq")) * F.lit(COST_SCALE))
         .cast("bigint")
         .alias("cost_micro"),
-    )
-
-
-def _cost_lookup(m: Column, piece: Column, j: int) -> Column:
-    fallback = UNI_UNK_MICRO if j == 1 else UNI_INF_MICRO
-    return F.coalesce(
-        F.try_element_at(m, piece), F.lit(fallback).cast("bigint")
     )
 
 

@@ -3,10 +3,38 @@ their mapInPandas integration."""
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 
 from platform_etl_backend_spark.operators import codecs as C
+
+
+def encode_ppm(pixels: np.ndarray, maxval: int = 255) -> bytes:
+    """(H, W, 3) uint8 array → binary PPM."""
+    if pixels.ndim != 3 or pixels.shape[2] != 3:
+        raise ValueError(f"expected (H, W, 3), got {pixels.shape}")
+    h, w, _ = pixels.shape
+    header = f"P6\n{w} {h}\n{maxval}\n".encode("ascii")
+    return header + pixels.astype(np.uint8).tobytes()
+
+
+def encode_bmp(pixels: np.ndarray) -> bytes:
+    """(H, W, 3) uint8 RGB -> 24-bit BMP (BGR, bottom-up, padded rows)."""
+    px = np.asarray(pixels, dtype=np.uint8)
+    if px.ndim != 3 or px.shape[2] != 3:
+        raise ValueError(f"expected (H,W,3) RGB, got {px.shape}")
+    h, w, _ = px.shape
+    row_bytes = w * 3
+    pad = (-row_bytes) % 4
+    bgr = px[::-1, :, ::-1]  # bottom-up, RGB->BGR
+    body = b"".join(row.tobytes() + b"\x00" * pad for row in bgr.reshape(h, row_bytes))
+    data_offset = 14 + 40
+    file_size = data_offset + len(body)
+    header = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, data_offset)
+    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
+    return header + dib + body
 
 
 def _pixels(h=4, w=8):
@@ -15,7 +43,7 @@ def _pixels(h=4, w=8):
 
 def test_ppm_roundtrip():
     px = _pixels()
-    assert np.array_equal(C.decode_ppm(C.encode_ppm(px)), px)
+    assert np.array_equal(C.decode_ppm(encode_ppm(px)), px)
 
 
 def test_ppm_header_whitespace_and_comments():
@@ -32,16 +60,6 @@ def test_ppm_rejects_bad_magic_and_truncation():
         C.decode_ppm(b"P6\n2 2\n255\n" + b"\x00" * 5)
     with pytest.raises(ValueError, match="maxval"):
         C.decode_ppm(b"P6\n1 1\n65535\n" + b"\x00" * 3)
-
-
-def test_resize_nearest():
-    px = _pixels(4, 8)
-    small = C.resize_nearest(px, 2, 4)
-    assert small.shape == (2, 4, 3)
-    assert np.array_equal(small[0, 0], px[0, 0])
-    up = C.resize_nearest(px, 8, 16)
-    assert up.shape == (8, 16, 3)
-    assert np.array_equal(up[::2, ::2], px)
 
 
 def test_wav_roundtrip_and_features():
@@ -82,7 +100,7 @@ def test_wav_rejects_non_pcm_and_garbage():
 
 def test_decode_media_dispatch():
     px = _pixels(1, 2)
-    assert np.array_equal(C.decode_media(C.encode_ppm(px), "ppm"), px)
+    assert np.array_equal(C.decode_media(encode_ppm(px), "ppm"), px)
     # jpeg and png are REAL now; malformed payloads fail loudly
     with pytest.raises(ValueError):
         C.decode_media(b"\xff\xd8\xff", "jpeg")
@@ -96,7 +114,7 @@ def test_image_decode_features_mapinpandas(spark):
     from platform_etl_backend_spark.operators.multimodal import image_decode_features
 
     px = _pixels(4, 8)
-    rows = [(1, bytearray(C.encode_ppm(px)))]
+    rows = [(1, bytearray(encode_ppm(px)))]
     df = spark.createDataFrame(rows, "media_id bigint, ppm binary")
     out = image_decode_features(df, "media_id", "ppm").collect()[0]
     want = C.image_features(px)
@@ -394,11 +412,7 @@ def test_bmp_roundtrip_and_foreign_streams():
     import numpy as np
     import pytest
 
-    from platform_etl_backend_spark.operators.codecs import (
-        decode_bmp,
-        decode_media,
-        encode_bmp,
-    )
+    from platform_etl_backend_spark.operators.codecs import decode_bmp, decode_media
 
     rng = np.random.RandomState(3)
     for shape in [(7, 5, 3), (1, 1, 3), (16, 16, 3), (3, 9, 3)]:

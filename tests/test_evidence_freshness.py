@@ -222,6 +222,11 @@ CHANGED_CONTRACTS: dict[str, int] = {
     #   (36 → 26 / 36 → 20 Exchange).
     "q_minhash_recall": 12,
     "q_weighted_minhash_recall": 12,
+    # - prefix-filtered Jaccard / containment joins: the shingle document
+    #   frequency is a window count over the shingle partition instead of a
+    #   df rollup joined back (same pairs and scores, new plan shape).
+    "q_prefix_jaccard": 12,
+    "q_containment_join": 12,
 }
 
 

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import networkx as nx
+
 from platform_etl_backend_spark.operators.graph import (
     driver_closure,
     transitive_closure,
@@ -155,3 +157,21 @@ def test_driver_closure_refuses_large_graphs(spark):
         driver_closure(edges, max_edges=10)
     out = driver_closure(edges, max_edges=100)
     assert len(out) == 51
+
+    # Dense DAG: a root over 12 layers of 2 nodes, each layer fully joined
+    # to the next. 46 edges fit the bound, but the root paths double per
+    # layer (8,191 in all), so the path count must be refused before any
+    # path list is built.
+    layers = [[0]] + [[2 * i + 1, 2 * i + 2] for i in range(12)]
+    ladder = spark.createDataFrame(
+        [(u, v) for a, b in zip(layers, layers[1:]) for u in a for v in b],
+        "src long, dst long",
+    )
+    assert ladder.count() == 46
+    with pytest.raises(ValueError, match="root paths exceed max_edges"):
+        driver_closure(ladder, max_edges=100)
+    out = driver_closure(ladder, max_edges=8191)
+    assert sum(len(v["paths"]) for v in out.values()) == 8191
+    g = nx.DiGraph([tuple(r) for r in ladder.collect()])
+    for n, info in out.items():
+        assert info["paths"] == sorted(nx.all_simple_paths(g, 0, n)), n

@@ -2,10 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from platform_etl_backend_spark.functions.columns import (
-    bucket_columns_to_structs,
-    priority_dedup_array,
-)
+from platform_etl_backend_spark.functions.columns import priority_dedup_array
 from platform_etl_backend_spark.operators import nlp as NLP
 
 
@@ -30,20 +27,6 @@ def test_stemmer_rules(spark):
     )
     out = [r[0] for r in df.select(NLP.stem_token(F.col("w"))).collect()]
     assert out == ["poni", "caress", "cat", "agree", "runn"]
-
-
-def test_bucket_columns_to_structs(spark):
-    """Tractability.scala:17-39 shape: SM_B1_score, AB_B2_score -> structs."""
-    df = spark.createDataFrame([(1, 0.5, 0.7, "x")],
-                               ["id", "SM_B1_score", "AB_B2_score", "other"])
-    out = bucket_columns_to_structs(
-        df, r"(?P<modality>[A-Z]+)_B(?P<id>\d+)_score"
-    )
-    assert set(out.columns) == {"id", "other", "buckets"}
-    buckets = out.first().buckets
-    assert [(b.modality, b.id, b.value) for b in buckets] == [
-        ("SM", "1", 0.5), ("AB", "2", 0.7)
-    ]
 
 
 def test_priority_dedup_array(spark):

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from platform_etl_backend_spark.operators.ranking import (
     two_pass_cdf,
     two_pass_cumsum,
-    two_pass_lead,
     two_pass_ntile,
     two_pass_row_number,
 )
@@ -66,15 +65,6 @@ def test_two_pass_cumsum_matches_window(spark):
     want = df.withColumn("cum_w", F.sum("w").over(w).cast("bigint")).withColumn(
         "tot_w", F.sum("w").over(wall).cast("bigint")
     )
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_two_pass_lead_matches_window(spark):
-    # distinct-value frame (the CDF shape: lead over unique support points)
-    df = _frame(spark).select("v").distinct()
-    got = two_pass_lead(df, ["v"], "v", "v_next", num_partitions=6)
-    want = df.withColumn("v_next", F.lead("v").over(Window.orderBy("v")))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 

@@ -156,10 +156,42 @@ def test_mmr_rerank_matches_python(spark, sf_dir):
     assert [r.vec_id for r in got] != cand[:8]
 
 
+def build_mp4(
+    duration: int,
+    timescale: int = 1000,
+    width: int = 640,
+    height: int = 360,
+    mdat_len: int = 64,
+    free: bool = False,
+    mdat_largesize: bool = False,
+) -> bytes:
+    """Synthesize a structurally-valid minimal MP4: ftyp + (free) +
+    moov(mvhd + trak(tkhd)) + mdat. Media SAMPLE decoding is out of scope
+    (codec-library-bound); the container walk is the real, testable part."""
+    from platform_etl_backend_spark.operators.codecs import (
+        _mp4_box,
+        mp4_mvhd_payload,
+        mp4_tkhd_payload,
+    )
+
+    ftyp = _mp4_box(b"ftyp", b"isom" + b"\x00\x00\x02\x00" + b"isomiso2mp41")
+    moov = _mp4_box(
+        b"moov",
+        _mp4_box(b"mvhd", mp4_mvhd_payload(timescale, duration))
+        + _mp4_box(b"trak", _mp4_box(b"tkhd", mp4_tkhd_payload(duration, width, height))),
+    )
+    parts = [ftyp]
+    if free:
+        parts.append(_mp4_box(b"free", b"\x00" * 8))
+    parts.append(moov)
+    parts.append(_mp4_box(b"mdat", b"\x00" * mdat_len, largesize=mdat_largesize))
+    return b"".join(parts)
+
+
 def test_mp4_builder_walker_roundtrip_and_rejection():
     import pytest
 
-    from platform_etl_backend_spark.operators.codecs import build_mp4, mp4_box_walk
+    from platform_etl_backend_spark.operators.codecs import mp4_box_walk
 
     for free in (False, True):
         for ls in (False, True):

@@ -98,14 +98,13 @@ def _py_wminhash(tf: dict[str, int], seed: int) -> str:
 
 
 def test_weighted_shingle_tf_matches_python(spark):
-    from platform_etl_backend_spark.operators.dedup import weighted_shingle_tf
+    from platform_etl_backend_spark.operators.dedup import weighted_shingle_tf_rows
 
     rows = [(1, "a b c a b c a b"), (2, "x y"), (3, "p q r s p q r")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {
-        r["doc_id"]: {p["g"]: p["w"] for p in r["wsh"]}
-        for r in weighted_shingle_tf(df, "doc_id", "text", 3).collect()
-    }
+    got: dict[int, dict[str, int]] = {}
+    for r in weighted_shingle_tf_rows(df, "doc_id", "text", 3).collect():
+        got.setdefault(r["doc_id"], {})[r["g"]] = r["w"]
     want = {i: _py_wshingles(t) for i, t in rows}
     assert got == want
 
@@ -114,14 +113,17 @@ def test_weighted_minhash_signature_matches_python_replica_min(spark):
     """The Spark signature must equal the md5-min over the python replica
     expansion — the EXACT integer-weight consistent-sampling identity."""
     from platform_etl_backend_spark.operators.dedup import (
-        weighted_minhash_signatures,
+        weighted_minhash_sigs_from_tf,
+        weighted_shingle_tf_rows,
     )
 
     rows = [(1, "a b c a b c a b"), (2, "a b c d e f a b c"), (3, "z")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         r["doc_id"]: (r["h0"], r["h1"], r["h2"])
-        for r in weighted_minhash_signatures(df, "doc_id", "text", 3, 3).collect()
+        for r in weighted_minhash_sigs_from_tf(
+            weighted_shingle_tf_rows(df, "doc_id", "text", 3), "doc_id", 3
+        ).collect()
     }
     want = {
         i: tuple(_py_wminhash(_py_wshingles(t), s) for s in range(3))
@@ -134,7 +136,8 @@ def test_weighted_minhash_collision_rate_tracks_weighted_jaccard(spark):
     """Collision probability == weighted Jaccard (the CWS contract):
     over 64 independent hashes the match fraction must track Jw."""
     from platform_etl_backend_spark.operators.dedup import (
-        weighted_minhash_signatures,
+        weighted_minhash_sigs_from_tf,
+        weighted_shingle_tf_rows,
     )
 
     a = "the cat sat on the mat " * 4
@@ -143,7 +146,9 @@ def test_weighted_minhash_collision_rate_tracks_weighted_jaccard(spark):
     H = 64
     sig = {
         r["doc_id"]: [r[f"h{i}"] for i in range(H)]
-        for r in weighted_minhash_signatures(df, "doc_id", "text", 3, H).collect()
+        for r in weighted_minhash_sigs_from_tf(
+            weighted_shingle_tf_rows(df, "doc_id", "text", 3), "doc_id", H
+        ).collect()
     }
     rate = sum(x == y for x, y in zip(sig[1], sig[2])) / H
     ta, tb = _py_wshingles(a), _py_wshingles(b)

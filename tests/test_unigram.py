@@ -175,8 +175,6 @@ def test_tiebreak_prefers_shortest_last_piece(spark):
     ab:1, a:2, b:2 -> costs ln(5/2),ln(5/2),ln(5/1); no tie there — so
     check the invariant the implementation defines instead: when the
     single-char path cost equals the multi-char path cost, j=1 wins."""
-    from platform_etl_backend_spark.operators.unigram import _cost_lookup  # noqa: F401
-
     df = spark.createDataFrame([(0, "ab ab ab a b")], ["doc_id", "text"])
     words = word_types(df, "doc_id", "text")
     vocab = seed_piece_costs(words)
