@@ -62,8 +62,9 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
     FROM sessions GROUP BY user_id, session_idx
     """,
-    description="gap-based sessionization (30 min) via lag + running sum — the batch twin "
-    "of the streaming session-window operator",
+    description="gap-based sessionization (30 min) via lag + running sum: a gap over "
+    "30 min starts a new session; one row per (user, session) with its event count, "
+    "duration and total value",
     tags=("window", "events"),
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,8 +102,8 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
     FROM sessions GROUP BY user_id, s
     """,
-    description="native session_window gap-merge aggregation (the batch form of the "
-    "streaming session operator; boundary: gap >= 30min starts a new session)",
+    description="native session_window gap-merge aggregation (boundary: gap >= 30min "
+    "starts a new session); one row per session with its start, event count and total value",
     tags=("window", "events", "session"),
 )
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,7 +128,8 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
     FROM events GROUP BY bucket, event_type
     """,
-    description="tumbling time-window rollup (batch twin of streaming windowed agg)",
+    description="tumbling one-hour time-window rollup: event count and total value per "
+    "(hour bucket, event type)",
     tags=("agg", "events"),
 )
 def q_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -783,18 +783,15 @@ _XENC_ORACLE = f"""
 @register(
     "q_transformer_rerank",
     oracle=_XENC_ORACLE,
-    description="REAL cross-encoder rerank, now HASH-CHECKABLE (round-11 "
-    "VERDICT #9 — was the last fixable rows-only residue): the scorer is "
-    "an integer fixed-point single-layer transformer — md5-derived "
+    description="hash-checkable cross-encoder rerank, top-3 docs per query: the "
+    "scorer is an integer fixed-point single-layer transformer — md5-derived "
     "committed weights, hashed-vocab + positional + segment embeddings "
     "over [CLS] query [SEP] doc, 2-head rational attention from the CLS "
     "query (min-shifted scores, truncating division), integer layernorms "
     "(exact isqrt), softsign FFN, linear head — every op exact int64, so "
     "the Arrow mapInPandas numpy kernel (the torch/onnx deployment "
     "shape), a pure-python pin, and the relational DuckDB oracle agree "
-    "bit-for-bit. The float softmax sibling (operators/rerank.py "
-    "transformer_rerank) remains for float-model parity, pinned by "
-    "pytest. SCALE: candidate sets bounded by the generator upstream; "
+    "bit-for-bit. SCALE: candidate sets bounded by the generator upstream; "
     "scoring is map-side, one forward per record batch",
     tags=("rerank", "similarity", "pandas-udf", "ml"),
 )

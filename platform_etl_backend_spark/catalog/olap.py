@@ -770,7 +770,7 @@ def _register_hll() -> None:
             li.select(F.lit("suppkeys").alias("label"), F.col("l_suppkey").alias("k"))
         )
         # one distinct shuffle + two tiny grouped aggs for BOTH sketches
-        # (was: two full hll_estimate pipelines, each re-scanning lineitem)
+        # instead of one pipeline per sketch, each re-scanning lineitem
         return hll_estimates_grouped(keyed).orderBy("key")
 
 

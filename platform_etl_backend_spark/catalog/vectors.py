@@ -275,7 +275,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_cte_parts(k: int = 8, iters: int = 2, dim: int = 64) -> list[str]:
-    """Shared CTE chain replicating kmeans_fit + ivf_assign exactly
+    """Shared CTE chain replicating kmeans_fit + _ivf_assign_n exactly
     (bottom-k-hash init, rounded-cosine argmax assignment, decimal-sum
     dimension means); ends with ``fasg`` = (vid, vec, cell_id)."""
     cos = (

@@ -235,19 +235,16 @@ def decontamination_hits(
     id_col: str,
     text_col: str,
     k: int = 3,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: per training document, overlap with an
     evaluation/benchmark set measured in shared distinct word k-grams —
     the standard verbatim-leak check a training-data pipeline runs before
     every model train.
 
-    Scale shape: both sides shingle map-side; the eval set is BROADCAST by
-    default because benchmark suites are fixed-size (thousands of docs)
-    regardless of corpus scale — a bounded-cardinality side, unlike the
-    TF-IDF vocabulary. Pass ``broadcast_eval=False`` for an eval set that
-    grows with the corpus, which degrades to a shingle-keyed shuffle join
-    (still linear). Output: one row per CONTAMINATED training doc with
+    Scale shape: both sides shingle map-side; the eval set is BROADCAST
+    because benchmark suites are fixed-size (thousands of docs) regardless
+    of corpus scale — a bounded-cardinality side, unlike the TF-IDF
+    vocabulary. Output: one row per CONTAMINATED training doc with
     distinct-shingle hits, distinct eval docs matched, and the smallest
     matching eval id as the audit sample.
     """
@@ -257,10 +254,8 @@ def decontamination_hits(
         .select(F.col(id_col).alias("eval_id"), "shingle")
         .distinct()
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     return (
-        tr.join(ev, "shingle")
+        tr.join(F.broadcast(ev), "shingle")
         .groupBy(id_col)
         .agg(
             F.countDistinct("shingle").alias("n_hit_shingles"),
@@ -716,16 +711,20 @@ def _variant_pair_candidates(
 # they appear, which is the property storage/training-corpus dedup needs.
 #
 # Scale: O(w·n) work per document, embarrassingly parallel, no shuffle
-# until the corpus-level chunk-hash rollup. The hot path is an Arrow
-# numpy kernel (sliding-window int64 dot product): Spark does NOT codegen
+# until the corpus-level chunk-hash rollup. The chunker is an Arrow numpy
+# kernel (sliding-window int64 dot product) because Spark does NOT codegen
 # lambda higher-order functions — a per-character transform() interprets
 # ~30 expression nodes per char (~4.5s / 500 docs measured), while the
 # vectorized kernel does the same exact integer arithmetic in ~10ms. Same
 # documented pandas-boundary exception as the covariance Gram kernel:
 # per-element numeric work over wide value arrays is the one shape where
-# Catalyst's interpreted HOFs lose by orders of magnitude. The pure-
-# Catalyst twin is kept below (cdc_chunk_arrays_expr) and pinned equal to
-# the kernel by a pytest — it is the no-Python fallback and the spec.
+# Catalyst's interpreted HOFs lose by orders of magnitude.
+#
+# Spec: hash(i) = sum_j code(t[i-w+1+j])·B^(w-1-j) mod M over the w chars
+# ending at i; a boundary falls after i iff hash(i) % divisor == 0, and
+# the chunks are the spans between boundaries. Products stay < 2^41, so
+# int64 arithmetic is exact in numpy, Python and SQL alike; the pytest
+# pins the kernel against a pure-Python model of this spec.
 # ---------------------------------------------------------------------------
 
 CDC_WINDOW = 8
@@ -741,7 +740,7 @@ def cdc_chunk_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Arrow numpy kernel: codepoints -> sliding-window dot product with the
     base powers mod M -> boundary positions -> span slicing. All integer
     ops are exact (products < 2^41), so the result is bit-identical to the
-    Catalyst twin and the DuckDB oracle.
+    DuckDB oracle.
     """
     import numpy as np
 
@@ -776,71 +775,6 @@ def cdc_chunk_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     out_schema = f"{id_col} bigint, n bigint, chunks array<string>"
     return df.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
-
-
-def cdc_chunk_arrays_expr(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Pure-Catalyst CDC twin (the spec; see module note on why the hot
-    path is the Arrow kernel).
-
-
-    hash(i) = sum_j code(i-w+j)·B^(w-j) mod M over the w chars ending at i;
-    boundary after i iff hash(i) % divisor == 0. Chunks are the spans
-    between boundaries. Products stay < 2^41 (ASCII code × modulus), so
-    bigint arithmetic is exact and bit-identical across engines.
-    """
-    w, m, d = CDC_WINDOW, CDC_MOD, CDC_DIVISOR
-    out = (
-        df.select(
-            F.col(id_col),
-            F.col(text_col).alias("t"),
-            F.length(text_col).cast("bigint").alias("n"),
-        )
-        .withColumn(
-            # split-to-char-array once: per-position substring(t, i, 1) is an
-            # O(i) UTF-8 scan, turning code extraction quadratic per doc
-            "cs",
-            F.expr("transform(split(t, ''), c -> ascii(c))"),
-        )
-        .withColumn(
-            "hs",
-            # window sum unrolled to one flat lambda: a nested aggregate()
-            # per position builds an iterator per element and runs ~30x
-            # slower than this single-expression form
-            F.expr(
-                f"case when n >= {w} then "
-                f"transform(sequence({w}, length(t)), i -> ("
-                + " + ".join(
-                    f"cast(element_at(cs, i - {w - 1 - j}) as bigint) * {p}"
-                    for j, p in enumerate(CDC_POWERS)
-                )
-                + f") % {m}) else array() end"
-            ),
-        )
-        .withColumn(
-            "bpos",
-            F.expr(
-                f"case when n >= {w} then "
-                f"filter(sequence({w}, length(t)), i -> element_at(hs, i - {w} + 1) % {d} = 0) "
-                f"else cast(array() as array<int>) end"
-            ),
-        )
-        .withColumn(
-            "starts", F.expr("concat(array(cast(1 as bigint)), transform(bpos, x -> cast(x + 1 as bigint)))")
-        )
-        .withColumn("ends", F.expr("concat(transform(bpos, x -> cast(x as bigint)), array(n))"))
-        .withColumn(
-            "chunks",
-            F.expr(
-                f"case when n >= {w} then "
-                "transform(filter(sequence(1, size(starts)), "
-                "                 k -> element_at(ends, k) >= element_at(starts, k)), "
-                "          k -> substring(t, cast(element_at(starts, k) as int), "
-                "                         cast(element_at(ends, k) - element_at(starts, k) + 1 as int))) "
-                "when n > 0 then array(t) else cast(array() as array<string>) end"
-            ),
-        )
-    )
-    return out.select(id_col, "n", "chunks")
 
 
 def cdc_chunk_summary(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

@@ -134,7 +134,6 @@ def connected_components(
     max_iter: int = 30,
     check_every: int = 1,
     on_exhausted: str = "warn",
-    pre_normalized: bool = False,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -174,14 +173,13 @@ def connected_components(
     # ngram-jaccard pairs feeding q_dedup_clusters) executed TWICE — once
     # for the node set, once for the edge seed (round-9 audit; the
     # entity-resolution composite had been pre-checkpointing around
-    # exactly this). ``pre_normalized=True`` lets a caller that already
-    # guarantees distinct loop-free pairs (e.g. the fuzzy verifiers,
-    # whose output is distinct with tok_a < tok_b) skip the redundant
-    # normalization shuffle — the checkpoint fence stays either way.
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not pre_normalized:
-        e = e.where(F.col("a") != F.col("b")).distinct()
-    e = e.localCheckpoint()
+    # exactly this).
+    e = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint()
+    )
     # nodes is consumed exactly once (the roots left_anti at the end) and
     # derives from the checkpointed e, so it needs no checkpoint of its
     # own — the former eager localCheckpoint here cost one extra job +
@@ -409,7 +407,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     scale: int = 9,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Distributed PageRank (simplified variant without dangling-mass
     redistribution: dangling nodes leak rank, so ranks sum to < 1 — the
@@ -427,9 +424,9 @@ def pagerank(
     relational plan. Edges/nodes/outdeg are pinned with localCheckpoint
     (scanned every round); the rank recurrence itself stays lazy — with no
     per-round action there is nothing to recompute, and skipping the
-    per-round materialization saves ``iterations`` barrier writes. For
-    very deep runs (>~20 rounds) pass ``checkpoint_every`` to cut plan
-    depth periodically.
+    per-round materialization saves ``iterations`` barrier writes. The
+    plan grows by one join and one aggregation per round, so very deep
+    runs (>~20 rounds) pay in planning time.
     """
     dec = f"decimal(38,{scale})"
     e = (
@@ -457,7 +454,7 @@ def pagerank(
         .localCheckpoint()
     )
     ranks = nodes.select("node", F.round(F.lit(1.0 / n), scale).cast(dec).alias("pr"))
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = (
             ranks.join(ed, ranks["node"] == ed["s"])
             .select(
@@ -477,8 +474,6 @@ def pagerank(
                 .alias("pr"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
     return ranks.select("node", F.round(F.col("pr").cast("double"), 6).alias("pr"))
 
 

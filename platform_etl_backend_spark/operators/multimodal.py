@@ -11,7 +11,8 @@ Two decode tiers:
 - STUB for library-bound formats (MP3/video SAMPLE decode): ``_decode_impl``
   derives deterministic pseudo-pixels from the payload hash so the
   Spark-side plumbing — schema, batching, partitioning, UDF signature — is
-  real and testable; ``decode_or_raise`` raises honestly for those formats.
+  real and testable; ``codecs.decode_media`` raises honestly for those
+  formats.
   MP3 frame-HEADER walking (``mp3_stats``) is real — pure struct math over
   the public ISO 11172-3 header format; only Layer III audio synthesis
   remains library-bound.
@@ -105,19 +106,6 @@ def frame_sample(df: DataFrame, id_col: str, data_col: str, every: int = 2) -> D
     return df.select(
         id_col, F.explode(frames).alias("frame")
     ).select(id_col, "frame.frame_no", "frame.frame_bytes")
-
-
-def decode_or_raise(payload: bytes, fmt: str = "jpeg") -> np.ndarray:
-    """Production decode entrypoint. PPM, WAV, JPEG (baseline incl.
-    subsampling up to 2x2 AND progressive with successive approximation,
-    restart intervals in both modes), PNG (all byte-aligned depths incl.
-    16-bit and Adam7 interlace), GIF, and BMP decode for REAL via the
-    parsers in ``operators/codecs.py``, ``operators/jpeg.py``,
-    ``operators/png.py``, and ``operators/gif.py``; library-bound formats
-    (MP3/video sample decode, sub-byte-depth PNG) still raise honestly."""
-    from platform_etl_backend_spark.operators.codecs import decode_media
-
-    return decode_media(payload, fmt)
 
 
 def jpeg_roundtrip_features(

@@ -99,7 +99,6 @@ def two_pass_row_number(
     rn_col: str = "rn",
     num_partitions: int | None = None,
     total_col: str | None = None,
-    ranged_sink: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Global 1-based ROW_NUMBER over a total order, no O(n) single sort.
 
@@ -107,18 +106,10 @@ def two_pass_row_number(
     ``total_col`` is given, the grand total row count rides along on every
     row (free — it is already on the broadcast offsets frame).
 
-    ``ranged_sink``: owned-lifetime hook (round-7 ADVICE) — the internal
-    range-partitioned frame is PERSISTED (both passes must observe one
-    sampled partitioning), and catalog queries leave the release to
-    context teardown.  Long-running callers (a ``foreachBatch`` merge
-    runs once per micro-batch and would pin one cached frame per batch)
-    pass a list here, and MUST ``unpersist()`` the appended frame AFTER
-    their action completes — unpersisting earlier would re-sample the
-    range exchange and break the pid→offset mapping.
+    The internal range-partitioned frame is PERSISTED (both passes must
+    observe one sampled partitioning) and released at context teardown.
     """
     d = ranged_with_pid(df, order_cols, num_partitions)
-    if ranged_sink is not None:
-        ranged_sink.append(d)
     off = _offsets(d, {"n": F.count(F.lit(1))})
     w_local = Window.partitionBy(PID).orderBy(*order_cols)
     out = d.join(F.broadcast(off), PID).withColumn(

@@ -5,23 +5,18 @@ The retrieval pattern at scale: a cheap candidate generator (ANN / LSH /
 BM25 — all in this repo) bounds the pair set, then an expensive pairwise
 scorer reranks only the candidates. TWO scorers ship:
 
-- ``transformer`` (the REAL scoring path, default for
-  ``transformer_rerank``): a complete single-layer transformer
-  cross-encoder forward pass in numpy — hashed-vocab embeddings +
-  positional + segment embeddings over the [CLS] query [SEP] doc
-  sequence, 2-head scaled-dot-product self-attention with padding
-  masks, residual + layernorm, tanh FFN, residual + layernorm, sigmoid
-  head on the CLS vector. Weights are committed by construction
-  (deterministically generated from a fixed seed at import — the same
-  bits every process, everywhere); scoring batches ride ``mapInPandas``
-  exactly as a torch/onnx model would (weights broadcast per executor,
-  Arrow record batches in, score column out). Swap ``_forward`` for a
-  real checkpoint in production; everything around it stays.
-- ``hash`` (the cross-engine TEST twin): sha256-derived IEEE-double
+- ``int_transformer_rerank`` (the model, run by q_transformer_rerank): a
+  single-layer transformer cross-encoder in exact int64 arithmetic with
+  md5-derived weights (architecture in the section note below), so the
+  DuckDB oracle can recompute every logit. Scoring batches ride
+  ``mapInPandas`` exactly as a torch/onnx model would (weights broadcast
+  per executor, Arrow record batches in, score column out); swap
+  ``_int_forward`` for a real checkpoint in production and everything
+  around it stays.
+- ``crossencoder_rerank`` (the hash scorer): sha256-derived IEEE-double
   pseudo-scores — expressible in SQL, so the whole pipeline is
-  oracle-checkable end to end (q_crossencoder_rerank). Not a model;
-  kept because an engine-portable scorer is the only way a DuckDB
-  oracle can hash-match the pandas-UDF stage.
+  oracle-checkable end to end (q_crossencoder_rerank). Not a model; it
+  is the smallest engine-portable scorer a DuckDB oracle can hash-match.
 
 Scale notes: pairs shuffle once on the query key for the top-k window;
 scoring itself is map-side. Candidate-set size per query is the cost
@@ -83,142 +78,14 @@ def crossencoder_rerank(
     )
 
 
-# --- numpy transformer cross-encoder ---------------------------------------------
-
-_D, _V, _L, _H, _FF = 16, 64, 16, 2, 32
-_CLS, _SEP = 0, 1  # reserved vocab ids; hashed tokens land in [2, _V)
-_EPS = 1e-5
-
-
-def _init_weights() -> dict[str, np.ndarray]:
-    """Committed-by-construction weights: generated from a FIXED seed with
-    a FIXED generator (PCG64), so every process on every machine gets the
-    identical float64 bits — equivalent to checking in the arrays, without
-    a 50 KB literal blob."""
-    rng = np.random.default_rng(20260815)
-    s = 0.25
-
-    def m(*shape):
-        return rng.standard_normal(shape) * s
-
-    return {
-        "emb": m(_V, _D), "pos": m(_L, _D), "seg": m(3, _D),
-        "wq": m(_D, _D), "wk": m(_D, _D), "wv": m(_D, _D), "wo": m(_D, _D),
-        "ff1": m(_D, _FF), "b1": np.zeros(_FF), "ff2": m(_FF, _D),
-        "b2": np.zeros(_D), "head_w": m(_D), "head_b": 0.0,
-    }
-
-
-_W = _init_weights()
-
-
-def _token_ids(query_text: str, doc_text: str) -> tuple[list[int], list[int]]:
-    """[CLS] q… [SEP] d… truncated to _L, + segment ids (0 cls, 1 q, 2 d)."""
-    def bucket(tok: str) -> int:
-        return 2 + int(hashlib.md5(tok.encode()).hexdigest()[:8], 16) % (_V - 2)
-
-    ids = [_CLS]
-    segs = [0]
-    for tok in query_text.split():
-        ids.append(bucket(tok)); segs.append(1)
-    ids.append(_SEP); segs.append(1)
-    for tok in doc_text.split():
-        ids.append(bucket(tok)); segs.append(2)
-    return ids[:_L], segs[:_L]
-
-
-def _forward(ids_batch: list[list[int]], segs_batch: list[list[int]]) -> np.ndarray:
-    """Batched single-layer transformer forward pass → sigmoid scores.
-
-    Vectorized float64 numpy (einsum attention, padding masks); the pytest
-    pins it against an independent pure-python (math module, list loops)
-    implementation of the identical architecture.
-    """
-    W = _W
-    B = len(ids_batch)
-    lens = np.array([len(x) for x in ids_batch])
-    Lm = int(lens.max())
-    ids = np.zeros((B, Lm), dtype=np.int64)
-    segs = np.zeros((B, Lm), dtype=np.int64)
-    mask = np.zeros((B, Lm), dtype=bool)
-    for i, (a, g) in enumerate(zip(ids_batch, segs_batch)):
-        ids[i, : len(a)] = a
-        segs[i, : len(a)] = g
-        mask[i, : len(a)] = True
-    x = W["emb"][ids] + W["pos"][:Lm][None, :, :] + W["seg"][segs]
-
-    def layernorm(t):
-        mu = t.mean(axis=-1, keepdims=True)
-        var = ((t - mu) ** 2).mean(axis=-1, keepdims=True)
-        return (t - mu) / np.sqrt(var + _EPS)
-
-    dk = _D // _H
-    q = (x @ W["wq"]).reshape(B, Lm, _H, dk)
-    k = (x @ W["wk"]).reshape(B, Lm, _H, dk)
-    v = (x @ W["wv"]).reshape(B, Lm, _H, dk)
-    att = np.einsum("bihd,bjhd->bhij", q, k) / np.sqrt(dk)
-    att = np.where(mask[:, None, None, :], att, -1e30)
-    att = att - att.max(axis=-1, keepdims=True)
-    e = np.exp(att)
-    p = e / e.sum(axis=-1, keepdims=True)
-    ctx = np.einsum("bhij,bjhd->bihd", p, v).reshape(B, Lm, _D)
-    x = layernorm(x + ctx @ W["wo"])
-    x = layernorm(x + np.tanh(x @ W["ff1"] + W["b1"]) @ W["ff2"] + W["b2"])
-    logits = x[:, 0, :] @ W["head_w"] + W["head_b"]
-    return 1.0 / (1.0 + np.exp(-logits))
-
-
-def transformer_score_pairs(
-    pairs: DataFrame, query_id: str, doc_id: str, query_text: str, doc_text: str
-) -> DataFrame:
-    """Arrow-batched transformer scoring: one forward pass per record
-    batch, vectorized across the batch (the torch/onnx deployment shape)."""
-    schema = f"{query_id} bigint, {doc_id} bigint, score double"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            toks = [_token_ids(q, d)
-                    for q, d in zip(pdf[query_text], pdf[doc_text])]
-            scores = _forward([t[0] for t in toks], [t[1] for t in toks])
-            yield pd.DataFrame(
-                {query_id: pdf[query_id], doc_id: pdf[doc_id],
-                 "score": np.round(scores, 9)}
-            )
-
-    return pairs.select(query_id, doc_id, query_text, doc_text).mapInPandas(
-        batches, schema
-    )
-
-
-def transformer_rerank(
-    pairs: DataFrame,
-    query_id: str,
-    doc_id: str,
-    query_text: str,
-    doc_text: str,
-    k: int = 3,
-) -> DataFrame:
-    """Real-model cross-encoder rerank: transformer scores + per-query
-    top-k, ties broken on doc id ascending (deterministic)."""
-    scored = transformer_score_pairs(pairs, query_id, doc_id, query_text, doc_text)
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(doc_id))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(query_id, doc_id, "score", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-# --- integer fixed-point cross-encoder (round-11: the oracle-checkable model) --
+# --- integer fixed-point transformer cross-encoder --------------------------
 #
-# Same architecture family as the float transformer above (hashed-vocab +
-# positional + segment embeddings over [CLS] query [SEP] doc, multi-head
-# attention from the CLS query, residual + layernorm, FFN, residual +
-# layernorm, linear head) but every operation is EXACT int64 arithmetic
-# with committed conventions, so a DuckDB oracle can reproduce the scores
-# bit-for-bit (the float model's softmax/exp chain cannot be):
+# A single-layer transformer (hashed-vocab + positional + segment
+# embeddings over [CLS] query [SEP] doc, multi-head attention from the CLS
+# query, residual + layernorm, FFN, residual + layernorm, linear head)
+# where every operation is EXACT int64 arithmetic with committed
+# conventions, so a DuckDB oracle can reproduce the scores bit-for-bit (a
+# float softmax/exp chain cannot be):
 # - weights are md5-derived small integers (w = md5int6(name:i:j) % 15 - 7)
 #   — derivable in SQL, no literal blobs;
 # - attention softmax -> rational min-shifted weights a_j = s_j - min(s),

@@ -1,19 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
-Pure Catalyst implementations: dot products via ``zip_with`` + ``aggregate``
-higher-order functions (JVM-side, codegen'd), so no Python boundary is paid
-per row.
+Per-vector work (norms, centroid scoring, sign buckets) is Catalyst:
+``zip_with`` + ``aggregate`` higher-order functions, JVM-side, no Python
+boundary per row. Per-PAIR dot products — the quadratic stage of every
+top-k / ANN / dedup operator here — go through ONE Arrow kernel,
+:func:`_cell_pair_dots`, bit-identical to the Catalyst left fold; the
+division by the norms and the 6-dp ROUND stay in Catalyst (:func:`_cos`).
 
 Scale design:
-- ``brute_force_topk``: broadcast the (small) query set against the full
-  corpus — one pass over the corpus, no shuffle of the big side; the
-  per-query top-k is a windowed rank over (query, candidate) pairs. This is
-  the exact baseline; cost O(|corpus|·|queries|).
-- ``bucketed_ann``: sign-bit bucketing on leading dimensions (a fixed
-  random-hyperplane LSH with axis-aligned planes — deterministic and
-  oracle-checkable). Candidates join only within buckets: at 100TB the
-  corpus-self-join becomes |corpus|·avg_bucket_size instead of |corpus|².
-  Recall is tunable via the number of sign bits.
+- ``brute_force_topk``: the exact baseline; the corpus hashes into
+  blocks (one kernel task each) and the small query set is replicated to
+  every block, so cost is O(|corpus|·|queries|) and the corpus crosses
+  the network once.
+- ``bucketed_ann_top1``: sign-bit bucketing on leading dimensions (a
+  fixed random-hyperplane LSH with axis-aligned planes — deterministic
+  and oracle-checkable). Candidates pair only within buckets: at 100TB
+  the corpus self-join becomes |corpus|·avg_bucket_size instead of
+  |corpus|². Recall is tunable via the number of sign bits.
+- ``ivf_top1`` / ``ivf_topk``: k-means cells instead of fixed planes.
 """
 
 from __future__ import annotations
@@ -60,72 +64,17 @@ def brute_force_topk(
     id_col: str,
     vec_col: str,
     k: int = 3,
-    precision: int = 6,
-    use_kernel: bool = True,
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × corpus, windowed rank.
-    Norms are precomputed per vector (cosine_pre) — one fold per pair.
-
-    The default routes the pair dots through the bipartite Arrow kernel
-    (bit-identical to the Catalyst fold — see :func:`_cell_pair_dots`;
-    flipped in round 11 with driver-window slots for every consumer).
-    ``use_kernel=False`` keeps the pure-Catalyst twin, which a parity
-    pytest pins against the kernel."""
-    if use_kernel:
-        pairs = (
-            bipartite_dots_blocked(queries, corpus, id_col, vec_col)
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id", "neighbor_id",
-                F.round(F.col("dot") / (F.col("qn") * F.col("bn")),
-                        precision).alias("cos"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos"), F.asc("neighbor_id"))
-        return (
-            pairs.withColumn("rn", F.row_number().over(w).cast("bigint"))
-            .where(F.col("rn") <= k)
-            .select("query_id", "rn", "neighbor_id", "cos")
-        )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
-    ).withColumn("qn", norm(F.col("qv")))
-    n = corpus.sparkSession.sparkContext.defaultParallelism
-    b = corpus.repartition(n).select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(vec_col).alias("bv")
-    ).withColumn("bn", norm(F.col("bv")))
-    pairs = (
-        b.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_pre(F.col("qv"), F.col("bv"), F.col("qn"), F.col("bn")),
-                precision,
-            ).alias("cos"),
-        )
-    )
+    """Exact cosine top-k: every (query, corpus) pair, windowed rank.
+    Pair dots go through the bipartite Arrow kernel (bit-identical to the
+    Catalyst fold — see :func:`_cell_pair_dots`), norms are computed once
+    per vector."""
+    pairs = _pair_cos(bipartite_dots_blocked(queries, corpus, id_col, vec_col))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         pairs.withColumn("rn", F.row_number().over(w).cast("bigint"))
         .where(F.col("rn") <= k)
         .select("query_id", "rn", "neighbor_id", "cos")
-    )
-
-
-def ivf_assign(
-    corpus: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (IVF coarse quantizer).
-
-    Centroids are broadcast; assignment is one pass over the corpus with a
-    windowed argmin — no corpus self-join. At production scale centroids
-    come from a k-means sample; any deterministic centroid set plugs in.
-    """
-    return _ivf_assign_n(corpus, centroids, id_col, vec_col).select(
-        "vid", "vec", "cell_id"
     )
 
 
@@ -197,10 +146,12 @@ def _cells_sorted(scored: Column) -> Column:
 def _ivf_assign_n(
     corpus: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """ivf_assign that also carries each vector's precomputed norm ``vn``
-    so downstream pair joins pay one fold per pair (cosine_pre).
-    Assignment is one map-side argmax fold over the broadcast centroid
-    array — zero exchanges (see ``_centroid_cells``)."""
+    """Assign each vector to its nearest centroid (IVF coarse quantizer):
+    (vid, vec, vn, cell_id), carrying each vector's norm ``vn`` so
+    downstream pair scoring computes it once per vector. Assignment is
+    one map-side argmax fold over the broadcast centroid array — no
+    corpus self-join, zero exchanges (see ``_centroid_cells``). Any
+    deterministic centroid set plugs in (``kmeans_fit`` at scale)."""
     carr, idt = _centroid_cells(centroids, id_col, vec_col)
     v = corpus.select(
         F.col(id_col).alias("vid"), as_double_array(vec_col).alias("vec")
@@ -234,19 +185,19 @@ def _cell_pair_dots(queries: DataFrame, index: DataFrame) -> DataFrame:
     Memory shape: BOTH pair axes are chunked (4096 × 4096), so the dense
     score block is bounded (~134 MB of float64) however large a cell
     gets. The group's pair OUTPUT, though, is inherently
-    O(|cell_q| · |cell_v|) rows — the same pair volume the equi-join twin
-    would shuffle, materialized chunk by chunk on the worker before Arrow
-    hands it back. Callers must bound cell sizes BY CONSTRUCTION (the
-    IVF k-grows-with-corpus rule; ``bucket_stats`` as the pre-flight
-    audit before ``bucketed_ann_top1``; block tiling in
-    ``all_pairs_dots_blocked``): a hot cell is a cost problem for the
-    join twin and the kernel alike, and the kernel concentrates it on
-    one task. At cluster scale each cell group is one task — the same
-    per-cell parallelism as the join it replaces.
+    O(|cell_q| · |cell_v|) rows — the same pair volume an equi-join on
+    cell_id would shuffle, materialized chunk by chunk on the worker
+    before Arrow hands it back. Callers must bound cell sizes BY
+    CONSTRUCTION (the IVF k-grows-with-corpus rule; ``bucket_stats`` as
+    the pre-flight audit before ``bucketed_ann_top1``; block tiling in
+    ``all_pairs_dots_blocked``): a hot cell is a cost problem for a join
+    and the kernel alike, and the kernel concentrates it on one task. At
+    cluster scale each cell group is one task — the same per-cell
+    parallelism as an equi-join.
 
     Ids pass through untouched and may be any integral or string type
     (the output schema mirrors each side's id type); other types raise —
-    use the Catalyst pair-join twin for exotic keys.
+    cast such an id to an integral or string type first.
     """
     import numpy as np
     import pandas as pd
@@ -257,7 +208,7 @@ def _cell_pair_dots(queries: DataFrame, index: DataFrame) -> DataFrame:
     if qt not in _ID_TYPES or vt not in _ID_TYPES:
         raise TypeError(
             f"_cell_pair_dots: unsupported id type (query={qt}, index={vt});"
-            " supported: integral/string — use the Catalyst pair-join twin"
+            " cast the id to an integral or string type"
         )
 
     q = queries.select("id", "vec", "n", "cell_id", F.lit("q").alias("role"))
@@ -302,21 +253,19 @@ def _cell_pair_dots(queries: DataFrame, index: DataFrame) -> DataFrame:
     )
 
 
-def _pair_cos_catalyst(pairs_a: DataFrame, pairs_b: DataFrame,
-                       precision: int) -> DataFrame:
-    """The pure-Catalyst pair-cosine twin of :func:`_cell_pair_dots` (the
-    no-Python fallback and the spec — a pytest pins kernel == twin)."""
-    return (
-        pairs_a.join(pairs_b, "cell_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_pre(F.col("qv"), F.col("bv"), F.col("qn"), F.col("bn")),
-                precision,
-            ).alias("cos"),
-        )
+def _cos() -> Column:
+    """``round(dot / (qn * bn), 6)`` over :func:`_cell_pair_dots` output —
+    the one cosine every pair consumer ranks or thresholds on. The
+    division and the ROUND stay in Catalyst, over the kernel's
+    bit-identical raw dots."""
+    return F.round(F.col("dot") / (F.col("qn") * F.col("bn")), 6)
+
+
+def _pair_cos(dots: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos) from :func:`_cell_pair_dots` output,
+    self-pairs dropped."""
+    return dots.where(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", _cos().alias("cos")
     )
 
 
@@ -397,34 +346,14 @@ def ivf_top1(
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    precision: int = 6,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """IVF ANN (nprobe=1): candidates share the assigned centroid cell, so
-    the pair join is bounded by cell sizes instead of |corpus|²; pair dots
-    via the Arrow cell kernel (bit-identical — see :func:`_cell_pair_dots`;
-    ``use_kernel=False`` keeps the Catalyst twin)."""
+    the pair work is bounded by cell sizes instead of |corpus|²; pair dots
+    via the Arrow cell kernel (bit-identical — see :func:`_cell_pair_dots`)."""
     assigned = _ivf_assign_n(corpus, centroids, id_col, vec_col)
-    if use_kernel:
-        side = assigned.select(F.col("vid").alias("id"), "vec",
-                               F.col("vn").alias("n"), "cell_id")
-        pairs = (
-            _cell_pair_dots(side, side)
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id", "neighbor_id",
-                F.round(F.col("dot") / (F.col("qn") * F.col("bn")),
-                        precision).alias("cos"),
-            )
-        )
-    else:
-        a = assigned.select(F.col("vid").alias("query_id"),
-                            F.col("vec").alias("qv"),
-                            F.col("vn").alias("qn"), "cell_id")
-        b = assigned.select(F.col("vid").alias("neighbor_id"),
-                            F.col("vec").alias("bv"),
-                            F.col("vn").alias("bn"), "cell_id")
-        pairs = _pair_cos_catalyst(a, b, precision)
+    side = assigned.select(F.col("vid").alias("id"), "vec",
+                           F.col("vn").alias("n"), "cell_id")
+    pairs = _pair_cos(_cell_pair_dots(side, side))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         pairs.withColumn("rn", F.row_number().over(w))
@@ -440,12 +369,10 @@ def ivf_topk(
     vec_col: str,
     k: int = 1,
     nprobe: int = 1,
-    precision: int = 6,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """IVF ANN with multi-cell probing — the FAISS-style search shape.
 
-    The corpus index stays one-cell-per-vector (``ivf_assign``); each QUERY
+    The corpus index stays one-cell-per-vector (``_ivf_assign_n``); each QUERY
     fans out to its ``nprobe`` highest-cosine cells, so recall rises at a
     bounded ``nprobe``× candidate-cost multiplier (query side only — the
     index is untouched, and a neighbor can appear through at most one probe
@@ -453,9 +380,9 @@ def ivf_topk(
     Returns the per-query top-``k`` neighbors with their rank ``rk``.
 
     Scale shape: centroids broadcast twice (assignment + probe selection),
-    one equi-join on cell_id bounded by cell sizes × nprobe, one windowed
-    top-k. Same plan family as ``ivf_top1`` — no quadratic path at any
-    nprobe.
+    one kernel group per cell_id bounded by cell sizes × nprobe, one
+    windowed top-k. Same plan family as ``ivf_top1`` — no quadratic path
+    at any nprobe.
     """
     assigned = _ivf_assign_n(corpus, centroids, id_col, vec_col)
     carr, _idt = _centroid_cells(centroids, id_col, vec_col)
@@ -476,31 +403,12 @@ def ivf_topk(
         )
         .select("vid", "vec", "vn", F.col("p.cell_id").alias("cell_id"))
     )
-    if use_kernel:
-        pairs = (
-            _cell_pair_dots(
-                probes_n.select(F.col("vid").alias("id"), "vec",
-                                F.col("vn").alias("n"), "cell_id"),
-                assigned.select(F.col("vid").alias("id"), "vec",
-                                F.col("vn").alias("n"), "cell_id"),
-            )
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id", "neighbor_id",
-                F.round(F.col("dot") / (F.col("qn") * F.col("bn")),
-                        precision).alias("cos"),
-            )
-        )
-    else:
-        probes = probes_n.select(
-            F.col("vid").alias("query_id"), F.col("vec").alias("qv"),
-            F.col("vn").alias("qn"), "cell_id"
-        )
-        b = assigned.select(
-            F.col("vid").alias("neighbor_id"), F.col("vec").alias("bv"),
-            F.col("vn").alias("bn"), "cell_id"
-        )
-        pairs = _pair_cos_catalyst(probes, b, precision)
+    pairs = _pair_cos(_cell_pair_dots(
+        probes_n.select(F.col("vid").alias("id"), "vec",
+                        F.col("vn").alias("n"), "cell_id"),
+        assigned.select(F.col("vid").alias("id"), "vec",
+                        F.col("vn").alias("n"), "cell_id"),
+    ))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         pairs.withColumn("rk", F.row_number().over(w))
@@ -605,8 +513,6 @@ def multitable_ann_top1(
     vec_col: str,
     nbits: int = 4,
     tables: int = 2,
-    precision: int = 6,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Multi-TABLE sign-bit LSH (OR-amplification): ``tables`` independent
     hash tables, table ℓ bucketing on dimension block [ℓ·nbits, (ℓ+1)·nbits).
@@ -619,12 +525,10 @@ def multitable_ann_top1(
     keys → the join input is L× corpus rows, candidates are
     Σ_ℓ Σ_buckets n², deduped before scoring. Still never |corpus|².
 
-    Pair dots go through the Arrow cell kernel by default (bit-identical
-    — :func:`_cell_pair_dots`, keyed on the composite (table, bucket)
-    cell ``tbl·2^nbits + bkt``; flipped in round 11 with a consumer
-    window slot; ``use_kernel=False`` keeps the Catalyst twin). A pair
-    colliding in several tables is scored once per table and collapsed
-    by the same post-cos ``distinct`` as the join twin.
+    Pair dots go through the Arrow cell kernel (bit-identical —
+    :func:`_cell_pair_dots`), keyed on the composite (table, bucket) cell
+    ``tbl·2^nbits + bkt``. A pair colliding in several tables is scored
+    once per table and collapsed by a post-cos ``distinct``.
     """
     n = corpus.sparkSession.sparkContext.defaultParallelism
     v = corpus.repartition(n).select(
@@ -645,38 +549,10 @@ def multitable_ann_top1(
         .select("vid", "vec", "vn",
                 F.col("k.tbl").alias("tbl"), F.col("k.bkt").alias("bkt"))
     )
-    if use_kernel:
-        cell = (F.col("tbl") * F.lit(1 << nbits) + F.col("bkt")).cast("int")
-        side = keyed.select(F.col("vid").alias("id"), "vec",
-                            F.col("vn").alias("n"), cell.alias("cell_id"))
-        pairs = (
-            _cell_pair_dots(side, side)
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id", "neighbor_id",
-                F.round(F.col("dot") / (F.col("qn") * F.col("bn")),
-                        precision).alias("cos"),
-            )
-            .distinct()
-        )
-    else:
-        a = keyed.select(F.col("vid").alias("query_id"), F.col("vec").alias("qv"),
-                         F.col("vn").alias("qn"), "tbl", "bkt")
-        b = keyed.select(F.col("vid").alias("neighbor_id"), F.col("vec").alias("bv"),
-                         F.col("vn").alias("bn"), "tbl", "bkt")
-        pairs = (
-            a.join(b, ["tbl", "bkt"])
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    cosine_pre(F.col("qv"), F.col("bv"), F.col("qn"), F.col("bn")),
-                    precision,
-                ).alias("cos"),
-            )
-            .distinct()
-        )
+    cell = (F.col("tbl") * F.lit(1 << nbits) + F.col("bkt")).cast("int")
+    side = keyed.select(F.col("vid").alias("id"), "vec",
+                        F.col("vn").alias("n"), cell.alias("cell_id"))
+    pairs = _pair_cos(_cell_pair_dots(side, side)).distinct()
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         pairs.withColumn("rn", F.row_number().over(w))
@@ -743,14 +619,11 @@ def bucketed_ann_top1(
     id_col: str,
     vec_col: str,
     nbits: int = 4,
-    precision: int = 6,
     probes: int = 0,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Approximate nearest neighbor: candidates share the sign-bit bucket.
-    In-bucket pair dots go through the Arrow cell kernel by default
-    (bit-identical — :func:`_cell_pair_dots`; flipped in round 11 with
-    consumer window slots; ``use_kernel=False`` keeps the Catalyst twin).
+    In-bucket pair dots go through the Arrow cell kernel (bit-identical —
+    :func:`_cell_pair_dots`).
     Run :func:`bucket_stats` as the pre-flight audit at a new scale or on
     a new embedding family: one hot bucket concentrates O(bucket²) pair
     work on one kernel task exactly as it would on one join partition.
@@ -799,38 +672,12 @@ def bucketed_ann_top1(
                      F.col("vn").alias("qn"), "bucket")
     b = v.select(F.col("vid").alias("neighbor_id"), F.col("vec").alias("bv"),
                  F.col("vn").alias("bn"), "bucket")
-    if use_kernel:
-        pairs = (
-            _cell_pair_dots(
-                a.select(F.col("query_id").alias("id"),
-                         F.col("qv").alias("vec"),
-                         F.col("qn").alias("n"),
-                         F.col("bucket").alias("cell_id")),
-                b.select(F.col("neighbor_id").alias("id"),
-                         F.col("bv").alias("vec"),
-                         F.col("bn").alias("n"),
-                         F.col("bucket").alias("cell_id")),
-            )
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id", "neighbor_id",
-                F.round(F.col("dot") / (F.col("qn") * F.col("bn")),
-                        precision).alias("cos"),
-            )
-        )
-    else:
-        pairs = (
-            a.join(b, "bucket")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    cosine_pre(F.col("qv"), F.col("bv"), F.col("qn"), F.col("bn")),
-                    precision,
-                ).alias("cos"),
-            )
-        )
+    pairs = _pair_cos(_cell_pair_dots(
+        a.select(F.col("query_id").alias("id"), F.col("qv").alias("vec"),
+                 F.col("qn").alias("n"), F.col("bucket").alias("cell_id")),
+        b.select(F.col("neighbor_id").alias("id"), F.col("bv").alias("vec"),
+                 F.col("bn").alias("n"), F.col("bucket").alias("cell_id")),
+    ))
     if probes > 0:
         pairs = pairs.distinct()  # a neighbor may appear via several probes
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -848,7 +695,6 @@ def semantic_dedup(
     k: int | None = None,
     iters: int = 2,
     threshold: float = 0.9,
-    precision: int = 6,
     max_pair_cost: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
@@ -903,9 +749,7 @@ def semantic_dedup(
     dropped = (
         _cell_pair_dots(side, side)
         .where(F.col("query_id") < F.col("neighbor_id"))
-        .where(F.round(
-            F.col("dot") / (F.col("qn") * F.col("bn")), precision
-        ) >= threshold)
+        .where(_cos() >= threshold)
         .select(F.col("neighbor_id").alias("vid"))
         .distinct()
     )

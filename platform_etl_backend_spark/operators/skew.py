@@ -2,16 +2,11 @@
 
 AQE's skew-join splitting handles most cases at runtime
 (``spark.sql.adaptive.skewJoin.enabled``, on by default in this engine);
-these operators are the explicit fallbacks for the patterns AQE cannot fix:
-
-- ``salted_aggregate``: two-phase aggregation for heavily skewed group keys
-  — phase 1 aggregates on (key, salt) spreading each hot key over N
-  reducers, phase 2 merges the partials. Semantics-preserving for any
-  algebraic aggregate (sum/count/min/max), so it is oracle-checkable
-  against the plain groupBy.
-- ``salted_broadcast_join``: replicate the small side N times with salt ids
-  so a skewed big-side key fans over N tasks (only needed when the small
-  side can't broadcast whole and SMJ skews).
+``salted_aggregate`` is the explicit fallback for the pattern AQE cannot
+fix, a skewed GROUP key: phase 1 aggregates on (key, salt) spreading each
+hot key over N reducers, phase 2 merges the partials. Semantics-preserving
+for any algebraic aggregate (sum/count/min/max), so it is oracle-checkable
+against the plain groupBy (q_salted_agg).
 """
 
 from __future__ import annotations
@@ -51,13 +46,3 @@ def salted_aggregate(
         *[a2.alias(name) for name, (_, a2) in aggs.items()]
     )
 
-
-def salted_broadcast_join(
-    big: DataFrame, small: DataFrame, key: str, buckets: int = 8
-) -> DataFrame:
-    """Skewed-key join: salt the big side, replicate the small side per salt."""
-    big_salted = big.withColumn("_salt", F.pmod(F.hash(F.col(key)), F.lit(buckets)))
-    replicated = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-    return big_salted.join(replicated, [key, "_salt"]).drop("_salt")

@@ -470,36 +470,6 @@ def hll_registers(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def hll_estimate(df: DataFrame, key_col: str, label: str) -> DataFrame:
-    """One row: (key, n_exact, n_buckets, estimate) — the HLL cardinality
-    estimate next to the exact count it approximates."""
-    from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
-
-    reg = hll_registers(df, key_col)
-    agg = reg.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.expr(f"shiftleft(cast(1 as bigint), cast({HLL_MAX_RHO} - mx as int))"))
-        .cast("bigint")
-        .alias("s_present"),
-    )
-    exact = df.select(F.countDistinct(key_col).alias("n_exact"))
-    j = agg.crossJoin(F.broadcast(exact))  # two 1-row frames
-    v = F.lit(HLL_M) - F.col("n_buckets")  # zero registers
-    denom = (
-        F.col("s_present")
-        + v.cast("bigint") * F.lit(1 << HLL_MAX_RHO).cast("bigint")
-    ).cast("double")
-    raw = F.lit(HLL_NUMERATOR) / denom
-    linear = F.lit(float(HLL_M)) * portable_ln_ratio(F.lit(HLL_M), v)
-    est = F.when((raw <= F.lit(2.5 * HLL_M)) & (v > 0), linear).otherwise(raw)
-    return j.select(
-        F.lit(label).alias("key"),
-        F.col("n_exact").cast("bigint").alias("n_exact"),
-        F.col("n_buckets").cast("bigint").alias("n_buckets"),
-        est.alias("estimate"),
-    )
-
-
 def duck_hll_cte(key_sql: str, table_sql: str) -> str:
     """Register-table CTE body mirroring ``hll_registers`` exactly."""
     return f"""
@@ -512,7 +482,8 @@ def duck_hll_cte(key_sql: str, table_sql: str) -> str:
 
 
 def duck_hll_estimate_sql(key_sql: str, table_sql: str, label: str) -> str:
-    """Full estimate query mirroring ``hll_estimate``'s operation order."""
+    """Full estimate query mirroring ``hll_estimates_grouped``'s operation
+    order for one label."""
     from platform_etl_backend_spark.functions.portable_math import duck_portable_ln_ratio
 
     ln_mv = duck_portable_ln_ratio(str(HLL_M), f"({HLL_M} - n_buckets)")
@@ -625,10 +596,10 @@ def kmv_set_estimates(
 
 def hll_estimates_grouped(keyed: DataFrame, label_col: str = "label", key_col: str = "k") -> DataFrame:
     """Multi-set HLL in ONE pass: (label, key) rows -> per-label register
-    tables -> per-label estimates. Replaces N separate hll_estimate
-    pipelines (each re-scanning the data) with one distinct shuffle + two
-    tiny grouped aggregations — the shape a sketch-per-dimension warehouse
-    rollup actually runs."""
+    tables -> per-label estimates (key, n_exact, n_buckets, estimate).
+    One distinct shuffle + two tiny grouped aggregations instead of one
+    pipeline per label re-scanning the data — the shape a
+    sketch-per-dimension warehouse rollup actually runs."""
     from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
 
     h = F.conv(

@@ -133,7 +133,7 @@ def test_kmeans_fit_deterministic_and_improves_assignment(spark, sf_dir):
     def quality(cents):
         c = cents.select(F.col("cell_id").alias("vec_id"),
                          F.col("vec").alias("embedding"))
-        a = S.ivf_assign(emb, c, "vec_id", "embedding")
+        a = S._ivf_assign_n(emb, c, "vec_id", "embedding")
         cv = c.select(F.col("vec_id").alias("cell_id"),
                       S.as_double_array("embedding").alias("cv"))
         scored = a.join(cv, "cell_id").select(
@@ -175,9 +175,9 @@ def test_bucket_stats_fallback_advice_holds_on_correlated_corpus(spark):
 
     cents = S.kmeans_fit(corpus, "vec_id", "embedding", k=8, iters=2)
     cells = (
-        S.ivf_assign(corpus, cents.select(F.col("cell_id").alias("vec_id"),
-                                          F.col("vec").alias("embedding")),
-                     "vec_id", "embedding")
+        S._ivf_assign_n(corpus, cents.select(F.col("cell_id").alias("vec_id"),
+                                             F.col("vec").alias("embedding")),
+                        "vec_id", "embedding")
         .groupBy("cell_id").count().collect()
     )
     assert max(r["count"] for r in cells) <= 0.3 * n_vec  # (c) IVF switch
@@ -240,20 +240,6 @@ def test_multitable_or_amplification_raises_recall(spark, sf_dir):
     assert r4 >= 0.4, (r1, r2, r4)
 
 
-def test_ivf_kernel_equals_catalyst_twin(spark, sf_dir):
-    """The Arrow cell-pair kernel must be BIT-identical to the Catalyst
-    fold twin (sequential-order accumulation — the CDC-kernel contract),
-    for both the top1 and the multi-probe shapes."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = emb.where(F.col("vec_id") < 8)
-    for fn, kw in ((S.ivf_top1, {}), (S.ivf_topk, {"k": 2, "nprobe": 2})):
-        kern = sorted(map(tuple, fn(
-            emb, cents, "vec_id", "embedding", use_kernel=True, **kw).collect()))
-        twin = sorted(map(tuple, fn(
-            emb, cents, "vec_id", "embedding", use_kernel=False, **kw).collect()))
-        assert kern == twin and kern
-
-
 def test_all_pairs_dots_blocked_exact_and_unique(spark, sf_dir):
     """Block tiling covers every unordered pair EXACTLY once and matches
     the plain crossJoin pair cosines bit-for-bit (both orientations of
@@ -282,54 +268,38 @@ def test_all_pairs_dots_blocked_exact_and_unique(spark, sf_dir):
     assert got == want                    # bit-identical, no tolerance
 
 
-def test_brute_force_and_bucketed_kernel_twins(spark, sf_dir):
-    """use_kernel=True (staged for the round-11 plan flip) must equal the
-    shipped Catalyst paths bit-for-bit, including multi-probe dedup."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.where(F.col("vec_id") < 32)
-    bf_k = sorted(map(tuple, S.brute_force_topk(
-        emb, qs, "vec_id", "embedding", k=3, use_kernel=True).collect()))
-    bf_c = sorted(map(tuple, S.brute_force_topk(
-        emb, qs, "vec_id", "embedding", k=3, use_kernel=False).collect()))
-    assert bf_k == bf_c and bf_k
-    for probes in (0, 2):
-        bk = sorted(map(tuple, S.bucketed_ann_top1(
-            emb, "vec_id", "embedding", probes=probes,
-            use_kernel=True).collect()))
-        bc = sorted(map(tuple, S.bucketed_ann_top1(
-            emb, "vec_id", "embedding", probes=probes,
-            use_kernel=False).collect()))
-        assert bk == bc and bk
-
-
-def test_multitable_kernel_equals_catalyst_twin(spark, sf_dir):
-    """The round-11 multitable kernel path (composite (tbl, bkt) cell key)
-    must be bit-identical to the Catalyst join twin, including the
-    post-cos distinct that collapses multi-table collisions."""
-    emb = _emb(spark, sf_dir)
-    kern = sorted(map(tuple, S.multitable_ann_top1(
-        emb, "vec_id", "embedding", nbits=4, tables=2,
-        use_kernel=True).collect()))
-    twin = sorted(map(tuple, S.multitable_ann_top1(
-        emb, "vec_id", "embedding", nbits=4, tables=2,
-        use_kernel=False).collect()))
-    assert kern == twin and kern
-
-
 def test_cell_pair_dots_string_ids_pass_through(spark, sf_dir):
-    """Ids are no longer forced to bigint (round-11 ADVICE): a string id
-    column flows through the kernel untouched and the output schema
-    mirrors it — pinned against the Catalyst twin on the same frame."""
-    emb = _emb(spark, sf_dir).limit(200).withColumn(
-        "sid", F.concat(F.lit("v"), F.col("vec_id").cast("string")))
-    kern = S.bucketed_ann_top1(emb, "sid", "embedding", nbits=2,
-                               use_kernel=True)
-    assert dict(kern.dtypes)["query_id"] == "string"
-    got = sorted(map(tuple, kern.collect()))
-    twin = sorted(map(tuple, S.bucketed_ann_top1(
-        emb, "sid", "embedding", nbits=2, use_kernel=False).collect()))
-    assert got == twin and got
-    assert all(q.startswith("v") for q, _, _ in got)
+    """Ids flow through the kernel untouched — string and bigint alike —
+    the output schema mirrors them, and every same-cell pair cosine equals
+    a Catalyst fold (cosine_pre over an equi-join on the cell) bit-for-bit."""
+    emb = _emb(spark, sf_dir).where(F.col("vec_id") < 200)
+    for id_col, id_type in (
+        (F.concat(F.lit("v"), F.col("vec_id").cast("string")), "string"),
+        (F.col("vec_id").cast("bigint"), "bigint"),
+    ):
+        side = emb.select(
+            id_col.alias("id"), S.as_double_array("embedding").alias("vec")
+        ).withColumn("n", S.norm(F.col("vec"))).withColumn(
+            "cell_id", S.sign_bucket(F.col("vec"), 2))
+        dots = S._cell_pair_dots(side, side)
+        types = dict(dots.dtypes)
+        assert types["query_id"] == types["neighbor_id"] == id_type
+        got = {
+            (r.query_id, r.neighbor_id): r.dot / (r.qn * r.bn)
+            for r in dots.collect()
+        }
+        a = side.select(F.col("id").alias("id_a"), F.col("vec").alias("va"),
+                        F.col("n").alias("na"), "cell_id")
+        b = side.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"),
+                        F.col("n").alias("nb"), "cell_id")
+        want = {
+            (r.id_a, r.id_b): r.cos
+            for r in a.join(b, "cell_id").select(
+                "id_a", "id_b",
+                S.cosine_pre(F.col("va"), F.col("vb"),
+                             F.col("na"), F.col("nb")).alias("cos")).collect()
+        }
+        assert got == want and len(got) > 200  # bit-identical, no tolerance
 
 
 def test_cell_pair_dots_rejects_exotic_id_types(spark, sf_dir):
@@ -342,3 +312,45 @@ def test_cell_pair_dots_rejects_exotic_id_types(spark, sf_dir):
         "cell_id", F.lit(0))
     with pytest.raises(TypeError, match="unsupported id type"):
         S._cell_pair_dots(emb, emb)
+
+
+ANN_QUERIES = (
+    "q_cosine_topk", "q_ann_bucketed", "q_ann_multiprobe",
+    "q_ann_ivf", "q_ann_ivf_nprobe", "q_ann_multitable",
+)
+
+
+@pytest.fixture(scope="module")
+def oracle_gate(sf_dir):
+    """(check_oracle module, DuckDB connection over the sf_dir tables)."""
+    import importlib.util
+    from pathlib import Path
+
+    import duckdb
+
+    path = Path(__file__).resolve().parent.parent / "scripts" / "check_oracle.py"
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    co = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(co)
+    con = duckdb.connect()
+    for t in co.TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    yield co, con
+    con.close()
+
+
+@pytest.mark.parametrize("name", ANN_QUERIES)
+def test_ann_query_matches_duckdb_oracle(spark, sf_dir, oracle_gate, name):
+    """Every consumer of the pair kernel returns exactly its DuckDB
+    oracle's rows: same columns, same row count, float cells equal to the
+    last bit (a near-miss is reported as NEAR and still fails)."""
+    from platform_etl_backend_spark.catalog import QUERIES
+
+    co, con = oracle_gate
+    s_cols, s_rows = co.rows_of_spark(QUERIES[name].fn(spark, sf_dir))
+    d_cols, d_rows = co.rows_of_duck(con, QUERIES[name].oracle)
+    assert s_cols == d_cols
+    assert len(s_rows) == len(d_rows) and s_rows
+    bad = [(a, b) for a, b in zip(sorted(s_rows), sorted(d_rows)) if a != b]
+    tag = "NEAR" if all(co.near(a, b) for a, b in bad) else "VALUES"
+    assert not bad, f"{tag} mismatch in {len(bad)}/{len(s_rows)} rows; e.g. {bad[0]}"

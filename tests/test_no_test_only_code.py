@@ -3,19 +3,24 @@ the tests.
 
 A definition that only tests call is code the engine ships but never runs:
 it has to be kept working, yet no pipeline step, catalog query, script or
-benchmark depends on it. The scan is textual: a name counts as referenced
-when it appears as a whole word in a non-test ``.py`` file (the package,
-``scripts/``, ``otbench/``, ``bench.py``, ``__spark_entry__.py``). In the
-defining file, the lines of the definition itself do not count, so a
-recursive call or a docstring that names the function is not a caller.
-Registration by string (a catalog query listed by name) counts as a
-reference, as does a mention in ``__all__``.
+benchmark depends on it. The scan is lexical: each non-test ``.py`` file
+(the package, ``scripts/``, ``otbench/``, ``bench.py``,
+``__spark_entry__.py``) is tokenized, and a name counts as referenced when
+it appears as a whole word in code or in a string. Prose does not count:
+comments, docstrings (any bare string statement) and ``description=``
+keyword strings are skipped, so a sentence that names a function does not
+keep it alive. Other strings do count, because registration by string (a
+catalog query listed by name, otbench's query mix) is a real reference, as
+is a mention in ``__all__``. In the defining file, the tokens inside the
+definition itself do not count, so a recursive call is not a caller.
 """
 
 from __future__ import annotations
 
 import ast
+import io
 import re
+import tokenize
 from collections import Counter
 from pathlib import Path
 
@@ -47,6 +52,14 @@ ALLOWLIST = {
         "reference-parity ChEMBL protein classification that target_step does "
         "not call yet; wire-or-delete is open on ROADMAP"
     ),
+    "operators.stats.summary_statistics": (
+        "the reference's window formulation (PrepareSummaryStatistics.scala:"
+        "38-46) that contingency_via_groupby is checked against"
+    ),
+    "operators.stats.llr_contingency": (
+        "window-form contingency that test_window_and_groupby_contingency_agree "
+        "compares contingency_via_groupby against"
+    ),
 }
 
 _WORD = re.compile(r"\w+")
@@ -62,26 +75,66 @@ def _non_test_files() -> list[Path]:
     return files
 
 
+def _is_str(node: ast.expr) -> bool:
+    return isinstance(node, ast.JoinedStr) or (
+        isinstance(node, ast.Constant) and isinstance(node.value, str)
+    )
+
+
+def _prose_spans(tree: ast.AST) -> list[tuple[tuple[int, int], tuple[int, int]]]:
+    """(start, end) positions of the strings that are prose, not code:
+    bare string statements (docstrings) and ``description=`` values."""
+    spans = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Expr) and _is_str(node.value):
+            prose = node.value
+        elif isinstance(node, ast.keyword) and node.arg == "description":
+            prose = node.value
+        else:
+            continue
+        spans.append(((prose.lineno, prose.col_offset), (prose.end_lineno, prose.end_col_offset)))
+    return spans
+
+
+# an f-string's literal text is one STRING token up to Python 3.11 and
+# FSTRING_MIDDLE tokens from 3.12 on
+_STRING_TOKENS = {tokenize.STRING, getattr(tokenize, "FSTRING_MIDDLE", tokenize.STRING)}
+
+
+def _code_words(text: str) -> list[tuple[int, str]]:
+    """(line, word) for every name token and every word inside a non-prose
+    string; comments and prose strings are dropped."""
+    spans = _prose_spans(ast.parse(text))
+    words: list[tuple[int, str]] = []
+    for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+        if tok.type == tokenize.NAME:
+            words.append((tok.start[0], tok.string))
+        elif tok.type in _STRING_TOKENS and not any(a <= tok.start < b for a, b in spans):
+            words.extend((tok.start[0], w) for w in _WORD.findall(tok.string))
+    return words
+
+
 def _test_only_names() -> set[str]:
     """``module.name`` of every top-level package definition that nothing
     outside the tests references."""
     files = _non_test_files()
     texts = {p: p.read_text() for p in files}
-    total = Counter(w for t in texts.values() for w in _WORD.findall(t))
+    words = {p: _code_words(t) for p, t in texts.items()}
+    total = Counter(w for ws in words.values() for _, w in ws)
 
     unused: set[str] = set()
     for path in files:
         if PKG not in path.parents:
             continue
-        lines = texts[path].splitlines()
         module = ".".join(path.relative_to(PKG).with_suffix("").parts)
         for node in ast.parse(texts[path], filename=str(path)).body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
-            own = Counter(
-                _WORD.findall("\n".join(lines[node.lineno - 1 : node.end_lineno]))
+            own = sum(
+                1 for line, w in words[path]
+                if w == node.name and node.lineno <= line <= node.end_lineno
             )
-            if total[node.name] == own[node.name]:
+            if total[node.name] == own:
                 unused.add(f"{module}.{node.name}")
     return unused
 

@@ -74,21 +74,12 @@ def test_topk_is_take_ordered(spark, sf_dir):
 
 
 def test_brute_force_topk_plan_shapes(spark, sf_dir):
-    """Default (round-11 flip): the pair dots run in the Arrow cell
-    kernel — the plan carries a FlatMapGroupsInPandas stage and no
-    cartesian. The Catalyst twin must still broadcast the query side."""
-    from pyspark.sql import functions as F
-    from platform_etl_backend_spark.operators import similarity as S
-
+    """The pair dots run in the Arrow cell kernel: the plan carries a
+    FlatMapGroupsInPandas stage and no cartesian."""
     df = q("q_cosine_topk", spark, sf_dir)
     plan = explain_str(df, "simple")
     assert "FlatMapGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    twin = S.brute_force_topk(
-        emb, emb.where(F.col("vec_id") < 8), "vec_id", "embedding",
-        k=3, use_kernel=False)
-    assert_broadcast_join(twin, at_least=1)
 
 
 def test_llr_contingency_broadcast_totals(spark, sf_dir):

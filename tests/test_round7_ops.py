@@ -159,109 +159,16 @@ def test_weighted_minhash_collision_rate_tracks_weighted_jaccard(spark):
     assert abs(rate - jw) < 0.2  # 64 Bernoulli trials; ±3σ ≈ 0.19
 
 
-# --- numpy transformer cross-encoder ----------------------------------------
-
-
-def _py_forward_single(ids, segs):
-    """Independent PURE-PYTHON (math + list loops, no numpy) forward pass
-    of the exact architecture in operators/rerank.py — the model pin."""
-    import math
-
-    from platform_etl_backend_spark.operators.rerank import (
-        _D, _EPS, _FF, _H, _W,
-    )
-
-    W = {k: (v.tolist() if hasattr(v, "tolist") else v) for k, v in _W.items()}
-    L = len(ids)
-    x = [
-        [W["emb"][t][j] + W["pos"][i][j] + W["seg"][g][j] for j in range(_D)]
-        for i, (t, g) in enumerate(zip(ids, segs))
-    ]
-
-    def matvec_rows(xs, M):  # xs: L x D, M: D x K -> L x K
-        K = len(M[0])
-        return [
-            [sum(row[d] * M[d][k] for d in range(len(row))) for k in range(K)]
-            for row in xs
-        ]
-
-    def layernorm(rows):
-        out = []
-        for r in rows:
-            mu = sum(r) / len(r)
-            var = sum((v - mu) ** 2 for v in r) / len(r)
-            sd = math.sqrt(var + _EPS)
-            out.append([(v - mu) / sd for v in r])
-        return out
-
-    dk = _D // _H
-    q = matvec_rows(x, W["wq"])
-    k_ = matvec_rows(x, W["wk"])
-    v = matvec_rows(x, W["wv"])
-    ctx = [[0.0] * _D for _ in range(L)]
-    for h in range(_H):
-        sl = slice(h * dk, (h + 1) * dk)
-        for i in range(L):
-            scores = [
-                sum(a * b for a, b in zip(q[i][sl], k_[j][sl])) / math.sqrt(dk)
-                for j in range(L)
-            ]
-            mx = max(scores)
-            es = [math.exp(s - mx) for s in scores]
-            z = sum(es)
-            probs = [e / z for e in es]
-            for d in range(dk):
-                ctx[i][h * dk + d] = sum(
-                    probs[j] * v[j][h * dk + d] for j in range(L)
-                )
-    attn_out = matvec_rows(ctx, W["wo"])
-    x = layernorm([[a + b for a, b in zip(r1, r2)] for r1, r2 in zip(x, attn_out)])
-    ff = matvec_rows(x, W["ff1"])
-    ff = [[math.tanh(v_ + W["b1"][j]) for j, v_ in enumerate(r)] for r in ff]
-    ff2 = matvec_rows(ff, W["ff2"])
-    ff2 = [[v_ + W["b2"][j] for j, v_ in enumerate(r)] for r in ff2]
-    x = layernorm([[a + b for a, b in zip(r1, r2)] for r1, r2 in zip(x, ff2)])
-    logit = sum(a * b for a, b in zip(x[0], W["head_w"])) + W["head_b"]
-    return 1.0 / (1.0 + math.exp(-logit))
-
-
-def test_transformer_forward_matches_pure_python_model():
-    from platform_etl_backend_spark.operators.rerank import _forward, _token_ids
-
-    cases = [
-        ("the quick brown fox", "jumps over the lazy dog"),
-        ("hello", "a much longer document about many different things here"),
-        ("x", "y"),
-    ]
-    toks = [_token_ids(q, d) for q, d in cases]
-    got = _forward([t[0] for t in toks], [t[1] for t in toks])
-    for i, (ids, segs) in enumerate(toks):
-        want = _py_forward_single(ids, segs)
-        assert abs(got[i] - want) < 1e-9, (i, got[i], want)
-
-
-def test_transformer_scores_discriminate_and_are_deterministic():
-    """Same pair twice -> identical bits; different pairs -> different
-    scores (the head is not constant)."""
-    from platform_etl_backend_spark.operators.rerank import _forward, _token_ids
-
-    a = _token_ids("alpha beta", "gamma delta epsilon")
-    b = _token_ids("alpha beta", "totally different words entirely")
-    s1 = _forward([a[0], b[0]], [a[1], b[1]])
-    s2 = _forward([a[0], b[0]], [a[1], b[1]])
-    assert s1.tolist() == s2.tolist()
-    assert s1[0] != s1[1]
-    assert 0.0 < s1[0] < 1.0 and 0.0 < s1[1] < 1.0
+# --- integer transformer cross-encoder --------------------------------------
 
 
 def test_transformer_rerank_spark_topk(spark, sf_dir):
-    """End-to-end through mapInPandas for BOTH scorers: the catalog query
-    (integer model since round 11) must equal the local integer forward,
-    and the float transformer operator must equal the local float forward;
-    the per-query top-3 window must rank by the scores."""
+    """End-to-end through mapInPandas: the catalog query must equal the
+    local integer forward, and the per-query top-3 window must rank by
+    the scores."""
     from platform_etl_backend_spark.catalog import QUERIES
     from platform_etl_backend_spark.operators.rerank import (
-        _forward, _int_forward, _int_tokenize, _token_ids, transformer_rerank,
+        _int_forward, _int_tokenize,
     )
 
     out = QUERIES["q_transformer_rerank"].fn(spark, sf_dir)
@@ -271,8 +178,6 @@ def test_transformer_rerank_spark_topk(spark, sf_dir):
         r["doc_id"]: r["text"]
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
     }
-    import numpy as np
-
     for r in rows[:10]:
         ids, segs = _int_tokenize(docs[r["query_id"]], docs[r["doc_id"]])
         assert r["logit"] == int(_int_forward([ids], [segs])[0])
@@ -287,20 +192,6 @@ def test_transformer_rerank_spark_topk(spark, sf_dir):
         assert len(lst) <= 3
         scores = [s for _, s, _ in lst]
         assert scores == sorted(scores, reverse=True)
-    # the float model path stays covered through the operator
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    q = d.where(F.col("doc_id") < 3).select(
-        F.col("doc_id").alias("query_id"), F.col("text").alias("qtext"), "source"
-    )
-    c = d.select("doc_id", F.col("text").alias("dtext"), "source")
-    pairs = q.join(c, "source").where(F.col("doc_id") != F.col("query_id"))
-    frows = transformer_rerank(
-        pairs, "query_id", "doc_id", "qtext", "dtext", k=2
-    ).collect()
-    assert frows
-    for r in frows[:5]:
-        ids, segs = _token_ids(docs[r["query_id"]], docs[r["doc_id"]])
-        assert r["score"] == float(np.round(_forward([ids], [segs]), 9)[0])
 
 
 # --- distributed logistic-regression GD --------------------------------------

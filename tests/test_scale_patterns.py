@@ -76,21 +76,6 @@ def test_salted_agg_matches_plain(spark, sf_dir):
     assert salted == plain
 
 
-def test_salted_broadcast_join_matches_plain(spark, sf_dir):
-    from platform_etl_backend_spark.operators.skew import salted_broadcast_join
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_orderkey", "l_partkey")
-    p = spark.read.parquet(f"{sf_dir}/part.parquet").select("p_partkey", "p_brand")
-    salted = salted_broadcast_join(
-        li.withColumnRenamed("l_partkey", "p_partkey"), p, "p_partkey"
-    )
-    plain = li.join(p, li.l_partkey == p.p_partkey)
-    assert salted.count() == plain.count()
-    a = salted.groupBy("p_brand").count().collect()
-    b = plain.groupBy("p_brand").count().collect()
-    assert {(r.p_brand, r["count"]) for r in a} == {(r.p_brand, r["count"]) for r in b}
-
-
 def test_repartition_by_range_output_clustering(spark, sf_dir):
     """repartitionByRange (Interaction.scala:440) plans a range exchange."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -103,7 +88,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
     """AQE skew-join handling: a hot join key whose shuffle partition
     dwarfs the median is split at runtime (SortMergeJoin(skew=true)) —
     the no-code-change skew remedy the engine relies on at 100 TB (the
-    manual salting operators in operators/skew.py are the fallback for
+    manual salting operator in operators/skew.py is the fallback for
     aggregations, where AQE cannot help)."""
     from platform_etl_backend_spark.engine.session import session_scoped_conf
 

@@ -139,12 +139,14 @@ def test_multimodal_plumbing(spark):
     # jpeg AND png decode for REAL now (operators/jpeg.py, operators/png.py):
     # garbage fails loudly with a parse error; library-bound formats still
     # raise honestly
+    from platform_etl_backend_spark.operators.codecs import decode_media
+
     with pytest.raises(ValueError):
-        M.decode_or_raise(b"x", "jpeg")
+        decode_media(b"x", "jpeg")
     with pytest.raises(ValueError):
-        M.decode_or_raise(b"x", "png")
+        decode_media(b"x", "png")
     with pytest.raises(NotImplementedError):
-        M.decode_or_raise(b"x", "mp3")
+        decode_media(b"x", "mp3")
 
 
 def test_multinomial_sampling_invariants_match_reference_contract():
@@ -376,14 +378,16 @@ def test_hll_accuracy_envelope_and_mergeability(spark):
 
     from platform_etl_backend_spark.operators.stats import (
         HLL_M,
-        hll_estimate,
+        hll_estimates_grouped,
         hll_registers,
     )
 
     sigma = 1.04 / (HLL_M**0.5)
     for n in (100, 1000, 20000):
-        df = spark.range(n).select(F.concat(F.lit("k"), F.col("id")).alias("k"))
-        r = hll_estimate(df, "k", "t").collect()[0]
+        df = spark.range(n).select(
+            F.lit("t").alias("label"), F.concat(F.lit("k"), F.col("id")).alias("k")
+        )
+        r = hll_estimates_grouped(df).collect()[0]
         assert r["n_exact"] == n
         rel = abs(r["estimate"] - n) / n
         assert rel < 3 * sigma + 0.01, (n, r["estimate"])
