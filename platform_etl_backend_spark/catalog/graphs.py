@@ -13,7 +13,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from platform_etl_backend_spark.catalog.registry import register, table, dec6
-from platform_etl_backend_spark.operators.graph import transitive_closure
+from platform_etl_backend_spark.operators.graph import (
+    DAMPING,
+    HITS_ITERATIONS,
+    KTRUSS_K,
+    KTRUSS_ROUNDS,
+    PPR_ITERATIONS,
+    SCORE_SCALE,
+    transitive_closure,
+)
+
+# Each is read by a query and by its DuckDB oracle, so the two cannot drift.
+_PAGERANK_ITERATIONS = 5
+_LPA_ITERATIONS = 3
+_SSSP_ROUNDS = 6
+_KCORE_K = 3
+_KCORE_ROUNDS = 8
 
 
 @register(
@@ -40,7 +55,7 @@ def q_graph_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # depth-14 binary tree: path doubling converges in 4 rounds vs 15
     # one-hop rounds (the per-round stage overhead dominated; ~2x wall)
-    clo = transitive_closure(edges, "src", "dst", method="double")
+    clo = transitive_closure(edges, method="double")
     return clo.groupBy(F.col("descendant").alias("node")).agg(
         F.count(F.lit(1)).alias("n_ancestors"),
         F.concat_ws(
@@ -51,9 +66,6 @@ def q_graph_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pagerank_oracle(
-    iterations: int = 5,
-    damping: float = 0.85,
-    scale: int = 9,
     edge_ctes: list[str] | None = None,
     final_select: str | None = None,
 ) -> str:
@@ -62,7 +74,7 @@ def _pagerank_oracle(
     same simplified no-dangling-redistribution variant. ``edge_ctes``
     parameterizes the graph (last CTE must define e(s, d)); ``final_select``
     overrides the rank projection (e.g. a top-k)."""
-    d = f"DECIMAL(38,{scale})"
+    d = f"DECIMAL(38,{SCORE_SCALE})"
     ctes = list(edge_ctes) if edge_ctes else [
         "e AS (SELECT DISTINCT p_partkey // 2 AS s, p_partkey AS d FROM part WHERE p_partkey >= 1)",
     ]
@@ -70,19 +82,19 @@ def _pagerank_oracle(
         "nodes AS (SELECT s AS node FROM e UNION SELECT d FROM e)",
         "nn AS (SELECT COUNT(*) AS n FROM nodes)",
         "outdeg AS (SELECT s, COUNT(*) AS outdeg FROM e GROUP BY s)",
-        f"pr0 AS (SELECT node, CAST(ROUND(1.0 / (SELECT n FROM nn), {scale}) AS {d}) AS pr FROM nodes)",
+        f"pr0 AS (SELECT node, CAST(ROUND(1.0 / (SELECT n FROM nn), {SCORE_SCALE}) AS {d}) AS pr FROM nodes)",
     ]
-    for i in range(iterations):
+    for i in range(_PAGERANK_ITERATIONS):
         ctes.append(f"""pr{i + 1} AS (
       SELECT nd.node,
-             CAST(CAST(ROUND({1.0 - damping!r} / (SELECT n FROM nn), {scale}) AS {d})
+             CAST(CAST(ROUND({1.0 - DAMPING!r} / (SELECT n FROM nn), {SCORE_SCALE}) AS {d})
                   + COALESCE(c.csum, CAST(0 AS {d})) AS {d}) AS pr
       FROM nodes nd LEFT JOIN (
         SELECT e.d AS node,
-               SUM(CAST(ROUND(CAST(p.pr AS DOUBLE) * {damping!r} / o.outdeg, {scale}) AS {d})) AS csum
+               SUM(CAST(ROUND(CAST(p.pr AS DOUBLE) * {DAMPING!r} / o.outdeg, {SCORE_SCALE}) AS {d})) AS csum
         FROM pr{i} p JOIN e ON p.node = e.s JOIN outdeg o ON e.s = o.s
         GROUP BY e.d) c ON nd.node = c.node)""")
-    final = final_select or f"SELECT node, ROUND(CAST(pr AS DOUBLE), 6) AS pr FROM pr{iterations}"
+    final = final_select or f"SELECT node, ROUND(CAST(pr AS DOUBLE), 6) AS pr FROM pr{_PAGERANK_ITERATIONS}"
     return "WITH " + ",\n    ".join(ctes) + "\n    " + final
 
 
@@ -103,7 +115,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("p_partkey div 2").cast("bigint").alias("src"),
         F.col("p_partkey").cast("bigint").alias("dst"),
     )
-    return pagerank(edges, iterations=5, damping=0.85, scale=9)
+    return pagerank(edges, iterations=_PAGERANK_ITERATIONS)
 
 
 @register(
@@ -177,7 +189,7 @@ def q_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("node", F.col("dist").cast("bigint").alias("dist"))
 
 
-def _lpa_oracle(iterations: int = 3, final: str | None = None) -> str:
+def _lpa_oracle(final: str | None = None) -> str:
     """Unrolled-CTE synchronous LPA mirroring operators/graph.label_propagation:
     same events-derived 50-node graph as q_triangle_count, same
     (count DESC, label ASC) deterministic tie-break. ``final`` overrides the
@@ -191,7 +203,7 @@ def _lpa_oracle(iterations: int = 3, final: str | None = None) -> str:
         "nodes AS (SELECT DISTINCT u AS node FROM sym)",
         "l0 AS (SELECT node, node AS label FROM nodes)",
     ]
-    for i in range(1, iterations + 1):
+    for i in range(1, _LPA_ITERATIONS + 1):
         ctes.append(
             f"""c{i} AS (SELECT s.u AS node, l.label, COUNT(*) AS c
       FROM sym s JOIN l{i - 1} l ON s.v = l.node GROUP BY 1, 2)"""
@@ -205,13 +217,13 @@ def _lpa_oracle(iterations: int = 3, final: str | None = None) -> str:
     return (
         "WITH " + ",\n    ".join(ctes)
         + "\n    "
-        + (final or f"SELECT node, label AS community FROM l{iterations}")
+        + (final or f"SELECT node, label AS community FROM l{_LPA_ITERATIONS}")
     )
 
 
 @register(
     "q_label_propagation",
-    oracle=_lpa_oracle(3),
+    oracle=_lpa_oracle(),
     description="synchronous label-propagation community detection (3 fixed "
     "rounds) over the events-derived co-occurrence graph: neighbor-majority "
     "label adoption with the deterministic (count DESC, label ASC) tie-break "
@@ -226,10 +238,10 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = F.col("user_id").cast("bigint") % 50
     b = F.floor(F.col("value")).cast("bigint") % 50
     edges = ev.where(a != b).select(a.alias("src"), b.alias("dst"))
-    return label_propagation(edges, iterations=3)
+    return label_propagation(edges, iterations=_LPA_ITERATIONS)
 
 
-def _sssp_oracle(rounds: int = 6) -> str:
+def _sssp_oracle() -> str:
     """Unrolled min-plus Bellman-Ford mirroring operators/graph.sssp over
     the part tree with integer edge weights (child mod 7) + 1."""
     ctes = [
@@ -238,7 +250,7 @@ def _sssp_oracle(rounds: int = 6) -> str:
                  FROM part WHERE p_partkey >= 1)""",
         "d0(node, dist) AS (SELECT CAST(1 AS BIGINT), CAST(0 AS BIGINT))",
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, _SSSP_ROUNDS + 1):
         ctes.append(
             f"""d{i} AS (
       SELECT node, CAST(MIN(dist) AS BIGINT) AS dist FROM (
@@ -247,12 +259,12 @@ def _sssp_oracle(rounds: int = 6) -> str:
         SELECT e.d, p.dist + e.w FROM d{i - 1} p JOIN e ON e.s = p.node)
       GROUP BY node)"""
         )
-    return "WITH " + ",\n    ".join(ctes) + f"\n    SELECT node, dist FROM d{rounds}"
+    return "WITH " + ",\n    ".join(ctes) + f"\n    SELECT node, dist FROM d{_SSSP_ROUNDS}"
 
 
 @register(
     "q_sssp",
-    oracle=_sssp_oracle(6),
+    oracle=_sssp_oracle(),
     description="weighted single-source shortest paths (6 bounded min-plus "
     "Bellman-Ford rounds over the part tree, integer edge weights): one "
     "frontier join + one min aggregation per round — integer path sums make "
@@ -270,10 +282,10 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey").cast("bigint").alias("dst"),
         ((F.col("p_partkey") % 7) + 1).cast("bigint").alias("w"),
     )
-    return sssp(edges, sources=[1], rounds=6)
+    return sssp(edges, sources=[1], rounds=_SSSP_ROUNDS)
 
 
-def _kcore_oracle(k: int = 3, rounds: int = 8) -> str:
+def _kcore_oracle() -> str:
     """Unrolled synchronous peeling mirroring operators/graph.k_core."""
     ctes = [
         """r0 AS MATERIALIZED (
@@ -281,11 +293,11 @@ def _kcore_oracle(k: int = 3, rounds: int = 8) -> str:
                       GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
       FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50)"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, _KCORE_ROUNDS + 1):
         ctes.append(
             f"""d{i} AS MATERIALIZED (
       SELECT node FROM (SELECT a AS node FROM r{i - 1} UNION ALL SELECT b FROM r{i - 1})
-      GROUP BY node HAVING COUNT(*) >= {k})"""
+      GROUP BY node HAVING COUNT(*) >= {_KCORE_K})"""
         )
         ctes.append(
             f"""r{i} AS MATERIALIZED (
@@ -296,7 +308,7 @@ def _kcore_oracle(k: int = 3, rounds: int = 8) -> str:
     return f"""
     WITH {joined}
     SELECT node, CAST(COUNT(*) AS BIGINT) AS core_deg
-    FROM (SELECT a AS node FROM r{rounds} UNION ALL SELECT b FROM r{rounds})
+    FROM (SELECT a AS node FROM r{_KCORE_ROUNDS} UNION ALL SELECT b FROM r{_KCORE_ROUNDS})
     GROUP BY node ORDER BY node
     """
 
@@ -319,7 +331,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = F.col("user_id").cast("bigint") % 50
     b = F.floor(F.col("value")).cast("bigint") % 50
     edges = ev.where(a != b).select(a.alias("src"), b.alias("dst"))
-    return k_core(edges, k=3, rounds=8).orderBy("node")
+    return k_core(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS).orderBy("node")
 
 
 _TEXTRANK_EDGES = [
@@ -336,13 +348,12 @@ _TEXTRANK_EDGES = [
 @register(
     "q_textrank_keywords",
     oracle=_pagerank_oracle(
-        iterations=5,
         edge_ctes=_TEXTRANK_EDGES,
         final_select=(
             "SELECT word, pr, rn FROM ("
             "  SELECT node AS word, ROUND(CAST(pr AS DOUBLE), 6) AS pr,"
             "         CAST(ROW_NUMBER() OVER (ORDER BY pr DESC, node) AS BIGINT) AS rn"
-            "  FROM pr5) WHERE rn <= 10"
+            f"  FROM pr{_PAGERANK_ITERATIONS}) WHERE rn <= 10"
         ),
     ),
     description="TextRank keyword extraction (Mihalcea & Tarau 2004): "
@@ -374,7 +385,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(adj.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .distinct()
     )
-    pr = pagerank(e, iterations=5, damping=0.85, scale=9)
+    pr = pagerank(e, iterations=_PAGERANK_ITERATIONS)
     w = Window.orderBy(F.desc("pr"), "node")
     return (
         pr.withColumn("rn", F.row_number().over(w).cast("bigint"))
@@ -383,19 +394,19 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hits_oracle(iterations: int = 3, scale: int = 9) -> str:
+def _hits_oracle() -> str:
     """Unrolled-CTE HITS mirroring operators/graph.hits: decimal score
-    sums, ROUND(raw/norm, scale) L1 normalization per half-step. Every
+    sums, ROUND(raw/norm, SCORE_SCALE) L1 normalization per half-step. Every
     score CTE is referenced twice (contributions + norm), so AS
     MATERIALIZED is mandatory (the k-core/PCA exponential-re-expansion
     gotcha)."""
-    d = f"DECIMAL(38,{scale})"
+    d = f"DECIMAL(38,{SCORE_SCALE})"
     ctes = [
         "e AS MATERIALIZED (SELECT DISTINCT user_id % 100 AS s, event_type AS d FROM events)",
         f"h0 AS MATERIALIZED (SELECT DISTINCT s AS node, CAST(1 AS {d}) AS score FROM e)",
     ]
     prev_h = "h0"
-    for i in range(1, iterations + 1):
+    for i in range(1, HITS_ITERATIONS + 1):
         ctes.append(
             f"""a{i}r AS MATERIALIZED (
       SELECT e.d AS node, CAST(SUM(h.score) AS {d}) AS raw
@@ -405,7 +416,7 @@ def _hits_oracle(iterations: int = 3, scale: int = 9) -> str:
             f"""a{i} AS MATERIALIZED (
       SELECT node, CAST(ROUND(CAST(raw AS DOUBLE)
                    / CAST((SELECT CAST(SUM(raw) AS {d}) FROM a{i}r) AS DOUBLE),
-                   {scale}) AS {d}) AS score FROM a{i}r)"""
+                   {SCORE_SCALE}) AS {d}) AS score FROM a{i}r)"""
         )
         ctes.append(
             f"""h{i}r AS MATERIALIZED (
@@ -416,14 +427,14 @@ def _hits_oracle(iterations: int = 3, scale: int = 9) -> str:
             f"""h{i} AS MATERIALIZED (
       SELECT node, CAST(ROUND(CAST(raw AS DOUBLE)
                    / CAST((SELECT CAST(SUM(raw) AS {d}) FROM h{i}r) AS DOUBLE),
-                   {scale}) AS {d}) AS score FROM h{i}r)"""
+                   {SCORE_SCALE}) AS {d}) AS score FROM h{i}r)"""
         )
         prev_h = f"h{i}"
     final = (
         f"SELECT 'auth' AS kind, CAST(node AS VARCHAR) AS node,"
-        f" ROUND(CAST(score AS DOUBLE), 6) AS score FROM a{iterations}"
+        f" ROUND(CAST(score AS DOUBLE), 6) AS score FROM a{HITS_ITERATIONS}"
         f" UNION ALL SELECT 'hub', CAST(node AS VARCHAR),"
-        f" ROUND(CAST(score AS DOUBLE), 6) FROM h{iterations}"
+        f" ROUND(CAST(score AS DOUBLE), 6) FROM h{HITS_ITERATIONS}"
         f" ORDER BY kind, node"
     )
     return "WITH " + ",\n    ".join(ctes) + "\n    " + final
@@ -450,17 +461,17 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 100).cast("bigint").alias("src"),
         F.col("event_type").alias("dst"),
     )
-    return hits(edges, iterations=3, scale=9).orderBy("kind", "node")
+    return hits(edges).orderBy("kind", "node")
 
 
-def _ppr_oracle(iterations: int = 5, damping: float = 0.85, scale: int = 9) -> str:
+def _ppr_oracle() -> str:
     """Unrolled-CTE personalized PageRank mirroring
     operators/graph.personalized_pagerank: teleport mass lands only on the
     seed set {1,2,3}; per-edge contributions rounded in double then summed
     as decimal. Shared frames (e/nodes/outdeg) AS MATERIALIZED — they are
     referenced every round."""
-    d = f"DECIMAL(38,{scale})"
-    dm, base = damping, 1.0 - damping
+    d = f"DECIMAL(38,{SCORE_SCALE})"
+    dm, base = DAMPING, 1.0 - DAMPING
     ctes = [
         "e AS MATERIALIZED (SELECT DISTINCT p_partkey // 2 AS s, p_partkey AS d"
         " FROM part WHERE p_partkey >= 1)",
@@ -471,24 +482,24 @@ def _ppr_oracle(iterations: int = 5, damping: float = 0.85, scale: int = 9) -> s
         "outdeg AS MATERIALIZED (SELECT s, COUNT(*) AS outdeg FROM e GROUP BY s)",
         f"""pr0 AS (SELECT node, is_seed,
       CASE WHEN is_seed = 1
-           THEN CAST(ROUND(1.0 / (SELECT n FROM ns), {scale}) AS {d})
+           THEN CAST(ROUND(1.0 / (SELECT n FROM ns), {SCORE_SCALE}) AS {d})
            ELSE CAST(0 AS {d}) END AS pr FROM nodes)""",
     ]
-    for i in range(iterations):
+    for i in range(PPR_ITERATIONS):
         ctes.append(f"""pr{i + 1} AS (
       SELECT nd.node, nd.is_seed,
              CAST(CASE WHEN nd.is_seed = 1
-                       THEN CAST(ROUND({base!r} / (SELECT n FROM ns), {scale}) AS {d})
+                       THEN CAST(ROUND({base!r} / (SELECT n FROM ns), {SCORE_SCALE}) AS {d})
                        ELSE CAST(0 AS {d}) END
                   + COALESCE(c.csum, CAST(0 AS {d})) AS {d}) AS pr
       FROM nodes nd LEFT JOIN (
         SELECT e.d AS node,
-               SUM(CAST(ROUND(CAST(p.pr AS DOUBLE) * {dm!r} / o.outdeg, {scale})
+               SUM(CAST(ROUND(CAST(p.pr AS DOUBLE) * {dm!r} / o.outdeg, {SCORE_SCALE})
                         AS {d})) AS csum
         FROM pr{i} p JOIN e ON p.node = e.s JOIN outdeg o ON e.s = o.s
         GROUP BY e.d) c ON nd.node = c.node)""")
     final = (
-        f"SELECT node, ROUND(CAST(pr AS DOUBLE), 6) AS ppr FROM pr{iterations}"
+        f"SELECT node, ROUND(CAST(pr AS DOUBLE), 6) AS ppr FROM pr{PPR_ITERATIONS}"
         f" ORDER BY ppr DESC, node LIMIT 100"
     )
     return "WITH " + ",\n    ".join(ctes) + "\n    " + final
@@ -517,7 +528,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seeds = spark.createDataFrame([(1,), (2,), (3,)], "node bigint")
     return (
-        personalized_pagerank(edges, seeds, iterations=5, damping=0.85, scale=9)
+        personalized_pagerank(edges, seeds)
         .orderBy(F.desc("ppr"), "node")
         .limit(100)
     )
@@ -634,7 +645,7 @@ _MODULARITY_FINAL = f"""SELECT p.community, p.n_nodes,
 
 @register(
     "q_modularity",
-    oracle=_lpa_oracle(3, final=_MODULARITY_FINAL),
+    oracle=_lpa_oracle(final=_MODULARITY_FINAL),
     description="Newman modularity scoring of the LPA communities (Newman "
     "& Girvan 2004): Q_c = intra_c/m - (D_c/2m)^2 per community, carried "
     "as ONE exact integer rational (4m*intra - D^2)/(4m^2) with "
@@ -661,7 +672,7 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = (
         label_propagation(
             und.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-            iterations=3,
+            iterations=_LPA_ITERATIONS,
         )
         .localCheckpoint()
     )
@@ -706,7 +717,7 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("community")
 
 
-def _ktruss_oracle(k: int = 4, rounds: int = 6) -> str:
+def _ktruss_oracle() -> str:
     """Unrolled synchronous support peeling mirroring operators/graph.k_truss.
     Every round CTE is referenced 3-4x (wedge self-join + closing + filter),
     so AS MATERIALIZED is mandatory (the k-core exponential-re-expansion
@@ -732,19 +743,19 @@ def _ktruss_oracle(k: int = 4, rounds: int = 6) -> str:
       GROUP BY a, b)""",
         ]
 
-    for i in range(1, rounds + 1):
+    for i in range(1, KTRUSS_ROUNDS + 1):
         ctes += tri_sup(i, f"u{i - 1}")
         ctes.append(
             f"""u{i} AS MATERIALIZED (
       SELECT e.a, e.b FROM u{i - 1} e
-      JOIN s{i} s ON e.a = s.a AND e.b = s.b WHERE s.sup >= {k - 2})"""
+      JOIN s{i} s ON e.a = s.a AND e.b = s.b WHERE s.sup >= {KTRUSS_K - 2})"""
         )
-    ctes += tri_sup(rounds + 1, f"u{rounds}")
+    ctes += tri_sup(KTRUSS_ROUNDS + 1, f"u{KTRUSS_ROUNDS}")
     joined = ",\n    ".join(ctes)
     return f"""
     WITH {joined}
     SELECT e.a, e.b, CAST(COALESCE(s.sup, 0) AS BIGINT) AS support
-    FROM u{rounds} e LEFT JOIN s{rounds + 1} s
+    FROM u{KTRUSS_ROUNDS} e LEFT JOIN s{KTRUSS_ROUNDS + 1} s
       ON e.a = s.a AND e.b = s.b
     ORDER BY e.a, e.b
     """
@@ -772,7 +783,7 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = F.col("user_id").cast("bigint") % 50
     b = F.floor(F.col("value")).cast("bigint") % 50
     edges = ev.where(a != b).select(a.alias("src"), b.alias("dst"))
-    return k_truss(edges, k=4, rounds=6).orderBy("a", "b")
+    return k_truss(edges).orderBy("a", "b")
 
 
 @register(
@@ -811,7 +822,7 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = F.col("user_id").cast("bigint") % 50
     b = F.floor(F.col("value")).cast("bigint") % 50
     edges = ev.where(a != b).select(a.alias("src"), b.alias("dst")).distinct()
-    clo = transitive_closure(edges, "src", "dst")
+    clo = transitive_closure(edges)
     nodes = (
         edges.select(F.col("src").alias("n"))
         .unionByName(edges.select(F.col("dst").alias("n")))
@@ -871,7 +882,7 @@ def q_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = F.col("user_id").cast("bigint") % 50
     b = F.floor(F.col("value")).cast("bigint") % 50
     edges = ev.where(a != b).select(a.alias("src"), b.alias("dst")).distinct()
-    return fwbw_scc(edges, "src", "dst").select(
+    return fwbw_scc(edges).select(
         F.col("node").cast("bigint").alias("node"),
         F.col("scc").cast("bigint").alias("scc"),
     ).orderBy("node")
@@ -1210,10 +1221,10 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("node")
 
 
-def _betweenness_sampled_oracle(levels: int = _BC_LEVELS) -> str:
+def _betweenness_sampled_oracle() -> str:
     """The Brandes-Pich estimator oracle: the q_betweenness sweeps with
     seeds restricted to node % 5 == 0 and the n/|S| rescale."""
-    base = _betweenness_oracle(levels)
+    base = _betweenness_oracle(_BC_LEVELS)
     base = base.replace(
         "sig0 AS MATERIALIZED (SELECT node AS s, node AS v,"
         " CAST(1 AS BIGINT) AS sig FROM nodes)",

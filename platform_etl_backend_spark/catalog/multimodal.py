@@ -55,7 +55,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode("text", "utf-8").alias("data")
     )
     meta = MM.attach_media_meta(d, "data")
-    frames = MM.frame_sample(d, "doc_id", "data", every=2)
+    frames = MM.frame_sample(d, "doc_id", "data")
     return (
         frames.join(
             F.broadcast(meta.select("doc_id", F.col("meta.n_frames").alias("n_frames"))),
@@ -71,13 +71,13 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _features_oracle(dim: int = MM.FEATURE_DIM) -> str:
+def _features_oracle() -> str:
     # sha256 digest is 32 bytes; the stub resizes to the first `dim` bytes.
     # Serialized contract: pseudo-pixel bytes re-quantized (round(x*255) is
     # exact — x is k/255.0) and '|'-joined, plus the raw double sum rounded
     # to 6 d.p., so the IEEE-double Arrow path is still value-checked without
     # emitting an array column (canonicalizer-proof).
-    bytes_list = ", ".join(f"{_byte_expr('h', j)} / 255.0" for j in range(dim))
+    bytes_list = ", ".join(f"{_byte_expr('h', j)} / 255.0" for j in range(MM.FEATURE_DIM))
     return f"""
     WITH h AS (SELECT doc_id, sha256(text) AS h FROM documents),
     feat AS (SELECT doc_id, [{bytes_list}] AS features FROM h)
@@ -252,7 +252,7 @@ def q_crossencoder_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cands = docs.select("doc_id", F.col("text").alias("dtext"), "source")
     pairs = queries.join(cands, "source").where(F.col("doc_id") != F.col("query_id"))
-    return crossencoder_rerank(pairs, "query_id", "doc_id", "qtext", "dtext", k=3)
+    return crossencoder_rerank(pairs, "query_id", "doc_id", "qtext", "dtext")
 
 
 @register(
@@ -271,7 +271,7 @@ def q_crossencoder_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id")
-    return MM.jpeg_roundtrip_features(d, "doc_id", height=24, width=16, quality=90)
+    return MM.jpeg_roundtrip_features(d, "doc_id")
 
 
 @register(
@@ -303,8 +303,7 @@ def q_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     return MM.jpeg_roundtrip_features(
-        d, "doc_id", height=24, width=16, quality=90,
-        progressive=True, restart_interval=2,
+        d, "doc_id", progressive=True, restart_interval=2,
     )
 
 
@@ -805,5 +804,5 @@ def q_transformer_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = docs.select("doc_id", F.col("text").alias("dtext"), "source")
     pairs = queries.join(cands, "source").where(F.col("doc_id") != F.col("query_id"))
     return int_transformer_rerank(
-        pairs, "query_id", "doc_id", "qtext", "dtext", k=3
+        pairs, "query_id", "doc_id", "qtext", "dtext"
     ).orderBy("query_id", "rk")

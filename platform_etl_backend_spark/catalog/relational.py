@@ -981,7 +981,6 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_qty": (F.sum(dec2("l_quantity")), dbl(F.sum("total_qty"))),
             "max_price": (F.max("l_extendedprice"), F.max("max_price")),
         },
-        buckets=16,
     )
 
 
@@ -2862,7 +2861,7 @@ _LR_STEPS = 3
 _LR_RATE = "2.0"
 
 
-def _logreg_oracle(steps: int = _LR_STEPS) -> str:
+def _logreg_oracle() -> str:
     pts = """
     pts AS (
       SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) / 10000000.0 AS x1,
@@ -2872,7 +2871,7 @@ def _logreg_oracle(steps: int = _LR_STEPS) -> str:
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM pts),
     w0 AS (SELECT 0.0 AS a, 0.0 AS b, 0.0 AS c)"""
     ctes = [pts]
-    for i in range(steps):
+    for i in range(_LR_STEPS):
         ctes.append(f"""
     z{i} AS (
       SELECT y, x1, x2,
@@ -2896,7 +2895,7 @@ def _logreg_oracle(steps: int = _LR_STEPS) -> str:
                                       = (y = 1) THEN 1 ELSE 0 END) AS BIGINT)
             FROM pts) AS n_correct,
            (SELECT n FROM nn) AS n
-    FROM w{steps}
+    FROM w{_LR_STEPS}
     """
 
 

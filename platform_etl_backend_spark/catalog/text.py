@@ -20,6 +20,15 @@ from platform_etl_backend_spark.functions.portable_math import (
 from platform_etl_backend_spark.operators import dedup as D
 from platform_etl_backend_spark.operators import nlp as NLP
 from platform_etl_backend_spark.operators import textqa as TQ
+from platform_etl_backend_spark.operators.stats import COUNT_MIN_DEPTH
+
+# Each is read by a query and by its DuckDB oracle, so the two cannot drift.
+_MINHASH_HASHES = 8
+_MINHASH_BANDS = 4
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+_BM25_TOPK = 3
+_CM_TOPK = 20
 
 # DuckDB fragments ----------------------------------------------------------
 
@@ -99,19 +108,19 @@ def q_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_pairs(
-        table(spark, sf_dir, "documents"), "doc_id", "text", k=3, threshold=0.5
+        table(spark, sf_dir, "documents"), "doc_id", "text", k=3
     )
 
 
-def _minhash_oracle(k: int = 3, num_hashes: int = 8, bands: int = 4, threshold: float = 0.5) -> str:
-    r = num_hashes // bands
+def _minhash_oracle() -> str:
+    r = _MINHASH_HASHES // _MINHASH_BANDS
     hash_cols = ", ".join(
-        f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(num_hashes)
+        f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(_MINHASH_HASHES)
     )
     band_rows = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, "
         f"md5(concat_ws('|', {', '.join(f'h{b * r + rr}' for rr in range(r))})) AS key FROM sig"
-        for b in range(bands)
+        for b in range(_MINHASH_BANDS)
     )
     return f"""
     WITH {_SHINGLE_CTE},
@@ -129,7 +138,7 @@ def _minhash_oracle(k: int = 3, num_hashes: int = 8, bands: int = 4, threshold: 
     SELECT id_a, id_b,
            ROUND(CAST(inter AS DOUBLE) / (za.n + zb.n - inter), 6) AS jaccard
     FROM inter JOIN sz za ON id_a = za.doc_id JOIN sz zb ON id_b = zb.doc_id
-    WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= {threshold}
+    WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= {D.MINHASH_THRESHOLD}
     """
 
 
@@ -143,18 +152,18 @@ def _minhash_oracle(k: int = 3, num_hashes: int = 8, bands: int = 4, threshold: 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_dedup_pairs(
         table(spark, sf_dir, "documents"), "doc_id", "text",
-        k=3, num_hashes=8, bands=4, threshold=0.5,
+        num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS,
     )
 
 
-def _simhash_oracle(bits: int = 16) -> str:
+def _simhash_oracle() -> str:
     sums = []
-    for b in range(bits):
+    for b in range(D.SIMHASH_BITS):
         c, j = b // 4 + 1, b % 4
         sums.append(
             f"SUM((((strpos('0123456789abcdef', h[{c}]) - 1) >> {j}) & 1) * 2 - 1) AS s{b}"
         )
-    hash_terms = " + ".join(f"CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(bits))
+    hash_terms = " + ".join(f"CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(D.SIMHASH_BITS))
     return f"""
     WITH tok AS (SELECT doc_id, unnest({_T}) AS tok FROM documents),
     hashed AS (SELECT doc_id, md5(tok) AS h FROM tok),
@@ -170,7 +179,7 @@ def _simhash_oracle(bits: int = 16) -> str:
     tags=("dedup", "text"),
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.simhash(table(spark, sf_dir, "documents"), "doc_id", "text", bits=16)
+    return D.simhash(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register(
@@ -185,7 +194,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "text"),
 )
 def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.winnow_fingerprint(table(spark, sf_dir, "documents"), "doc_id", "text", k=5)
+    return D.winnow_fingerprint(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register(
@@ -222,7 +231,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import connected_components
 
     pairs = D.ngram_jaccard_pairs(
-        table(spark, sf_dir, "documents"), "doc_id", "text", k=3, threshold=0.5
+        table(spark, sf_dir, "documents"), "doc_id", "text", k=3
     ).select("id_a", "id_b")
     # near-dup doc clusters are tiny stars — the star fixpoint lands in
     # ~2 rounds; checking every 2nd round halves the per-round action
@@ -363,7 +372,7 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "quality"),
 )
 def q_repetition_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TQ.ngram_repetition(table(spark, sf_dir, "documents"), "doc_id", "text", n=2)
+    return TQ.ngram_repetition(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def _gopher_oracle() -> str:
@@ -487,7 +496,7 @@ _PII_Q_PATTERNS = {"email": TQ.PII_PATTERNS["email"], "digit_run": TQ.PII_PATTER
 )
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer")
-    out = TQ.pii_metrics(c, "c_name", _PII_Q_PATTERNS, mask="[PII]")
+    out = TQ.pii_metrics(c, "c_name", _PII_Q_PATTERNS)
     return out.select("c_custkey", "n_email", "n_digit_run", "masked")
 
 
@@ -515,7 +524,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "scoring"),
 )
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TQ.tfidf_top_terms(table(spark, sf_dir, "documents"), "doc_id", "text", k=3)
+    return TQ.tfidf_top_terms(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register(
@@ -657,7 +666,7 @@ def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TQ.unigram_surprisal(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-def _bm25_oracle(k1: float = 1.2, b: float = 0.75, topk: int = 3) -> str:
+def _bm25_oracle() -> str:
     return f"""
     WITH tok AS (SELECT doc_id, unnest({_T}) AS term FROM documents),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
@@ -667,15 +676,15 @@ def _bm25_oracle(k1: float = 1.2, b: float = 0.75, topk: int = 3) -> str:
     scored AS (
       SELECT tf.doc_id, tf.term, tf.tf,
              ROUND({duck_portable_ln_ratio("2 * g.n_docs + 2", "2 * dfreq.df + 1")}
-                   * (tf.tf * ({k1} + 1))
-                   / (tf.tf + {k1} * (1 - {b} + {b} * dl.dl / g.avgdl)), 6) AS score
+                   * (tf.tf * ({_BM25_K1} + 1))
+                   / (tf.tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl.dl / g.avgdl)), 6) AS score
       FROM tf JOIN dfreq USING (term) JOIN dl USING (doc_id) CROSS JOIN g),
     ranked AS (
       SELECT doc_id, term, tf, score,
              ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rk
       FROM scored)
     SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, score
-    FROM ranked WHERE rk <= {topk}
+    FROM ranked WHERE rk <= {_BM25_TOPK}
     """
 
 
@@ -690,7 +699,7 @@ def _bm25_oracle(k1: float = 1.2, b: float = 0.75, topk: int = 3) -> str:
 def q_bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    k1, b = 1.2, 0.75
+    k1, b = _BM25_K1, _BM25_B
     d = table(spark, sf_dir, "documents")
     tok = D.spread(d, "doc_id").select(
         F.col("doc_id"), F.explode(D.ws_tokens("text")).alias("term")
@@ -723,7 +732,7 @@ def q_bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
+        .where(F.col("rk") <= _BM25_TOPK)
         .select("doc_id", "term", F.col("tf").cast("bigint").alias("tf"), "score")
     )
 
@@ -762,7 +771,7 @@ def q_bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "text", "spans"),
 )
 def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.duplicated_spans(table(spark, sf_dir, "documents"), "doc_id", "text", k=3)
+    return D.duplicated_spans(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 # shared bigram-LM CTE chain (q_bigram_logprob and the quantile-filter
@@ -934,15 +943,15 @@ def _cm_bucket_sql(expr: str, row: int, width: int = 256) -> str:
             f" + (strpos('0123456789abcdef', substr({md5}, 2, 1)) - 1)) % {width})")
 
 
-def _count_min_oracle(depth: int = 4, width: int = 256, topk: int = 20) -> str:
+def _count_min_oracle(width: int = 256) -> str:
     rb = " UNION ALL ".join(
         f"SELECT {r} AS row, {_cm_bucket_sql('token', r, width)} AS bucket FROM tok"
-        for r in range(depth)
+        for r in range(COUNT_MIN_DEPTH)
     )
     probes = " UNION ALL ".join(
         f"SELECT token, exact, rk, {r} AS row, "
         f"{_cm_bucket_sql('token', r, width)} AS bucket FROM top"
-        for r in range(depth)
+        for r in range(COUNT_MIN_DEPTH)
     )
     return f"""
     WITH tok AS (SELECT unnest({_T}) AS token FROM documents),
@@ -952,7 +961,7 @@ def _count_min_oracle(depth: int = 4, width: int = 256, topk: int = 20) -> str:
     top AS (SELECT token, exact, rk FROM (
               SELECT token, exact,
                      ROW_NUMBER() OVER (ORDER BY exact DESC, token) AS rk
-              FROM exact) WHERE rk <= {topk}),
+              FROM exact) WHERE rk <= {_CM_TOPK}),
     probes AS ({probes})
     SELECT rk, token, CAST(exact AS BIGINT) AS exact,
            CAST(MIN(cnt) AS BIGINT) AS cm_estimate,
@@ -977,7 +986,7 @@ def q_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return count_min_estimates(
         table(spark, sf_dir, "documents"), "doc_id", "text",
-        depth=4, width=256, topk=20,
+        width=256, topk=_CM_TOPK,
     )
 
 
@@ -1287,7 +1296,7 @@ _LN04 = "-0.916290731874155"  # repr(math.log(0.4)) — shared double literal
 )
 def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TQ.stupid_backoff_logprob(
-        table(spark, sf_dir, "documents"), "doc_id", "text", min_count=2, alpha=0.4
+        table(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -1315,7 +1324,7 @@ def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.prefix_filtered_jaccard_pairs(
-        table(spark, sf_dir, "documents"), "doc_id", "text", k=3, threshold=0.5
+        table(spark, sf_dir, "documents"), "doc_id", "text", k=3
     )
 
 
@@ -1620,7 +1629,7 @@ def q_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_count_min_narrow",
-    oracle=_count_min_oracle(depth=4, width=16),
+    oracle=_count_min_oracle(width=16),
     description="count-min sketch at a deliberately narrow width (4x16): "
     "the e/w error knob made visible — same exact mergeable aggregation, "
     "heavy bucket collisions, so estimates OVERSHOOT true counts where the "
@@ -1635,7 +1644,7 @@ def q_count_min_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return count_min_estimates(
         table(spark, sf_dir, "documents"), "doc_id", "text",
-        depth=4, width=16, topk=20,
+        width=16, topk=_CM_TOPK,
     )
 
 
@@ -1995,7 +2004,7 @@ def q_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TQ.skipgram_pairs(
-        table(spark, sf_dir, "documents"), "doc_id", "text", window=2, topk=50
+        table(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -2486,7 +2495,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.containment_pairs(
-        table(spark, sf_dir, "documents"), "doc_id", "text", k=3, threshold=0.8
+        table(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -4241,17 +4250,15 @@ def q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- MinHash-LSH recall/precision eval ---------------------------------------------
 
-def _minhash_recall_oracle(
-    k: int = 3, num_hashes: int = 8, bands: int = 4, threshold: float = 0.5
-) -> str:
-    r = num_hashes // bands
+def _minhash_recall_oracle() -> str:
+    r = _MINHASH_HASHES // _MINHASH_BANDS
     hash_cols = ", ".join(
-        f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(num_hashes)
+        f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(_MINHASH_HASHES)
     )
     band_rows = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, "
         f"md5(concat_ws('|', {', '.join(f'h{b * r + rr}' for rr in range(r))})) AS key FROM sig"
-        for b in range(bands)
+        for b in range(_MINHASH_BANDS)
     )
     return f"""
     WITH {_SHINGLE_CTE},
@@ -4269,7 +4276,7 @@ def _minhash_recall_oracle(
     ver AS (
       SELECT id_a, id_b FROM cinter
       JOIN sz za ON id_a = za.doc_id JOIN sz zb ON id_b = zb.doc_id
-      WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= {threshold}),
+      WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= {D.MINHASH_THRESHOLD}),
     tinter AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
       FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
@@ -4277,7 +4284,7 @@ def _minhash_recall_oracle(
     truth AS (
       SELECT id_a, id_b FROM tinter
       JOIN sz za ON id_a = za.doc_id JOIN sz zb ON id_b = zb.doc_id
-      WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= {threshold}),
+      WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= {D.MINHASH_THRESHOLD}),
     s AS (
       SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
              CAST((SELECT COUNT(*) FROM cands) AS BIGINT) AS n_candidates,
@@ -4315,11 +4322,12 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents")
-    docs = shingle_docs(d, "doc_id", "text", 3).persist()
+    docs = shingle_docs(d, "doc_id", "text", D.SHINGLE_K).persist()
     sig = docs.select(
-        "doc_id", *[_min_hash(F.col("shingles"), i).alias(f"h{i}") for i in range(8)]
+        "doc_id",
+        *[_min_hash(F.col("shingles"), i).alias(f"h{i}") for i in range(_MINHASH_HASHES)],
     )
-    keyed = _banded_keys(sig, "doc_id", 8, 4)
+    keyed = _banded_keys(sig, "doc_id", _MINHASH_HASHES, _MINHASH_BANDS)
     ka = keyed.select(F.col("doc_id").alias("id_a"), "band", "key")
     kb = keyed.select(F.col("doc_id").alias("id_b"), "band", "key")
     cands = (
@@ -4359,7 +4367,7 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
                 6,
             )
-            >= 0.5
+            >= D.MINHASH_THRESHOLD
         )
         .select("id_a", "id_b")
     )
@@ -4410,17 +4418,17 @@ wsz AS (SELECT doc_id, CAST(SUM(w) AS BIGINT) AS s FROM wtf GROUP BY doc_id)
 """
 
 
-def _wmh_sig_ctes(num_hashes: int = 8, bands: int = 4) -> str:
-    r = num_hashes // bands
+def _wmh_sig_ctes() -> str:
+    r = _MINHASH_HASHES // _MINHASH_BANDS
     hash_cols = ", ".join(
         f"MIN(md5('{i}:' || g || ':' || CAST(i2 AS VARCHAR))) AS h{i}"
-        for i in range(num_hashes)
+        for i in range(_MINHASH_HASHES)
     )
     band_rows = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, "
         f"md5(concat_ws('|', {', '.join(f'h{b * r + rr}' for rr in range(r))})) AS key"
         " FROM sig"
-        for b in range(bands)
+        for b in range(_MINHASH_BANDS)
     )
     return f"""
 rep AS (SELECT doc_id, g, unnest(range(1, CAST(w + 1 AS BIGINT))) AS i2 FROM wtf),
@@ -4471,9 +4479,9 @@ def q_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents")
-    wtf = weighted_shingle_tf_rows(d, "doc_id", "text", 3).persist()
-    sig = weighted_minhash_sigs_from_tf(wtf, "doc_id", 8)
-    keyed = _banded_keys(sig, "doc_id", 8, 4)
+    wtf = weighted_shingle_tf_rows(d, "doc_id", "text").persist()
+    sig = weighted_minhash_sigs_from_tf(wtf, "doc_id", _MINHASH_HASHES)
+    keyed = _banded_keys(sig, "doc_id", _MINHASH_HASHES, _MINHASH_BANDS)
     ka = keyed.select(F.col("doc_id").alias("id_a"), "band", "key")
     kb = keyed.select(F.col("doc_id").alias("id_b"), "band", "key")
     cands = (
@@ -4551,9 +4559,9 @@ def q_weighted_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents")
-    wtf = weighted_shingle_tf_rows(d, "doc_id", "text", 3).persist()
-    sig = weighted_minhash_sigs_from_tf(wtf, "doc_id", 8)
-    keyed = _banded_keys(sig, "doc_id", 8, 4)
+    wtf = weighted_shingle_tf_rows(d, "doc_id", "text").persist()
+    sig = weighted_minhash_sigs_from_tf(wtf, "doc_id", _MINHASH_HASHES)
+    keyed = _banded_keys(sig, "doc_id", _MINHASH_HASHES, _MINHASH_BANDS)
     ka = keyed.select(F.col("doc_id").alias("id_a"), "band", "key")
     kb = keyed.select(F.col("doc_id").alias("id_b"), "band", "key")
     cands = (

@@ -12,6 +12,14 @@ from pyspark.sql.types import IntegerType
 from platform_etl_backend_spark.catalog.registry import register, table
 from platform_etl_backend_spark.operators import similarity as S
 
+# Each is read by a query and by its DuckDB oracle, so the two cannot drift.
+_KMEANS_K = 8
+_KMEANS_ITERS = 2
+_EMB_DIM = 64  # width of the fixture's embedding vectors
+_SEMDEDUP_THRESHOLD = 0.4
+_MT_NBITS = 4
+_MT_TABLES = 2
+
 _COS = (
     "ROUND(list_dot_product(qv, bv) / "
     "(sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(bv, bv))), 6)"
@@ -183,7 +191,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     centroids = emb.where(F.col("vec_id") < 8)
-    return S.ivf_topk(emb, centroids, "vec_id", "embedding", k=1, nprobe=2)
+    return S.ivf_topk(emb, centroids, "vec_id", "embedding", nprobe=2)
 
 
 @register(
@@ -325,10 +333,10 @@ _PAIR_COS = (
 )
 
 
-def _kmeans_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
+def _kmeans_oracle() -> str:
     """kmeans chain + within-cell top-1 (q_ann_ivf_kmeans)."""
     pair_cos = _PAIR_COS
-    joined = ",\n    ".join(_kmeans_cte_parts(k, iters, dim))
+    joined = ",\n    ".join(_kmeans_cte_parts(_KMEANS_K, _KMEANS_ITERS, _EMB_DIM))
     return f"""
     WITH {joined},
     pairs AS (
@@ -354,24 +362,24 @@ def _kmeans_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
 )
 def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    cents = S.kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2).select(
+    cents = S.kmeans_fit(emb, "vec_id", "embedding", k=_KMEANS_K, iters=_KMEANS_ITERS).select(
         F.col("cell_id").alias("vec_id"), F.col("vec").alias("embedding")
     )
     return S.ivf_top1(emb, cents, "vec_id", "embedding")
 
 
-def _silhouette_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
+def _silhouette_oracle() -> str:
     """Centroid-based silhouette on the kmeans cells (reuses the fit CTEs)."""
     cos = (
         "ROUND(list_dot_product({a}, {b}) / "
         "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
     )
-    fit = ",\n    ".join(_kmeans_cte_parts(k, iters, dim)[:-1])  # drop fasg
+    fit = ",\n    ".join(_kmeans_cte_parts(_KMEANS_K, _KMEANS_ITERS, _EMB_DIM)[:-1])  # drop fasg
     sc = cos.format(a="v.vec", b="c.cvec")
     return f"""
     WITH {fit},
     scored AS (
-      SELECT v.vid, c.cell_id, {sc} AS cc FROM v, cent{iters} c),
+      SELECT v.vid, c.cell_id, {sc} AS cc FROM v, cent{_KMEANS_ITERS} c),
     rk AS (
       SELECT vid, cell_id, cc,
              ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cc DESC, cell_id)
@@ -428,7 +436,7 @@ def q_silhouette_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = emb.select(
         F.col("vec_id").alias("vid"), S.as_double_array("embedding").alias("vec")
     ).withColumn("vn", S.norm(F.col("vec")))
-    cents = S.kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2).select(
+    cents = S.kmeans_fit(emb, "vec_id", "embedding", k=_KMEANS_K, iters=_KMEANS_ITERS).select(
         "cell_id", F.col("vec").alias("cv")
     ).withColumn("cn", S.norm(F.col("cv")))
     # own/second-best centroid MAP-SIDE off the broadcast centroid array
@@ -463,19 +471,19 @@ def q_silhouette_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cell_id")
 
 
-def _davies_bouldin_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
+def _davies_bouldin_oracle() -> str:
     """Davies-Bouldin index on the kmeans cells (reuses the fit CTEs)."""
     cos = (
         "ROUND(list_dot_product({a}, {b}) / "
         "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
     )
-    fit = ",\n    ".join(_kmeans_cte_parts(k, iters, dim)[:-1])  # drop fasg
+    fit = ",\n    ".join(_kmeans_cte_parts(_KMEANS_K, _KMEANS_ITERS, _EMB_DIM)[:-1])  # drop fasg
     sc = cos.format(a="v.vec", b="c.cvec")
     cm = cos.format(a="a.cvec", b="b.cvec")
     return f"""
     WITH {fit},
     scored AS (
-      SELECT v.vid, c.cell_id, {sc} AS cc FROM v, cent{iters} c),
+      SELECT v.vid, c.cell_id, {sc} AS cc FROM v, cent{_KMEANS_ITERS} c),
     rk AS (
       SELECT vid, cell_id, cc,
              ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cc DESC, cell_id)
@@ -494,7 +502,7 @@ def _davies_bouldin_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
     sep AS (
       SELECT a.cell_id AS i, b.cell_id AS j,
              CAST(round(1 - {cm}, 6) * 1000000 AS BIGINT) AS m_micro
-      FROM cent{iters} a JOIN cent{iters} b ON a.cell_id <> b.cell_id),
+      FROM cent{_KMEANS_ITERS} a JOIN cent{_KMEANS_ITERS} b ON a.cell_id <> b.cell_id),
     r AS (
       SELECT sep.i, sep.j,
              CAST(si.s_micro + sj.s_micro AS DOUBLE)
@@ -545,7 +553,7 @@ def q_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = emb.select(
         F.col("vec_id").alias("vid"), S.as_double_array("embedding").alias("vec")
     ).withColumn("vn", S.norm(F.col("vec")))
-    cents = S.kmeans_fit(emb, "vec_id", "embedding", k=8, iters=2).select(
+    cents = S.kmeans_fit(emb, "vec_id", "embedding", k=_KMEANS_K, iters=_KMEANS_ITERS).select(
         "cell_id", F.col("vec").alias("cvec")
     ).withColumn("cn", S.norm(F.col("cvec")))
     # own centroid MAP-SIDE off the broadcast centroid array — the fold
@@ -645,11 +653,11 @@ def _bucket_sql_offset(col: str, nbits: int, offset: int) -> str:
     return f"CAST({terms} AS INTEGER)"
 
 
-def _multitable_oracle(nbits: int = 4, tables: int = 2) -> str:
+def _multitable_oracle() -> str:
     keyed = " UNION ALL ".join(
         f"SELECT vec_id, vec, {t} AS tbl, "
-        f"{_bucket_sql_offset('vec', nbits, t * nbits)} AS bkt FROM v"
-        for t in range(tables)
+        f"{_bucket_sql_offset('vec', _MT_NBITS, t * _MT_NBITS)} AS bkt FROM v"
+        for t in range(_MT_TABLES)
     )
     return f"""
     WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
@@ -681,19 +689,18 @@ def _multitable_oracle(nbits: int = 4, tables: int = 2) -> str:
 )
 def q_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    return S.multitable_ann_top1(emb, "vec_id", "embedding", nbits=4, tables=2)
+    return S.multitable_ann_top1(emb, "vec_id", "embedding", nbits=_MT_NBITS, tables=_MT_TABLES)
 
 
-def _semantic_dedup_oracle(k: int = 8, iters: int = 2, dim: int = 64,
-                           threshold: float = 0.4) -> str:
+def _semantic_dedup_oracle() -> str:
     """kmeans chain + within-cell keep-first dedup (q_semantic_dedup)."""
-    joined = ",\n    ".join(_kmeans_cte_parts(k, iters, dim))
+    joined = ",\n    ".join(_kmeans_cte_parts(_KMEANS_K, _KMEANS_ITERS, _EMB_DIM))
     return f"""
     WITH {joined},
     pairs AS (
       SELECT b.vid AS dropped_id
       FROM fasg a JOIN fasg b ON a.cell_id = b.cell_id AND a.vid < b.vid
-      WHERE {_PAIR_COS} >= {threshold!r}),
+      WHERE {_PAIR_COS} >= {_SEMDEDUP_THRESHOLD!r}),
     dropped AS (SELECT DISTINCT dropped_id FROM pairs)
     SELECT f.cell_id, COUNT(*) AS n_vectors,
            CAST(COUNT(d.dropped_id) AS BIGINT) AS n_dropped,
@@ -718,7 +725,10 @@ def _semantic_dedup_oracle(k: int = 8, iters: int = 2, dim: int = 64,
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    return S.semantic_dedup(emb, "vec_id", "embedding", k=8, iters=2, threshold=0.4)
+    return S.semantic_dedup(
+        emb, "vec_id", "embedding",
+        k=_KMEANS_K, iters=_KMEANS_ITERS, threshold=_SEMDEDUP_THRESHOLD,
+    )
 
 
 @register(
@@ -1029,7 +1039,7 @@ def q_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.jl_project(emb.repartition(n, "vec_id"), "vec_id", "embedding").orderBy("vec_id")
 
 
-def _pq_cte_chain(iters: int = 2) -> str:
+def _pq_cte_chain() -> str:
     """CTE chain mirroring pq_fit_codebooks + pq_encode exactly (M=4
     subspaces x 16 dims, K=8, bottom-k-md5 init, ROUND(6)-L2 argmin with
     cell ties, decimal dimension means). MATERIALIZED throughout — the
@@ -1055,7 +1065,7 @@ def _pq_cte_chain(iters: int = 2) -> str:
           SELECT s, cell_id, vec[s * {PQ_DSUB} + 1 : s * {PQ_DSUB} + {PQ_DSUB}] AS cvec
           FROM init, range(0, {PQ_M}) t(s))""",
     ]
-    for i in range(iters):
+    for i in range(S.PQ_ITERS):
         d = l2("sv", "c.cvec")
         parts.append(f"""asg{i} AS MATERIALIZED (
           SELECT vid, s, sv, cell_id FROM (
@@ -1078,7 +1088,7 @@ def _pq_cte_chain(iters: int = 2) -> str:
         SELECT subs.vid, subs.s, c.cell_id, {d} AS dd,
                ROW_NUMBER() OVER (PARTITION BY subs.vid, subs.s
                                   ORDER BY {d} ASC, c.cell_id) AS rn
-        FROM subs JOIN cent{iters} c ON subs.s = c.s) WHERE rn = 1)""")
+        FROM subs JOIN cent{S.PQ_ITERS} c ON subs.s = c.s) WHERE rn = 1)""")
     return ",\n    ".join(parts)
 
 
@@ -1151,7 +1161,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    return S.pq_adc_topk(emb, "vec_id", "embedding", F.col("qid") < 5, k=3)
+    return S.pq_adc_topk(emb, "vec_id", "embedding", F.col("qid") < 5)
 
 
 # --- grid-density clustering (cell-based DBSCAN variant) --------------------
@@ -1416,7 +1426,7 @@ _MMR_K = 8
 _MMR_CAND = 16
 
 
-def _mmr_oracle(k: int = _MMR_K, cand: int = _MMR_CAND) -> str:
+def _mmr_oracle() -> str:
     """Unrolled greedy MMR mirroring q_mmr_rerank: candidate/sim frames and
     every selection CTE are referenced by all later rounds -> MATERIALIZED
     (the k-core/PCA re-expansion rule). score_milli = 7*rel - 3*maxsim on
@@ -1432,7 +1442,7 @@ def _mmr_oracle(k: int = _MMR_K, cand: int = _MMR_CAND) -> str:
                   AS BIGINT) AS rel
       FROM (SELECT vec_id, embedding::DOUBLE[] AS bv FROM embeddings
             WHERE vec_id <> 0) b CROSS JOIN q
-      ORDER BY rel DESC, vec_id LIMIT {cand})""",
+      ORDER BY rel DESC, vec_id LIMIT {_MMR_CAND})""",
         """sims AS MATERIALIZED (
       SELECT a.vec_id AS u, b.vec_id AS v,
              CAST(ROUND(ROUND(list_dot_product(a.bv, b.bv)
@@ -1445,7 +1455,7 @@ def _mmr_oracle(k: int = _MMR_K, cand: int = _MMR_CAND) -> str:
       FROM cand ORDER BY rel DESC, vec_id LIMIT 1)""",
     ]
     prev_union = "SELECT vec_id, pos, score_milli, rel FROM sel1"
-    for i in range(2, k + 1):
+    for i in range(2, _MMR_K + 1):
         ctes.append(f"""selected{i - 1} AS MATERIALIZED ({prev_union})""")
         ctes.append(f"""sel{i} AS MATERIALIZED (
       SELECT c.vec_id, {i} AS pos,

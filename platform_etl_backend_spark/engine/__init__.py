@@ -1,4 +1,4 @@
-from platform_etl_backend_spark.engine.session import get_spark, session_scoped_conf
+from platform_etl_backend_spark.engine.session import get_spark
 from platform_etl_backend_spark.engine.config import (
     IOResourceConfig,
     WRITE_MODES,
@@ -8,7 +8,6 @@ from platform_etl_backend_spark.engine.io import IOResource, read_from, write_to
 
 __all__ = [
     "get_spark",
-    "session_scoped_conf",
     "IOResourceConfig",
     "WRITE_MODES",
     "validate_write_mode",

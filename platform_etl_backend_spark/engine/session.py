@@ -20,9 +20,8 @@ Design-for-100TB notes
 
 from __future__ import annotations
 
-import contextlib
 import os
-from typing import Iterator, Mapping
+from typing import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -69,29 +68,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-@contextlib.contextmanager
-def session_scoped_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[SparkSession]:
-    """Temporarily override runtime SQL conf, restoring on exit.
-
-    PySpark-native equivalent of the reference's per-step session rebuild
-    (``Literature.scala:18-31`` sets ``spark.sql.mapKeyDedupPolicy=LAST_WIN``
-    for one step only): runtime-settable confs are scoped, not baked into a
-    new session.
-    """
-    saved: dict[str, str | None] = {}
-    for k, v in conf.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield spark
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)

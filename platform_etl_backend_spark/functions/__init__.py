@@ -6,10 +6,8 @@ from platform_etl_backend_spark.functions.columns import (
     rename_all_cols,
     safe_array_union,
     snake_to_lower_camel_schema,
-    strip_id_from_uri,
     transpose_dataframe,
     union_dataframe_different_schema,
-    validate_df,
 )
 
 __all__ = [
@@ -20,8 +18,6 @@ __all__ = [
     "rename_all_cols",
     "safe_array_union",
     "snake_to_lower_camel_schema",
-    "strip_id_from_uri",
     "transpose_dataframe",
     "union_dataframe_different_schema",
-    "validate_df",
 ]

@@ -9,17 +9,11 @@ from __future__ import annotations
 
 import re
 from functools import reduce
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def strip_id_from_uri(col: Column | str) -> Column:
-    """Last path segment of a URI (Helpers.scala:124-125 stripIDFromURI)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring_index(c, "/", -1)
 
 
 def mk_flatten_array(*cols: Column) -> Column:
@@ -146,13 +140,13 @@ def snake_to_lower_camel_schema(df: DataFrame) -> DataFrame:
     return rename_all_cols(df, snake_to_lower_camel)
 
 
-def replace_spaces_schema(df: DataFrame, replacement: str = "_") -> DataFrame:
+def replace_spaces_schema(df: DataFrame) -> DataFrame:
     """Helpers.scala:286-295."""
-    return rename_all_cols(df, lambda n: n.replace(" ", replacement))
+    return rename_all_cols(df, lambda n: n.replace(" ", "_"))
 
 
 def priority_dedup_array(
-    arr: Column, priority: dict[str, int], id_field: str = "id", src_field: str = "source"
+    arr: Column, priority: dict[str, int]
 ) -> Column:
     """Priority-ranked array dedup, pure Catalyst (X1/O5 port — the
     reference's ``cleanProteinIds`` Scala UDF, Target.scala:525-593:
@@ -164,8 +158,8 @@ def priority_dedup_array(
     keyed = F.transform(
         arr,
         lambda x: F.struct(
-            _priority_rank(x[src_field], priority).alias("rank"),
-            x[id_field].alias("key"),
+            _priority_rank(x["source"], priority).alias("rank"),
+            x["id"].alias("key"),
             x.alias("item"),
         ),
     )
@@ -187,13 +181,3 @@ def _priority_rank(src: Column, priority: dict[str, int]) -> Column:
     for s, r in priority.items():
         out = F.when(src == s, F.lit(r)).otherwise(out)
     return out.cast("int")
-
-
-def validate_df(required: Iterable[str], df: DataFrame) -> DataFrame:
-    """Runtime schema assertion (Helpers.scala:327-333): the PySpark stand-in
-    for the reference's typed-Dataset ``.as[T]`` contracts."""
-    missing = set(required) - set(df.columns)
-    if missing:
-        raise ValueError(f"DataFrame missing required columns: {sorted(missing)}; "
-                         f"has {df.columns}")
-    return df

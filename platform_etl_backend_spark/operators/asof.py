@@ -89,7 +89,6 @@ def _asof_directional(
     probe_ts: str,
     build_ts: str,
     payload: Sequence[str],
-    prefix: str,
     tiebreak: str | None,
     forward: bool,
 ) -> DataFrame:
@@ -107,7 +106,7 @@ def _asof_directional(
     carried = tagged.withColumn("_m", F.last("_bpay", ignorenulls=True).over(w))
     return carried.where(F.col("_side") == 1).select(
         F.col("_probe.*"),
-        *[F.col("_m").getField(c).alias(f"{prefix}{c}") for c in payload],
+        *[F.col("_m").getField(c).alias(f"asof_{c}") for c in payload],
     )
 
 
@@ -118,13 +117,12 @@ def asof_join_backward(
     probe_ts: str,
     build_ts: str,
     payload: Sequence[str],
-    prefix: str = "asof_",
     tiebreak: str | None = None,
 ) -> DataFrame:
     """For every probe row, attach ``payload`` columns from the build row
     with the greatest ``build_ts <= probe_ts`` sharing the ``on`` key
     (null when no such row). All probe columns pass through unchanged;
-    payload columns come back as ``{prefix}{name}``.
+    payload columns come back as ``asof_{name}``.
 
     ``tiebreak``: build column deciding among build rows with identical
     (key, ts) — highest wins — making the result deterministic where the
@@ -132,7 +130,7 @@ def asof_join_backward(
     explicit row_number, never arbitrary-row).
     """
     return _asof_directional(
-        probe, build, on, probe_ts, build_ts, payload, prefix, tiebreak, forward=False
+        probe, build, on, probe_ts, build_ts, payload, tiebreak, forward=False
     )
 
 
@@ -143,14 +141,13 @@ def asof_join_forward(
     probe_ts: str,
     build_ts: str,
     payload: Sequence[str],
-    prefix: str = "asof_",
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Forward as-of: the build row with the SMALLEST ``build_ts >=
     probe_ts`` (inclusive). Same union+window linear scan as backward,
     scanning in descending time order — identical cost and plan shape."""
     return _asof_directional(
-        probe, build, on, probe_ts, build_ts, payload, prefix, tiebreak, forward=True
+        probe, build, on, probe_ts, build_ts, payload, tiebreak, forward=True
     )
 
 
@@ -161,7 +158,6 @@ def asof_join_nearest(
     probe_ts: str,
     build_ts: str,
     payload: Sequence[str],
-    prefix: str = "asof_",
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Nearest as-of: the build row minimizing ``|build_ts - probe_ts|``;
@@ -205,7 +201,7 @@ def asof_join_nearest(
     chosen = F.when(use_back, F.col("_bk")).otherwise(F.col("_fw"))
     return carried.where(F.col("_side") == 1).select(
         F.col("_probe.*"),
-        *[chosen.getField(c).alias(f"{prefix}{c}") for c in payload],
+        *[chosen.getField(c).alias(f"asof_{c}") for c in payload],
     )
 
 
@@ -218,7 +214,6 @@ def range_join_points_in_intervals(
     end_col: str,
     payload: Sequence[str],
     bucket: int = 3600,
-    prefix: str = "in_",
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Point-in-interval range join: each point row matched to the interval
@@ -252,7 +247,7 @@ def range_join_points_in_intervals(
         "_bkt",
         F.col(start_col).alias("_start"),
         F.col(end_col).alias("_end"),
-        *[F.col(c).alias(f"{prefix}{c}") for c in payload],
+        *[F.col(c).alias(f"in_{c}") for c in payload],
     )
     joined = pt.join(
         iv_sel,
@@ -262,14 +257,14 @@ def range_join_points_in_intervals(
     )
     if tiebreak:
         w = Window.partitionBy(*[pt[c] for c in points.columns]).orderBy(
-            F.col(f"{prefix}{tiebreak}").desc()
+            F.col(f"in_{tiebreak}").desc()
         )
         joined = joined.withColumn("_rn", F.row_number().over(w)).where(
             F.col("_rn") == 1
         )
     return joined.select(
         *[pt[c] for c in points.columns],
-        *[F.col(f"{prefix}{c}") for c in payload],
+        *[F.col(f"in_{c}") for c in payload],
     )
 
 

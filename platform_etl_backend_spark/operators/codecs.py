@@ -95,12 +95,11 @@ def image_features(pixels: np.ndarray) -> dict[str, float]:
 # ---------------------------------------------------------------------------
 
 
-def encode_wav(samples: np.ndarray, sample_rate: int = 8000, channels: int = 1) -> bytes:
-    """int16 sample array → canonical RIFF/WAVE with one fmt + data chunk."""
+def encode_wav(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
+    """int16 mono sample array → canonical RIFF/WAVE with one fmt + data
+    chunk."""
     data = samples.astype("<i2").tobytes()
-    byte_rate = sample_rate * channels * 2
-    block_align = channels * 2
-    fmt = struct.pack("<HHIIHH", 1, channels, sample_rate, byte_rate, block_align, 16)
+    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     chunks += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
@@ -239,17 +238,17 @@ def mp3_frame_size(bitrate_kbps: int, sample_rate: int, padding: int) -> int:
 
 
 def build_mp3_cbr(
-    n_frames: int, bitrate_kbps: int, sample_rate: int = 44100, id3_pad: int = 0
+    n_frames: int, bitrate_kbps: int, id3_pad: int = 0
 ) -> bytes:
     """Synthesize a structurally-valid CBR stream: real headers, zeroed
     main data (silence placeholder — audio synthesis is out of scope).
     Optional ID3v2 tag prefix with a synchsafe size of ``id3_pad``."""
     br_idx = MP3_BITRATES_V1L3.index(bitrate_kbps)
-    sr_idx = MP3_SAMPLE_RATES_V1.index(sample_rate)
+    sr_idx = MP3_SAMPLE_RATES_V1.index(44100)
     hdr = bytes(
         [0xFF, 0xFB, (br_idx << 4) | (sr_idx << 2), 0x00]  # MPEG1, L3, no CRC, stereo
     )
-    frame = hdr + b"\x00" * (mp3_frame_size(bitrate_kbps, sample_rate, 0) - 4)
+    frame = hdr + b"\x00" * (mp3_frame_size(bitrate_kbps, 44100, 0) - 4)
     out = b""
     if id3_pad:
         out += b"ID3\x04\x00\x00" + bytes(

@@ -24,6 +24,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Shared with the catalog's DuckDB oracles.
+SHINGLE_K = 3  # word shingle length of the Jaccard/containment/span operators
+MINHASH_THRESHOLD = 0.5
+SIMHASH_BITS = 16
+
 
 def ws_tokens(c: Column | str) -> Column:
     """Whitespace tokenization."""
@@ -87,9 +92,9 @@ def bag_fingerprint_groups(df: DataFrame, id_col: str, text_col: str) -> DataFra
 
 
 def prefix_filtered_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.5
+    df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
-    """EXACT n-gram Jaccard pairs at ``threshold`` via prefix filtering
+    """EXACT n-gram Jaccard pairs at Jaccard >= 0.5 via prefix filtering
     (AllPairs, Bayardo et al. WWW 2007 / PPJoin, Xiao et al. 2008 — public
     algorithms): same results as ``ngram_jaccard_pairs``, but candidates
     come only from PREFIX shingles instead of every shared shingle.
@@ -139,7 +144,7 @@ def prefix_filtered_jaccard_pairs(
         )
         .persist()
     )
-    p = F.col("n") - F.ceil(F.lit(threshold) * F.col("n")).cast("bigint") + 1
+    p = F.col("n") - F.ceil(F.lit(0.5) * F.col("n")).cast("bigint") + 1
     # candidate join keys on xxhash64(shingle): a fixed 8-byte shuffle key
     # instead of the shingle string; a collision only ADDS candidates,
     # which the exact-Jaccard verify discards (the blocking is complete at
@@ -161,7 +166,7 @@ def prefix_filtered_jaccard_pairs(
             # pairs BEFORE the distinct and the array verify
             & (
                 F.least("n_a", "n_b").cast("double")
-                >= F.lit(threshold) * F.greatest("n_a", "n_b").cast("double")
+                >= F.lit(0.5) * F.greatest("n_a", "n_b").cast("double")
             )
         )
         .select("id_a", "id_b")
@@ -186,13 +191,13 @@ def prefix_filtered_jaccard_pairs(
                 6,
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= 0.5)
         .select("id_a", "id_b", "inter", "jaccard")
     )
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.5
+    df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard via shared-shingle join (baseline path).
 
@@ -224,7 +229,7 @@ def ngram_jaccard_pairs(
                 6,
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= 0.5)
     )
     return jac.select("id_a", "id_b", "inter", "jaccard")
 
@@ -281,13 +286,13 @@ def _min_hash(shingles: Column, seed: int) -> Column:
 
 
 def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 8
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8
 ) -> DataFrame:
     """H min-hashes per doc, computed entirely map-side (no shuffle): the
     shingle set stays an array column and each hash is an
     array_min∘transform over it, keeping signature-building inside
     whole-stage codegen — at 100TB this stage is embarrassingly parallel."""
-    docs = shingle_docs(df, id_col, text_col, k)
+    docs = shingle_docs(df, id_col, text_col, SHINGLE_K)
     return docs.select(
         id_col,
         *[_min_hash(F.col("shingles"), i).alias(f"h{i}") for i in range(num_hashes)],
@@ -316,10 +321,8 @@ def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """MinHash-LSH candidates verified with exact Jaccard (the full pipeline).
 
@@ -336,7 +339,7 @@ def minhash_dedup_pairs(
     persisted (the reference's persist-at-reuse-points pattern,
     Target.scala:154) instead of recomputing tokenize+shingle twice.
     """
-    docs = shingle_docs(df, id_col, text_col, k).persist()
+    docs = shingle_docs(df, id_col, text_col, SHINGLE_K).persist()
     sig = docs.select(
         id_col,
         *[_min_hash(F.col("shingles"), i).alias(f"h{i}") for i in range(num_hashes)],
@@ -358,36 +361,36 @@ def minhash_dedup_pairs(
         cands.join(da, "id_a")
         .join(db, "id_b")
         .withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= MINHASH_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """SimHash over all tokens (frequency-weighted), engine-portable.
 
     Bit b of a token comes from hex-digit arithmetic on md5 (bit-identical in
     any engine); the doc hash sets bit b iff the token-weighted sum of
     (2·bit−1) is positive.
     """
-    assert bits % 4 == 0
+    assert SIMHASH_BITS % 4 == 0
     tok = spread(df, id_col).select(F.col(id_col), F.explode(ws_tokens(text_col)).alias("tok"))
     tok = tok.withColumn("h", F.md5("tok"))
     sums = []
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         c, j = b // 4 + 1, b % 4
         v = F.instr(F.lit("0123456789abcdef"), F.substring("h", c, 1)) - 1
         bit = F.shiftright(v, j).bitwiseAND(F.lit(1))
         sums.append(F.sum(bit * 2 - 1).alias(f"s{b}"))
     agg = tok.groupBy(id_col).agg(*sums)
     hash_expr = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         hash_expr = term if hash_expr is None else hash_expr + term
     return agg.select(F.col(id_col), hash_expr.cast("bigint").alias("simhash"))
 
 
-def winnow_fingerprint(df: DataFrame, id_col: str, text_col: str, k: int = 5) -> DataFrame:
+def winnow_fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Winnowing-style document fingerprint: min hash over rolling k-gram
     windows (rolling-hash family via md5).
 
@@ -403,7 +406,7 @@ def winnow_fingerprint(df: DataFrame, id_col: str, text_col: str, k: int = 5) ->
     toks = ws_tokens(text_col)
     n = F.size(toks)
     # positions 1..n-k+1 when n >= k; position 0 marks the whole-doc gram
-    pos = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
+    pos = F.when(n >= 5, F.sequence(F.lit(1), n - (5 - 1))).otherwise(
         F.array(F.lit(0))
     )
     ex = spread(df, id_col).select(
@@ -411,7 +414,7 @@ def winnow_fingerprint(df: DataFrame, id_col: str, text_col: str, k: int = 5) ->
     )
     gram = F.when(
         F.col("i") == 0, F.concat_ws(" ", F.col("t"))
-    ).otherwise(F.concat_ws(" ", F.slice(F.col("t"), F.col("i"), k)))
+    ).otherwise(F.concat_ws(" ", F.slice(F.col("t"), F.col("i"), 5)))
     return (
         ex.groupBy(id_col)
         .agg(F.min(F.md5(gram)).alias("fingerprint"))
@@ -436,7 +439,7 @@ def positional_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> Da
     )
 
 
-def duplicated_spans(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
+def duplicated_spans(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact substring-level deduplication (the Lee et al. 2022
     'Deduplicating Training Data Makes Language Models Better' operation,
     re-expressed relationally): find, per document, the maximal token spans
@@ -456,7 +459,7 @@ def duplicated_spans(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> D
     '|'-serialized 'start-end' token-range list (canonicalizer-proof
     contract) and dup_tokens counts tokens covered by any duplicated span.
     """
-    ps = positional_shingles(df, id_col, text_col, k)
+    ps = positional_shingles(df, id_col, text_col, SHINGLE_K)
     # cross-doc test as a window over the fingerprint partition:
     # countDistinct(id) >= 2 is exactly min(id) != max(id), and the
     # window rides ONE fp-keyed exchange — the former groupBy+join-back
@@ -468,7 +471,7 @@ def duplicated_spans(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> D
         ps.withColumn("_mn", F.min(id_col).over(wfp))
         .withColumn("_mx", F.max(id_col).over(wfp))
         .where(F.col("_mn") != F.col("_mx"))
-        .select(id_col, "pos", (F.col("pos") + (k - 1)).alias("end"))
+        .select(id_col, "pos", (F.col("pos") + (SHINGLE_K - 1)).alias("end"))
     )
     w = Window.partitionBy(id_col).orderBy("pos")
     prev_max_end = F.max("end").over(w.rowsBetween(Window.unboundedPreceding, -1))
@@ -509,7 +512,7 @@ def fuzzy_pairs_dist1(
 
     Returns (tok_a, tok_b, dist) with tok_a < tok_b.
 
-    ``max_block_cost``: see :func:`fuzzy_candidates_dist1` — the
+    ``max_block_cost``: see :func:`_variant_pair_candidates` — the
     quadratic-bomb guard for pathological blocking keys.
 
     ``dedup=False`` skips the final distinct: a pair sharing several
@@ -603,16 +606,14 @@ def fuzzy_pairs_damerau1(df: DataFrame, id_col: str, str_col: str) -> DataFrame:
 
 
 def fuzzy_candidates_dist1(
-    df: DataFrame, id_col: str, str_col: str, max_block_cost: int | None = None
+    df: DataFrame, id_col: str, str_col: str
 ) -> DataFrame:
     """Distinct candidate (tok_a, tok_b) pairs sharing a 1-deletion
     variant. Kept as the public blocking API; the verifiers consume the
     PRE-distinct :func:`_variant_pair_candidates` and dedup after their
     filter instead, so the distinct exchange carries only accepted pairs.
     """
-    return _variant_pair_candidates(
-        df, id_col, str_col, max_block_cost=max_block_cost
-    ).distinct()
+    return _variant_pair_candidates(df, id_col, str_col).distinct()
 
 
 def _variant_pair_candidates(
@@ -805,10 +806,10 @@ def cdc_dedup_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def containment_pairs(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, threshold: float = 0.8
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """EXACT asymmetric containment join: ordered pairs (a, b) where
-    |shingles(a) ∩ shingles(b)| / |shingles(a)| >= threshold — the
+    |shingles(a) ∩ shingles(b)| / |shingles(a)| >= 0.8 — the
     near-containment case symmetric Jaccard MISSES when sizes differ (a
     500-word doc pasted inside a 5000-word doc has Jaccard ~0.1 but
     containment ~1.0). Public algorithm: the A-side prefix filter of the
@@ -824,7 +825,7 @@ def containment_pairs(
     corpus scale, cap or split hot shingles' postings (the inverted-index
     head-cap pattern) and route capped shingles through the pairwise
     fallback."""
-    sh = exploded_shingles(df, id_col, text_col, k)
+    sh = exploded_shingles(df, id_col, text_col, SHINGLE_K)
     # df via a window count over the shingle partition (round-12): the
     # former rollup + join-back planned the corpus tokenize+shingle
     # subtree twice and exchanged the exploded frame twice — the
@@ -846,7 +847,7 @@ def containment_pairs(
         )
         .persist()
     )
-    p = F.col("n") - F.ceil(F.lit(threshold) * F.col("n")).cast("bigint") + 1
+    p = F.col("n") - F.ceil(F.lit(0.8) * F.col("n")).cast("bigint") + 1
     prefix_a = docs.select(
         F.col(id_col).alias("id_a"),
         F.explode(F.slice("lst", F.lit(1), p)).alias("ps"),
@@ -873,13 +874,13 @@ def containment_pairs(
             "containment",
             F.round(F.col("inter").cast("double") / F.col("sz_a"), 6),
         )
-        .where(F.col("containment") >= threshold)
+        .where(F.col("containment") >= 0.8)
         .select("id_a", "id_b", "inter", "containment")
     )
 
 
 def weighted_shingle_tf_rows(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """(id, g, w) tf-weighted k-shingle ROWS via the wordcount shape
     (explode + keyed count): one codegen'd shuffle. Counting occurrences
@@ -890,10 +891,10 @@ def weighted_shingle_tf_rows(
     toks = ws_tokens(text_col)
     whole = F.array(F.concat_ws(" ", toks))
     grams = F.when(
-        F.size(toks) >= k,
+        F.size(toks) >= SHINGLE_K,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+            F.sequence(F.lit(1), F.size(toks) - (SHINGLE_K - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, SHINGLE_K)),
         ),
     ).otherwise(whole)
     return (

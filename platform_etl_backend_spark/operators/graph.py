@@ -27,11 +27,17 @@ try:
 except ImportError:  # pragma: no cover
     nx = None
 
+# Shared with the catalog's DuckDB oracles, which unroll the same rounds.
+DAMPING = 0.85  # pagerank / personalized_pagerank teleport complement
+SCORE_SCALE = 9  # decimal scale of pagerank / hits / PPR scores
+HITS_ITERATIONS = 3
+PPR_ITERATIONS = 5
+KTRUSS_K = 4
+KTRUSS_ROUNDS = 6
+
 
 def transitive_closure(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 30,
     method: str = "hop",
 ) -> DataFrame:
@@ -51,7 +57,7 @@ def transitive_closure(
     paths (silent truncation would return a WRONG closure — the
     connected_components cap convention).
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("d")).distinct()
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("d")).distinct()
     # localCheckpoint truncates lineage each round — without it the
     # iteratively-unioned plan grows exponentially and kills the planner.
     closure = e.localCheckpoint()
@@ -331,8 +337,6 @@ def _greedy_order(g) -> list:
 
 def driver_closure(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_edges: int = 500_000,
 ):
     """Collect-to-driver networkx closure (reference-parity path for small
@@ -360,7 +364,7 @@ def driver_closure(
     """
     if nx is None:  # pragma: no cover
         raise ImportError("networkx unavailable")
-    rows = edges.select(src, dst).dropna().distinct().limit(max_edges + 1).collect()
+    rows = edges.select("src", "dst").dropna().distinct().limit(max_edges + 1).collect()
     if len(rows) > max_edges:
         raise ValueError(
             f"driver_closure: distinct edges exceed max_edges={max_edges} — "
@@ -402,11 +406,7 @@ def driver_closure(
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
-    damping: float = 0.85,
-    scale: int = 9,
 ) -> DataFrame:
     """Distributed PageRank (simplified variant without dangling-mass
     redistribution: dangling nodes leak rank, so ranks sum to < 1 — the
@@ -414,7 +414,7 @@ def pagerank(
 
     Engine-portable determinism: each edge contribution is computed in
     IEEE double (bit-deterministic given operands) then ROUNDed to
-    ``scale`` decimals and summed as DECIMAL(38,scale) — decimal addition
+    ``SCORE_SCALE`` decimals and summed as DECIMAL(38,SCORE_SCALE) — decimal addition
     is associative, so distributed aggregation order cannot change the
     sum. Same per-iteration rounding on the DuckDB side reproduces ranks
     bit-for-bit.
@@ -428,9 +428,9 @@ def pagerank(
     plan grows by one join and one aggregation per round, so very deep
     runs (>~20 rounds) pay in planning time.
     """
-    dec = f"decimal(38,{scale})"
+    dec = f"decimal(38,{SCORE_SCALE})"
     e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .distinct()
         .localCheckpoint()
     )
@@ -444,7 +444,7 @@ def pagerank(
     if n == 0:
         return nodes.select("node", F.lit(None).cast("double").alias("pr"))
     # F.round (HALF_UP), not Python round (half-even) — must match SQL ROUND
-    base = F.round(F.lit((1.0 - damping) / n), scale).cast(dec)
+    base = F.round(F.lit((1.0 - DAMPING) / n), SCORE_SCALE).cast(dec)
     # outdeg rides ON the edge frame, attached once before the loop — the
     # former per-iteration join(outdeg) paid one SMJ per round for a
     # value that never changes (same operands per contribution, so ranks
@@ -453,14 +453,14 @@ def pagerank(
         e.join(e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")), "s")
         .localCheckpoint()
     )
-    ranks = nodes.select("node", F.round(F.lit(1.0 / n), scale).cast(dec).alias("pr"))
+    ranks = nodes.select("node", F.round(F.lit(1.0 / n), SCORE_SCALE).cast(dec).alias("pr"))
     for _ in range(iterations):
         contrib = (
             ranks.join(ed, ranks["node"] == ed["s"])
             .select(
                 F.col("d").alias("node"),
                 F.round(
-                    F.col("pr").cast("double") * F.lit(damping) / F.col("outdeg"), scale
+                    F.col("pr").cast("double") * F.lit(DAMPING) / F.col("outdeg"), SCORE_SCALE
                 ).cast(dec).alias("c"),
             )
         )
@@ -480,9 +480,6 @@ def pagerank(
 def sssp(
     edges: DataFrame,
     sources: list[int],
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
     rounds: int = 6,
 ) -> DataFrame:
     """Weighted single-source (or multi-source) shortest paths by bounded
@@ -502,8 +499,8 @@ def sssp(
     """
     e = (
         edges.select(
-            F.col(src).alias("s"), F.col(dst).alias("d"),
-            F.col(weight).cast("bigint").alias("w"),
+            F.col("src").alias("s"), F.col("dst").alias("d"),
+            F.col("w").cast("bigint").alias("w"),
         )
         .groupBy("s", "d")
         .agg(F.min("w").alias("w"))  # parallel edges: keep the cheapest
@@ -535,8 +532,6 @@ def sssp(
 
 def label_propagation(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 3,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
@@ -554,7 +549,7 @@ def label_propagation(
     Returns (node, community).
     """
     und = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
@@ -586,8 +581,6 @@ def label_propagation(
 def bfs_distances(
     edges: DataFrame,
     sources: list[int],
-    src: str = "src",
-    dst: str = "dst",
     max_hops: int = 6,
 ) -> DataFrame:
     """Multi-source BFS hop distances, bounded at ``max_hops``.
@@ -602,7 +595,7 @@ def bfs_distances(
 
     Returns (node, dist) for every node within ``max_hops`` of a source.
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct().localCheckpoint()
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).distinct().localCheckpoint()
     spark = edges.sparkSession
     frontier = spark.createDataFrame(
         [(int(x), 0) for x in sources], "node bigint, dist int"
@@ -622,7 +615,7 @@ def bfs_distances(
     return visited
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count by degree-oriented wedge checking (the
     MPC-standard algorithm: orient each undirected edge from the
     (degree, id)-smaller endpoint to the larger, count wedges at the
@@ -636,7 +629,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     Returns one row: n_nodes, n_edges, n_wedges, n_triangles.
     """
     und = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
@@ -682,8 +675,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     rounds: int = 8,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """k-core of an undirected graph by synchronous peeling (Matula-Beck
     1983): each round drops every node whose CURRENT degree is < k, then
@@ -706,7 +697,7 @@ def k_core(
     their degree inside the k-core.
     """
     und = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
@@ -746,16 +737,12 @@ def k_core(
 
 def hits(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 3,
-    scale: int = 9,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) with engine-portable
     determinism: authority(d) = sum of hub scores over in-edges, hub(s) =
     sum of authority scores over out-edges, each vector L1-normalized per
-    half-step. Scores ride DECIMAL(38,scale) (exact distributed sums); the
-    only floats are the normalizing division ROUND(raw/norm, scale) — one
+    half-step. Scores ride DECIMAL(38,SCORE_SCALE) (exact distributed sums); the
+    only floats are the normalizing division ROUND(raw/norm, SCORE_SCALE) — one
     fixed-order IEEE op on decimal-backed operands, the q_pagerank
     convention, reproducible on any engine that rounds half-up.
 
@@ -765,9 +752,9 @@ def hits(
     (the Pregel-equivalent plan) plus a 1-row broadcast for the L1 norm;
     edges pinned with localCheckpoint, the score recurrence stays lazy.
     """
-    dec = f"decimal(38,{scale})"
+    dec = f"decimal(38,{SCORE_SCALE})"
     e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .distinct()
         .localCheckpoint()
     )
@@ -775,7 +762,7 @@ def hits(
         "node", F.lit(1).cast(dec).alias("score")
     )
     a = None
-    for _ in range(iterations):
+    for _ in range(HITS_ITERATIONS):
         # each raw frame has TWO consumers (its L1 norm and the next
         # half-step's join): without a materialization barrier the lazy
         # recurrence re-executes the whole lineage per consumer —
@@ -790,7 +777,7 @@ def hits(
         anorm = araw.agg(F.sum("raw").cast(dec).alias("norm"))
         a = araw.crossJoin(F.broadcast(anorm)).select(
             F.col("anode").alias("node"),
-            F.round(F.col("raw").cast("double") / F.col("norm").cast("double"), scale)
+            F.round(F.col("raw").cast("double") / F.col("norm").cast("double"), SCORE_SCALE)
             .cast(dec)
             .alias("score"),
         )
@@ -803,7 +790,7 @@ def hits(
         hnorm = hraw.agg(F.sum("raw").cast(dec).alias("norm"))
         h = hraw.crossJoin(F.broadcast(hnorm)).select(
             F.col("hnode").alias("node"),
-            F.round(F.col("raw").cast("double") / F.col("norm").cast("double"), scale)
+            F.round(F.col("raw").cast("double") / F.col("norm").cast("double"), SCORE_SCALE)
             .cast(dec)
             .alias("score"),
         )
@@ -823,27 +810,22 @@ def hits(
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 5,
-    damping: float = 0.85,
-    scale: int = 9,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set —
     the recommendation / related-entity staple): identical to
     :func:`pagerank` except the teleport mass lands only on seeds,
     pr0 = 1/|S| on seeds else 0. Same decimal determinism convention
     (per-edge contributions ROUNDed in IEEE double then summed as
-    DECIMAL(38,scale)); same simplified no-dangling-redistribution
+    DECIMAL(38,SCORE_SCALE)); same simplified no-dangling-redistribution
     variant, documented in the oracle too.
 
     ``seeds`` is a 1-column frame of node ids. Shape at scale: the seed
     flag rides as a broadcast left-join; per iteration one src-keyed
     join + one dst-keyed agg, recurrence lazy (single consumer per round).
     """
-    dec = f"decimal(38,{scale})"
+    dec = f"decimal(38,{SCORE_SCALE})"
     e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .distinct()
         .localCheckpoint()
     )
@@ -867,20 +849,20 @@ def personalized_pagerank(
         .localCheckpoint()
     )
     zero = F.lit(0).cast(dec)
-    seed_mass = F.round(F.lit(1.0 / ns), scale).cast(dec)
-    base_mass = F.round(F.lit((1.0 - damping) / ns), scale).cast(dec)
+    seed_mass = F.round(F.lit(1.0 / ns), SCORE_SCALE).cast(dec)
+    base_mass = F.round(F.lit((1.0 - DAMPING) / ns), SCORE_SCALE).cast(dec)
     ranks = nodes.select(
         "node", "is_seed",
         F.when(F.col("is_seed") == 1, seed_mass).otherwise(zero).alias("pr"),
     )
-    for _ in range(iterations):
+    for _ in range(PPR_ITERATIONS):
         contrib = (
             ranks.join(ed, ranks["node"] == ed["s"])
             .select(
                 F.col("d").alias("node"),
                 F.round(
-                    F.col("pr").cast("double") * F.lit(damping) / F.col("outdeg"),
-                    scale,
+                    F.col("pr").cast("double") * F.lit(DAMPING) / F.col("outdeg"),
+                    SCORE_SCALE,
                 ).cast(dec).alias("c"),
             )
             .groupBy("node")
@@ -901,10 +883,6 @@ def personalized_pagerank(
 
 def k_truss(
     edges: DataFrame,
-    k: int = 4,
-    rounds: int = 6,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """k-truss of an undirected graph by synchronous support peeling
     (Cohen 2008, "Trusses: cohesive subgraphs for social network
@@ -930,7 +908,7 @@ def k_truss(
     the FINAL subgraph, canonical a < b.
     """
     und = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
@@ -962,10 +940,10 @@ def k_truss(
     cur = und
     prev = cur.count()
     cur_sup = None
-    for _ in range(rounds):
+    for _ in range(KTRUSS_ROUNDS):
         nxt = (
             cur.join(support(cur), ["a", "b"])
-            .where(F.col("support") >= k - 2)
+            .where(F.col("support") >= KTRUSS_K - 2)
             .localCheckpoint()
         )
         cnt = nxt.count()
@@ -981,11 +959,11 @@ def k_truss(
     # correctness gate could not see it either. raise_error inside the
     # final projection costs zero extra jobs and fires only on violation.
     sup = F.coalesce("support", F.lit(0)).cast("bigint")
-    guarded = F.when(sup >= k - 2, sup).otherwise(
+    guarded = F.when(sup >= KTRUSS_K - 2, sup).otherwise(
         F.raise_error(
             F.lit(
-                f"k_truss: round budget ({rounds}) under-ran the fixpoint — "
-                f"edge with support < {k - 2} in the output; raise `rounds`"
+                f"k_truss: round budget ({KTRUSS_ROUNDS}) under-ran the fixpoint — "
+                f"edge with support < {KTRUSS_K - 2} in the output; raise `rounds`"
             )
         ).cast("bigint")
     )
@@ -1001,12 +979,8 @@ def k_truss(
 
 def fwbw_scc(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_rounds: int = 12,
     bfs_max: int = 32,
-    trim_max: int = 64,
-    check_every: int = 2,
 ) -> DataFrame:
     """Strongly connected components by FW-BW pivot coloring with
     trimming (Fleischer/Hendrickson/Pinar 2000; the Hong et al. 2013
@@ -1039,7 +1013,7 @@ def fwbw_scc(
     Returns (node, scc) — scc = min node id of the component.
     """
     e0 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .where(F.col("s") != F.col("d"))
         .distinct()
         .localCheckpoint()
@@ -1072,7 +1046,7 @@ def fwbw_scc(
                 .distinct()
                 .localCheckpoint()
             )
-            if (it + 1) % check_every == 0 or it == bfs_max - 1:
+            if (it + 1) % 2 == 0 or it == bfs_max - 1:
                 if grown.exceptAll(visited).isEmpty():
                     return grown
             visited = grown
@@ -1102,7 +1076,7 @@ def fwbw_scc(
         # is Hong et al.'s trim loop, and it disposes of entire DAGs
         # without spending a single pivot BFS.
         pe = _part_edges(active)
-        for _t in range(trim_max):
+        for _t in range(64):
             has_out = pe.select("part", F.col("s").alias("node")).distinct()
             has_in = pe.select("part", F.col("d").alias("node")).distinct()
             keep = active.join(has_out, ["part", "node"], "left_semi").join(
@@ -1120,7 +1094,7 @@ def fwbw_scc(
             pe = _part_edges(active)
         else:
             raise RuntimeError(
-                f"fwbw_scc: trim budget ({trim_max}) exhausted — raise trim_max"
+                "fwbw_scc: trim budget (64) exhausted"
             )
         if active.isEmpty():
             break
@@ -1167,8 +1141,6 @@ def fwbw_scc(
 
 def pairwise_hop_distances(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_hops: int = 8,
     sources: DataFrame | None = None,
 ) -> DataFrame:
@@ -1193,7 +1165,7 @@ def pairwise_hop_distances(
     (self-distances excluded).
     """
     e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .where(F.col("s") != F.col("d"))
         .distinct()
         .localCheckpoint()
@@ -1226,8 +1198,6 @@ def pairwise_hop_distances(
 
 def betweenness_centrality(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_levels: int = 6,
     sources: DataFrame | None = None,
 ) -> DataFrame:
@@ -1259,7 +1229,7 @@ def betweenness_centrality(
     callers round/halve at the output boundary.
     """
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()

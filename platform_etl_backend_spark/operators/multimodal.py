@@ -40,13 +40,13 @@ MEDIA_SCHEMA = (
 FEATURE_DIM = 16
 
 
-def attach_media_meta(df: DataFrame, data_col: str, fmt: str = "fake") -> DataFrame:
+def attach_media_meta(df: DataFrame, data_col: str) -> DataFrame:
     """Wrap a binary column with typed metadata derived from the payload."""
     data = F.col(data_col)
     return df.withColumn(
         "meta",
         F.struct(
-            F.lit(fmt).alias("format"),
+            F.lit("fake").alias("format"),
             (F.length(data) % 64 + 1).cast("int").alias("width"),
             (F.length(data) % 48 + 1).cast("int").alias("height"),
             (F.length(data) % 8 + 1).cast("int").alias("n_frames"),
@@ -89,13 +89,13 @@ def decode_features(
     return df.select(id_col, data_col).mapInPandas(batches, schema)
 
 
-def frame_sample(df: DataFrame, id_col: str, data_col: str, every: int = 2) -> DataFrame:
+def frame_sample(df: DataFrame, id_col: str, data_col: str) -> DataFrame:
     """Video-style frame sampling plumbing: explode per-frame slices of the
-    payload (stub: fixed-width byte windows), keeping every ``every``-th."""
+    payload (stub: fixed-width byte windows), keeping every 2nd."""
     data = F.col(data_col)
     n_frames = (F.length(data) % 8 + 1).cast("int")
     idx = F.sequence(F.lit(0), n_frames - 1)
-    sampled = F.filter(idx, lambda i: i % every == 0)
+    sampled = F.filter(idx, lambda i: i % 2 == 0)
     frames = F.transform(
         sampled,
         lambda i: F.struct(
@@ -111,10 +111,6 @@ def frame_sample(df: DataFrame, id_col: str, data_col: str, every: int = 2) -> D
 def jpeg_roundtrip_features(
     df: DataFrame,
     id_col: str,
-    height: int = 24,
-    width: int = 16,
-    quality: int = 90,
-    max_err: int = 3,
     progressive: bool = False,
     restart_interval: int = 0,
 ) -> DataFrame:
@@ -123,7 +119,7 @@ def jpeg_roundtrip_features(
     encode it with the pure-numpy baseline JPEG encoder (FDCT + canonical
     Huffman, operators/jpeg.py), decode it back through the marker/DHT/DQT
     parser, and emit dimensions plus an ``ok`` flag asserting the decoded
-    plane is within ``max_err`` of the source everywhere. The oracle
+    plane is within 3 of the source everywhere. The oracle
     predicts (width, height, TRUE) from the spec guarantee — any bug in
     either direction (marker framing, Huffman tables, zigzag, quant, IDCT)
     breaks the roundtrip bound and flips the hash.
@@ -150,26 +146,26 @@ def jpeg_roundtrip_features(
     schema = "pkey int, width int, height int, ok boolean"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = np.arange(height).reshape(-1, 1)
-        c = np.arange(width).reshape(1, -1)
+        r = np.arange(24).reshape(-1, 1)
+        c = np.arange(16).reshape(1, -1)
         for pdf in it:
             rows = []
             for pkey in pdf["pkey"]:
                 img = (int(pkey) + r + c).astype(np.uint8)
                 out = J.decode_jpeg(
                     J.encode_jpeg(
-                        img, quality,
+                        img, 90,
                         progressive=progressive,
                         restart_interval=restart_interval,
                     )
                 )
-                ok = out.shape == (height, width) and int(
+                ok = out.shape == (24, 16) and int(
                     np.abs(out.astype(np.int64) - img.astype(np.int64)).max()
-                ) <= max_err
+                ) <= 3
                 if ok and (progressive or restart_interval):
-                    base = J.decode_jpeg(J.encode_jpeg(img, quality))
+                    base = J.decode_jpeg(J.encode_jpeg(img, 90))
                     ok = bool(np.array_equal(out, base))
-                rows.append((int(pkey), width, height, bool(ok)))
+                rows.append((int(pkey), 16, 24, bool(ok)))
             yield pd.DataFrame(rows, columns=["pkey", "width", "height", "ok"])
 
     ids = df.select(id_col, (F.col(id_col) % 128).cast("int").alias("pkey"))
@@ -213,7 +209,7 @@ def image_decode_features(
 
 
 def audio_roundtrip_features(
-    df: DataFrame, id_col: str, pcm_col: str, sample_rate: int = 8000
+    df: DataFrame, id_col: str, pcm_col: str
 ) -> DataFrame:
     """REAL audio codec exercise via ``mapInPandas``: raw byte payloads →
     int16 samples ((byte-128)*256) → encode to a canonical RIFF/WAVE →
@@ -231,9 +227,9 @@ def audio_roundtrip_features(
             for mid, payload in zip(pdf[id_col], pdf[pcm_col]):
                 raw = np.frombuffer(bytes(payload), dtype=np.uint8)
                 samples = ((raw.astype(np.int32) - 128) * 256).astype(np.int16)
-                wav = codecs.encode_wav(samples, sample_rate=sample_rate)
+                wav = codecs.encode_wav(samples, sample_rate=8000)
                 sr, ch, decoded = codecs.decode_wav(wav)
-                assert sr == sample_rate and ch == 1
+                assert sr == 8000 and ch == 1
                 feats = codecs.audio_features(decoded)
                 rows.append(
                     (mid, feats["n_samples"], feats["rms"], feats["zero_crossings"])

@@ -63,8 +63,8 @@ def tokenize(c: Column) -> Column:
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
-def remove_stopwords(tokens: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    sw = F.array(*[F.lit(w) for w in stopwords])
+def remove_stopwords(tokens: Column) -> Column:
+    sw = F.array(*[F.lit(w) for w in STOPWORDS])
     return F.filter(tokens, lambda t: ~F.array_contains(sw, t))
 
 

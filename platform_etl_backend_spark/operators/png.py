@@ -74,7 +74,7 @@ def _sample_bytes(px: np.ndarray, h: int, w: int, ch: int) -> np.ndarray:
     return px.reshape(h, w * ch)
 
 
-def encode_png(pixels: np.ndarray, level: int = 6, interlace: bool = False) -> bytes:
+def encode_png(pixels: np.ndarray, interlace: bool = False) -> bytes:
     """uint8/uint16 array → PNG. (H, W) → grayscale, (H, W, 2) →
     gray+alpha, (H, W, 3) → RGB, (H, W, 4) → RGBA. Filter 0 on every
     scanline (deterministic output); ``interlace=True`` emits Adam7."""
@@ -101,7 +101,7 @@ def encode_png(pixels: np.ndarray, level: int = 6, interlace: bool = False) -> b
     return (
         _SIG
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(scanlines, level))
+        + _chunk(b"IDAT", zlib.compress(scanlines, 6))
         + _chunk(b"IEND", b"")
     )
 

@@ -170,12 +170,11 @@ def two_pass_cumsum(
     order_cols: Sequence[str],
     sum_cols: Sequence[str],
     num_partitions: int | None = None,
-    prefix: str = "cum_",
     total_prefix: str | None = None,
 ) -> DataFrame:
     """Global inclusive running SUMs over a total order, two-pass.
 
-    For each c in ``sum_cols`` adds ``{prefix}{c}`` = SUM(c) OVER
+    For each c in ``sum_cols`` adds ``cum_{c}`` = SUM(c) OVER
     (ORDER BY order_cols ROWS UNBOUNDED PRECEDING..CURRENT).  With
     ``total_prefix`` also adds ``{total_prefix}{c}`` = the grand total
     (replaces a second O(n) single-partition ``SUM OVER ()`` window).
@@ -191,10 +190,10 @@ def two_pass_cumsum(
     keep = list(df.columns)
     for c in sum_cols:
         out = out.withColumn(
-            f"{prefix}{c}",
+            f"cum_{c}",
             (F.col(f"__off_{c}") + F.sum(F.col(c)).over(w_local)).cast("bigint"),
         )
-        keep.append(f"{prefix}{c}")
+        keep.append(f"cum_{c}")
         if total_prefix is not None:
             out = out.withColumn(f"{total_prefix}{c}", F.col(f"__tot_{c}"))
             keep.append(f"{total_prefix}{c}")
@@ -208,8 +207,6 @@ def two_pass_cdf(
     value_col: str,
     lead_col: str,
     num_partitions: int | None = None,
-    prefix: str = "cum_",
-    total_prefix: str = "tot_",
 ) -> DataFrame:
     """Cumulative sums + LEAD of the support value in ONE ranged pass —
     the empirical-CDF shape (Wasserstein integrals, survival curves).
@@ -254,10 +251,10 @@ def two_pass_cdf(
     keep = list(df.columns)
     for c in sum_cols:
         out = out.withColumn(
-            f"{prefix}{c}",
+            f"cum_{c}",
             (F.col(f"__off_{c}") + F.sum(F.col(c)).over(w_local)).cast("bigint"),
-        ).withColumn(f"{total_prefix}{c}", F.col(f"__tot_{c}"))
-        keep += [f"{prefix}{c}", f"{total_prefix}{c}"]
+        ).withColumn(f"tot_{c}", F.col(f"__tot_{c}"))
+        keep += [f"cum_{c}", f"tot_{c}"]
     out = out.withColumn(
         lead_col,
         F.coalesce(F.lead(value_col).over(w_row), F.col("__next_first")),

@@ -50,7 +50,6 @@ def crossencoder_rerank(
     doc_id: str,
     query_text: str,
     doc_text: str,
-    k: int = 3,
 ) -> DataFrame:
     """Score candidate pairs (Arrow-batched) and keep the top-k per query,
     ties broken on doc id ascending (deterministic)."""
@@ -73,7 +72,7 @@ def crossencoder_rerank(
     w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(doc_id))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= 3)
         .select(query_id, doc_id, "score", F.col("rk").cast("int").alias("rk"))
     )
 
@@ -210,7 +209,6 @@ def int_transformer_rerank(
     doc_id: str,
     query_text: str,
     doc_text: str,
-    k: int = 3,
 ) -> DataFrame:
     """Integer cross-encoder rerank: Arrow-batched int64 forward pass +
     per-query top-k (logit desc, doc id asc). Scores are exact integers,
@@ -238,6 +236,6 @@ def int_transformer_rerank(
     w = Window.partitionBy(query_id).orderBy(F.desc("logit"), F.asc(doc_id))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= 3)
         .select(query_id, doc_id, "logit", F.col("rk").cast("int").alias("rk"))
     )

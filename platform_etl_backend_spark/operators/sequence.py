@@ -164,8 +164,6 @@ def ewma(
     value_col: str,
     alpha: float = 0.2,
     lookback: int = 20,
-    out_col: str = "ewma",
-    precision: int = 6,
 ) -> DataFrame:
     """Bounded-window exponentially-weighted moving average per key:
     ``s_1 = v_1; s_i = (1-alpha)*s_{i-1} + alpha*v_i`` folded over the last
@@ -192,4 +190,4 @@ def ewma(
         F.element_at(vs, 1),
         lambda acc, x: acc * F.lit(1.0 - alpha) + x * F.lit(alpha),
     )
-    return df.withColumn(out_col, F.round(folded, precision))
+    return df.withColumn("ewma", F.round(folded, 6))

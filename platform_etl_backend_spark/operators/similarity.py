@@ -316,15 +316,14 @@ def bipartite_dots_blocked(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
-    blocks: int = 16,
 ) -> DataFrame:
     """RAW dot products of EVERY (query, corpus) pair — the bipartite twin
-    of :func:`all_pairs_dots_blocked`: the corpus hashes into ``blocks``
+    of :func:`all_pairs_dots_blocked`: the corpus hashes into 16
     row-blocks (one kernel task each), the query side replicates to every
     block (queries are the small side by contract, exactly the frame
     brute_force_topk broadcasts today). Output (query_id, neighbor_id,
     dot, qn, bn), one row per ordered pair, self-pairs included."""
-    B = blocks
+    B = 16
     q = queries.select(
         F.col(id_col).alias("id"),
         as_double_array(vec_col).alias("vec"),
@@ -367,7 +366,6 @@ def ivf_topk(
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 1,
     nprobe: int = 1,
 ) -> DataFrame:
     """IVF ANN with multi-cell probing — the FAISS-style search shape.
@@ -377,7 +375,7 @@ def ivf_topk(
     bounded ``nprobe``× candidate-cost multiplier (query side only — the
     index is untouched, and a neighbor can appear through at most one probe
     because it lives in exactly one cell, so no dedup pass is needed).
-    Returns the per-query top-``k`` neighbors with their rank ``rk``.
+    Returns the per-query top neighbor with its rank ``rk`` (always 1).
 
     Scale shape: centroids broadcast twice (assignment + probe selection),
     one kernel group per cell_id bounded by cell sizes × nprobe, one
@@ -412,7 +410,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= 1)
         .select("query_id", "neighbor_id", "cos", "rk")
     )
 
@@ -562,7 +560,7 @@ def multitable_ann_top1(
 
 
 def quantize_int8(
-    df: DataFrame, id_col: str, vec_col: str, precision: int = 6
+    df: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization — the storage/bandwidth trade
     every embedding pipeline makes before ANN serving (4× smaller than fp32,
@@ -591,8 +589,8 @@ def quantize_int8(
     return df.select(
         F.col(id_col),
         F.concat_ws("|", F.transform(q, lambda c: c.cast("string"))).alias("codes"),
-        F.round(scale, precision).alias("scale"),
-        F.round(recon_err, precision).alias("l2_err"),
+        F.round(scale, 6).alias("scale"),
+        F.round(recon_err, 6).alias("l2_err"),
     )
 
 
@@ -772,7 +770,7 @@ def semantic_dedup(
 
 
 def covariance_power_sums(
-    df: DataFrame, vec_col: str, scale: float = 1000000.0
+    df: DataFrame, vec_col: str
 ) -> DataFrame:
     """Partial power sums for the embedding covariance matrix via an
     Arrow-batched numpy Gram product — the one place a pandas boundary
@@ -802,7 +800,7 @@ def covariance_power_sums(
             if not len(pdf):
                 continue
             q = np.floor(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64) * scale
+                np.stack(pdf[vec_col].to_numpy()).astype(np.float64) * 1000000.0
             ).astype(np.int64)
             n, d = q.shape
             gram = q.T @ q
@@ -912,6 +910,7 @@ def jl_project(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 PQ_M = 4  # subspaces
 PQ_DSUB = 16  # dims per subspace (M * DSUB = 64)
 PQ_K = 8  # centroids per subspace
+PQ_ITERS = 2  # Lloyd rounds of the codebook fit
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -1059,13 +1058,11 @@ def pq_adc_topk(
     id_col: str,
     vec_col: str,
     query_pred: Column,
-    k: int = 3,
-    iters: int = 2,
 ) -> DataFrame:
     """ADC search: queries compute an M x K distance table to the
     codebooks, candidates are scored by M table lookups on their codes
     (DECIMAL sum — order-free), per-query top-k by (distance, vid)."""
-    books = pq_fit_codebooks(corpus, id_col, vec_col, iters).localCheckpoint()
+    books = pq_fit_codebooks(corpus, id_col, vec_col, PQ_ITERS).localCheckpoint()
     codes = pq_encode(corpus, books, id_col, vec_col).select("vid", "s", "code")
     v = corpus.select(F.col(id_col).alias("qid"), as_double_array(vec_col).alias("vec"))
     queries = v.where(query_pred)
@@ -1091,7 +1088,7 @@ def pq_adc_topk(
     w = Window.partitionBy("qid").orderBy(F.asc("adc_dist"), F.asc("vid"))
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= k)
+        .where(F.col("rn") <= 3)
         .select(
             F.col("qid").alias("query_id"), "rn",
             F.col("vid").alias("neighbor_id"), "adc_dist",

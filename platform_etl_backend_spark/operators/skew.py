@@ -17,18 +17,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, buckets: int, col_name: str = "_salt") -> DataFrame:
+def with_salt(df: DataFrame, buckets: int) -> DataFrame:
     """Deterministic salt derived from a stable row hash (not rand(), so
     retries/replays and oracle comparisons stay stable)."""
     all_cols = F.concat_ws("\x01", *[F.col(c).cast("string") for c in df.columns])
-    return df.withColumn(col_name, F.pmod(F.hash(all_cols), F.lit(buckets)))
+    return df.withColumn("_salt", F.pmod(F.hash(all_cols), F.lit(buckets)))
 
 
 def salted_aggregate(
     df: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, tuple[Column, Column]],
-    buckets: int = 16,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation.
 
@@ -38,7 +37,7 @@ def salted_aggregate(
         {"cnt": (F.count(F.lit(1)), F.sum("cnt")),
          "total": (F.sum(dec2("x")), F.sum("total"))}
     """
-    salted = with_salt(df, buckets)
+    salted = with_salt(df, 16)
     phase1 = salted.groupBy(*keys, "_salt").agg(
         *[a1.alias(name) for name, (a1, _) in aggs.items()]
     )

@@ -283,11 +283,13 @@ def count_min_table(
     )
 
 
+COUNT_MIN_DEPTH = 4  # hash rows; the q_count_min oracle reads it too
+
+
 def count_min_estimates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    depth: int = 4,
     width: int = 256,
     topk: int = 20,
 ) -> DataFrame:
@@ -305,7 +307,7 @@ def count_min_estimates(
     tok = spread(df, id_col).select(
         F.explode(ws_tokens(text_col)).alias("token")
     )
-    sketch = count_min_table(tok, "token", depth, width)
+    sketch = count_min_table(tok, "token", COUNT_MIN_DEPTH, width)
     exact = tok.groupBy("token").agg(F.count(F.lit(1)).alias("exact"))
     # top-k via sort+limit (plans as TakeOrderedAndProject — distributed
     # partial top-k per partition, never a single-partition window over the
@@ -321,7 +323,7 @@ def count_min_estimates(
                     F.lit(r).alias("row"),
                     _cm_bucket(F.col("token"), r, width).alias("bucket"),
                 )
-                for r in range(depth)
+                for r in range(COUNT_MIN_DEPTH)
             ])
         ).alias("rb"),
     ).select("token", "exact", "rk", F.col("rb.row").alias("row"), F.col("rb.bucket").alias("bucket"))
@@ -538,7 +540,7 @@ def _est(n_col: Column, max_col: Column, k: int) -> Column:
 
 
 def kmv_set_estimates(
-    a: DataFrame, a_key: str, b: DataFrame, b_key: str, k: int = KMV_K
+    a: DataFrame, a_key: str, b: DataFrame, b_key: str
 ) -> DataFrame:
     """Four rows — a, b, union, intersection — each with the exact
     cardinality next to the sketch estimate. Intersection uses the theta
@@ -547,9 +549,9 @@ def kmv_set_estimates(
     by broadcast crossJoin — no driver-side collects."""
     ha = kmv_hashes(a, a_key).localCheckpoint()
     hb = kmv_hashes(b, b_key).localCheckpoint()
-    sk_a = ha.orderBy("hv").limit(k).localCheckpoint()
-    sk_b = hb.orderBy("hv").limit(k).localCheckpoint()
-    union_sk = sk_a.unionAll(sk_b).distinct().orderBy("hv").limit(k).localCheckpoint()
+    sk_a = ha.orderBy("hv").limit(KMV_K).localCheckpoint()
+    sk_b = hb.orderBy("hv").limit(KMV_K).localCheckpoint()
+    union_sk = sk_a.unionAll(sk_b).distinct().orderBy("hv").limit(KMV_K).localCheckpoint()
 
     agg_a = sk_a.agg(F.count("*").alias("n_a"), F.max("hv").alias("mx_a"))
     agg_b = sk_b.agg(F.count("*").alias("n_b"), F.max("hv").alias("mx_b"))
@@ -571,9 +573,9 @@ def kmv_set_estimates(
         .crossJoin(F.broadcast(ex_i))
         .crossJoin(F.broadcast(below))
     )
-    est_a = _est(F.col("n_a"), F.col("mx_a"), k)
-    est_b = _est(F.col("n_b"), F.col("mx_b"), k)
-    est_u = _est(F.col("n_u"), F.col("mx_u"), k)
+    est_a = _est(F.col("n_a"), F.col("mx_a"), KMV_K)
+    est_b = _est(F.col("n_b"), F.col("mx_b"), KMV_K)
+    est_u = _est(F.col("n_u"), F.col("mx_u"), KMV_K)
     # The theta-cut scale factor multiplies the ROUNDED union estimate —
     # the same 6-dp value the union row displays — so the intersection
     # estimate is derived from published numbers and, critically, both
@@ -594,7 +596,7 @@ def kmv_set_estimates(
     ).select("r.key", "r.n_exact", "r.estimate")
 
 
-def hll_estimates_grouped(keyed: DataFrame, label_col: str = "label", key_col: str = "k") -> DataFrame:
+def hll_estimates_grouped(keyed: DataFrame) -> DataFrame:
     """Multi-set HLL in ONE pass: (label, key) rows -> per-label register
     tables -> per-label estimates (key, n_exact, n_buckets, estimate).
     One distinct shuffle + two tiny grouped aggregations instead of one
@@ -603,12 +605,12 @@ def hll_estimates_grouped(keyed: DataFrame, label_col: str = "label", key_col: s
     from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
 
     h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("hll:"), F.col(key_col).cast("string"))), 1, 12),
+        F.substring(F.md5(F.concat(F.lit("hll:"), F.col("k").cast("string"))), 1, 12),
         16,
         10,
     ).cast("bigint")
     distinct = (
-        keyed.select(F.col(label_col).alias("label"), F.col(key_col).cast("string").alias("k"))
+        keyed.select("label", F.col("k").cast("string").alias("k"))
         .distinct()
         .localCheckpoint()  # feeds registers AND the exact count
     )

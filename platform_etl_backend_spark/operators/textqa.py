@@ -94,7 +94,7 @@ def ngrams_nondistinct(tokens: Column, n: int) -> Column:
     return F.when(F.size(tokens) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
-def ngram_repetition(df: DataFrame, id_col: str, text_col: str, n: int = 2) -> DataFrame:
+def ngram_repetition(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Gopher-style repetition metrics per document: the fraction of n-grams
     taken by the single most frequent n-gram (`top_gram_frac`) and the
     duplicate-gram fraction (1 − distinct/total).
@@ -106,7 +106,7 @@ def ngram_repetition(df: DataFrame, id_col: str, text_col: str, n: int = 2) -> D
     n-grams and drop out (semantic: repetition is undefined there).
     """
     toks = spread(df, id_col).select(
-        F.col(id_col), F.explode(ngrams_nondistinct(ws_tokens(text_col), n)).alias("gram")
+        F.col(id_col), F.explode(ngrams_nondistinct(ws_tokens(text_col), 2)).alias("gram")
     )
     counts = toks.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("cnt"))
     per_doc = counts.groupBy(id_col).agg(
@@ -128,12 +128,6 @@ def gopher_quality_flags(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_tokens: int = 20,
-    max_tokens: int = 100_000,
-    min_mean_wlen: float = 3.0,
-    max_mean_wlen: float = 10.0,
-    min_alpha_frac: float = 0.8,
-    min_stop_hits: int = 2,
 ) -> DataFrame:
     """Gopher/C4-style heuristic quality rules, entirely map-side: token-count
     bounds, mean/max word length, alphabetic-word fraction, and an
@@ -149,10 +143,10 @@ def gopher_quality_flags(
     alpha_frac = F.round(alpha.cast("double") / n_tok, 6)
     stop = stopword_hits(toks, "en").cast("bigint")
     keep = (
-        n_tok.between(min_tokens, max_tokens)
-        & mean_wlen.between(min_mean_wlen, max_mean_wlen)
-        & (alpha_frac >= min_alpha_frac)
-        & (stop >= min_stop_hits)
+        n_tok.between(20, 100_000)
+        & mean_wlen.between(3.0, 10.0)
+        & (alpha_frac >= 0.8)
+        & (stop >= 2)
     )
     return df.select(
         F.col(id_col),
@@ -165,7 +159,7 @@ def gopher_quality_flags(
     )
 
 
-def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document top-k terms by TF-IDF (idf = ln(N/df) via the
     engine-portable ratio log — see functions/portable_math.py; rounded to
     6 d.p.; ties break on term asc).
@@ -197,7 +191,7 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> Da
     w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
+        .where(F.col("rk") <= 3)
         .select(id_col, "term", F.col("tf").cast("bigint").alias("tf"), "idf", "score")
     )
 
@@ -277,13 +271,12 @@ def segment_sentences(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    abbreviations: tuple[str, ...] = SENTENCE_ABBREVIATIONS,
 ) -> DataFrame:
     """Explode punctuated documents into (id, sent_id, n_tokens, sentence)
     rows — 1-based sentence ids in document order. The segmentation itself
     is embarrassingly parallel (see :func:`sentence_boundary_exprs`); the
     explode is the only fan-out and carries no shuffle."""
-    sents = sentence_boundary_exprs(F.col(text_col), abbreviations)
+    sents = sentence_boundary_exprs(F.col(text_col), SENTENCE_ABBREVIATIONS)
     return (
         spread(df, id_col)
         .select(F.col(id_col), F.posexplode(sents).alias("pos", "sentence"))
@@ -310,8 +303,6 @@ def pii_metrics(
     df: DataFrame,
     text_col: str,
     patterns: Mapping[str, str] = PII_PATTERNS,
-    mask: str = "[PII]",
-    masked_col: str = "masked",
 ) -> DataFrame:
     """Per-row PII match counts (one ``n_<name>`` column per pattern) plus a
     masked copy of the text with every match replaced. Pure Catalyst
@@ -324,8 +315,8 @@ def pii_metrics(
             f"n_{name}",
             F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0))).cast("bigint"),
         )
-        masked = F.regexp_replace(masked, pat, mask)
-    return out.withColumn(masked_col, masked)
+        masked = F.regexp_replace(masked, pat, "[PII]")
+    return out.withColumn("masked", masked)
 
 
 def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -389,16 +380,14 @@ def stupid_backoff_logprob(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_count: int = 2,
-    alpha: float = 0.4,
 ) -> DataFrame:
     """Per-document mean trigram score under a count-pruned corpus trigram
     model with Stupid Backoff to bigrams (Brants et al. 2007, "Large
     Language Models in Machine Translation" — public algorithm):
 
     ``S(w3|w1 w2) = c(w1w2w3)/c(w1w2·)`` when the trigram survives count
-    pruning (``c >= min_count``, the standard LM-pruning knob), else
-    ``alpha * c(w2w3)/c(w2·)``. Train == score corpus, so the bigram
+    pruning (``c >= 2``, the standard LM-pruning knob), else
+    ``0.4 * c(w2w3)/c(w2·)``. Train == score corpus, so the bigram
     backoff is always defined; pruning is what makes backoff genuinely
     fire (singleton trigrams dominate any natural corpus).
 
@@ -425,7 +414,7 @@ def stupid_backoff_logprob(
     """
     from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
 
-    ln_alpha = math.log(alpha)  # shared double literal on both engines
+    ln_alpha = math.log(0.4)  # shared double literal on both engines
     toks = ws_tokens(text_col)
     n2 = F.greatest(F.size(toks) - 1, F.lit(0))
     n3 = F.greatest(F.size(toks) - 2, F.lit(0))
@@ -460,7 +449,7 @@ def stupid_backoff_logprob(
     )
     w12 = Window.partitionBy("ctx12")
     tri = c123_all.withColumn("c12", F.sum("c123").over(w12))
-    tri_model = tri.where(F.col("c123") >= min_count).select(
+    tri_model = tri.where(F.col("c123") >= 2).select(
         "trigram",
         F.round(
             portable_ln_ratio(F.col("c123"), F.col("c12")), 6
@@ -699,7 +688,7 @@ def rouge_overlap(
 
 
 def skipgram_pairs(
-    df: DataFrame, id_col: str, text_col: str, window: int = 2, topk: int = 50
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Corpus-wide skip-gram (center, context) pair counts within a token
     window — the word2vec/GloVe training-pair extraction step. Pairs are
@@ -709,7 +698,7 @@ def skipgram_pairs(
     tiebreak."""
     toks = ws_tokens(text_col)
     arrs = []
-    for d in range(1, window + 1):
+    for d in (1, 2):
         m = F.greatest(F.size(toks) - d, F.lit(0))
         fwd = F.zip_with(
             F.slice(toks, 1, m), F.slice(toks, 1 + d, m),
@@ -726,7 +715,7 @@ def skipgram_pairs(
         .groupBy(F.col("p.c").alias("center"), F.col("p.x").alias("context"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .orderBy(F.desc("cnt"), "center", "context")
-        .limit(topk)
+        .limit(50)
     )
 
 

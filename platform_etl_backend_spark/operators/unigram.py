@@ -19,9 +19,9 @@ Spark-first shape (NOT a per-string UDF):
   by corpus frequency) and its costs build with two tiny aggregations; the
   vocabulary is bounded (K + alphabet), so it rides along as a 1-row
   broadcast **map literal** — the DP does zero joins.
-- The Viterbi DP unrolls statically over ``wmax`` character positions
+- The Viterbi DP unrolls statically over ``UNI_WMAX`` character positions
   (bounded word length — the same bounded-rounds trick as the unrolled
-  PageRank/BPE oracles), each level a LEAST over ≤ ``lmax`` candidate
+  PageRank/BPE oracles), each level a LEAST over ≤ ``UNI_LMAX`` candidate
   costs. Backtracking unrolls the same way. All integer micro-nat
   arithmetic: engine-portable by construction, the only transcendental is
   the portable ratio-ln inside the seed-cost derivation.
@@ -48,28 +48,26 @@ UNI_UNK_MICRO = 30_000_000  # unseen single char (~ln 1e13 nats): covers any inp
 COST_SCALE = 1_000_000.0
 
 
-def word_types(df: DataFrame, id_col: str, text_col: str, wmax: int = UNI_WMAX) -> DataFrame:
-    """(word, freq) corpus rollup; words longer than ``wmax`` fall outside
+def word_types(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(word, freq) corpus rollup; words longer than ``UNI_WMAX`` fall outside
     the unrolled DP and are excluded (documented coverage boundary — raise
-    ``wmax`` to widen; expression count grows linearly)."""
+    ``UNI_WMAX`` to widen; expression count grows linearly)."""
     return (
         spread(df, id_col)
         .select(F.explode(ws_tokens(text_col)).alias("word"))
-        .where((F.col("word") != "") & (F.length("word") <= wmax))
+        .where((F.col("word") != "") & (F.length("word") <= UNI_WMAX))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
 
 
-def seed_piece_costs(
-    words: DataFrame, lmax: int = UNI_LMAX, topk: int = UNI_TOPK
-) -> DataFrame:
+def seed_piece_costs(words: DataFrame) -> DataFrame:
     """Seed vocabulary with costs: every single character (guarantees any
-    word segments) plus the ``topk`` most frequent multi-char substrings
-    (length 2..lmax), costs = -ln(freq/total) in integer micro-nats.
+    word segments) plus the ``UNI_TOPK`` most frequent multi-char substrings
+    (length 2..UNI_LMAX), costs = -ln(freq/total) in integer micro-nats.
     Substring occurrences are position-counted and weighted by word
     frequency — the standard SentencePiece seed (suffix-array frequencies,
-    here as a bounded explode because lmax is small)."""
+    here as a bounded explode because UNI_LMAX is small)."""
     subs = []
     n = F.length("word")
 
@@ -79,7 +77,7 @@ def seed_piece_costs(
         # parameter silently receives the index column
         return lambda s: F.col("word").substr(s, F.lit(j))
 
-    for j in range(1, lmax + 1):
+    for j in range(1, UNI_LMAX + 1):
         # guard: Spark sequence(1, stop) with stop < 1 DESCENDS ([1, 0]) —
         # a word shorter than j must contribute no length-j pieces
         subs.append(
@@ -95,7 +93,7 @@ def seed_piece_costs(
     multis = (
         pf.where(F.length("piece") >= 2)
         .orderBy(F.desc("freq"), "piece")
-        .limit(topk)
+        .limit(UNI_TOPK)
     )
     # cut lineage: the vocab table feeds BOTH the total (a broadcast agg)
     # and the output rows — without the checkpoint the substring explode +
@@ -114,13 +112,11 @@ def seed_piece_costs(
 def viterbi_segment(
     words: DataFrame,
     vocab: DataFrame,
-    wmax: int = UNI_WMAX,
-    lmax: int = UNI_LMAX,
 ) -> DataFrame:
     """Segment every word type: (word, freq, n_chars, pieces '|'-joined,
     n_pieces, cost_micro). The vocabulary arrives as a 1-row broadcast map
-    (bounded size by construction), the DP is ``wmax`` static levels of
-    LEAST/CASE expressions, the backtrack is ``wmax`` more — the whole
+    (bounded size by construction), the DP is ``UNI_WMAX`` static levels of
+    LEAST/CASE expressions, the backtrack is ``UNI_WMAX`` more — the whole
     segmentation is map-side; zero shuffles past the inputs.
 
     Round-11 build rewrite: the DP is emitted as ONE selectExpr whose
@@ -145,20 +141,20 @@ def viterbi_segment(
     # cost of the piece ENDING at position i with length j (1-based, fully
     # inside the word whenever j <= i <= n; positions i > n are computed
     # but provably never read — the backtrack walks down from n)
-    for i in range(1, wmax + 1):
-        for j in range(1, min(lmax, i) + 1):
+    for i in range(1, UNI_WMAX + 1):
+        for j in range(1, min(UNI_LMAX, i) + 1):
             fallback = UNI_UNK_MICRO if j == 1 else UNI_INF_MICRO
             items.append(
                 f"COALESCE(try_element_at(m, substring(word, {i - j + 1}, {j})), "
                 f"CAST({fallback} AS BIGINT)) AS c_{i}_{j}"
             )
     items.append("CAST(0 AS BIGINT) AS best_0")
-    for i in range(1, wmax + 1):
+    for i in range(1, UNI_WMAX + 1):
         # candidates as named items: best_i and bp_i then reference the
         # ALIASES instead of duplicating the add expressions — keeps the
         # generated whole-stage code small (the duplicated-expression
         # form compiled noticeably slower at this unroll depth)
-        js = list(range(1, min(lmax, i) + 1))
+        js = list(range(1, min(UNI_LMAX, i) + 1))
         for j in js:
             items.append(f"best_{i - j} + c_{i}_{j} AS cand_{i}_{j}")
         cands = ", ".join(f"cand_{i}_{j}" for j in js)
@@ -174,12 +170,12 @@ def viterbi_segment(
     def at(prefix: str, pos: str) -> str:
         # prefix_<pos> for a runtime position (bounded CASE)
         arms = " ".join(
-            f"WHEN {pos} = {i} THEN {prefix}_{i}" for i in range(1, wmax + 1)
+            f"WHEN {pos} = {i} THEN {prefix}_{i}" for i in range(1, UNI_WMAX + 1)
         )
         return f"CASE {arms} END"
 
     items.append("n AS p_0")
-    for k in range(1, wmax + 1):
+    for k in range(1, UNI_WMAX + 1):
         items.append(
             f"CAST(CASE WHEN p_{k - 1} <= 0 THEN 0 ELSE "
             + at("bp", f"p_{k - 1}")
@@ -192,8 +188,8 @@ def viterbi_segment(
         )
     # backtrack emits last piece first — concat in reverse k order
     # (concat_ws skips NULL slots on both engines)
-    rev = ", ".join(f"piece_{k}" for k in range(wmax, 0, -1))
-    npieces = " + ".join(f"CAST(l_{k} > 0 AS INT)" for k in range(1, wmax + 1))
+    rev = ", ".join(f"piece_{k}" for k in range(UNI_WMAX, 0, -1))
+    npieces = " + ".join(f"CAST(l_{k} > 0 AS INT)" for k in range(1, UNI_WMAX + 1))
     items.append("n AS n_chars")
     items.append(f"concat_ws('|', {rev}) AS pieces")
     items.append(f"CAST({npieces} AS INT) AS n_pieces")

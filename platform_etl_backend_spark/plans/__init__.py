@@ -1,17 +1,3 @@
-from platform_etl_backend_spark.plans.inspect import (
-    explain_str,
-    assert_broadcast_join,
-    assert_no_cartesian,
-    assert_pushed_filters,
-    assert_wholestage_codegen,
-    shuffle_count,
-)
+from platform_etl_backend_spark.plans.inspect import explain_str
 
-__all__ = [
-    "explain_str",
-    "assert_broadcast_join",
-    "assert_no_cartesian",
-    "assert_pushed_filters",
-    "assert_wholestage_codegen",
-    "shuffle_count",
-]
+__all__ = ["explain_str"]

@@ -73,8 +73,8 @@ def export_vectors(model: Word2VecModel) -> DataFrame:
     )
 
 
-def synonyms(model: Word2VecModel, word: str, n: int = 5) -> DataFrame:
-    return model.findSynonyms(word, n)
+def synonyms(model: Word2VecModel, word: str) -> DataFrame:
+    return model.findSynonyms(word, 5)
 
 
 def embedding_step(spark, inputs, model_path: str | None = None, **w2v_params):

@@ -111,7 +111,6 @@ def _human_organism() -> Column:
 def string_to_intact_shape(
     string_df: DataFrame,
     score_threshold: int = 0,
-    taxon_prefix: str = "9606.",
     database_version: str = "N/A",
 ) -> DataFrame:
     """STRING protein-links TSV → the nested IntAct-style interaction shape.
@@ -144,14 +143,14 @@ def string_to_intact_shape(
         return F.struct(
             F.lit("ensembl_protein").alias("id_source"),
             F.lit("unspecified role").alias("biological_role"),
-            F.regexp_replace(protein_col, taxon_prefix, "").alias("id"),
+            F.regexp_replace(protein_col, "9606.", "").alias("id"),
             _human_organism().alias("organism"),
         )
 
     return (
         df.where(
-            F.col("protein1").contains(taxon_prefix)
-            & F.col("protein2").contains(taxon_prefix)
+            F.col("protein1").contains("9606.")
+            & F.col("protein2").contains("9606.")
         )
         .select(
             interactor("protein1").alias("interactorA"),
@@ -172,14 +171,13 @@ def string_to_intact_shape(
 def prepare_string_interactions(
     string_df: DataFrame,
     score_threshold: int = 0,
-    taxon_prefix: str = "9606.",
     database_version: str = "N/A",
 ) -> DataFrame:
     """STRING → common flat interaction schema (generateStrings,
     Interaction.scala:136-143, minus the post-explode evidence filter which
     the step applies after ``explode_evidences``)."""
     return prepare_intact_interactions(
-        string_to_intact_shape(string_df, score_threshold, taxon_prefix, database_version)
+        string_to_intact_shape(string_df, score_threshold, database_version)
     )
 
 

@@ -142,12 +142,12 @@ def build_entity_lut(entities: DataFrame, key_mode: str = "engine") -> DataFrame
     )
 
 
-def split_sentences(publications: DataFrame, text_col: str = "text") -> DataFrame:
+def split_sentences(publications: DataFrame) -> DataFrame:
     """pmid/section/text → one row per sentence (explode)."""
     return publications.select(
         "pmid",
         "section",
-        F.posexplode(F.split(F.col(text_col), r"(?<=[.!?])\s+")).alias("sentence_idx", "sentence"),
+        F.posexplode(F.split(F.col("text"), r"(?<=[.!?])\s+")).alias("sentence_idx", "sentence"),
     ).where(F.length(F.trim("sentence")) > 0)
 
 
@@ -267,6 +267,7 @@ def cooccurrences(matches: DataFrame) -> DataFrame:
 
 # reference.conf epmc defaults (sections + uri prefixes)
 EPMC_SECTIONS_OF_INTEREST = ["title", "abstract"]
+EPMC_EXCLUDED_TARGET_TERMS: list[str] = []
 EPMC_URIS = {
     "ensembl": "https://www.ensembl.org/Homo_sapiens/Gene/Summary?g=",
     "chembl": "https://www.ebi.ac.uk/chembl/compound_report_card/",
@@ -280,19 +281,13 @@ COOCCURRENCE_TYPE_LABELS = {
 }
 
 
-def epmc_evidence(
-    raw: DataFrame,
-    excluded_target_terms: list[str] | None = None,
-    sections_of_interest: list[str] | None = None,
-) -> DataFrame:
+def epmc_evidence(raw: DataFrame) -> DataFrame:
     """Europe-PMC gene-disease evidence export (Epmc.scala:83-117 compute +
     :30-42 evidence projection): section filter, GP-DS mapped rows under 600
     chars, grouped per (publication, target, disease, year), resourceScore =
     sum of sentence scores with a >1 significance floor."""
-    excluded = excluded_target_terms or []
-    sections = sections_of_interest or EPMC_SECTIONS_OF_INTEREST
     grouped = (
-        raw.filter(F.col("section").isin(sections))
+        raw.filter(F.col("section").isin(EPMC_SECTIONS_OF_INTEREST))
         .withColumn("pmid", F.trim(F.col("pmid").cast("string")))
         .withColumn("publicationIdentifier", F.coalesce("pmid", "pmcid"))
         .filter(
@@ -300,7 +295,7 @@ def epmc_evidence(
             & F.col("isMapped")
             & F.col("publicationIdentifier").isNotNull()
             & (F.length("text") < 600)
-            & ~F.col("label1").isin(excluded)
+            & ~F.col("label1").isin(EPMC_EXCLUDED_TARGET_TERMS)
         )
         .withColumnRenamed("keywordId1", "targetFromSourceId")
         .withColumnRenamed("keywordId2", "diseaseFromSourceMappedId")
@@ -340,11 +335,11 @@ def epmc_evidence(
     )
 
 
-def epmc_annotations(raw: DataFrame, uris: Mapping[str, str] | None = None) -> DataFrame:
+def epmc_annotations(raw: DataFrame) -> DataFrame:
     """Europe-PMC annotation export (EpmcCooccurrences.scala:22-57): one row
     per publication (PMC preferred over MED), annotations nested with typed
     labels and entity URIs resolved from keyword-id prefixes."""
-    u = dict(EPMC_URIS, **(uris or {}))
+    u = EPMC_URIS
 
     def gen_uri(kw):
         return (

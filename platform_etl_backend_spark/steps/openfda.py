@@ -147,14 +147,12 @@ def attach_meddra_data(
     target_dimension: str,
     meddra_preferred: DataFrame,
     meddra_low_level: DataFrame,
-    preferred_cols: tuple[str, ...] = ("pt_code", "pt_name"),
-    low_level_cols: tuple[str, ...] = ("llt_code", "llt_name"),
 ) -> DataFrame:
     """Resolve each reaction to its MedDRA code — preferred-term match
     first, low-level-term fallback (AttachMeddraData.scala:47-64),
     deduplicated per (target dimension, reaction)."""
-    pt = F.broadcast(_parse_meddra(meddra_preferred, preferred_cols))
-    llt = F.broadcast(_parse_meddra(meddra_low_level, low_level_cols))
+    pt = F.broadcast(_parse_meddra(meddra_preferred, ("pt_code", "pt_name")))
+    llt = F.broadcast(_parse_meddra(meddra_low_level, ("llt_code", "llt_name")))
     return (
         fda.join(pt, fda["reaction_reactionmeddrapt"] == pt["pt_name"], "left")
         .join(llt, fda["reaction_reactionmeddrapt"] == llt["llt_name"], "left")
@@ -166,34 +164,31 @@ def attach_meddra_data(
 
 def prepare_events(
     raw: DataFrame,
-    report_col: str = "safetyreportid",
-    drug_col: str = "drug_name",
-    reaction_col: str = "reaction",
 ) -> DataFrame:
     """Normalize: lower-case drug/reaction, drop nulls, distinct rows."""
     return (
         raw.select(
-            F.col(report_col).alias("report"),
-            F.lower(F.trim(F.col(drug_col))).alias("drug"),
-            F.lower(F.trim(F.col(reaction_col))).alias("reaction"),
+            F.col("safetyreportid").alias("report"),
+            F.lower(F.trim(F.col("drug_name"))).alias("drug"),
+            F.lower(F.trim(F.col("reaction"))).alias("reaction"),
         )
         .where(F.col("drug").isNotNull() & F.col("reaction").isNotNull())
         .distinct()
     )
 
 
-def filter_drugs(events: DataFrame, drug_list: DataFrame, name_col: str = "drug_name") -> DataFrame:
+def filter_drugs(events: DataFrame, drug_list: DataFrame) -> DataFrame:
     """Inner join against the curated drug list (broadcast LUT)."""
     lut = F.broadcast(
-        drug_list.select(F.lower(F.trim(F.col(name_col))).alias("drug")).distinct()
+        drug_list.select(F.lower(F.trim(F.col("drug_name"))).alias("drug")).distinct()
     )
     return events.join(lut, "drug", "inner")
 
 
-def filter_blacklist(events: DataFrame, blacklist: DataFrame, event_col: str = "reactions") -> DataFrame:
+def filter_blacklist(events: DataFrame, blacklist: DataFrame) -> DataFrame:
     """Remove blacklisted reactions (left_anti — EventsFiltering.scala:10-15)."""
     bl = F.broadcast(
-        blacklist.select(F.lower(F.trim(F.col(event_col))).alias("reaction")).distinct()
+        blacklist.select(F.lower(F.trim(F.col("reactions"))).alias("reaction")).distinct()
     )
     return events.join(bl, "reaction", "left_anti")
 
@@ -204,7 +199,6 @@ def stratified_sample(
     significant: DataFrame,
     target_dimension: str,
     sample_size: float = 0.1,
-    seed: int | None = 42,
 ) -> DataFrame:
     """Stratified sample of raw FAERS reports (StratifiedSampling.scala:20-63):
     sample the target dimension's distinct values independently from the
@@ -213,13 +207,12 @@ def stratified_sample(
 
     Divergence (documented, SURVEY §7.3#2): the reference's ``.sample`` has
     no seed and is acknowledged non-reproducible (README.md:564-569); this
-    port seeds it (pass ``seed=None`` for reference behavior).
+    port seeds it with 42.
     """
-    kwargs = {"fraction": sample_size}
-    if seed is not None:
-        kwargs["seed"] = seed
-    significant_stratum = significant.select(target_dimension).distinct().sample(**kwargs)
-    clean_stratum = clean.select(target_dimension).distinct().sample(**kwargs)
+    significant_stratum = (
+        significant.select(target_dimension).distinct().sample(fraction=sample_size, seed=42)
+    )
+    clean_stratum = clean.select(target_dimension).distinct().sample(fraction=sample_size, seed=42)
     merged = significant_stratum.join(clean_stratum, [target_dimension], "full").distinct()
     report_ids = (
         clean.select(target_dimension, "safetyreportid")

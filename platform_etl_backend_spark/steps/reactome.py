@@ -55,7 +55,7 @@ def reactome_step(
         edges.join(F.broadcast(ids), "src", "left_semi")
         .join(F.broadcast(ids.withColumnRenamed("src", "dst")), "dst", "left_semi")
     )
-    info = driver_closure(edges, "src", "dst")
+    info = driver_closure(edges)
     graph = spark.createDataFrame(
         [(n, *(d[c] for c in GRAPH_COLUMNS), d["paths"]) for n, d in info.items()],
         "id: string, ancestors: array<string>, descendants: array<string>, "

@@ -29,13 +29,13 @@ SEARCH_INDEX_COLS = (
 )
 
 
-def word_ngrams(name: Column, max_n: int = 3) -> Column:
+def word_ngrams(name: Column) -> Column:
     """Lowercased word n-grams of a label (ngram search field)."""
     toks = F.split(F.trim(F.lower(name)), r"\s+")
     return F.array_distinct(
         F.flatten(
             F.transform(
-                F.sequence(F.lit(1), F.lit(max_n)),
+                F.sequence(F.lit(1), F.lit(3)),
                 lambda n: F.when(
                     F.size(toks) >= n,
                     F.transform(
@@ -50,7 +50,6 @@ def word_ngrams(name: Column, max_n: int = 3) -> Column:
 
 def banded_labels(
     associations: DataFrame, id_col: str, label_col: str, score_col: str,
-    bands: tuple[int, ...] = (50, 25, 5),
 ) -> DataFrame:
     """Top-k-banded label aggregation (W1+A4): per entity, labels of its
     top-ranked counterparts at each cutoff."""
@@ -60,7 +59,7 @@ def banded_labels(
         F.sort_array(
             F.collect_set(F.when(F.col("rnk") <= b, F.col(label_col)))
         ).alias(f"labels_{b}")
-        for b in bands
+        for b in (50, 25, 5)
     ]
     return ranked.groupBy(id_col).agg(*aggs)
 
@@ -91,22 +90,16 @@ def _search_index(
     entities: DataFrame,
     entity: str,
     category: Column,
-    name_col: str = "name",
-    synonyms_col: str | None = "synonyms",
     description_col: str | None = None,
     extra_keyword_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    syn = (
-        F.coalesce(F.col(synonyms_col), F.array().cast("array<string>"))
-        if synonyms_col
-        else F.array().cast("array<string>")
-    )
+    syn = F.coalesce(F.col("synonyms"), F.array().cast("array<string>"))
     extras = [F.array(F.col(c)) for c in extra_keyword_cols]
-    keywords = flatten_cat(F.array(F.col(name_col)), syn, *extras)
+    keywords = flatten_cat(F.array(F.col("name")), syn, *extras)
     empty = F.array().cast("array<string>")
     return entities.select(
         F.col("id"),
-        F.col(name_col).alias("name"),
+        F.col("name"),
         (F.col(description_col) if description_col else F.lit(None).cast("string")).alias(
             "description"
         ),
@@ -114,7 +107,7 @@ def _search_index(
         category.alias("category"),
         keywords.alias("keywords"),
         F.transform(keywords, F.lower).alias("prefixes"),
-        word_ngrams(F.col(name_col)).alias("ngrams"),
+        word_ngrams(F.col("name")).alias("ngrams"),
         F.coalesce(F.col("terms"), empty).alias("terms"),
         F.coalesce(F.col("terms25"), empty).alias("terms25"),
         F.coalesce(F.col("terms5"), empty).alias("terms5"),
@@ -123,16 +116,13 @@ def _search_index(
 
 
 def search_step(
-    spark: SparkSession, inputs: Mapping[str, DataFrame], storage: str | None = None
+    spark: SparkSession, inputs: Mapping[str, DataFrame]
 ) -> Mapping[str, DataFrame]:
-    """``storage`` is the declarative materialization-point knob (SURVEY
-    §7.3-6): the reference pins 8 DISK_ONLY persists across its Search
-    step (Search.scala:652-809); here the multi-consumed frames are
-    persisted only when the caller names a ``pyspark.StorageLevel`` (e.g.
-    ``"DISK_ONLY"``).  Default None: the only internal frame with real
-    fan-out is ``assoc`` (4 consumers), and its recompute is one parquet
-    scan + two broadcast joins — SCALE.md's Search-persist decision table
-    records the per-site reasoning."""
+    """The reference pins 8 DISK_ONLY persists across its Search step
+    (Search.scala:652-809); this step persists nothing. The only internal
+    frame with real fan-out is ``assoc`` (4 consumers), and its recompute
+    is one parquet scan + two broadcast joins — SCALE.md's Search-persist
+    table records the per-site reasoning."""
     targets = inputs["targets"]
     diseases = inputs["diseases"]
     associations = inputs["associations"]  # targetId, diseaseId, score
@@ -145,10 +135,6 @@ def search_step(
         targets.select(F.col("id").alias("targetId"), F.col("approvedSymbol"))
     )
     assoc = associations.join(disease_names, "diseaseId").join(target_names, "targetId")
-    if storage is not None:
-        from pyspark import StorageLevel
-
-        assoc = assoc.persist(getattr(StorageLevel, storage))
 
     t_bands = banded_labels(assoc, "targetId", "diseaseName", "score").withColumnsRenamed(
         {"labels_50": "terms", "labels_25": "terms25", "labels_5": "terms5"}
@@ -162,7 +148,7 @@ def search_step(
         .withColumnRenamed("approvedName", "name")
     )
     search_targets = _search_index(
-        target_docs, "target", F.lit("target"), "name", "synonyms", None,
+        target_docs, "target", F.lit("target"), None,
         extra_keyword_cols=("approvedSymbol",),
     )
 
@@ -177,7 +163,7 @@ def search_step(
         .withColumnRenamed("diseaseId", "id")
     )
     search_diseases = _search_index(
-        disease_docs, "disease", F.lit("disease"), "name", "synonyms", "description"
+        disease_docs, "disease", F.lit("disease"), "description"
         if "description" in diseases.columns else None,
     )
 
@@ -185,9 +171,7 @@ def search_step(
     if evidence is not None:
         out["associations_with_drugs"] = associations_with_drugs(evidence)
     if "drugs" in inputs and evidence is not None:
-        out["search_drug"] = drug_index(
-            inputs["drugs"], evidence, targets, diseases, storage=storage
-        )
+        out["search_drug"] = drug_index(inputs["drugs"], evidence, targets, diseases)
     if "variants" in inputs:
         out["search_variant"] = variant_index(inputs["variants"])
     if "studies" in inputs:
@@ -306,14 +290,11 @@ def study_index(
 
 
 def drug_index(
-    drugs: DataFrame, evidence: DataFrame, targets: DataFrame,
-    diseases: DataFrame, storage: str | None = None,
+    drugs: DataFrame, evidence: DataFrame, targets: DataFrame, diseases: DataFrame
 ) -> DataFrame:
     """Drug search index (Search.scala:430-560 semantics): associated
     target/disease ids from evidence, propagated labels, flattenCat
-    keywords over synonyms/tradeNames, evidence-score relevance.
-    ``storage`` mirrors the reference's drug-frame DISK_ONLY persist
-    (Search.scala:702) for the 3-consumer ``assoc`` rollup."""
+    keywords over synonyms/tradeNames, evidence-score relevance."""
     assoc = (
         evidence.where(F.col("drugId").isNotNull())
         .groupBy("drugId")
@@ -323,10 +304,6 @@ def drug_index(
             F.mean("score").alias("relevance"),
         )
     )
-    if storage is not None:
-        from pyspark import StorageLevel
-
-        assoc = assoc.persist(getattr(StorageLevel, storage))
     t_labels = (
         assoc.select("drugId", F.explode("targetIds").alias("targetId"))
         .join(

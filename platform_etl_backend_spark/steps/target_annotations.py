@@ -421,39 +421,6 @@ def tep_normalize(tep: DataFrame, lookup: DataFrame) -> DataFrame:
     )
 
 
-# GAF 2.x column specification (GeneOntology.scala:98-116) — positional TSV
-_GAF_COLUMNS = (
-    "database", "dbObjectId", "dbObjectSymbol", "qualifier", "goId",
-    "dbReference", "evidenceCode", "withOrFrom", "aspect", "dbObjectName",
-    "dbObjectSynonym", "dbObjectType", "taxon", "date", "assignedBy",
-    "annotationExtension", "geneProductFormId",
-)
-
-
-def gaf_extract(df: DataFrame, rna: bool = False) -> DataFrame:
-    """GO annotation (GAF) positional TSV → the 6-column shape the target
-    step's ``go`` accretion consumes (GeneOntology.scala:97-127
-    extractRequiredColumnsFromRawDf). ``rna=True`` applies the RNACentral id
-    fix (:54-56 — 'URS0000001346_9606' → 'URS0000001346') to ``dbObjectId``
-    ONLY: the reference strips the suffix via a post-extraction withColumn,
-    so ``geneProduct`` keeps the raw suffixed id and stays a valid ECO-lookup
-    join key (Seq(goId, geneProduct, evidence), :69)."""
-    named = df.toDF(*_GAF_COLUMNS)
-    obj_id = (
-        F.element_at(F.split(F.col("dbObjectId"), "_"), 1)
-        if rna
-        else F.col("dbObjectId")
-    )
-    return named.select(
-        obj_id.alias("dbObjectId"),
-        F.col("goId"),
-        F.col("dbReference").alias("source"),
-        F.col("evidenceCode").alias("evidence"),
-        F.col("aspect"),
-        F.col("dbObjectId").alias("geneProduct"),
-    )
-
-
 def gene_code_normalize(df: DataFrame) -> DataFrame:
     """GeneCode.scala:14-43: GFF positional columns → canonical transcript
     struct per gene (version suffix stripped from ENSG/ENST ids, chromosome
@@ -481,34 +448,6 @@ def gene_code_normalize(df: DataFrame) -> DataFrame:
             ).alias("canonicalTranscript"),
         )
         .dropDuplicates(["gc_gene_id"])
-    )
-
-
-def protein_classification_normalize(df: DataFrame) -> DataFrame:
-    """ProteinClassification.scala:22-60: ChEMBL target docs → per-accession
-    ``targetClass`` array<struct<id,label,level>> across hierarchy levels
-    l1..l6 (null levels dropped)."""
-    zipped = df.select(
-        F.explode(
-            F.arrays_zip(
-                F.col("_metadata.protein_classification").alias("protein_classification"),
-                F.col("target_components.accession").alias("accession"),
-            )
-        ).alias("s")
-    ).select(F.col("s.accession").alias("accession"), F.col("s.protein_classification.*"))
-    levels = F.array(*[
-        F.struct(
-            F.col("protein_class_id").alias("id"),
-            F.col(f"l{i}").alias("label"),
-            F.lit(f"l{i}").alias("level"),
-        )
-        for i in range(1, 7)
-    ])
-    return (
-        zipped.select("accession", F.explode(levels).alias("l"))
-        .filter(F.col("l.label").isNotNull())
-        .groupBy("accession")
-        .agg(F.sort_array(F.collect_set("l")).alias("targetClass"))
     )
 
 

@@ -91,7 +91,7 @@ def bounds(spark, sf_dir: str) -> dict:
 
     out = {}
     sig = D.minhash_signatures(
-        table(spark, sf_dir, "documents"), "doc_id", "text", k=3, num_hashes=8
+        table(spark, sf_dir, "documents"), "doc_id", "text", num_hashes=8
     )
     keys = D._banded_keys(sig, "doc_id", num_hashes=8, bands=4)
     out["minhash_sum_bucket_sq"] = (
@@ -152,14 +152,13 @@ def minhash_recall(spark, sf_dir: str, bandings=((8, 4), (16, 4), (16, 8))) -> d
 
     docs = table(spark, sf_dir, "documents")
     t0 = time.time()
-    truth = D.ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5)
+    truth = D.ngram_jaccard_pairs(docs, "doc_id", "text", k=3)
     n_truth = truth.count()
     out = {"n_truth": n_truth, "truth_wall_s": round(time.time() - t0, 2)}
     spark.catalog.clearCache()
     for num_hashes, bands in bandings:
         tag = f"h{num_hashes}_b{bands}"
-        sig = D.minhash_signatures(docs, "doc_id", "text", k=3,
-                                   num_hashes=num_hashes)
+        sig = D.minhash_signatures(docs, "doc_id", "text", num_hashes=num_hashes)
         keys = D._banded_keys(sig, "doc_id", num_hashes=num_hashes, bands=bands)
         out[f"{tag}_sum_bucket_sq"] = int(
             keys.groupBy("band", "key").count()
@@ -173,8 +172,7 @@ def minhash_recall(spark, sf_dir: str, bandings=((8, 4), (16, 4), (16, 8))) -> d
         )
         t0 = time.time()
         n_ver = D.minhash_dedup_pairs(
-            docs, "doc_id", "text", k=3,
-            num_hashes=num_hashes, bands=bands, threshold=0.5,
+            docs, "doc_id", "text", num_hashes=num_hashes, bands=bands,
         ).count()
         out[f"{tag}_wall_s"] = round(time.time() - t0, 2)
         out[f"{tag}_n_candidates"] = n_cands
@@ -235,7 +233,7 @@ def ann_recall(spark, sf_dir: str, cent_counts=(8, 64), nprobes=(1, 2, 4)) -> di
             tag = f"k{k}_p{nprobe}"
             t0 = time.time()
             ann = S.ivf_topk(emb, cents, "vec_id", "embedding",
-                             k=1, nprobe=nprobe)
+                             nprobe=nprobe)
             hits = (
                 ann.join(truth, ann.query_id == truth.q)
                 .where(F.col("neighbor_id") == F.col("true_nb"))

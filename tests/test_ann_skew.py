@@ -196,7 +196,7 @@ def test_ivf_nprobe_raises_recall_and_agrees_at_nprobe1(spark, sf_dir):
     }
     tk1 = {
         (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk(emb, cents, "vec_id", "embedding", k=1, nprobe=1).collect()
+        for r in S.ivf_topk(emb, cents, "vec_id", "embedding", nprobe=1).collect()
     }
     assert t1 == tk1  # (a)
 
@@ -208,7 +208,7 @@ def test_ivf_nprobe_raises_recall_and_agrees_at_nprobe1(spark, sf_dir):
 
     def recall(nprobe):
         ann = S.ivf_topk(
-            emb, cents, "vec_id", "embedding", k=1, nprobe=nprobe
+            emb, cents, "vec_id", "embedding", nprobe=nprobe
         ).select("query_id", F.col("neighbor_id").alias("ann_n"))
         j = bf.join(ann, "query_id")
         return j.where(F.col("bf_n") == F.col("ann_n")).count() / j.count()

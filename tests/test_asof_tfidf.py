@@ -153,7 +153,7 @@ def test_tfidf_math(spark):
     df = spark.createDataFrame(
         [(1, "apple apple banana"), (2, "banana cherry")], ["doc_id", "text"]
     )
-    rows = tfidf_top_terms(df, "doc_id", "text", k=3).collect()
+    rows = tfidf_top_terms(df, "doc_id", "text").collect()
     by_key = {(r.doc_id, r.term): r for r in rows}
     # df: apple 1 doc, banana 2 docs, cherry 1 doc; N = 2
     idf_apple = round(math.log(2 / 1), 6)
@@ -206,7 +206,7 @@ def test_asof_matches_bruteforce_property(spark):
 
 def test_tfidf_tiebreak_is_term_asc(spark):
     df = spark.createDataFrame([(1, "b a c d e f")], ["doc_id", "text"])
-    rows = tfidf_top_terms(df, "doc_id", "text", k=3).collect()
+    rows = tfidf_top_terms(df, "doc_id", "text").collect()
     # all terms have identical tf and idf -> top-3 must be a, b, c
     assert sorted(r.term for r in rows) == ["a", "b", "c"]
 

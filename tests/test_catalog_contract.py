@@ -17,8 +17,6 @@ tests make that class of regression impossible to reintroduce:
 
 from __future__ import annotations
 
-import pytest
-
 import platform_etl_backend_spark.catalog as catalog_init
 from platform_etl_backend_spark.catalog import QUERIES
 
@@ -28,22 +26,27 @@ ROWS_ONLY_ALLOWED = {
     "q_approx_percentile",     # GK quantile sketch values are engine-specific
     # q_transformer_rerank left this set in round 11: the scorer is now
     # the integer fixed-point transformer, reproduced relationally by a
-    # DuckDB oracle (the float softmax sibling remains pytest-pinned).
+    # DuckDB oracle.
 }
 
 FORBIDDEN_TYPES = {"array", "map", "struct"}
 FORBIDDEN_TIME_TYPES = {"timestamp", "timestamp_ntz"}
 
 
-@pytest.fixture(scope="module")
-def schemas(spark, sf_dir):
-    out = {}
-    for name, spec in QUERIES.items():
-        out[name] = spec.fn(spark, sf_dir).schema
-    return out
+def _schemas(catalog_sweep):
+    """Output schema per query from the session's one catalog sweep; a
+    query that cannot be built fails the calling test."""
+    broken = {
+        name: f"{type(e).__name__}: {e}"
+        for name, e in catalog_sweep.items()
+        if isinstance(e, Exception)
+    }
+    assert not broken, f"catalog queries that do not build: {broken}"
+    return {name: schema for name, (_, schema) in catalog_sweep.items()}
 
 
-def test_no_complex_typed_output_columns(schemas):
+def test_no_complex_typed_output_columns(catalog_sweep):
+    schemas = _schemas(catalog_sweep)
     bad = [
         (name, f.name, f.dataType.typeName())
         for name, schema in schemas.items()
@@ -53,7 +56,8 @@ def test_no_complex_typed_output_columns(schemas):
     assert not bad, f"complex-typed outputs break the value-hash canonicalizer: {bad}"
 
 
-def test_no_raw_timestamp_output_columns(schemas):
+def test_no_raw_timestamp_output_columns(catalog_sweep):
+    schemas = _schemas(catalog_sweep)
     bad = [
         (name, f.name, f.dataType.typeName())
         for name, schema in schemas.items()

@@ -6,12 +6,6 @@ from pyspark.sql import functions as F
 from platform_etl_backend_spark.functions import columns as C
 
 
-def test_strip_id_from_uri(spark):
-    df = spark.createDataFrame([("http://purl.org/obo/GO_123",), ("plain",)], ["uri"])
-    out = [r[0] for r in df.select(C.strip_id_from_uri("uri")).collect()]
-    assert out == ["GO_123", "plain"]
-
-
 def test_flatten_cat(spark):
     df = spark.createDataFrame(
         [(["a", "b"], ["b", None, ""]), (None, ["c"]), (None, None)],
@@ -86,10 +80,3 @@ def test_rename_all_cols_nested(spark):
     inner = out.schema["nestedVal"].dataType["subField"].dataType.elementType
     assert inner.fieldNames() == ["deepOne"]
     assert out.first().nestedVal.subField[0].deepOne == "v"
-
-
-def test_validate_df(spark):
-    df = spark.createDataFrame([(1,)], ["id"])
-    C.validate_df(["id"], df)
-    with pytest.raises(ValueError):
-        C.validate_df(["id", "missing"], df)

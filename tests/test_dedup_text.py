@@ -33,7 +33,7 @@ def test_bag_fingerprint_groups(spark, docs):
 
 def test_ngram_jaccard_pairs(spark, docs):
     pairs = {(r.id_a, r.id_b): r.jaccard for r in
-             D.ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5).collect()}
+             D.ngram_jaccard_pairs(docs, "doc_id", "text", k=3).collect()}
     assert (1, 4) in pairs and pairs[(1, 4)] == 1.0
     assert (1, 2) in pairs and 0.5 <= pairs[(1, 2)] < 1.0
     assert not any({3, 5} & set(p) for p in pairs)
@@ -41,7 +41,7 @@ def test_ngram_jaccard_pairs(spark, docs):
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
     pairs = {(r.id_a, r.id_b) for r in
-             D.minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.5).collect()}
+             D.minhash_dedup_pairs(docs, "doc_id", "text").collect()}
     assert (1, 4) in pairs  # exact dup always collides
     assert (1, 2) in pairs  # planted near-dup
     assert all(3 not in p and 5 not in p for p in pairs)
@@ -56,7 +56,7 @@ def test_simhash_near_dups_close(spark, docs):
 
 def test_winnow_fingerprint_stability(spark, docs):
     fp = {r.doc_id: r.fingerprint for r in
-          D.winnow_fingerprint(docs, "doc_id", "text", k=5).collect()}
+          D.winnow_fingerprint(docs, "doc_id", "text").collect()}
     assert fp[1] == fp[4]
     assert fp[1] != fp[3]
     assert len(fp) == 5  # short doc still fingerprints (whole-doc shingle)
@@ -97,11 +97,11 @@ def test_prefix_filtered_jaccard_equals_baseline(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5)
+        map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", k=3)
             .select("id_a", "id_b", "inter", "jaccard").collect())
     )
     pref = sorted(
-        map(tuple, prefix_filtered_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5)
+        map(tuple, prefix_filtered_jaccard_pairs(docs, "doc_id", "text", k=3)
             .select("id_a", "id_b", "inter", "jaccard").collect())
     )
     assert base == pref
@@ -151,8 +151,8 @@ def test_prefix_filter_prunes_candidates(spark, sf_dir):
     assert pref_cands < full_cands
 
     # and nothing above the threshold is lost (exactness re-checked on counts)
-    n_base = ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5).count()
-    n_pref = prefix_filtered_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5).count()
+    n_base = ngram_jaccard_pairs(docs, "doc_id", "text", k=3).count()
+    n_pref = prefix_filtered_jaccard_pairs(docs, "doc_id", "text", k=3).count()
     assert n_base == n_pref
 
 
@@ -212,11 +212,11 @@ def test_prefix_filter_wins_on_zipfian_sharing(spark):
     assert pref_cands * 100 < full_cands  # the orders-of-magnitude win
 
     base = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", k=1, threshold=0.5)
+        map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", k=1)
             .select("id_a", "id_b", "inter", "jaccard").collect())
     )
     pref = sorted(
-        map(tuple, prefix_filtered_jaccard_pairs(docs, "doc_id", "text", k=1, threshold=0.5)
+        map(tuple, prefix_filtered_jaccard_pairs(docs, "doc_id", "text", k=1)
             .select("id_a", "id_b", "inter", "jaccard").collect())
     )
     assert base == pref
@@ -279,7 +279,7 @@ def test_skipgram_pairs_window_semantics(spark):
     """'a b c d': distance-1 pairs both directions + distance-2 pairs."""
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id: bigint, text: string")
     got = {(r.center, r.context): r.cnt
-           for r in TQ.skipgram_pairs(docs, "doc_id", "text", window=2, topk=50).collect()}
+           for r in TQ.skipgram_pairs(docs, "doc_id", "text").collect()}
     expect = {}
     toks = "a b c d".split()
     for i in range(len(toks)):
@@ -307,9 +307,9 @@ def test_containment_catches_what_jaccard_misses(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in D.containment_pairs(df, "doc_id", "text", k=3, threshold=0.8).collect()
+        for r in D.containment_pairs(df, "doc_id", "text").collect()
     }
     assert (1, 2) in got and got[(1, 2)] >= 0.8
     assert (2, 1) not in got  # asymmetric: big is NOT contained in small
-    jac = D.ngram_jaccard_pairs(df, "doc_id", "text", k=3, threshold=0.5).collect()
+    jac = D.ngram_jaccard_pairs(df, "doc_id", "text", k=3).collect()
     assert not [r for r in jac if {r["id_a"], r["id_b"]} == {1, 2}]

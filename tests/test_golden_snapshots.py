@@ -26,7 +26,7 @@ import textwrap
 import pytest
 from py4j.protocol import Py4JJavaError
 
-from platform_etl_backend_spark.engine.session import session_scoped_conf
+from spark_helpers import session_scoped_conf
 from platform_etl_backend_spark.steps import run_step
 
 OBO_SAMPLE = textwrap.dedent("""\

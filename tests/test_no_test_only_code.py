@@ -10,9 +10,12 @@ it appears as a whole word in code or in a string. Prose does not count:
 comments, docstrings (any bare string statement) and ``description=``
 keyword strings are skipped, so a sentence that names a function does not
 keep it alive. Other strings do count, because registration by string (a
-catalog query listed by name, otbench's query mix) is a real reference, as
-is a mention in ``__all__``. In the defining file, the tokens inside the
-definition itself do not count, so a recursive call is not a caller.
+catalog query listed by name, otbench's query mix) is a real reference.
+Re-exports do not count either: in an ``__init__.py``, the import
+statements and the ``__all__`` list only republish a name, so a function
+that only tests import through its package is still test-only. In the
+defining file, the tokens inside the definition itself do not count, so a
+recursive call is not a caller.
 """
 
 from __future__ import annotations
@@ -44,14 +47,6 @@ ALLOWLIST = {
         "the quality gate over with_quality_metrics' observations "
         "(ROADMAP item 5)"
     ),
-    "steps.target_annotations.gaf_extract": (
-        "reference-parity GAF extraction that target_step does not call yet; "
-        "wire-or-delete is open on ROADMAP"
-    ),
-    "steps.target_annotations.protein_classification_normalize": (
-        "reference-parity ChEMBL protein classification that target_step does "
-        "not call yet; wire-or-delete is open on ROADMAP"
-    ),
     "operators.stats.summary_statistics": (
         "the reference's window formulation (PrepareSummaryStatistics.scala:"
         "38-46) that contingency_via_groupby is checked against"
@@ -81,18 +76,32 @@ def _is_str(node: ast.expr) -> bool:
     )
 
 
-def _prose_spans(tree: ast.AST) -> list[tuple[tuple[int, int], tuple[int, int]]]:
-    """(start, end) positions of the strings that are prose, not code:
-    bare string statements (docstrings) and ``description=`` values."""
+def _is_reexport(node: ast.AST) -> bool:
+    """An import statement or an ``__all__`` assignment."""
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return True
+    return isinstance(node, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+    )
+
+
+def _skipped_spans(
+    tree: ast.AST, is_init: bool
+) -> list[tuple[tuple[int, int], tuple[int, int]]]:
+    """(start, end) positions of what is not a caller: prose strings (bare
+    string statements such as docstrings, and ``description=`` values) and,
+    in an ``__init__.py``, the re-export statements."""
     spans = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Expr) and _is_str(node.value):
-            prose = node.value
+            skip = node.value
         elif isinstance(node, ast.keyword) and node.arg == "description":
-            prose = node.value
+            skip = node.value
+        elif is_init and _is_reexport(node):
+            skip = node
         else:
             continue
-        spans.append(((prose.lineno, prose.col_offset), (prose.end_lineno, prose.end_col_offset)))
+        spans.append(((skip.lineno, skip.col_offset), (skip.end_lineno, skip.end_col_offset)))
     return spans
 
 
@@ -101,15 +110,18 @@ def _prose_spans(tree: ast.AST) -> list[tuple[tuple[int, int], tuple[int, int]]]
 _STRING_TOKENS = {tokenize.STRING, getattr(tokenize, "FSTRING_MIDDLE", tokenize.STRING)}
 
 
-def _code_words(text: str) -> list[tuple[int, str]]:
+def _code_words(text: str, is_init: bool = False) -> list[tuple[int, str]]:
     """(line, word) for every name token and every word inside a non-prose
-    string; comments and prose strings are dropped."""
-    spans = _prose_spans(ast.parse(text))
+    string; comments, prose strings and ``__init__.py`` re-exports are
+    dropped."""
+    spans = _skipped_spans(ast.parse(text), is_init)
     words: list[tuple[int, str]] = []
     for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+        if any(a <= tok.start < b for a, b in spans):
+            continue
         if tok.type == tokenize.NAME:
             words.append((tok.start[0], tok.string))
-        elif tok.type in _STRING_TOKENS and not any(a <= tok.start < b for a, b in spans):
+        elif tok.type in _STRING_TOKENS:
             words.extend((tok.start[0], w) for w in _WORD.findall(tok.string))
     return words
 
@@ -119,7 +131,7 @@ def _test_only_names() -> set[str]:
     outside the tests references."""
     files = _non_test_files()
     texts = {p: p.read_text() for p in files}
-    words = {p: _code_words(t) for p, t in texts.items()}
+    words = {p: _code_words(t, p.name == "__init__.py") for p, t in texts.items()}
     total = Counter(w for ws in words.values() for _, w in ws)
 
     unused: set[str] = set()

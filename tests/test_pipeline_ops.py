@@ -40,7 +40,7 @@ def test_decontamination_finds_verbatim_overlap(spark):
 
 
 def test_decontamination_broadcasts_bounded_eval_side(spark, sf_dir):
-    from platform_etl_backend_spark.plans import assert_broadcast_join
+    from spark_helpers import assert_broadcast_join
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = decontamination_hits(
@@ -99,7 +99,7 @@ def test_quantize_int8_codes_and_error_bound(spark):
 
 
 def test_quantize_int8_is_map_side_only(spark):
-    from platform_etl_backend_spark.plans import shuffle_count
+    from spark_helpers import shuffle_count
 
     df = spark.createDataFrame([(1, [1.0, 2.0])], ["vec_id", "embedding"])
     assert shuffle_count(quantize_int8(df, "vec_id", "embedding")) == 0

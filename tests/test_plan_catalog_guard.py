@@ -11,22 +11,16 @@ from __future__ import annotations
 import pytest
 
 from platform_etl_backend_spark.catalog import QUERIES
-from platform_etl_backend_spark.plans import explain_str
 
 
 @pytest.fixture(scope="module")
-def all_plans(spark, sf_dir):
-    """ONE catalog-wide plan sweep shared by every guard in this module
-    (building ~300 plans costs minutes; doing it once keeps the suite
-    inside its chunk budget). Values are either the simple-plan string or
-    an Exception instance when planning itself failed."""
-    plans = {}
-    for name, spec in QUERIES.items():
-        try:
-            plans[name] = explain_str(spec.fn(spark, sf_dir), "simple")
-        except Exception as e:
-            plans[name] = e
-    return plans
+def all_plans(catalog_sweep):
+    """Simple-plan string per query from the session's one catalog sweep,
+    or the Exception when building or planning the query failed."""
+    return {
+        name: built if isinstance(built, Exception) else built[0]
+        for name, built in catalog_sweep.items()
+    }
 
 
 def test_no_catalog_query_plans_a_cartesian_product(all_plans):

@@ -8,8 +8,8 @@ from __future__ import annotations
 import pytest
 
 from platform_etl_backend_spark.catalog import QUERIES
-from platform_etl_backend_spark.plans import (
-    explain_str,
+from platform_etl_backend_spark.plans import explain_str
+from spark_helpers import (
     assert_broadcast_join,
     assert_no_cartesian,
     assert_pushed_filters,

@@ -8,7 +8,7 @@ import pytest
 
 from platform_etl_backend_spark.engine.config import IOResourceConfig
 from platform_etl_backend_spark.engine.io import read_single
-from platform_etl_backend_spark.engine.session import session_scoped_conf
+from spark_helpers import session_scoped_conf
 
 
 def _read(spark, path, split_bytes, delimiter="//\n"):

@@ -19,7 +19,7 @@ def test_ngram_repetition_math(spark):
     # "a b a b a b": bigrams = [a b, b a, a b, b a, a b] -> 5 total, 2 distinct,
     # top "a b" x3
     df = spark.createDataFrame([(1, "a b a b a b"), (2, "w x y z")], ["doc_id", "text"])
-    rows = {r.doc_id: r for r in ngram_repetition(df, "doc_id", "text", n=2).collect()}
+    rows = {r.doc_id: r for r in ngram_repetition(df, "doc_id", "text").collect()}
     r1 = rows[1]
     assert (r1.n_grams, r1.distinct_grams, r1.top_gram_count) == (5, 2, 3)
     assert r1.top_gram_frac == 0.6
@@ -31,7 +31,7 @@ def test_ngram_repetition_math(spark):
 
 def test_ngram_repetition_short_docs_drop(spark):
     df = spark.createDataFrame([(1, "solo"), (2, "two words")], ["doc_id", "text"])
-    out = ngram_repetition(df, "doc_id", "text", n=2).collect()
+    out = ngram_repetition(df, "doc_id", "text").collect()
     assert {r.doc_id for r in out} == {2}
 
 

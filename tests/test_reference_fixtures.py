@@ -243,24 +243,6 @@ def test_hpa_gene_with_location(spark):
 
 
 # ---------------------------------------------------------------------------
-# ChEMBL protein classification (ProteinClassificationTest.scala)
-# ---------------------------------------------------------------------------
-
-def test_chembl_protein_classification(spark):
-    from platform_etl_backend_spark.steps.target_annotations import (
-        protein_classification_normalize,
-    )
-
-    raw = spark.read.json(f"{REF}/target/chembl_target_100.jsonl.gz")
-    out = protein_classification_normalize(raw)
-    assert out.count() > 100  # each input doc has >= one accession
-    bad = out.where(
-        F.exists("targetClass", lambda tc: tc["label"].isNull() | (tc["label"] == ""))
-    ).count()
-    assert bad == 0
-
-
-# ---------------------------------------------------------------------------
 # TEP (TepTest.scala: conversion without loss)
 # ---------------------------------------------------------------------------
 
@@ -341,39 +323,6 @@ def test_openfda_blacklist_filtering_removes_every_blacklisted_event(spark):
     )
     assert survivors.count() == bl.count()
     assert filtered.count() > 0
-
-
-# ---------------------------------------------------------------------------
-# GO annotations / GAF (GeneOntologyTest.scala: 6 columns, 500 rows)
-# ---------------------------------------------------------------------------
-
-def test_gaf_extraction_500_rows_6_columns(spark):
-    from platform_etl_backend_spark.steps.target_annotations import gaf_extract
-
-    raw = (
-        spark.read.option("sep", "\t")
-        .option("comment", "!")
-        .csv(f"{REF}/target/goa_500.gaf")
-    )
-    out = gaf_extract(raw)
-    assert len(out.columns) == 6
-    assert out.count() == 500
-    r = out.where(F.col("dbObjectId") == "P54253").limit(1).collect()[0]
-    assert r.goId.startswith("GO:")
-    assert r.aspect in {"F", "P", "C"}
-    assert r.geneProduct == r.dbObjectId
-    # RNA variant strips the taxon suffix from RNACentral ids
-    rna_raw = spark.createDataFrame(
-        [tuple(["RNAcentral", "URS0000001346_9606"] + [""] * 15)],
-        "c0 string, c1 string, c2 string, c3 string, c4 string, c5 string, "
-        "c6 string, c7 string, c8 string, c9 string, c10 string, c11 string, "
-        "c12 string, c13 string, c14 string, c15 string, c16 string",
-    )
-    rna_row = gaf_extract(rna_raw, rna=True).collect()[0]
-    assert rna_row.dbObjectId == "URS0000001346"
-    # GeneOntology.scala:54-56 strips the suffix AFTER extraction, so the
-    # geneProduct ECO-lookup key keeps the raw suffixed id
-    assert rna_row.geneProduct == "URS0000001346_9606"
 
 
 # ---------------------------------------------------------------------------

@@ -59,7 +59,7 @@ def test_record_text_reader_is_split_invariant(spark, tmp_path):
     split or ~50 splits of 97 bytes (records cut mid-delimiter, at record
     start, at split end): the trailing undelimited record is kept, records
     of spaces only are dropped, and an empty file has no rows."""
-    from platform_etl_backend_spark.engine.session import session_scoped_conf
+    from spark_helpers import session_scoped_conf
 
     delim = "//\n"
     parts = []
@@ -220,7 +220,7 @@ def test_round4_operators_on_empty_and_degenerate_inputs(spark):
     assert bpe_encode_stats(empty_docs, "doc_id", "text", vocab).count() == 0
 
     # skip-grams: a 1-token doc has no pairs at any window
-    assert skipgram_pairs(one_tok, "doc_id", "text", window=2).count() == 0
+    assert skipgram_pairs(one_tok, "doc_id", "text").count() == 0
 
     # ROUGE: empty pair list -> empty output (gram frames never consulted)
     empty_pairs = spark.createDataFrame([], "cand_id bigint, ref_id bigint")

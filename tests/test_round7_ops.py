@@ -103,7 +103,7 @@ def test_weighted_shingle_tf_matches_python(spark):
     rows = [(1, "a b c a b c a b"), (2, "x y"), (3, "p q r s p q r")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got: dict[int, dict[str, int]] = {}
-    for r in weighted_shingle_tf_rows(df, "doc_id", "text", 3).collect():
+    for r in weighted_shingle_tf_rows(df, "doc_id", "text").collect():
         got.setdefault(r["doc_id"], {})[r["g"]] = r["w"]
     want = {i: _py_wshingles(t) for i, t in rows}
     assert got == want
@@ -122,7 +122,7 @@ def test_weighted_minhash_signature_matches_python_replica_min(spark):
     got = {
         r["doc_id"]: (r["h0"], r["h1"], r["h2"])
         for r in weighted_minhash_sigs_from_tf(
-            weighted_shingle_tf_rows(df, "doc_id", "text", 3), "doc_id", 3
+            weighted_shingle_tf_rows(df, "doc_id", "text"), "doc_id", 3
         ).collect()
     }
     want = {
@@ -147,7 +147,7 @@ def test_weighted_minhash_collision_rate_tracks_weighted_jaccard(spark):
     sig = {
         r["doc_id"]: [r[f"h{i}"] for i in range(H)]
         for r in weighted_minhash_sigs_from_tf(
-            weighted_shingle_tf_rows(df, "doc_id", "text", 3), "doc_id", H
+            weighted_shingle_tf_rows(df, "doc_id", "text"), "doc_id", H
         ).collect()
     }
     rate = sum(x == y for x, y in zip(sig[1], sig[2])) / H

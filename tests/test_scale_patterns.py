@@ -8,7 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from platform_etl_backend_spark.plans import explain_str, shuffle_count
+from platform_etl_backend_spark.plans import explain_str
+from spark_helpers import shuffle_count
 
 
 def test_bucketed_join_is_colocated(spark, sf_dir, tmp_path):
@@ -20,7 +21,7 @@ def test_bucketed_join_is_colocated(spark, sf_dir, tmp_path):
      .sortBy("o_orderkey").saveAsTable("orders_b"))
     (lineitem.write.mode("overwrite").bucketBy(8, "l_orderkey")
      .sortBy("l_orderkey").saveAsTable("lineitem_b"))
-    from platform_etl_backend_spark.engine.session import session_scoped_conf
+    from spark_helpers import session_scoped_conf
 
     try:
         ob = spark.table("orders_b")
@@ -90,7 +91,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
     the no-code-change skew remedy the engine relies on at 100 TB (the
     manual salting operator in operators/skew.py is the fallback for
     aggregations, where AQE cannot help)."""
-    from platform_etl_backend_spark.engine.session import session_scoped_conf
+    from spark_helpers import session_scoped_conf
 
     skew = spark.range(0, 300000).select(
         F.when(F.col("id") < 250000, 0).otherwise(F.col("id")).alias("k"),
@@ -117,7 +118,7 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, tmp_path):
     side injects might_contain(bloom_filter_agg(...)) onto the probe-side
     scan, so most of the 100TB fact table is dropped before the shuffle —
     Spark's runtime answer to semi-join reduction."""
-    from platform_etl_backend_spark.engine.session import session_scoped_conf
+    from spark_helpers import session_scoped_conf
 
     big_p = str(tmp_path / "big")
     dim_p = str(tmp_path / "dim")

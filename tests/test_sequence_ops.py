@@ -16,7 +16,7 @@ from platform_etl_backend_spark.operators.sequence import (
     funnel_stages,
     scd2_intervals,
 )
-from platform_etl_backend_spark.plans.inspect import shuffle_count
+from spark_helpers import shuffle_count
 
 
 SCHEMA = "user_id bigint, event_id bigint, ep bigint, event_type string, value double"

@@ -24,7 +24,7 @@ def test_duplicated_spans_toy(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r.doc_id: r for r in duplicated_spans(docs, "doc_id", "text", k=3).collect()}
+    out = {r.doc_id: r for r in duplicated_spans(docs, "doc_id", "text").collect()}
     assert set(out) == {1, 2}
     # doc1: dup 3-gram positions {1,2} -> merged span tokens 1..4
     assert (out[1].n_spans, out[1].dup_tokens, out[1].spans) == (1, 4, "1-4")
@@ -40,7 +40,7 @@ def test_duplicated_spans_disjoint_islands(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r.doc_id: r for r in duplicated_spans(docs, "doc_id", "text", k=3).collect()}
+    out = {r.doc_id: r for r in duplicated_spans(docs, "doc_id", "text").collect()}
     assert out[1].n_spans == 2
     assert out[1].spans == "1-3|8-10"
     assert out[1].dup_tokens == 6
@@ -48,7 +48,7 @@ def test_duplicated_spans_disjoint_islands(spark):
 
 def test_duplicated_spans_short_docs_emit_nothing(spark):
     docs = spark.createDataFrame([(1, "a b"), (2, "a b")], ["doc_id", "text"])
-    assert duplicated_spans(docs, "doc_id", "text", k=3).count() == 0
+    assert duplicated_spans(docs, "doc_id", "text").count() == 0
 
 
 def test_bigram_logprob_hand_example(spark):
@@ -145,7 +145,7 @@ def test_duplicated_spans_matches_model(spark, texts):
     df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
     got = {
         r.doc_id: (r.n_spans, r.dup_tokens, r.spans)
-        for r in duplicated_spans(df, "doc_id", "text", k=3).collect()
+        for r in duplicated_spans(df, "doc_id", "text").collect()
     }
     assert got == _model_spans(texts, 3)
 

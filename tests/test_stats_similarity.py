@@ -133,7 +133,7 @@ def test_multimodal_plumbing(spark):
              M.decode_features(df, "media_id", "data").collect()}
     assert feats == again
 
-    frames = M.frame_sample(df, "media_id", "data", every=2).collect()
+    frames = M.frame_sample(df, "media_id", "data").collect()
     assert all(r.frame_no % 2 == 0 for r in frames)
 
     # jpeg AND png decode for REAL now (operators/jpeg.py, operators/png.py):
@@ -278,7 +278,7 @@ def test_count_min_one_sided_error(spark, sf_dir):
     from platform_etl_backend_spark.operators.stats import count_min_estimates
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rows = count_min_estimates(d, "doc_id", "text", depth=4, width=256, topk=20).collect()
+    rows = count_min_estimates(d, "doc_id", "text", width=256, topk=20).collect()
     assert len(rows) == 20
     for r in rows:
         assert r.cm_estimate >= r.exact, r
@@ -294,7 +294,7 @@ def test_count_min_exact_on_small_universe(spark):
         [(1, "x x x y"), (2, "y z")], ["doc_id", "text"]
     )
     got = {r.token: (r.exact, r.cm_estimate) for r in
-           count_min_estimates(docs, "doc_id", "text", depth=4, width=256, topk=10).collect()}
+           count_min_estimates(docs, "doc_id", "text", width=256, topk=10).collect()}
     assert got == {"x": (3, 3), "y": (2, 2), "z": (1, 1)}
 
 
@@ -316,7 +316,7 @@ def test_count_min_width_error_trade(spark, sf_dir):
         return {
             r["token"]: r["cm_estimate"]
             for r in count_min_estimates(
-                docs, "doc_id", "text", depth=4, width=width, topk=20
+                docs, "doc_id", "text", width=width, topk=20
             ).collect()
         }
 
@@ -486,7 +486,7 @@ def test_pq_adc_recall_against_exact_l2(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(100)],
         "vec_id bigint, embedding array<float>",
     )
-    top = pq_adc_topk(df, "vec_id", "embedding", F.col("qid") < 10, k=3).collect()
+    top = pq_adc_topk(df, "vec_id", "embedding", F.col("qid") < 10).collect()
     got = {}
     for r in top:
         got.setdefault(r["query_id"], []).append(r["neighbor_id"])

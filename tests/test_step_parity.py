@@ -172,19 +172,6 @@ def test_search_step_index_shape_and_multiplier_fallback(spark):
     assert abs(ibd.multiplier - (math.log1p(0.5) + 1.0)) < 1e-9
     assert abs(d["EFO_0000692"].multiplier - 0.01) < 1e-12
 
-    # the declarative materialization knob (Search.scala:652-809 persist
-    # parity, SURVEY §7.3-6): storage="DISK_ONLY" must change NOTHING in
-    # the outputs — it only pins the multi-consumed assoc frame
-    out_p = search_step(
-        spark,
-        {"targets": targets, "diseases": diseases, "associations": associations},
-        storage="DISK_ONLY",
-    )
-    rows = lambda df: sorted(map(str, df.collect()))  # noqa: E731
-    assert rows(out_p["search_target"]) == rows(out["search_target"])
-    assert rows(out_p["search_disease"]) == rows(out["search_disease"])
-    spark.catalog.clearCache()
-
 
 # ---------------------------------------------------------------------------
 # Expression — transpose + group-max merge + EFO fallback

@@ -279,30 +279,6 @@ def test_gene_code_normalize(spark):
     assert rows["ENSG99"].chromosome == "MT"
 
 
-def test_protein_classification_normalize(spark):
-    from platform_etl_backend_spark.steps.target_annotations import (
-        protein_classification_normalize,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (
-                {"protein_classification": [
-                    {"protein_class_id": 7, "l1": "Enzyme", "l2": "Kinase",
-                     "l3": None, "l4": None, "l5": None, "l6": None}]},
-                {"accession": ["P1"]},
-            )
-        ],
-        "_metadata: struct<protein_classification:array<struct<protein_class_id:long,"
-        "l1:string,l2:string,l3:string,l4:string,l5:string,l6:string>>>, "
-        "target_components: struct<accession:array<string>>",
-    )
-    rows = protein_classification_normalize(df).collect()
-    assert rows[0].accession == "P1"
-    got = {(t.label, t.level) for t in rows[0].targetClass}
-    assert got == {("Enzyme", "l1"), ("Kinase", "l2")}
-
-
 def test_gene_with_location_normalize(spark):
     from platform_etl_backend_spark.steps.target_annotations import (
         gene_with_location_normalize,
