@@ -6,7 +6,7 @@ LLR / Monte-Carlo disproportionality pipeline re-targeted at the synthetic
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from platform_etl_backend_spark.catalog.registry import register, table, dec6, dbl
@@ -299,15 +299,34 @@ def q_montecarlo_critical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return montecarlo_critical_values(contingency, "drug", permutations=100, percentile=0.95)
 
 
-@register(
-    "q_asof_join",
-    oracle=f"""
+# The as-of queries' inputs: click probes, and purchases deduplicated per
+# (user, second) keeping the highest event id.
+_ASOF_INPUTS_DUCK = f"""
     WITH e AS (SELECT event_id, user_id, event_type, value, {_EPOCH_DUCK} AS ep FROM events),
     c AS (SELECT event_id, user_id, ep FROM e WHERE event_type = 'click'),
     p AS (SELECT user_id, ep, event_id AS purchase_id, value AS purchase_value,
                  ROW_NUMBER() OVER (PARTITION BY user_id, ep ORDER BY event_id DESC) AS rn
           FROM e WHERE event_type = 'purchase'),
     pd AS (SELECT * FROM p WHERE rn = 1),
+"""
+
+
+def _asof_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Click probes and purchase builds of the as-of queries."""
+    e = events_table(spark, sf_dir)
+    clicks = e.where(F.col("event_type") == "click").select("event_id", "user_id", "ep")
+    purchases = e.where(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ep",
+        F.col("event_id").alias("purchase_id"),
+        F.col("value").alias("purchase_value"),
+    )
+    return clicks, purchases
+
+
+@register(
+    "q_asof_join",
+    oracle=_ASOF_INPUTS_DUCK + """
     j AS (SELECT c.event_id, c.user_id, c.ep, pd.purchase_id, pd.purchase_value,
                  ROW_NUMBER() OVER (PARTITION BY c.event_id
                                     ORDER BY pd.ep DESC, pd.purchase_id DESC) AS rn
@@ -324,14 +343,7 @@ def q_montecarlo_critical(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.asof import asof_join_backward
 
-    e = events_table(spark, sf_dir)
-    clicks = e.where(F.col("event_type") == "click").select("event_id", "user_id", "ep")
-    purchases = e.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ep",
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
+    clicks, purchases = _asof_inputs(spark, sf_dir)
     return asof_join_backward(
         clicks, purchases, on="user_id", probe_ts="ep", build_ts="ep",
         payload=["purchase_id", "purchase_value"], tiebreak="purchase_id",
@@ -378,13 +390,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_asof_forward",
-    oracle=f"""
-    WITH e AS (SELECT event_id, user_id, event_type, value, {_EPOCH_DUCK} AS ep FROM events),
-    c AS (SELECT event_id, user_id, ep FROM e WHERE event_type = 'click'),
-    p AS (SELECT user_id, ep, event_id AS purchase_id, value AS purchase_value,
-                 ROW_NUMBER() OVER (PARTITION BY user_id, ep ORDER BY event_id DESC) AS rn
-          FROM e WHERE event_type = 'purchase'),
-    pd AS (SELECT * FROM p WHERE rn = 1),
+    oracle=_ASOF_INPUTS_DUCK + """
     j AS (SELECT c.event_id, c.user_id, c.ep, pd.purchase_id, pd.purchase_value,
                  ROW_NUMBER() OVER (PARTITION BY c.event_id
                                     ORDER BY pd.ep ASC, pd.purchase_id DESC) AS rn
@@ -401,14 +407,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.asof import asof_join_forward
 
-    e = events_table(spark, sf_dir)
-    clicks = e.where(F.col("event_type") == "click").select("event_id", "user_id", "ep")
-    purchases = e.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ep",
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
+    clicks, purchases = _asof_inputs(spark, sf_dir)
     return asof_join_forward(
         clicks, purchases, on="user_id", probe_ts="ep", build_ts="ep",
         payload=["purchase_id", "purchase_value"], tiebreak="purchase_id",
@@ -417,13 +416,7 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_asof_nearest",
-    oracle=f"""
-    WITH e AS (SELECT event_id, user_id, event_type, value, {_EPOCH_DUCK} AS ep FROM events),
-    c AS (SELECT event_id, user_id, ep FROM e WHERE event_type = 'click'),
-    p AS (SELECT user_id, ep, event_id AS purchase_id, value AS purchase_value,
-                 ROW_NUMBER() OVER (PARTITION BY user_id, ep ORDER BY event_id DESC) AS rn
-          FROM e WHERE event_type = 'purchase'),
-    pd AS (SELECT * FROM p WHERE rn = 1),
+    oracle=_ASOF_INPUTS_DUCK + """
     j AS (SELECT c.event_id, c.user_id, c.ep, pd.purchase_id, pd.purchase_value,
                  ROW_NUMBER() OVER (PARTITION BY c.event_id
                                     ORDER BY abs(pd.ep - c.ep) ASC,
@@ -442,14 +435,7 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.asof import asof_join_nearest
 
-    e = events_table(spark, sf_dir)
-    clicks = e.where(F.col("event_type") == "click").select("event_id", "user_id", "ep")
-    purchases = e.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ep",
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
+    clicks, purchases = _asof_inputs(spark, sf_dir)
     return asof_join_nearest(
         clicks, purchases, on="user_id", probe_ts="ep", build_ts="ep",
         payload=["purchase_id", "purchase_value"], tiebreak="purchase_id",
@@ -582,6 +568,20 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cohort_retention(e, "user_id", F.expr("ep div 86400").cast("bigint"))
 
 
+# Users per deepest funnel stage, from the per-stage first times a1..a3 in
+# CTEs s1..s3 over the events CTE e.
+_FUNNEL_STAGE_COUNTS_DUCK = """
+    u AS (SELECT DISTINCT user_id FROM e),
+    st AS (SELECT u.user_id,
+                  CASE WHEN a3 IS NOT NULL THEN 3 WHEN a2 IS NOT NULL THEN 2
+                       WHEN a1 IS NOT NULL THEN 1 ELSE 0 END AS stage
+           FROM u LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
+                  LEFT JOIN s3 USING (user_id))
+    SELECT CAST(stage AS BIGINT) AS funnel_stage, COUNT(*) AS n_users
+    FROM st GROUP BY 1
+    """
+
+
 @register(
     "q_funnel_stages",
     oracle=f"""
@@ -591,15 +591,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
            AND e.ep > s1.a1 WHERE event_type = 'click' GROUP BY e.user_id),
     s3 AS (SELECT e.user_id, MIN(ep) AS a3 FROM e JOIN s2 ON e.user_id = s2.user_id
            AND e.ep > s2.a2 WHERE event_type = 'purchase' GROUP BY e.user_id),
-    u AS (SELECT DISTINCT user_id FROM e),
-    st AS (SELECT u.user_id,
-                  CASE WHEN a3 IS NOT NULL THEN 3 WHEN a2 IS NOT NULL THEN 2
-                       WHEN a1 IS NOT NULL THEN 1 ELSE 0 END AS stage
-           FROM u LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-                  LEFT JOIN s3 USING (user_id))
-    SELECT CAST(stage AS BIGINT) AS funnel_stage, COUNT(*) AS n_users
-    FROM st GROUP BY 1
-    """,
+    """ + _FUNNEL_STAGE_COUNTS_DUCK,
     description="ordered funnel (signup -> click -> purchase, each step "
     "strictly later): per-user sorted-array fold via F.aggregate — ONE "
     "user-keyed shuffle for the whole funnel instead of one join pass per "
@@ -751,15 +743,7 @@ def q_sliding_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     s3 AS (SELECT e.user_id, MIN(ep) AS a3 FROM e JOIN s2 ON e.user_id = s2.user_id
            AND e.ep > s2.a2 AND e.ep <= s2.a2 + 86400
            WHERE event_type = 'purchase' GROUP BY e.user_id),
-    u AS (SELECT DISTINCT user_id FROM e),
-    st AS (SELECT u.user_id,
-                  CASE WHEN a3 IS NOT NULL THEN 3 WHEN a2 IS NOT NULL THEN 2
-                       WHEN a1 IS NOT NULL THEN 1 ELSE 0 END AS stage
-           FROM u LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-                  LEFT JOIN s3 USING (user_id))
-    SELECT CAST(stage AS BIGINT) AS funnel_stage, COUNT(*) AS n_users
-    FROM st GROUP BY 1
-    """,
+    """ + _FUNNEL_STAGE_COUNTS_DUCK,
     description="conversion-window funnel (each step within 24h of the "
     "previous matched step, earliest-anchor first-touch semantics) — the "
     "same single-shuffle sorted-array fold as q_funnel_stages with the "
@@ -898,6 +882,23 @@ def q_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dsum6(c: Column) -> Column:
+    """Order-invariant double sum: each term rounded to a 6-place decimal."""
+    return F.sum(F.round(c, 6).cast("decimal(18,6)")).cast("double")
+
+
+def _xy_moment_sums() -> list[Column]:
+    """n, sx, sy, sxy, sxx of columns x and y, for a grouped Pearson or OLS."""
+    x, y = F.col("x"), F.col("y")
+    return [
+        F.count(F.lit(1)).alias("n"),
+        _dsum6(x).alias("sx"),
+        _dsum6(y).alias("sy"),
+        _dsum6(x * y).alias("sxy"),
+        _dsum6(x * x).alias("sxx"),
+    ]
+
+
 @register(
     "q_autocorr_lag1",
     oracle=f"""
@@ -931,17 +932,8 @@ def q_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = e.select(
         "user_id", F.col("value").alias("y"), F.lag("value").over(w).alias("x")
     ).where(F.col("x").isNotNull())
-
-    def dsum(c):
-        return F.sum(F.round(c, 6).cast("decimal(18,6)")).cast("double")
-
     s = p.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum(F.col("x")).alias("sx"),
-        dsum(F.col("y")).alias("sy"),
-        dsum(F.col("x") * F.col("y")).alias("sxy"),
-        dsum(F.col("x") * F.col("x")).alias("sxx"),
-        dsum(F.col("y") * F.col("y")).alias("syy"),
+        *_xy_moment_sums(), _dsum6(F.col("y") * F.col("y")).alias("syy")
     )
     varx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     vary = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -988,17 +980,7 @@ def q_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("ep") - F.col("ep0")).cast("double") / 86400.0).alias("x"),
         F.col("value").alias("y"),
     )
-
-    def dsum(c):
-        return F.sum(F.round(c, 6).cast("decimal(18,6)")).cast("double")
-
-    s = p.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum(F.col("x")).alias("sx"),
-        dsum(F.col("y")).alias("sy"),
-        dsum(F.col("x") * F.col("y")).alias("sxy"),
-        dsum(F.col("x") * F.col("x")).alias("sxx"),
-    )
+    s = p.groupBy("user_id").agg(*_xy_moment_sums())
     det = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / det
     return s.where(det > 0).select(
@@ -1202,9 +1184,9 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_attribution",
-    oracle=f"""
+# Events numbered into per-user journeys (a journey ends at a purchase) and
+# the converted (user_id, journey) keys.
+_JOURNEYS_DUCK = f"""
     WITH e AS (
       SELECT event_id, user_id, event_type, {_EPOCH_DUCK} AS ep FROM events),
     j AS (
@@ -1214,6 +1196,33 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS journey
       FROM e),
     conv AS (SELECT DISTINCT user_id, journey FROM j WHERE event_type = 'purchase'),
+"""
+
+
+def _journeys(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Events with their ``journey`` number (purchases before them, per user)
+    and the distinct converted ``(user_id, journey)`` keys."""
+    e = events_table(spark, sf_dir)
+    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
+    prior = w.rowsBetween(Window.unboundedPreceding, -1)
+    j = e.withColumn(
+        "journey",
+        F.coalesce(
+            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).over(prior),
+            F.lit(0),
+        ).cast("bigint"),
+    )
+    conv = (
+        j.where(F.col("event_type") == "purchase")
+        .select("user_id", "journey")
+        .distinct()
+    )
+    return j, conv
+
+
+@register(
+    "q_attribution",
+    oracle=_JOURNEYS_DUCK + """
     t AS (
       SELECT j.user_id, j.journey, j.event_type, j.ep, j.event_id
       FROM j JOIN conv ON j.user_id = conv.user_id AND j.journey = conv.journey
@@ -1241,21 +1250,7 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "window", "agg", "attribution"),
 )
 def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
-    prior = w.rowsBetween(Window.unboundedPreceding, -1)
-    j = e.withColumn(
-        "journey",
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).over(prior),
-            F.lit(0),
-        ).cast("bigint"),
-    )
-    conv = (
-        j.where(F.col("event_type") == "purchase")
-        .select("user_id", "journey")
-        .distinct()
-    )
+    j, conv = _journeys(spark, sf_dir)
     touches = j.where(F.col("event_type").isin("click", "view", "signup")).join(
         conv, ["user_id", "journey"]
     )
@@ -1280,16 +1275,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_conversion_paths",
-    oracle=f"""
-    WITH e AS (
-      SELECT event_id, user_id, event_type, {_EPOCH_DUCK} AS ep FROM events),
-    j AS (
-      SELECT *,
-             COALESCE(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                      OVER (PARTITION BY user_id ORDER BY ep, event_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS journey
-      FROM e),
-    conv AS (SELECT DISTINCT user_id, journey FROM j WHERE event_type = 'purchase'),
+    oracle=_JOURNEYS_DUCK + """
     paths AS (
       SELECT j.user_id, j.journey,
              string_agg(j.event_type, '>' ORDER BY j.ep, j.event_id) AS path
@@ -1308,19 +1294,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "window", "agg", "attribution"),
 )
 def q_conversion_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
-    prior = w.rowsBetween(Window.unboundedPreceding, -1)
-    j = e.withColumn(
-        "journey",
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).over(prior),
-            F.lit(0),
-        ).cast("bigint"),
-    )
-    conv = (
-        j.where(F.col("event_type") == "purchase").select("user_id", "journey").distinct()
-    )
+    j, conv = _journeys(spark, sf_dir)
     paths = (
         j.where(F.col("event_type").isin("click", "view", "signup"))
         .join(conv, ["user_id", "journey"])
@@ -1740,9 +1714,9 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_kaplan_meier",
-    oracle=f"""
+# Survival subjects: per user, the first event t0, the first purchase of
+# value >= 190 (t_conv, the event) and the last event (t_last, censoring).
+_SURVIVAL_USERS_DUCK = f"""
     WITH e AS (SELECT user_id, event_type, value, {_EPOCH_DUCK} AS ep FROM events),
     per_user AS (
       SELECT user_id,
@@ -1750,6 +1724,11 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
              MIN(CASE WHEN event_type = 'purchase' AND value >= 190.0 THEN ep END) AS t_conv,
              MAX(ep) AS t_last
       FROM e GROUP BY user_id),
+"""
+
+# Each subject's duration and event flag, and the event times with their
+# event counts d.
+_SURVIVAL_TIMES_DUCK = _SURVIVAL_USERS_DUCK + """
     subjects AS (
       SELECT user_id,
              CASE WHEN t_conv IS NOT NULL THEN t_conv - t0 ELSE t_last - t0 END AS dur,
@@ -1758,6 +1737,36 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     times AS (
       SELECT dur AS t, CAST(SUM(ev) AS BIGINT) AS d
       FROM subjects GROUP BY dur HAVING SUM(ev) > 0),
+"""
+
+
+def _survival_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per ``user_id``: first event ``t0``, first purchase of value >= 190
+    ``t_conv`` (null if none) and last event ``t_last``."""
+    e = events_table(spark, sf_dir)
+    return e.groupBy("user_id").agg(
+        F.min("ep").alias("t0"),
+        F.min(
+            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 190.0), F.col("ep"))
+        ).alias("t_conv"),
+        F.max("ep").alias("t_last"),
+    )
+
+
+def _duration_and_event() -> list[Column]:
+    """``dur``, time to conversion or to censoring at the last event, and
+    ``ev``, 1 if the user converted."""
+    return [
+        F.when(F.col("t_conv").isNotNull(), F.col("t_conv") - F.col("t0"))
+        .otherwise(F.col("t_last") - F.col("t0"))
+        .alias("dur"),
+        F.when(F.col("t_conv").isNotNull(), 1).otherwise(0).alias("ev"),
+    ]
+
+
+@register(
+    "q_kaplan_meier",
+    oracle=_SURVIVAL_TIMES_DUCK + f"""
     risk AS (
       SELECT t, d,
              (SELECT COUNT(*) FROM subjects s WHERE s.dur >= times.t) AS n
@@ -1787,19 +1796,8 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
 
-    e = events_table(spark, sf_dir)
-    per_user = e.groupBy("user_id").agg(
-        F.min("ep").alias("t0"),
-        F.min(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 190.0), F.col("ep"))
-        ).alias("t_conv"),
-        F.max("ep").alias("t_last"),
-    )
-    subjects = per_user.select(
-        F.when(F.col("t_conv").isNotNull(), F.col("t_conv") - F.col("t0"))
-        .otherwise(F.col("t_last") - F.col("t0"))
-        .alias("dur"),
-        F.when(F.col("t_conv").isNotNull(), 1).otherwise(0).alias("ev"),
+    subjects = _survival_users(spark, sf_dir).select(
+        *_duration_and_event()
     ).localCheckpoint()  # feeds event times AND risk counts
     times = (
         subjects.groupBy(F.col("dur").alias("t"))
@@ -1952,9 +1950,9 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Markov transition matrix (session-based next-event model) -------------
 
-@register(
-    "q_markov_transitions",
-    oracle=f"""
+# Consecutive per-user event-type pairs: c_ab per (prev_type, next_type) and
+# c_a per prev_type.
+_TRANSITIONS_DUCK = f"""
     WITH e AS (SELECT user_id, event_id, event_type, {_EPOCH_DUCK} AS ep FROM events),
     p AS (SELECT event_type AS prev_type,
                  LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ep, event_id)
@@ -1962,7 +1960,30 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM e),
     c AS (SELECT prev_type, next_type, CAST(COUNT(*) AS BIGINT) AS c_ab
           FROM p WHERE next_type IS NOT NULL GROUP BY prev_type, next_type),
-    t AS (SELECT prev_type, CAST(SUM(c_ab) AS BIGINT) AS c_a FROM c GROUP BY prev_type)
+    t AS (SELECT prev_type, CAST(SUM(c_ab) AS BIGINT) AS c_a FROM c GROUP BY prev_type)"""
+
+
+def _transition_counts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Per-user consecutive event-type pairs: ``c_ab`` per
+    ``(prev_type, next_type)`` and ``c_a`` per ``prev_type``."""
+    e = events_table(spark, sf_dir)
+    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
+    p = e.select(
+        F.col("event_type").alias("prev_type"),
+        F.lead("event_type").over(w).alias("next_type"),
+    )
+    c = (
+        p.where(F.col("next_type").isNotNull())
+        .groupBy("prev_type", "next_type")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c_ab"))
+    )
+    t = c.groupBy("prev_type").agg(F.sum("c_ab").cast("bigint").alias("c_a"))
+    return c, t
+
+
+@register(
+    "q_markov_transitions",
+    oracle=_TRANSITIONS_DUCK + """
     SELECT c.prev_type, c.next_type, c.c_ab, t.c_a,
            CAST((1000000 * c.c_ab) // t.c_a AS BIGINT) AS p_micro
     FROM c JOIN t USING (prev_type)
@@ -1978,16 +1999,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "sequence", "markov", "ml-prep"),
 )
 def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
-    p = e.select(
-        F.col("event_type").alias("prev_type"),
-        F.lead("event_type").over(w).alias("next_type"),
-    ).where(F.col("next_type").isNotNull())
-    c = p.groupBy("prev_type", "next_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c_ab")
-    )
-    t = c.groupBy("prev_type").agg(F.sum("c_ab").cast("bigint").alias("c_a"))
+    c, t = _transition_counts(spark, sf_dir)
     return (
         c.join(F.broadcast(t), "prev_type")
         .select(
@@ -2176,9 +2188,9 @@ _MW_Z = (
 )
 
 
-@register(
-    "q_mann_whitney",
-    oracle=f"""
+# The two-sample tests' distinct-value frame: per (event_type, value), the
+# row count and the count in cohort A (even user_id).
+_TWO_SAMPLE_DUCK = """
     WITH base AS (
       SELECT event_type, value,
              CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS in_a
@@ -2187,6 +2199,11 @@ _MW_Z = (
       SELECT event_type, value, CAST(COUNT(*) AS BIGINT) AS cnt,
              CAST(SUM(in_a) AS BIGINT) AS cnt_a
       FROM base GROUP BY event_type, value),
+"""
+
+# Mann-Whitney U per event type over the distinct-value frame: s holds n_a,
+# n_b, twice U of cohort A (u2_a), n and the tie term.
+_MW_U_DUCK = _TWO_SAMPLE_DUCK + """
     r AS (
       SELECT event_type, cnt, cnt_a,
              COALESCE(CAST(SUM(cnt) OVER (PARTITION BY event_type ORDER BY value
@@ -2203,32 +2220,39 @@ _MW_Z = (
     s AS (
       SELECT event_type, n_a, n - n_a AS n_b,
              two_ra - n_a * (n_a + 1) AS u2_a, n, tie
-      FROM a)
-    SELECT event_type, n_a, n_b, CAST(u2_a AS BIGINT) AS u2_a,
-           {_MW_Z} AS z
-    FROM s ORDER BY event_type
-    """,
-    description="Mann-Whitney U / Wilcoxon rank-sum two-sample test per "
-    "event type (cohort A = even user_id): midranks with tie handling as "
-    "EXACT integers (2x the rank-sum of A is sum(cnt_a*(2*cum+cnt+1)) over "
-    "the distinct-value frame), U from the rank-sum identity, z with the "
-    "tie-corrected variance — the only floats are final divisions/sqrt on "
-    "identical exact operands. SCALE: the ECDF window runs over the "
-    "DISTINCT-VALUE frame (|group| x |distinct values|), not raw rows — "
-    "a per-type shuffle carries one row per distinct value, and the raw "
-    "scan aggregates map-side first",
-    tags=("events", "stats", "experiment", "nonparametric"),
-)
-def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
+      FROM a)"""
+
+# The select-list tail of a CTE over g: cumulative and total counts per
+# event type, overall and in cohort A (the two ECDFs as exact integers).
+_CUM_COUNTS_DUCK = """
+             CAST(SUM(cnt_a) OVER wc AS BIGINT) AS cum_a,
+             CAST(SUM(cnt) OVER wc AS BIGINT) AS cum,
+             CAST(SUM(cnt_a) OVER wf AS BIGINT) AS n_a,
+             CAST(SUM(cnt) OVER wf AS BIGINT) AS n
+      FROM g
+      WINDOW wc AS (PARTITION BY event_type ORDER BY value
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+             wf AS (PARTITION BY event_type)),
+"""
+
+
+def _two_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per (event_type, value): ``cnt`` rows, ``cnt_a`` of them in cohort A."""
     e = events_table(spark, sf_dir)
     base = e.select(
         "event_type", "value",
         F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("in_a"),
     )
-    g = base.groupBy("event_type", "value").agg(
+    return base.groupBy("event_type", "value").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.sum("in_a").cast("bigint").alias("cnt_a"),
     )
+
+
+def _mw_u_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per event type: n_a, n_b, twice cohort A's U (``u2_a``), n and the
+    tie term, from midranks over the distinct-value frame."""
+    g = _two_sample_counts(spark, sf_dir)
     w = (
         Window.partitionBy("event_type")
         .orderBy("value")
@@ -2251,6 +2275,46 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("two_ra") - F.col("n_a") * (F.col("n_a") + 1)).alias("u2_a"),
         "n", "tie",
     )
+    return s
+
+
+def _cum_counts() -> list[Column]:
+    """cum_a, cum, n_a, n: each event type's running and total counts over
+    the distinct-value frame, overall and in cohort A."""
+    wc = (
+        Window.partitionBy("event_type")
+        .orderBy("value")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wf = Window.partitionBy("event_type")
+    return [
+        F.sum("cnt_a").over(wc).cast("bigint").alias("cum_a"),
+        F.sum("cnt").over(wc).cast("bigint").alias("cum"),
+        F.sum("cnt_a").over(wf).cast("bigint").alias("n_a"),
+        F.sum("cnt").over(wf).cast("bigint").alias("n"),
+    ]
+
+
+@register(
+    "q_mann_whitney",
+    oracle=_MW_U_DUCK + f"""
+    SELECT event_type, n_a, n_b, CAST(u2_a AS BIGINT) AS u2_a,
+           {_MW_Z} AS z
+    FROM s ORDER BY event_type
+    """,
+    description="Mann-Whitney U / Wilcoxon rank-sum two-sample test per "
+    "event type (cohort A = even user_id): midranks with tie handling as "
+    "EXACT integers (2x the rank-sum of A is sum(cnt_a*(2*cum+cnt+1)) over "
+    "the distinct-value frame), U from the rank-sum identity, z with the "
+    "tie-corrected variance — the only floats are final divisions/sqrt on "
+    "identical exact operands. SCALE: the ECDF window runs over the "
+    "DISTINCT-VALUE frame (|group| x |distinct values|), not raw rows — "
+    "a per-type shuffle carries one row per distinct value, and the raw "
+    "scan aggregates map-side first",
+    tags=("events", "stats", "experiment", "nonparametric"),
+)
+def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
+    s = _mw_u_stats(spark, sf_dir)
     return s.select(
         "event_type", "n_a", "n_b",
         F.col("u2_a").cast("bigint").alias("u2_a"),
@@ -3144,26 +3208,10 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ks_test",
-    oracle=f"""
-    WITH base AS (
-      SELECT event_type, value,
-             CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS in_a
-      FROM events),
-    g AS (
-      SELECT event_type, value, CAST(COUNT(*) AS BIGINT) AS cnt,
-             CAST(SUM(in_a) AS BIGINT) AS cnt_a
-      FROM base GROUP BY event_type, value),
+    oracle=_TWO_SAMPLE_DUCK + """
     r AS (
       SELECT event_type,
-             CAST(SUM(cnt_a) OVER wc AS BIGINT) AS cum_a,
-             CAST(SUM(cnt) OVER wc AS BIGINT) AS cum,
-             CAST(SUM(cnt_a) OVER wf AS BIGINT) AS n_a,
-             CAST(SUM(cnt) OVER wf AS BIGINT) AS n
-      FROM g
-      WINDOW wc AS (PARTITION BY event_type ORDER BY value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             wf AS (PARTITION BY event_type)),
-    d AS (
+""" + _CUM_COUNTS_DUCK + """    d AS (
       SELECT event_type, n_a, n - n_a AS n_b,
              ABS(cum_a * (n - n_a) - (cum - cum_a) * n_a) AS d_num
       FROM r)
@@ -3187,28 +3235,7 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "stats", "experiment", "nonparametric"),
 )
 def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    base = e.select(
-        "event_type", "value",
-        F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("in_a"),
-    )
-    g = base.groupBy("event_type", "value").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum("in_a").cast("bigint").alias("cnt_a"),
-    )
-    wc = (
-        Window.partitionBy("event_type")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wf = Window.partitionBy("event_type")
-    r = g.select(
-        "event_type",
-        F.sum("cnt_a").over(wc).cast("bigint").alias("cum_a"),
-        F.sum("cnt").over(wc).cast("bigint").alias("cum"),
-        F.sum("cnt_a").over(wf).cast("bigint").alias("n_a"),
-        F.sum("cnt").over(wf).cast("bigint").alias("n"),
-    )
+    r = _two_sample_counts(spark, sf_dir).select("event_type", *_cum_counts())
     d = r.select(
         "event_type", "n_a", (F.col("n") - F.col("n_a")).alias("n_b"),
         F.abs(
@@ -3322,6 +3349,55 @@ def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
+# The daily event-value series: per day, the DECIMAL sum of values as exact
+# integer micro-units s.
+_DAILY_SUMS_DUCK = f"""
+    WITH e AS (SELECT {_EPOCH_DUCK} AS ep, value FROM events),
+    days AS (
+      SELECT ep // 86400 AS day,
+             CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) * 1000000
+                  AS BIGINT) AS s
+      FROM e GROUP BY ep // 86400),
+"""
+
+# The daily series' residuals as exact integers r = n*s - S (n days, S the
+# sum of s), the scaled identity that needs no float mean.
+_DAILY_RESID_DUCK = _DAILY_SUMS_DUCK + """
+    st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(s) AS BIGINT) AS ssum
+           FROM days),
+    r AS (
+      SELECT day, CAST((SELECT n FROM st) * s - (SELECT ssum FROM st)
+                       AS DECIMAL(38,0)) AS r
+      FROM days),
+"""
+
+
+def _micro_value_sum() -> Column:
+    """Sum of ``value`` as exact integer micro-units (each value rounded to
+    a 6-place decimal first)."""
+    return (F.sum(dec6(F.round("value", 6))) * 1000000).cast("bigint")
+
+
+def _daily_sums(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The daily event-value series: ``day`` and its micro-unit sum ``name``."""
+    e = events_table(spark, sf_dir)
+    return e.groupBy(F.expr("ep div 86400").alias("day")).agg(
+        _micro_value_sum().alias(name)
+    )
+
+
+def _daily_residuals(days: DataFrame, dtype: str) -> DataFrame:
+    """``day`` and the exact residual r = n*s - S of the daily series, cast
+    to ``dtype``."""
+    st = days.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("s").cast("bigint").alias("ssum"),
+    )
+    return days.crossJoin(F.broadcast(st)).select(
+        "day", (F.col("n") * F.col("s") - F.col("ssum")).cast(dtype).alias("r")
+    )
+
+
 # --- multi-lag autocorrelation (ACF) ----------------------------------------
 
 _ACF_LAGS = 7
@@ -3329,19 +3405,7 @@ _ACF_LAGS = 7
 
 @register(
     "q_acf_multilag",
-    oracle=f"""
-    WITH e AS (SELECT {_EPOCH_DUCK} AS ep, value FROM events),
-    days AS (
-      SELECT ep // 86400 AS day,
-             CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) * 1000000
-                  AS BIGINT) AS s
-      FROM e GROUP BY ep // 86400),
-    st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(s) AS BIGINT) AS ssum
-           FROM days),
-    r AS (
-      SELECT day, CAST((SELECT n FROM st) * s - (SELECT ssum FROM st)
-                       AS DECIMAL(38,0)) AS r
-      FROM days),
+    oracle=_DAILY_RESID_DUCK + f"""
     ld AS (
       SELECT r,
              {", ".join(f"LEAD(r, {k}) OVER (ORDER BY day) AS r{k}" for k in range(1, _ACF_LAGS + 1))}
@@ -3364,23 +3428,7 @@ _ACF_LAGS = 7
     tags=("events", "timeseries", "stats"),
 )
 def q_acf_multilag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    days = (
-        e.groupBy(F.expr("ep div 86400").alias("day"))
-        .agg(
-            (F.sum(dec6(F.round("value", 6))) * 1000000)
-            .cast("bigint")
-            .alias("s")
-        )
-    )
-    st = days.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("s").cast("bigint").alias("ssum"),
-    )
-    r = days.crossJoin(F.broadcast(st)).select(
-        "day",
-        (F.col("n") * F.col("s") - F.col("ssum")).cast("decimal(38,0)").alias("r"),
-    )
+    r = _daily_residuals(_daily_sums(spark, sf_dir, "s"), "decimal(38,0)")
     w = Window.orderBy("day")
     ld = r.select(
         "r",
@@ -3409,13 +3457,7 @@ def q_acf_multilag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_seasonal_indices",
-    oracle=f"""
-    WITH e AS (SELECT {_EPOCH_DUCK} AS ep, value FROM events),
-    days AS (
-      SELECT ep // 86400 AS day,
-             CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) * 1000000
-                  AS BIGINT) AS s
-      FROM e GROUP BY ep // 86400),
+    oracle=_DAILY_SUMS_DUCK + f"""
     per AS (
       SELECT CAST(day % 7 AS INTEGER) AS dow,
              CAST(SUM(s) AS BIGINT) AS sum_d,
@@ -3440,15 +3482,7 @@ def q_acf_multilag(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "timeseries", "seasonality"),
 )
 def q_seasonal_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    days = (
-        e.groupBy(F.expr("ep div 86400").alias("day"))
-        .agg(
-            (F.sum(dec6(F.round("value", 6))) * 1000000)
-            .cast("bigint")
-            .alias("s")
-        )
-    )
+    days = _daily_sums(spark, sf_dir, "s")
     per = days.groupBy((F.col("day") % 7).cast("int").alias("dow")).agg(
         F.sum("s").cast("bigint").alias("sum_d"),
         F.count(F.lit(1)).cast("bigint").alias("cnt_d"),
@@ -3539,32 +3573,7 @@ _BH_ALPHA_NANO = 50_000_000  # alpha = 0.05 in nano units
 
 @register(
     "q_bh_fdr",
-    oracle=f"""
-    WITH base AS (
-      SELECT event_type, value,
-             CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS in_a
-      FROM events),
-    g AS (
-      SELECT event_type, value, CAST(COUNT(*) AS BIGINT) AS cnt,
-             CAST(SUM(in_a) AS BIGINT) AS cnt_a
-      FROM base GROUP BY event_type, value),
-    r AS (
-      SELECT event_type, cnt, cnt_a,
-             COALESCE(CAST(SUM(cnt) OVER (PARTITION BY event_type ORDER BY value
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                           AS BIGINT), 0) AS cum
-      FROM g),
-    a AS (
-      SELECT event_type,
-             CAST(SUM(cnt_a * (2 * cum + cnt + 1)) AS BIGINT) AS two_ra,
-             CAST(SUM(cnt_a) AS BIGINT) AS n_a,
-             CAST(SUM(cnt) AS BIGINT) AS n,
-             CAST(SUM(cnt * cnt * cnt - cnt) AS BIGINT) AS tie
-      FROM r GROUP BY event_type),
-    s AS (
-      SELECT event_type, n_a, n - n_a AS n_b,
-             two_ra - n_a * (n_a + 1) AS u2_a, n, tie
-      FROM a),
+    oracle=_MW_U_DUCK + f""",
     z AS (SELECT event_type, {_MW_Z} AS z FROM s),
     p AS (
       SELECT event_type,
@@ -3607,37 +3616,7 @@ _BH_ALPHA_NANO = 50_000_000  # alpha = 0.05 in nano units
     tags=("events", "stats", "experiment", "fdr"),
 )
 def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    base = e.select(
-        "event_type", "value",
-        F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("in_a"),
-    )
-    g = base.groupBy("event_type", "value").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum("in_a").cast("bigint").alias("cnt_a"),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    r = g.select(
-        "event_type", "cnt", "cnt_a",
-        F.coalesce(F.sum("cnt").over(w).cast("bigint"), F.lit(0)).alias("cum"),
-    )
-    a = r.groupBy("event_type").agg(
-        F.sum(F.col("cnt_a") * (2 * F.col("cum") + F.col("cnt") + 1))
-        .cast("bigint").alias("two_ra"),
-        F.sum("cnt_a").cast("bigint").alias("n_a"),
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
-        .cast("bigint").alias("tie"),
-    )
-    s = a.select(
-        "event_type", "n_a", (F.col("n") - F.col("n_a")).alias("n_b"),
-        (F.col("two_ra") - F.col("n_a") * (F.col("n_a") + 1)).alias("u2_a"),
-        "n", "tie",
-    )
+    s = _mw_u_stats(spark, sf_dir)
     z = s.select("event_type", F.expr(_MW_Z).alias("z"))
     p = z.select(
         "event_type",
@@ -3681,13 +3660,7 @@ def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_theil_sen",
-    oracle=f"""
-    WITH e AS (SELECT {_EPOCH_DUCK} AS ep, value FROM events),
-    days AS (
-      SELECT ep // 86400 AS day,
-             CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) * 1000000
-                  AS BIGINT) AS s
-      FROM e GROUP BY ep // 86400),
+    oracle=_DAILY_SUMS_DUCK + f"""
     pairs AS (
       SELECT a.day AS i, b.day AS j,
              CAST(b.s - a.s AS DOUBLE) / CAST(b.day - a.day AS DOUBLE) AS slope
@@ -3712,15 +3685,7 @@ def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "timeseries", "robust"),
 )
 def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    days = (
-        e.groupBy(F.expr("ep div 86400").alias("day"))
-        .agg(
-            (F.sum(dec6(F.round("value", 6))) * 1000000)
-            .cast("bigint")
-            .alias("s")
-        )
-    )
+    days = _daily_sums(spark, sf_dir, "s")
     a = days.select(F.col("day").alias("i"), F.col("s").alias("sa"))
     b = days.select(F.col("day").alias("j"), F.col("s").alias("sb"))
     pairs = a.join(F.broadcast(b), F.col("j") > F.col("i")).select(
@@ -4053,10 +4018,7 @@ def q_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "timeseries", "decomposition", "anomaly"),
 )
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    days = e.groupBy(F.expr("ep div 86400").alias("day")).agg(
-        (F.sum(dec6(F.round("value", 6))) * 1000000).cast("bigint").alias("y")
-    )
+    days = _daily_sums(spark, sf_dir, "y")
     w7 = Window.orderBy("day").rowsBetween(-3, 3)
     tr = days.select(
         "day", "y",
@@ -4387,10 +4349,7 @@ def _hw_oracle() -> str:
 def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     A, B, G = _HW_A, _HW_B, _HW_G
     mA, mB, mG = 1.0 - A, 1.0 - B, 1.0 - G
-    e = events_table(spark, sf_dir)
-    dd = e.groupBy(F.expr("ep div 86400").alias("day")).agg(
-        (F.sum(dec6(F.round("value", 6))) * 1000000).cast("bigint").alias("y")
-    )
+    dd = _daily_sums(spark, sf_dir, "y")
     days = dd.select(
         "day", "y",
         F.col("y").cast("double").alias("yd"),
@@ -4507,9 +4466,7 @@ def q_isotonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = (
         e.groupBy(F.expr("ep div 86400").alias("day"))
         .agg(
-            (F.sum(dec6(F.round("value", 6))) * 1000000)
-            .cast("bigint")
-            .alias("s"),
+            _micro_value_sum().alias("s"),
             F.count(F.lit(1)).cast("bigint").alias("c"),
         )
     )
@@ -4572,13 +4529,7 @@ _BOOT_B = 64  # replicates
 
 @register(
     "q_bootstrap_ci",
-    oracle=f"""
-    WITH e AS (SELECT {_EPOCH_DUCK} AS ep, value FROM events),
-    days AS (
-      SELECT ep // 86400 AS day,
-             CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) * 1000000
-                  AS BIGINT) AS s
-      FROM e GROUP BY ep // 86400),
+    oracle=_DAILY_SUMS_DUCK + f"""
     idx AS (SELECT s, ROW_NUMBER() OVER (ORDER BY day) AS i,
                    COUNT(*) OVER () AS n
             FROM days),
@@ -4618,15 +4569,7 @@ _BOOT_B = 64  # replicates
     tags=("events", "stats", "bootstrap"),
 )
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    days = (
-        e.groupBy(F.expr("ep div 86400").alias("day"))
-        .agg(
-            (F.sum(dec6(F.round("value", 6))) * 1000000)
-            .cast("bigint")
-            .alias("s")
-        )
-    )
+    days = _daily_sums(spark, sf_dir, "s")
     idx = days.select(
         "s",
         F.row_number().over(Window.orderBy("day")).alias("i"),
@@ -4739,9 +4682,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.expr("ep div 86400").alias("day"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("x"),
-            (F.sum(dec6(F.round("value", 6))) * 1000000)
-            .cast("bigint")
-            .alias("y"),
+            _micro_value_sum().alias("y"),
         )
         .localCheckpoint()  # days feeds 4 consumers; avoid scan re-execution
     )
@@ -4801,13 +4742,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_mann_kendall",
-    oracle=f"""
-    WITH e AS (SELECT {_EPOCH_DUCK} AS ep, value FROM events),
-    days AS (
-      SELECT ep // 86400 AS day,
-             CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) * 1000000
-                  AS BIGINT) AS s
-      FROM e GROUP BY ep // 86400),
+    oracle=_DAILY_SUMS_DUCK + f"""
     pairs AS (
       SELECT CASE WHEN b.s > a.s THEN 1 WHEN b.s < a.s THEN -1 ELSE 0 END AS sg
       FROM days a JOIN days b ON b.day > a.day),
@@ -4838,16 +4773,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "timeseries", "stats", "trend"),
 )
 def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    days = (
-        e.groupBy(F.expr("ep div 86400").alias("day"))
-        .agg(
-            (F.sum(dec6(F.round("value", 6))) * 1000000)
-            .cast("bigint")
-            .alias("s")
-        )
-        .localCheckpoint()
-    )
+    days = _daily_sums(spark, sf_dir, "s").localCheckpoint()
     a = days.select(F.col("day").alias("i"), F.col("s").alias("sa"))
     b = days.select(F.col("day").alias("j"), F.col("s").alias("sb"))
     pairs = a.join(F.broadcast(b), F.col("j") > F.col("i")).select(
@@ -5283,9 +5209,8 @@ _JS_LN_A = duck_portable_ln_ratio("2 * ca * nb", "ca * nb + cb * na")
 _JS_LN_B = duck_portable_ln_ratio("2 * cb * na", "ca * nb + cb * na")
 
 
-@register(
-    "q_psi_drift",
-    oracle=f"""
+# Width-10 value bins with their purchase (ca) and click (cb) counts.
+_DRIFT_BINS_DUCK = """
     WITH e AS (
       SELECT event_type, CAST(FLOOR(value / 10) AS BIGINT) AS bin
       FROM events WHERE event_type IN ('purchase', 'click')),
@@ -5295,6 +5220,27 @@ _JS_LN_B = duck_portable_ln_ratio("2 * cb * na", "ca * nb + cb * na")
                  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                       AS BIGINT) AS cb
           FROM e GROUP BY bin),
+"""
+
+
+def _drift_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per width-10 value ``bin``: purchase count ``ca``, click count ``cb``."""
+    e = events_table(spark, sf_dir).where(
+        F.col("event_type").isin("purchase", "click")
+    ).select(
+        "event_type", F.floor(F.col("value") / 10).cast("bigint").alias("bin")
+    )
+    return e.groupBy("bin").agg(
+        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+        .cast("bigint").alias("ca"),
+        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
+        .cast("bigint").alias("cb"),
+    )
+
+
+@register(
+    "q_psi_drift",
+    oracle=_DRIFT_BINS_DUCK + f"""
     g AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb,
                  CAST(COUNT(*) AS BIGINT) AS nbins
           FROM b),
@@ -5323,17 +5269,7 @@ _JS_LN_B = duck_portable_ln_ratio("2 * cb * na", "ca * nb + cb * na")
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
 
-    e = events_table(spark, sf_dir).where(
-        F.col("event_type").isin("purchase", "click")
-    ).select(
-        "event_type", F.floor(F.col("value") / 10).cast("bigint").alias("bin")
-    )
-    b = e.groupBy("bin").agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint").alias("ca"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint").alias("cb"),
-    )
+    b = _drift_bins(spark, sf_dir)
     g = b.agg(
         F.sum("ca").cast("bigint").alias("na"),
         F.sum("cb").cast("bigint").alias("nb"),
@@ -5362,16 +5298,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_js_divergence",
-    oracle=f"""
-    WITH e AS (
-      SELECT event_type, CAST(FLOOR(value / 10) AS BIGINT) AS bin
-      FROM events WHERE event_type IN ('purchase', 'click')),
-    b AS (SELECT bin,
-                 CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS ca,
-                 CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS cb
-          FROM e GROUP BY bin),
+    oracle=_DRIFT_BINS_DUCK + f"""
     g AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb
           FROM b),
     ta AS (
@@ -5400,17 +5327,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
 
-    e = events_table(spark, sf_dir).where(
-        F.col("event_type").isin("purchase", "click")
-    ).select(
-        "event_type", F.floor(F.col("value") / 10).cast("bigint").alias("bin")
-    )
-    b = e.groupBy("bin").agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint").alias("ca"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint").alias("cb"),
-    )
+    b = _drift_bins(spark, sf_dir)
     g = b.agg(
         F.sum("ca").cast("bigint").alias("na"),
         F.sum("cb").cast("bigint").alias("nb"),
@@ -5454,14 +5371,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_logrank_test",
-    oracle=f"""
-    WITH e AS (SELECT user_id, event_type, value, {_EPOCH_DUCK} AS ep FROM events),
-    per_user AS (
-      SELECT user_id,
-             MIN(ep) AS t0,
-             MIN(CASE WHEN event_type = 'purchase' AND value >= 190.0 THEN ep END) AS t_conv,
-             MAX(ep) AS t_last
-      FROM e GROUP BY user_id),
+    oracle=_SURVIVAL_USERS_DUCK + """
     subjects AS (
       SELECT user_id % 2 AS grp,
              CASE WHEN t_conv IS NOT NULL THEN t_conv - t0 ELSE t_last - t0 END AS dur,
@@ -5508,23 +5418,8 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "timeseries", "survival", "stats"),
 )
 def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    per_user = e.groupBy("user_id").agg(
-        F.min("ep").alias("t0"),
-        F.min(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") >= 190.0),
-                F.col("ep"),
-            )
-        ).alias("t_conv"),
-        F.max("ep").alias("t_last"),
-    )
-    subjects = per_user.select(
-        (F.col("user_id") % 2).alias("grp"),
-        F.when(F.col("t_conv").isNotNull(), F.col("t_conv") - F.col("t0"))
-        .otherwise(F.col("t_last") - F.col("t0"))
-        .alias("dur"),
-        F.when(F.col("t_conv").isNotNull(), 1).otherwise(0).alias("ev"),
+    subjects = _survival_users(spark, sf_dir).select(
+        (F.col("user_id") % 2).alias("grp"), *_duration_and_event()
     ).localCheckpoint()  # feeds event times AND both risk-set counts
     times = (
         subjects.groupBy(F.col("dur").alias("t"))
@@ -5610,19 +5505,7 @@ _PACF_PHI = _pacf_exprs(_PACF_LAGS)
 
 @register(
     "q_pacf",
-    oracle=f"""
-    WITH e AS (SELECT {_EPOCH_DUCK} AS ep, value FROM events),
-    days AS (
-      SELECT ep // 86400 AS day,
-             CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) * 1000000
-                  AS BIGINT) AS s
-      FROM e GROUP BY ep // 86400),
-    st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(s) AS BIGINT) AS ssum
-           FROM days),
-    r AS (
-      SELECT day, CAST((SELECT n FROM st) * s - (SELECT ssum FROM st)
-                       AS DECIMAL(38,0)) AS r
-      FROM days),
+    oracle=_DAILY_RESID_DUCK + f"""
     ld AS (
       SELECT r,
              {", ".join(f"LEAD(r, {k}) OVER (ORDER BY day) AS r{k}" for k in range(1, _PACF_LAGS + 1))}
@@ -5648,18 +5531,7 @@ _PACF_PHI = _pacf_exprs(_PACF_LAGS)
     tags=("events", "timeseries", "stats"),
 )
 def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    days = e.groupBy(F.expr("ep div 86400").alias("day")).agg(
-        (F.sum(dec6(F.round("value", 6))) * 1000000).cast("bigint").alias("s")
-    )
-    st = days.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("s").cast("bigint").alias("ssum"),
-    )
-    r = days.crossJoin(F.broadcast(st)).select(
-        "day",
-        (F.col("n") * F.col("s") - F.col("ssum")).cast("decimal(38,0)").alias("r"),
-    )
+    r = _daily_residuals(_daily_sums(spark, sf_dir, "s"), "decimal(38,0)")
     w = Window.orderBy("day")
     ld = r.select(
         "r",
@@ -5694,26 +5566,10 @@ def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_cvm_test",
-    oracle="""
-    WITH base AS (
-      SELECT event_type, value,
-             CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS in_a
-      FROM events),
-    g AS (
-      SELECT event_type, value, CAST(COUNT(*) AS BIGINT) AS cnt,
-             CAST(SUM(in_a) AS BIGINT) AS cnt_a
-      FROM base GROUP BY event_type, value),
+    oracle=_TWO_SAMPLE_DUCK + """
     r AS (
       SELECT event_type, cnt,
-             CAST(SUM(cnt_a) OVER wc AS BIGINT) AS cum_a,
-             CAST(SUM(cnt) OVER wc AS BIGINT) AS cum,
-             CAST(SUM(cnt_a) OVER wf AS BIGINT) AS n_a,
-             CAST(SUM(cnt) OVER wf AS BIGINT) AS n
-      FROM g
-      WINDOW wc AS (PARTITION BY event_type ORDER BY value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             wf AS (PARTITION BY event_type)),
-    d AS (
+""" + _CUM_COUNTS_DUCK + """    d AS (
       SELECT event_type, n_a, n - n_a AS n_b,
              SUM(cnt * (cum_a * (n - n_a) - (cum - cum_a) * n_a)
                      * (cum_a * (n - n_a) - (cum - cum_a) * n_a)) AS s
@@ -5737,26 +5593,7 @@ def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "stats", "experiment", "nonparametric"),
 )
 def q_cvm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    base = e.select(
-        "event_type", "value",
-        F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("in_a"),
-    )
-    g = base.groupBy("event_type", "value").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum("in_a").cast("bigint").alias("cnt_a"),
-    )
-    wc = Window.partitionBy("event_type").orderBy("value").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wf = Window.partitionBy("event_type")
-    r = g.select(
-        "event_type", "cnt",
-        F.sum("cnt_a").over(wc).cast("bigint").alias("cum_a"),
-        F.sum("cnt").over(wc).cast("bigint").alias("cum"),
-        F.sum("cnt_a").over(wf).cast("bigint").alias("n_a"),
-        F.sum("cnt").over(wf).cast("bigint").alias("n"),
-    )
+    r = _two_sample_counts(spark, sf_dir).select("event_type", "cnt", *_cum_counts())
     d = (
         r.select(
             "event_type", "n_a", (F.col("n") - F.col("n_a")).alias("n_b"),
@@ -5818,13 +5655,7 @@ _PG_TRIG = _pg_trig_literals()
 
 @register(
     "q_periodogram",
-    oracle=f"""
-    WITH e AS (SELECT {_EPOCH_DUCK} AS ep, value FROM events),
-    days AS (
-      SELECT ep // 86400 AS day,
-             CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) * 1000000
-                  AS BIGINT) AS s
-      FROM e GROUP BY ep // 86400),
+    oracle=_DAILY_SUMS_DUCK + f"""
     st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(s) AS BIGINT) AS ssum
            FROM days),
     r AS (
@@ -5856,17 +5687,7 @@ _PG_TRIG = _pg_trig_literals()
     tags=("events", "timeseries", "stats"),
 )
 def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    days = e.groupBy(F.expr("ep div 86400").alias("day")).agg(
-        (F.sum(dec6(F.round("value", 6))) * 1000000).cast("bigint").alias("s")
-    )
-    st = days.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("s").cast("bigint").alias("ssum"),
-    )
-    r = days.crossJoin(F.broadcast(st)).select(
-        "day", (F.col("n") * F.col("s") - F.col("ssum")).cast("double").alias("r")
-    )
+    r = _daily_residuals(_daily_sums(spark, sf_dir, "s"), "double")
     proj = None
     for p in _PG_PERIODS:
         cs, sn = _PG_TRIG[p]
@@ -5891,26 +5712,10 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_anderson_darling",
-    oracle="""
-    WITH base AS (
-      SELECT event_type, value,
-             CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS in_a
-      FROM events),
-    g AS (
-      SELECT event_type, value, CAST(COUNT(*) AS BIGINT) AS cnt,
-             CAST(SUM(in_a) AS BIGINT) AS cnt_a
-      FROM base GROUP BY event_type, value),
+    oracle=_TWO_SAMPLE_DUCK + """
     r AS (
       SELECT event_type, cnt,
-             CAST(SUM(cnt_a) OVER wc AS BIGINT) AS cum_a,
-             CAST(SUM(cnt) OVER wc AS BIGINT) AS cum,
-             CAST(SUM(cnt_a) OVER wf AS BIGINT) AS n_a,
-             CAST(SUM(cnt) OVER wf AS BIGINT) AS n
-      FROM g
-      WINDOW wc AS (PARTITION BY event_type ORDER BY value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             wf AS (PARTITION BY event_type)),
-    terms AS (
+""" + _CUM_COUNTS_DUCK + """    terms AS (
       SELECT event_type, n_a, n - n_a AS n_b,
              CAST(round(
                CAST(cnt AS DOUBLE)
@@ -5940,26 +5745,7 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "stats", "experiment", "nonparametric"),
 )
 def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    base = e.select(
-        "event_type", "value",
-        F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("in_a"),
-    )
-    g = base.groupBy("event_type", "value").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum("in_a").cast("bigint").alias("cnt_a"),
-    )
-    wc = Window.partitionBy("event_type").orderBy("value").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wf = Window.partitionBy("event_type")
-    r = g.select(
-        "event_type", "cnt",
-        F.sum("cnt_a").over(wc).cast("bigint").alias("cum_a"),
-        F.sum("cnt").over(wc).cast("bigint").alias("cum"),
-        F.sum("cnt_a").over(wf).cast("bigint").alias("n_a"),
-        F.sum("cnt").over(wf).cast("bigint").alias("n"),
-    )
+    r = _two_sample_counts(spark, sf_dir).select("event_type", "cnt", *_cum_counts())
     terms = r.where(F.col("cum") < F.col("n")).selectExpr(
         "event_type", "n_a", "n - n_a AS n_b",
         # the deviation d = cum_a*n - cum*n_a is BIGINT-safe (<= N^2) but
@@ -5987,22 +5773,7 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_nelson_aalen",
-    oracle=f"""
-    WITH e AS (SELECT user_id, event_type, value, {_EPOCH_DUCK} AS ep FROM events),
-    per_user AS (
-      SELECT user_id,
-             MIN(ep) AS t0,
-             MIN(CASE WHEN event_type = 'purchase' AND value >= 190.0 THEN ep END) AS t_conv,
-             MAX(ep) AS t_last
-      FROM e GROUP BY user_id),
-    subjects AS (
-      SELECT user_id,
-             CASE WHEN t_conv IS NOT NULL THEN t_conv - t0 ELSE t_last - t0 END AS dur,
-             CASE WHEN t_conv IS NOT NULL THEN 1 ELSE 0 END AS ev
-      FROM per_user),
-    times AS (
-      SELECT dur AS t, CAST(SUM(ev) AS BIGINT) AS d
-      FROM subjects GROUP BY dur HAVING SUM(ev) > 0),
+    oracle=_SURVIVAL_TIMES_DUCK + f"""
     risk AS (
       SELECT t, d,
              CAST((SELECT COUNT(*) FROM subjects s WHERE s.dur >= times.t)
@@ -6036,23 +5807,7 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "timeseries", "survival"),
 )
 def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = events_table(spark, sf_dir)
-    per_user = e.groupBy("user_id").agg(
-        F.min("ep").alias("t0"),
-        F.min(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") >= 190.0),
-                F.col("ep"),
-            )
-        ).alias("t_conv"),
-        F.max("ep").alias("t_last"),
-    )
-    subjects = per_user.select(
-        F.when(
-            F.col("t_conv").isNotNull(), F.col("t_conv") - F.col("t0")
-        ).otherwise(F.col("t_last") - F.col("t0")).alias("dur"),
-        F.when(F.col("t_conv").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
+    subjects = _survival_users(spark, sf_dir).select(*_duration_and_event())
     times = (
         subjects.groupBy(F.col("dur").alias("t"))
         .agg(F.sum("ev").cast("bigint").alias("d"))
@@ -6094,15 +5849,7 @@ _ER_LN = duck_portable_ln_ratio("c_a", "c_ab")
 
 @register(
     "q_entropy_rate",
-    oracle=f"""
-    WITH e AS (SELECT user_id, event_id, event_type, {_EPOCH_DUCK} AS ep FROM events),
-    p AS (SELECT event_type AS prev_type,
-                 LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ep, event_id)
-                     AS next_type
-          FROM e),
-    c AS (SELECT prev_type, next_type, CAST(COUNT(*) AS BIGINT) AS c_ab
-          FROM p WHERE next_type IS NOT NULL GROUP BY prev_type, next_type),
-    t AS (SELECT prev_type, CAST(SUM(c_ab) AS BIGINT) AS c_a FROM c GROUP BY prev_type),
+    oracle=_TRANSITIONS_DUCK + f""",
     n AS (SELECT CAST(SUM(c_ab) AS BIGINT) AS nn FROM c),
     terms AS (
       SELECT c.prev_type,
@@ -6135,18 +5882,7 @@ _ER_LN = duck_portable_ln_ratio("c_a", "c_ab")
 def q_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
 
-    e = events_table(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ep", "event_id")
-    p = e.select(
-        F.col("event_type").alias("prev_type"),
-        F.lead("event_type").over(w).alias("next_type"),
-    )
-    c = (
-        p.where(F.col("next_type").isNotNull())
-        .groupBy("prev_type", "next_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c_ab"))
-    )
-    t = c.groupBy("prev_type").agg(F.sum("c_ab").cast("bigint").alias("c_a"))
+    c, t = _transition_counts(spark, sf_dir)
     nn = c.agg(F.sum("c_ab").cast("bigint").alias("nn"))
     terms = c.join(F.broadcast(t), "prev_type").select(
         "prev_type",

@@ -31,6 +31,63 @@ _KCORE_K = 3
 _KCORE_ROUNDS = 8
 
 
+# The 50-node user-value graph: an edge joins user_id % 50 and
+# floor(value) % 50 for every event where the two differ.
+# Its distinct undirected edges (a < b), the body of a CTE.
+_UV_EDGES_DUCK = """
+      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
+                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
+      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50"""
+
+# CTEs und (the undirected edges) and sym (both directions, as u -> v).
+_UV_SYM_DUCK = f"""und AS ({_UV_EDGES_DUCK}),
+    sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und)"""
+
+# Hop distances d (at most 8) of every reachable node pair, in CTE firsts.
+_UV_HOP_DISTANCES_DUCK = f"""
+    WITH RECURSIVE {_UV_SYM_DUCK},
+    nodes AS (SELECT DISTINCT u AS node FROM sym),
+    walk(s, node, dist) AS (
+      SELECT node, node, 0 FROM nodes
+      UNION
+      SELECT w.s, sym.v, w.dist + 1
+      FROM walk w JOIN sym ON sym.u = w.node WHERE w.dist < 8),
+    firsts AS (
+      SELECT s, node, CAST(MIN(dist) AS BIGINT) AS d
+      FROM walk WHERE s <> node GROUP BY s, node)"""
+
+
+def _user_value_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The user-value graph's directed edges ``src -> dst``, one per event
+    (not deduplicated)."""
+    ev = table(spark, sf_dir, "events")
+    a = F.col("user_id").cast("bigint") % 50
+    b = F.floor(F.col("value")).cast("bigint") % 50
+    return ev.where(a != b).select(a.alias("src"), b.alias("dst"))
+
+
+def _user_value_undirected(spark: SparkSession, sf_dir: str, lo: str, hi: str) -> DataFrame:
+    """The user-value graph's distinct undirected edges, the smaller
+    endpoint as column ``lo`` and the larger as ``hi``."""
+    ev = table(spark, sf_dir, "events")
+    a = F.col("user_id").cast("bigint") % 50
+    b = F.floor(F.col("value")).cast("bigint") % 50
+    return (
+        ev.where(a != b)
+        .select(F.least(a, b).alias(lo), F.greatest(a, b).alias(hi))
+        .distinct()
+    )
+
+
+def _user_value_symmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The user-value graph's undirected edges in both directions, as
+    ``src -> dst``."""
+    und = _user_value_undirected(spark, sf_dir, "x", "y")
+    return und.select(F.col("x").alias("src"), F.col("y").alias("dst")).unionByName(
+        und.select(F.col("y").alias("src"), F.col("x").alias("dst"))
+    )
+
+
 @register(
     "q_graph_closure",
     oracle="""
@@ -120,11 +177,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_triangle_count",
-    oracle="""
-    WITH und AS (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50),
+    oracle=f"""
+    WITH und AS ({_UV_EDGES_DUCK}),
     deg AS (SELECT node, COUNT(*) AS deg FROM (
               SELECT a AS node FROM und UNION ALL SELECT b FROM und) GROUP BY node),
     oriented AS (
@@ -152,10 +206,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import triangle_count
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    edges = ev.where(a != b).select(a.alias("src"), b.alias("dst"))
+    edges = _user_value_edges(spark, sf_dir)
     return triangle_count(edges)
 
 
@@ -195,10 +246,7 @@ def _lpa_oracle(final: str | None = None) -> str:
     (count DESC, label ASC) deterministic tie-break. ``final`` overrides the
     closing SELECT (q_modularity scores the same labels)."""
     ctes = [
-        """und AS (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50)""",
+        f"""und AS ({_UV_EDGES_DUCK})""",
         "sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und)",
         "nodes AS (SELECT DISTINCT u AS node FROM sym)",
         "l0 AS (SELECT node, node AS label FROM nodes)",
@@ -234,10 +282,7 @@ def _lpa_oracle(final: str | None = None) -> str:
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import label_propagation
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    edges = ev.where(a != b).select(a.alias("src"), b.alias("dst"))
+    edges = _user_value_edges(spark, sf_dir)
     return label_propagation(edges, iterations=_LPA_ITERATIONS)
 
 
@@ -288,10 +333,7 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kcore_oracle() -> str:
     """Unrolled synchronous peeling mirroring operators/graph.k_core."""
     ctes = [
-        """r0 AS MATERIALIZED (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50)"""
+        f"""r0 AS MATERIALIZED ({_UV_EDGES_DUCK})"""
     ]
     for i in range(1, _KCORE_ROUNDS + 1):
         ctes.append(
@@ -327,10 +369,7 @@ def _kcore_oracle() -> str:
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import k_core
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    edges = ev.where(a != b).select(a.alias("src"), b.alias("dst"))
+    edges = _user_value_edges(spark, sf_dir)
     return k_core(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS).orderBy("node")
 
 
@@ -538,11 +577,8 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_adamic_adar",
-    oracle="""
-    WITH und AS (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50),
+    oracle=f"""
+    WITH und AS ({_UV_EDGES_DUCK}),
     sym AS (SELECT a, b FROM und UNION ALL SELECT b, a FROM und),
     deg AS (SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY a),
     wedge AS (
@@ -659,15 +695,7 @@ _MODULARITY_FINAL = f"""SELECT p.community, p.n_nodes,
 def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import label_propagation
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    und = (
-        ev.where(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _user_value_undirected(spark, sf_dir, "a", "b").localCheckpoint()
     sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     lab = (
         label_propagation(
@@ -723,10 +751,7 @@ def _ktruss_oracle() -> str:
     so AS MATERIALIZED is mandatory (the k-core exponential-re-expansion
     gotcha)."""
     ctes = [
-        """u0 AS MATERIALIZED (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50)"""
+        f"""u0 AS MATERIALIZED ({_UV_EDGES_DUCK})"""
     ]
 
     def tri_sup(i: int, src: str) -> list[str]:
@@ -779,16 +804,13 @@ def _ktruss_oracle() -> str:
 def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import k_truss
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    edges = ev.where(a != b).select(a.alias("src"), b.alias("dst"))
+    edges = _user_value_edges(spark, sf_dir)
     return k_truss(edges).orderBy("a", "b")
 
 
-@register(
-    "q_scc",
-    oracle="""
+# Strongly connected components of the directed user-value graph: each
+# node's label is the least node mutually reachable with it.
+_SCC_DUCK = """
     WITH RECURSIVE e AS (
       SELECT DISTINCT user_id % 50 AS s, CAST(FLOOR(value) AS BIGINT) % 50 AS d
       FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50),
@@ -803,7 +825,12 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT x.a, x.d FROM reach x JOIN reach y ON x.a = y.d AND x.d = y.a)
     SELECT CAST(a AS BIGINT) AS node, CAST(MIN(d) AS BIGINT) AS scc
     FROM mutual GROUP BY a ORDER BY node
-    """,
+    """
+
+
+@register(
+    "q_scc",
+    oracle=_SCC_DUCK,
     description="strongly connected components of the events-derived "
     "DIRECTED 50-node graph (the directed sibling of the undirected "
     "large-star/small-star components): scc(i) = min node mutually "
@@ -818,10 +845,7 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "iterative"),
 )
 def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    edges = ev.where(a != b).select(a.alias("src"), b.alias("dst")).distinct()
+    edges = _user_value_edges(spark, sf_dir).distinct()
     clo = transitive_closure(edges)
     nodes = (
         edges.select(F.col("src").alias("n"))
@@ -845,22 +869,7 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_scc_fwbw",
-    oracle="""
-    WITH RECURSIVE e AS (
-      SELECT DISTINCT user_id % 50 AS s, CAST(FLOOR(value) AS BIGINT) % 50 AS d
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50),
-    nodes AS (SELECT s AS n FROM e UNION SELECT d FROM e),
-    r(a, d) AS (
-      SELECT s, d FROM e
-      UNION
-      SELECT r.a, e.d FROM r JOIN e ON e.s = r.d),
-    reach AS (
-      SELECT a, d FROM r UNION SELECT n, n FROM nodes),
-    mutual AS (
-      SELECT x.a, x.d FROM reach x JOIN reach y ON x.a = y.d AND x.d = y.a)
-    SELECT CAST(a AS BIGINT) AS node, CAST(MIN(d) AS BIGINT) AS scc
-    FROM mutual GROUP BY a ORDER BY node
-    """,
+    oracle=_SCC_DUCK,
     description="strongly connected components AGAIN, by FW-BW pivot "
     "coloring with trimming (operators/graph.fwbw_scc; Fleischer et al. "
     "2000, Hong et al. 2013) — the UNBOUNDED-graph path q_scc documents: "
@@ -878,10 +887,7 @@ def q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import fwbw_scc
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    edges = ev.where(a != b).select(a.alias("src"), b.alias("dst")).distinct()
+    edges = _user_value_edges(spark, sf_dir).distinct()
     return fwbw_scc(edges).select(
         F.col("node").cast("bigint").alias("node"),
         F.col("scc").cast("bigint").alias("scc"),
@@ -893,21 +899,7 @@ def q_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_harmonic_centrality",
-    oracle="""
-    WITH RECURSIVE und AS (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50),
-    sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
-    nodes AS (SELECT DISTINCT u AS node FROM sym),
-    walk(s, node, dist) AS (
-      SELECT node, node, 0 FROM nodes
-      UNION
-      SELECT w.s, sym.v, w.dist + 1
-      FROM walk w JOIN sym ON sym.u = w.node WHERE w.dist < 8),
-    firsts AS (
-      SELECT s, node, CAST(MIN(dist) AS BIGINT) AS d
-      FROM walk WHERE s <> node GROUP BY s, node)
+    oracle=_UV_HOP_DISTANCES_DUCK + """
     SELECT s AS node,
            CAST(COUNT(*) AS BIGINT) AS n_reached,
            CAST(MAX(d) AS BIGINT) AS ecc,
@@ -932,17 +924,7 @@ def q_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import pairwise_hop_distances
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    und = (
-        ev.where(a != b)
-        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
-        .distinct()
-    )
-    sym = und.select(F.col("x").alias("src"), F.col("y").alias("dst")).unionByName(
-        und.select(F.col("y").alias("src"), F.col("x").alias("dst"))
-    )
+    sym = _user_value_symmetric(spark, sf_dir)
     d = pairwise_hop_distances(sym, max_hops=8)
     return (
         d.select("source", F.col("dist").cast("bigint").alias("d"))
@@ -963,12 +945,8 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_degree_assortativity",
-    oracle="""
-    WITH und AS (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50),
-    sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
+    oracle=f"""
+    WITH {_UV_SYM_DUCK},
     deg AS (SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u),
     pairs AS (
       SELECT du.d AS dx, dv.d AS dy
@@ -996,14 +974,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "stats"),
 )
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    und = (
-        ev.where(a != b)
-        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
-        .distinct()
-    )
+    und = _user_value_undirected(spark, sf_dir, "x", "y")
     sym = und.select(F.col("x").alias("u"), F.col("y").alias("v")).unionByName(
         und.select(F.col("y").alias("u"), F.col("x").alias("v"))
     )
@@ -1033,21 +1004,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_distance_distribution",
-    oracle="""
-    WITH RECURSIVE und AS (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50),
-    sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
-    nodes AS (SELECT DISTINCT u AS node FROM sym),
-    walk(s, node, dist) AS (
-      SELECT node, node, 0 FROM nodes
-      UNION
-      SELECT w.s, sym.v, w.dist + 1
-      FROM walk w JOIN sym ON sym.u = w.node WHERE w.dist < 8),
-    firsts AS (
-      SELECT s, node, CAST(MIN(dist) AS BIGINT) AS d
-      FROM walk WHERE s <> node GROUP BY s, node),
+    oracle=_UV_HOP_DISTANCES_DUCK + """,
     hist AS (
       SELECT d, CAST(COUNT(*) AS BIGINT) AS n_pairs FROM firsts GROUP BY d),
     cum AS (
@@ -1081,17 +1038,7 @@ def q_distance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from platform_etl_backend_spark.operators.graph import pairwise_hop_distances
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    und = (
-        ev.where(a != b)
-        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
-        .distinct()
-    )
-    sym = und.select(F.col("x").alias("src"), F.col("y").alias("dst")).unionByName(
-        und.select(F.col("y").alias("src"), F.col("x").alias("dst"))
-    )
+    sym = _user_value_symmetric(spark, sf_dir)
     hist = (
         pairwise_hop_distances(sym, max_hops=8)
         .groupBy(F.col("dist").cast("bigint").alias("d"))
@@ -1131,10 +1078,7 @@ def _betweenness_oracle(levels: int = _BC_LEVELS) -> str:
     term-for-term: BIGINT sigma, ROUND(...,9) DECIMAL(28,9) dependency
     contributions, one final /2 halving + ROUND 6."""
     ctes = [
-        """und AS (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50)""",
+        f"""und AS ({_UV_EDGES_DUCK})""",
         "sym AS MATERIALIZED (SELECT a AS u, b AS v FROM und"
         " UNION ALL SELECT b, a FROM und)",
         "nodes AS MATERIALIZED (SELECT DISTINCT u AS node FROM sym)",
@@ -1204,17 +1148,7 @@ def _betweenness_oracle(levels: int = _BC_LEVELS) -> str:
 def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import betweenness_centrality
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    und = (
-        ev.where(a != b)
-        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
-        .distinct()
-    )
-    sym = und.select(F.col("x").alias("src"), F.col("y").alias("dst")).unionByName(
-        und.select(F.col("y").alias("src"), F.col("x").alias("dst"))
-    )
+    sym = _user_value_symmetric(spark, sf_dir)
     bc = betweenness_centrality(sym, max_levels=_BC_LEVELS)
     return bc.select(
         "node", F.round(F.col("bc").cast("double") / 2, 6).alias("bc")
@@ -1262,17 +1196,7 @@ def _betweenness_sampled_oracle() -> str:
 def q_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.graph import betweenness_centrality
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    und = (
-        ev.where(a != b)
-        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
-        .distinct()
-    )
-    sym = und.select(F.col("x").alias("src"), F.col("y").alias("dst")).unionByName(
-        und.select(F.col("y").alias("src"), F.col("x").alias("dst"))
-    )
+    sym = _user_value_symmetric(spark, sf_dir)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     seeds = nodes.where(F.col("node") % 5 == 0)
     counts = nodes.agg(F.count(F.lit(1)).alias("n_nodes")).crossJoin(
@@ -1295,12 +1219,8 @@ def q_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_bipartite_check",
-    oracle="""
-    WITH RECURSIVE und AS (
-      SELECT DISTINCT LEAST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS a,
-                      GREATEST(user_id % 50, CAST(FLOOR(value) AS BIGINT) % 50) AS b
-      FROM events WHERE user_id % 50 <> CAST(FLOOR(value) AS BIGINT) % 50),
-    sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
+    oracle=f"""
+    WITH RECURSIVE {_UV_SYM_DUCK},
     nodes AS (SELECT DISTINCT u AS node FROM sym),
     reach(s, node) AS (
       SELECT node, node FROM nodes
@@ -1350,14 +1270,7 @@ def q_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairwise_hop_distances,
     )
 
-    ev = table(spark, sf_dir, "events")
-    a = F.col("user_id").cast("bigint") % 50
-    b = F.floor(F.col("value")).cast("bigint") % 50
-    und = (
-        ev.where(a != b)
-        .select(F.least(a, b).alias("x"), F.greatest(a, b).alias("y"))
-        .distinct()
-    )
+    und = _user_value_undirected(spark, sf_dir, "x", "y")
     sym = und.selectExpr("x AS src", "y AS dst").unionByName(
         und.selectExpr("y AS src", "x AS dst")
     )

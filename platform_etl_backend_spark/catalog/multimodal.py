@@ -117,22 +117,31 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_image_decode",
-    oracle="""
+# The first 96 bytes of each ASCII document of >= 96 chars as pixel values
+# v at positions p (an 8x4 RGB raster).
+_RASTER_PX_DUCK = """
     WITH d AS (SELECT doc_id, substr(text, 1, 96) AS s
                FROM documents
                WHERE length(text) >= 96
                  AND regexp_full_match(text, '[\\x00-\\x7F]*')),
     px AS (SELECT doc_id, p, ascii(substr(s, CAST(p AS INTEGER), 1)) AS v
            FROM d, range(1, 97) t(p))
+"""
+
+# Width, height and per-channel means of the 8x4 RGB raster.
+_RGB_MEANS_DUCK = _RASTER_PX_DUCK + """
     SELECT doc_id,
            CAST(8 AS INTEGER) AS width, CAST(4 AS INTEGER) AS height,
            round(avg(v) FILTER (WHERE (p - 1) % 3 = 0), 6) AS mean_r,
            round(avg(v) FILTER (WHERE (p - 1) % 3 = 1), 6) AS mean_g,
            round(avg(v) FILTER (WHERE (p - 1) % 3 = 2), 6) AS mean_b
     FROM px GROUP BY doc_id
-    """,
+    """
+
+
+@register(
+    "q_image_decode",
+    oracle=_RGB_MEANS_DUCK,
     description="REAL image decode: Catalyst builds binary PPM (P6) payloads "
     "(header + 8x4 RGB raster from document bytes), an Arrow mapInPandas stage "
     "parses them with the pure-numpy codec (operators/codecs.py) and extracts "
@@ -309,20 +318,7 @@ def q_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_png_decode",
-    oracle="""
-    WITH d AS (SELECT doc_id, substr(text, 1, 96) AS s
-               FROM documents
-               WHERE length(text) >= 96
-                 AND regexp_full_match(text, '[\\x00-\\x7F]*')),
-    px AS (SELECT doc_id, p, ascii(substr(s, CAST(p AS INTEGER), 1)) AS v
-           FROM d, range(1, 97) t(p))
-    SELECT doc_id,
-           CAST(8 AS INTEGER) AS width, CAST(4 AS INTEGER) AS height,
-           round(avg(v) FILTER (WHERE (p - 1) % 3 = 0), 6) AS mean_r,
-           round(avg(v) FILTER (WHERE (p - 1) % 3 = 1), 6) AS mean_g,
-           round(avg(v) FILTER (WHERE (p - 1) % 3 = 2), 6) AS mean_b
-    FROM px GROUP BY doc_id
-    """,
+    oracle=_RGB_MEANS_DUCK,
     description="REAL PNG codec (stdlib zlib DEFLATE + CRC chunk framing + "
     "scanline filters, operators/png.py — no PIL): document bytes become an "
     "8x4 RGB plane, encode+decode inside an Arrow mapInPandas stage, channel "
@@ -362,13 +358,7 @@ def _bmp_header_8x4() -> bytes:
 
 @register(
     "q_bmp_decode",
-    oracle="""
-    WITH d AS (SELECT doc_id, substr(text, 1, 96) AS s
-               FROM documents
-               WHERE length(text) >= 96
-                 AND regexp_full_match(text, '[\\x00-\\x7F]*')),
-    px AS (SELECT doc_id, p, ascii(substr(s, CAST(p AS INTEGER), 1)) AS v
-           FROM d, range(1, 97) t(p))
+    oracle=_RASTER_PX_DUCK + """
     SELECT doc_id,
            CAST(8 AS INTEGER) AS width, CAST(4 AS INTEGER) AS height,
            round(avg(v) FILTER (WHERE (p - 1) % 3 = 2), 6) AS mean_r,
@@ -409,13 +399,7 @@ def q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_gif_roundtrip",
-    oracle="""
-    WITH d AS (SELECT doc_id, substr(text, 1, 96) AS s
-               FROM documents
-               WHERE length(text) >= 96
-                 AND regexp_full_match(text, '[\\x00-\\x7F]*')),
-    px AS (SELECT doc_id, p, ascii(substr(s, CAST(p AS INTEGER), 1)) AS v
-           FROM d, range(1, 97) t(p))
+    oracle=_RASTER_PX_DUCK + """
     SELECT doc_id,
            CAST(12 AS INTEGER) AS width, CAST(8 AS INTEGER) AS height,
            round(avg(v), 6) AS mean_r,

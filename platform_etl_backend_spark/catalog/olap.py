@@ -8,7 +8,7 @@ unambiguously identified by NULL keys in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from platform_etl_backend_spark.catalog.registry import register, table, dec2, dbl
@@ -1010,9 +1010,10 @@ _MQ_KEEP = 32
 _MQ_QS = (25, 50, 75, 90)
 
 
-@register(
-    "q_mergeable_quantiles",
-    oracle=f"""
+# The mergeable quantile summary: per-shard order statistics (rk), every
+# stride-th kept with its run weight w (summ), the merged cumulative
+# weights (cum) and the row count (nn).
+_MQ_SUMMARY_DUCK = f"""
     WITH src AS (
       SELECT l_orderkey % {_MQ_SHARDS} AS shard,
              CAST(l_extendedprice AS DOUBLE) AS v,
@@ -1037,6 +1038,57 @@ _MQ_QS = (25, 50, 75, 90)
                   AS BIGINT) AS cumw
       FROM summ),
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM src),
+"""
+
+
+def _mq_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem prices ``v`` with their ``shard`` and row key."""
+    li = table(spark, sf_dir, "lineitem")
+    return li.select(
+        (F.col("l_orderkey") % _MQ_SHARDS).alias("shard"),
+        F.col("l_extendedprice").cast("double").alias("v"),
+        "l_orderkey", "l_linenumber",
+    )
+
+
+def _mq_stride() -> Column:
+    """A shard's summary stride ceil(n_s / _MQ_KEEP)."""
+    return F.expr(f"(n_s + {_MQ_KEEP} - 1) div {_MQ_KEEP}")
+
+
+def _mq_ranked(src: DataFrame) -> DataFrame:
+    """Each row's rank ``rn`` within its shard and the shard size ``n_s``."""
+    wsh = Window.partitionBy("shard").orderBy("v", "l_orderkey", "l_linenumber")
+    return src.select(
+        "shard", "v",
+        F.row_number().over(wsh).alias("rn"),
+        F.count(F.lit(1)).over(Window.partitionBy("shard")).alias("n_s"),
+    )
+
+
+def _mq_cumulative(rk: DataFrame) -> DataFrame:
+    """The merged summary: each kept value ``v`` and its cumulative weight
+    ``cumw`` in value order."""
+    stride = _mq_stride()
+    summ = rk.where((F.col("rn") - 1) % stride == 0).select(
+        "shard", "v", "rn",
+        F.least(stride, F.col("n_s") - F.col("rn") + 1).cast("bigint").alias("w"),
+    )
+    return summ.select(
+        "v",
+        F.sum("w")
+        .over(
+            Window.orderBy("v", "shard", "rn")
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        .cast("bigint")
+        .alias("cumw"),
+    )
+
+
+@register(
+    "q_mergeable_quantiles",
+    oracle=_MQ_SUMMARY_DUCK + f"""
     targets AS (SELECT UNNEST({list(_MQ_QS)}) AS q)
     SELECT CAST(t.q AS INTEGER) AS q,
            MIN(c.v) AS approx_value,
@@ -1058,35 +1110,8 @@ _MQ_QS = (25, 50, 75, 90)
     tags=("olap", "sketch", "quantile"),
 )
 def q_mergeable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    li = table(spark, sf_dir, "lineitem")
-    src = li.select(
-        (F.col("l_orderkey") % _MQ_SHARDS).alias("shard"),
-        F.col("l_extendedprice").cast("double").alias("v"),
-        "l_orderkey", "l_linenumber",
-    )
-    wsh = Window.partitionBy("shard").orderBy("v", "l_orderkey", "l_linenumber")
-    rk = src.select(
-        "shard", "v",
-        F.row_number().over(wsh).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("shard")).alias("n_s"),
-    )
-    stride = F.expr(f"(n_s + {_MQ_KEEP} - 1) div {_MQ_KEEP}")
-    summ = rk.where((F.col("rn") - 1) % stride == 0).select(
-        "shard", "v", "rn",
-        F.least(stride, F.col("n_s") - F.col("rn") + 1).cast("bigint").alias("w"),
-    )
-    cum = summ.select(
-        "v",
-        F.sum("w")
-        .over(
-            Window.orderBy("v", "shard", "rn")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        .cast("bigint")
-        .alias("cumw"),
-    )
+    src = _mq_source(spark, sf_dir)
+    cum = _mq_cumulative(_mq_ranked(src))
     nn = src.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     targets = spark.createDataFrame([(q,) for q in _MQ_QS], "q int")
     return (
@@ -1157,31 +1182,7 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_quantile_rank_error",
-    oracle=f"""
-    WITH src AS (
-      SELECT l_orderkey % {_MQ_SHARDS} AS shard,
-             CAST(l_extendedprice AS DOUBLE) AS v,
-             l_orderkey, l_linenumber
-      FROM lineitem),
-    rk AS (
-      SELECT shard, v,
-             ROW_NUMBER() OVER (PARTITION BY shard
-                                ORDER BY v, l_orderkey, l_linenumber) AS rn,
-             COUNT(*) OVER (PARTITION BY shard) AS n_s
-      FROM src),
-    summ AS (
-      SELECT shard, v, rn,
-             CAST(LEAST((n_s + {_MQ_KEEP} - 1) // {_MQ_KEEP},
-                        n_s - rn + 1) AS BIGINT) AS w
-      FROM rk
-      WHERE (rn - 1) % ((n_s + {_MQ_KEEP} - 1) // {_MQ_KEEP}) = 0),
-    cum AS (
-      SELECT v,
-             CAST(SUM(w) OVER (ORDER BY v, shard, rn
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS BIGINT) AS cumw
-      FROM summ),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM src),
+    oracle=_MQ_SUMMARY_DUCK + f"""
     stride AS (
       SELECT CAST(SUM(st - 1) AS BIGINT) AS err_bound FROM (
         SELECT shard, MAX((n_s + {_MQ_KEEP} - 1) // {_MQ_KEEP}) AS st
@@ -1229,39 +1230,13 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("olap", "sketch", "quantile", "ml-eval"),
 )
 def q_quantile_rank_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    li = table(spark, sf_dir, "lineitem")
-    src = li.select(
-        (F.col("l_orderkey") % _MQ_SHARDS).alias("shard"),
-        F.col("l_extendedprice").cast("double").alias("v"),
-        "l_orderkey", "l_linenumber",
-    ).persist()
-    wsh = Window.partitionBy("shard").orderBy("v", "l_orderkey", "l_linenumber")
-    rk = src.select(
-        "shard", "v",
-        F.row_number().over(wsh).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("shard")).alias("n_s"),
-    )
-    stride_e = F.expr(f"(n_s + {_MQ_KEEP} - 1) div {_MQ_KEEP}")
-    summ = rk.where((F.col("rn") - 1) % stride_e == 0).select(
-        "shard", "v", "rn",
-        F.least(stride_e, F.col("n_s") - F.col("rn") + 1).cast("bigint").alias("w"),
-    )
-    cum = summ.select(
-        "v",
-        F.sum("w")
-        .over(
-            Window.orderBy("v", "shard", "rn")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        .cast("bigint")
-        .alias("cumw"),
-    )
+    src = _mq_source(spark, sf_dir).persist()
+    rk = _mq_ranked(src)
+    cum = _mq_cumulative(rk)
     nn = src.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     stride = (
         rk.groupBy("shard")
-        .agg(F.max(stride_e).alias("st"))
+        .agg(F.max(_mq_stride()).alias("st"))
         .agg(F.sum(F.col("st") - 1).cast("bigint").alias("err_bound"))
     )
     targets = spark.sql(

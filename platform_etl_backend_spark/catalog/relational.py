@@ -3475,15 +3475,37 @@ def q_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- inequality / concentration metrics ---------------------------------------------
 
 
-@register(
-    "q_lorenz_gini",
-    oracle="""
+# Lifetime spend per customer in exact cents, 0 for customers without orders.
+_SPEND_DUCK = """
     WITH spend AS (
       SELECT c.c_custkey,
              CAST(COALESCE(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) * 100
                                 AS BIGINT), 0) AS BIGINT) AS cents
       FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
       GROUP BY c.c_custkey),
+"""
+
+
+def _customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per ``c_custkey``: lifetime order spend in exact ``cents`` (0 when
+    the customer has no orders)."""
+    c = table(spark, sf_dir, "customer").select("c_custkey")
+    o = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    spend = (
+        c.join(o, c.c_custkey == o.o_custkey, "left")
+        .groupBy("c_custkey")
+        .agg(
+            F.coalesce(
+                (F.sum(dec2("o_totalprice")) * 100).cast("bigint"), F.lit(0)
+            ).alias("cents")
+        )
+    )
+    return spend
+
+
+@register(
+    "q_lorenz_gini",
+    oracle=_SPEND_DUCK + """
     ranked AS (
       SELECT cents,
              ROW_NUMBER() OVER (ORDER BY cents, c_custkey) AS i
@@ -3512,17 +3534,7 @@ def q_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.ranking import two_pass_row_number
 
-    c = table(spark, sf_dir, "customer").select("c_custkey")
-    o = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    spend = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.coalesce(
-                (F.sum(dec2("o_totalprice")) * 100).cast("bigint"), F.lit(0)
-            ).alias("cents")
-        )
-    )
+    spend = _customer_spend(spark, sf_dir)
     ranked = two_pass_row_number(spend, ["cents", "c_custkey"], rn_col="i")
     agg = ranked.agg(
         F.count(F.lit(1)).alias("n"),
@@ -3847,13 +3859,7 @@ _THEIL_LN = _duck_ln("cents * n", "sx")
 
 @register(
     "q_theil_index",
-    oracle=f"""
-    WITH spend AS (
-      SELECT c.c_custkey,
-             CAST(COALESCE(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) * 100
-                                AS BIGINT), 0) AS BIGINT) AS cents
-      FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-      GROUP BY c.c_custkey),
+    oracle=_SPEND_DUCK + f"""
     st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS sx
            FROM spend),
     terms AS (
@@ -3880,17 +3886,7 @@ _THEIL_LN = _duck_ln("cents * n", "sx")
 def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
 
-    c = table(spark, sf_dir, "customer").select("c_custkey")
-    o = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    spend = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.coalesce(
-                (F.sum(dec2("o_totalprice")) * 100).cast("bigint"), F.lit(0)
-            ).alias("cents")
-        )
-    )
+    spend = _customer_spend(spark, sf_dir)
     st = spend.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("cents").cast("bigint").alias("sx"),

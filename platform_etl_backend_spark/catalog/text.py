@@ -9,7 +9,7 @@ mirror by construction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from platform_etl_backend_spark.catalog.registry import register, table
@@ -89,9 +89,8 @@ def q_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_ngram_jaccard",
-    oracle=f"""
+# Document pairs with shingle Jaccard >= 0.5, by brute-force shingle join.
+_JACCARD_PAIRS_DUCK = f"""
     WITH {_SHINGLE_CTE},
     inter AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
@@ -101,7 +100,12 @@ def q_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CAST(inter AS DOUBLE) / (za.n + zb.n - inter), 6) AS jaccard
     FROM inter JOIN sz za ON id_a = za.doc_id JOIN sz zb ON id_b = zb.doc_id
     WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= 0.5
-    """,
+    """
+
+
+@register(
+    "q_ngram_jaccard",
+    oracle=_JACCARD_PAIRS_DUCK,
     description="exact n-gram Jaccard near-dup pairs via shared-shingle join "
     "(small-scale baseline; MinHash+LSH is the 100TB path)",
     tags=("dedup", "text"),
@@ -112,24 +116,92 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle() -> str:
+# MinHash signature columns h0..h{n-1} over the shingle rows of sh.
+_MINHASH_SIG_COLS_DUCK = ", ".join(
+    f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(_MINHASH_HASHES)
+)
+
+
+def _duck_lsh_candidates(hash_cols: str, source: str) -> str:
+    """CTEs sig (the signature columns ``hash_cols`` per doc over ``source``),
+    keyed (one md5 band key per band) and cands (distinct doc pairs
+    id_a < id_b sharing a band key)."""
     r = _MINHASH_HASHES // _MINHASH_BANDS
-    hash_cols = ", ".join(
-        f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(_MINHASH_HASHES)
-    )
     band_rows = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, "
         f"md5(concat_ws('|', {', '.join(f'h{b * r + rr}' for rr in range(r))})) AS key FROM sig"
         for b in range(_MINHASH_BANDS)
     )
-    return f"""
-    WITH {_SHINGLE_CTE},
-    sig AS (SELECT doc_id, {hash_cols} FROM sh GROUP BY doc_id),
+    return f"""sig AS (SELECT doc_id, {hash_cols} FROM {source} GROUP BY doc_id),
     keyed AS ({band_rows}),
     cands AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM keyed a JOIN keyed b ON a.band = b.band AND a.key = b.key
-                                AND a.doc_id < b.doc_id),
+                                AND a.doc_id < b.doc_id)"""
+
+
+def _lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
+    """Distinct doc pairs ``id_a < id_b`` whose signatures share a band key."""
+    keyed = D._banded_keys(sig, "doc_id", _MINHASH_HASHES, _MINHASH_BANDS)
+    ka = keyed.select(F.col("doc_id").alias("id_a"), "band", "key")
+    kb = keyed.select(F.col("doc_id").alias("id_b"), "band", "key")
+    return (
+        ka.join(kb, ["band", "key"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def _recall_stats(truth: DataFrame, cands: DataFrame) -> DataFrame:
+    """Truth, candidate and verified pair counts, recall and candidate
+    precision (round-half-away integer micro); verified = truth pairs that
+    are candidates."""
+    # one aggregation yields BOTH counts: n_truth = all truth pairs,
+    # n_verified = truth pairs that are also candidates (left join against
+    # the distinct candidate set adds a 0/1 flag, never duplicates)
+    flagged = truth.join(
+        cands.withColumn("is_cand", F.lit(1)), ["id_a", "id_b"], "left"
+    )
+    stats = flagged.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_truth"),
+        F.coalesce(F.sum("is_cand"), F.lit(0)).cast("bigint").alias("n_verified"),
+    )
+    n_cands = cands.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
+    return (
+        stats.crossJoin(F.broadcast(n_cands))
+        .selectExpr(
+            "n_truth", "n_candidates", "n_verified",
+            "CAST(CASE WHEN n_truth = 0 THEN 0"
+            " ELSE (2 * 1000000 * n_verified + n_truth) div (2 * n_truth) END"
+            " AS BIGINT) AS recall_micro",
+            "CAST(CASE WHEN n_candidates = 0 THEN 0"
+            " ELSE (2 * 1000000 * n_verified + n_candidates)"
+            " div (2 * n_candidates) END AS BIGINT) AS cand_precision_micro",
+        )
+    )
+
+
+# The tail of a recall oracle over CTEs truth, cands and ver: the s CTE's
+# select list and the final select of counts, recall and candidate precision.
+_RECALL_SELECT_DUCK = """CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
+             CAST((SELECT COUNT(*) FROM cands) AS BIGINT) AS n_candidates,
+             CAST((SELECT COUNT(*) FROM ver) AS BIGINT) AS n_verified)
+    SELECT n_truth, n_candidates, n_verified,
+           CAST(CASE WHEN n_truth = 0 THEN 0
+                ELSE (2 * 1000000 * n_verified + n_truth) // (2 * n_truth) END
+                AS BIGINT) AS recall_micro,
+           CAST(CASE WHEN n_candidates = 0 THEN 0
+                ELSE (2 * 1000000 * n_verified + n_candidates)
+                     // (2 * n_candidates) END AS BIGINT) AS cand_precision_micro
+    FROM s
+    """
+
+
+def _minhash_oracle() -> str:
+    return f"""
+    WITH {_SHINGLE_CTE},
+    {_duck_lsh_candidates(_MINHASH_SIG_COLS_DUCK, "sh")},
     inter AS (
       SELECT c.id_a, c.id_b, COUNT(*) AS inter
       FROM cands c JOIN sh a ON a.doc_id = c.id_a
@@ -990,10 +1062,9 @@ def q_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_fuzzy_token_join",
-    oracle="""
-    WITH vocab AS (SELECT DISTINCT c_name AS token FROM customer),
+# Candidate customer-name pairs sharing a deletion-1 variant (each name and
+# every string with one character removed).
+_NAME_VARIANT_PAIRS_DUCK = """vocab AS (SELECT DISTINCT c_name AS token FROM customer),
     variants AS (
       SELECT token, unnest([token] ||
              [substr(token, 1, i - 1) || substr(token, i + 1, len(token))
@@ -1002,7 +1073,13 @@ def q_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     v AS (SELECT DISTINCT token, variant FROM variants),
     cands AS (
       SELECT DISTINCT a.token AS tok_a, b.token AS tok_b
-      FROM v a JOIN v b ON a.variant = b.variant AND a.token < b.token)
+      FROM v a JOIN v b ON a.variant = b.variant AND a.token < b.token)"""
+
+
+@register(
+    "q_fuzzy_token_join",
+    oracle="""
+    WITH """ + _NAME_VARIANT_PAIRS_DUCK + """
     SELECT tok_a, tok_b, levenshtein(tok_a, tok_b) AS dist
     FROM cands WHERE levenshtein(tok_a, tok_b) <= 1
     """,
@@ -1081,18 +1158,53 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PMI_LN = duck_portable_ln_ratio("df_pair * n.nd", "d1.df * d2.df")
-
-
-@register(
-    "q_pmi_cooccur",
-    oracle=f"""
+# Within-document term co-occurrence: distinct terms per document (toks),
+# the document count (n), term document frequencies (dfw) and pair document
+# frequencies (pairs).
+_COOCCUR_DUCK = f"""
     WITH toks AS (SELECT doc_id, unnest(list_distinct({_T})) AS term FROM documents),
     n AS (SELECT COUNT(DISTINCT doc_id) AS nd FROM documents),
     dfw AS (SELECT term, COUNT(*) AS df FROM toks GROUP BY term),
     pairs AS (SELECT a.term AS t1, b.term AS t2, COUNT(*) AS df_pair
               FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND a.term < b.term
               GROUP BY 1, 2)
+"""
+
+
+def _cooccurring_pairs(spark: SparkSession, sf_dir: str, min_df_pair: int) -> DataFrame:
+    """Term pairs ``t1 < t2`` sharing at least ``min_df_pair`` documents, with
+    their pair document frequency ``df_pair``, marginal frequencies ``df1``
+    and ``df2``, and the document count ``nd``."""
+    d = table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id",
+        F.explode(F.array_distinct(F.split(F.trim("text"), " +"))).alias("term"),
+    )
+    nd = d.select(F.count_distinct("doc_id").alias("nd"))
+    dfw = toks.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    a = toks.alias("a")
+    b = toks.alias("b")
+    pairs = (
+        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.term") < F.col("b.term")))
+        .groupBy(F.col("a.term").alias("t1"), F.col("b.term").alias("t2"))
+        .agg(F.count(F.lit(1)).alias("df_pair"))
+        .where(F.col("df_pair") >= min_df_pair)
+    )
+    d1 = dfw.select(F.col("term").alias("t1"), F.col("df").alias("df1"))
+    d2 = dfw.select(F.col("term").alias("t2"), F.col("df").alias("df2"))
+    return (
+        pairs.join(F.broadcast(d1), "t1")
+        .join(F.broadcast(d2), "t2")
+        .crossJoin(F.broadcast(nd))  # 1-row scalar frame
+    )
+
+
+_PMI_LN = duck_portable_ln_ratio("df_pair * n.nd", "d1.df * d2.df")
+
+
+@register(
+    "q_pmi_cooccur",
+    oracle=_COOCCUR_DUCK + f"""
     SELECT t1, t2, df_pair,
            ROUND({_PMI_LN}, 6) AS pmi
     FROM pairs JOIN dfw d1 ON t1 = d1.term JOIN dfw d2 ON t2 = d2.term, n
@@ -1107,27 +1219,8 @@ _PMI_LN = duck_portable_ln_ratio("df_pair * n.nd", "d1.df * d2.df")
     tags=("text", "stats", "cooccurrence"),
 )
 def q_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.trim("text"), " +"))).alias("term"),
-    )
-    nd = d.select(F.count_distinct("doc_id").alias("nd"))
-    dfw = toks.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.term") < F.col("b.term")))
-        .groupBy(F.col("a.term").alias("t1"), F.col("b.term").alias("t2"))
-        .agg(F.count(F.lit(1)).alias("df_pair"))
-        .where(F.col("df_pair") >= 5)
-    )
-    d1 = dfw.select(F.col("term").alias("t1"), F.col("df").alias("df1"))
-    d2 = dfw.select(F.col("term").alias("t2"), F.col("df").alias("df2"))
     return (
-        pairs.join(F.broadcast(d1), "t1")
-        .join(F.broadcast(d2), "t2")
-        .crossJoin(F.broadcast(nd))  # 1-row scalar frame
+        _cooccurring_pairs(spark, sf_dir, 5)
         .select(
             "t1", "t2", "df_pair",
             # integer-ratio log via the engine-portable ln (libm ln is
@@ -1302,17 +1395,7 @@ def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_prefix_jaccard",
-    oracle=f"""
-    WITH {_SHINGLE_CTE},
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY id_a, id_b)
-    SELECT id_a, id_b, inter,
-           ROUND(CAST(inter AS DOUBLE) / (za.n + zb.n - inter), 6) AS jaccard
-    FROM inter JOIN sz za ON id_a = za.doc_id JOIN sz zb ON id_b = zb.doc_id
-    WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= 0.5
-    """,
+    oracle=_JACCARD_PAIRS_DUCK,
     description="EXACT n-gram Jaccard pairs via prefix filtering "
     "(AllPairs/PPJoin): rarest-first global shingle order, candidates only "
     "from each document's (n - ceil(t*n) + 1)-prefix — mathematically "
@@ -1330,13 +1413,7 @@ def q_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_assoc_rules",
-    oracle=f"""
-    WITH toks AS (SELECT doc_id, unnest(list_distinct({_T})) AS term FROM documents),
-    n AS (SELECT COUNT(DISTINCT doc_id) AS nd FROM documents),
-    dfw AS (SELECT term, COUNT(*) AS df FROM toks GROUP BY term),
-    pairs AS (SELECT a.term AS t1, b.term AS t2, COUNT(*) AS df_pair
-              FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND a.term < b.term
-              GROUP BY 1, 2)
+    oracle=_COOCCUR_DUCK + f"""
     SELECT t1 AS antecedent, t2 AS consequent, df_pair AS support_n,
            ROUND(CAST(df_pair AS DOUBLE) / (SELECT nd FROM n), 6) AS support,
            ROUND(CAST(df_pair AS DOUBLE) / d1.df, 6) AS confidence,
@@ -1353,27 +1430,8 @@ def q_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "stats", "rules"),
 )
 def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.trim("text"), " +"))).alias("term"),
-    )
-    nd = d.select(F.count_distinct("doc_id").alias("nd"))
-    dfw = toks.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.term") < F.col("b.term")))
-        .groupBy(F.col("a.term").alias("t1"), F.col("b.term").alias("t2"))
-        .agg(F.count(F.lit(1)).alias("df_pair"))
-        .where(F.col("df_pair") >= 10)
-    )
-    d1 = dfw.select(F.col("term").alias("t1"), F.col("df").alias("df1"))
-    d2 = dfw.select(F.col("term").alias("t2"), F.col("df").alias("df2"))
     return (
-        pairs.join(F.broadcast(d1), "t1")
-        .join(F.broadcast(d2), "t2")
-        .crossJoin(F.broadcast(nd))
+        _cooccurring_pairs(spark, sf_dir, 10)
         .where(F.col("df_pair").cast("double") / F.col("df1") >= 0.5)
         .select(
             F.col("t1").alias("antecedent"),
@@ -2156,10 +2214,9 @@ def _quality_weights_sql() -> str:
     return "[" + ",".join(f"CAST({w} AS BIGINT)" for w in TQ.QUALITY_WEIGHTS_MICRO) + "]"
 
 
-@register(
-    "q_quality_classifier",
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_T}) AS term FROM documents),
+# The quality classifier's per-document logit (l), from the hashed
+# bag-of-words features and the committed weights.
+_QC_LOGIT_CTES = f"""tok AS (SELECT doc_id, unnest({_T}) AS term FROM documents),
     m AS (SELECT doc_id,
                  CAST((({_fh_digit(1)} * 16 + {_fh_digit(2)}) % 64) AS INTEGER) AS bucket,
                  CASE WHEN {_fh_digit(3)} < 8 THEN 1 ELSE -1 END AS sign
@@ -2170,7 +2227,34 @@ def _quality_weights_sql() -> str:
                  CAST({TQ.QUALITY_BIAS_MICRO} AS BIGINT)
                  + CAST(SUM(val * ({_quality_weights_sql()})[bucket + 1]) AS BIGINT)
                      AS logit_micro
-          FROM f GROUP BY doc_id)
+          FROM f GROUP BY doc_id)"""
+
+# The lexical-diversity reference label per document, over the tok CTE.
+_QC_LABEL_CTE = """lbl AS (SELECT doc_id,
+                   CASE WHEN 2 * COUNT(DISTINCT term) >= COUNT(*)
+                        THEN 1 ELSE 0 END AS label
+            FROM tok WHERE term <> '' GROUP BY doc_id)"""
+
+
+def _qc_scored_and_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The quality classifier's output and each document's lexical-diversity
+    reference ``label`` (1 when at least half its tokens are distinct)."""
+    d = table(spark, sf_dir, "documents")
+    scored = TQ.quality_classifier(d, "doc_id", "text")
+    toks = F.filter(D.ws_tokens("text"), lambda x: x != "")
+    lbl = d.select(
+        "doc_id",
+        F.when(
+            2 * F.size(F.array_distinct(toks)) >= F.size(toks), 1
+        ).otherwise(0).alias("label"),
+    ).where(F.size(toks) > 0)
+    return scored, lbl
+
+
+@register(
+    "q_quality_classifier",
+    oracle=f"""
+    WITH {_QC_LOGIT_CTES}
     SELECT d.doc_id,
            COALESCE(l.logit_micro, CAST({TQ.QUALITY_BIAS_MICRO} AS BIGINT)) AS logit_micro,
            CASE WHEN COALESCE(l.logit_micro, CAST({TQ.QUALITY_BIAS_MICRO} AS BIGINT)) >= 0
@@ -2333,16 +2417,7 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_entity_resolution",
     oracle="""
-    WITH RECURSIVE vocab AS (SELECT DISTINCT c_name AS token FROM customer),
-    variants AS (
-      SELECT token, unnest([token] ||
-             [substr(token, 1, i - 1) || substr(token, i + 1, len(token))
-              FOR i IN range(1, len(token) + 1)]) AS variant
-      FROM vocab),
-    v AS (SELECT DISTINCT token, variant FROM variants),
-    cands AS (
-      SELECT DISTINCT a.token AS tok_a, b.token AS tok_b
-      FROM v a JOIN v b ON a.variant = b.variant AND a.token < b.token),
+    WITH RECURSIVE """ + _NAME_VARIANT_PAIRS_DUCK + """,
     pairs AS (SELECT tok_a, tok_b FROM cands WHERE levenshtein(tok_a, tok_b) <= 1),
     sym AS (SELECT tok_a AS a, tok_b AS b FROM pairs
             UNION SELECT tok_b, tok_a FROM pairs),
@@ -3852,22 +3927,8 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_classifier_eval",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest({_T}) AS term FROM documents),
-    m AS (SELECT doc_id,
-                 CAST((({_fh_digit(1)} * 16 + {_fh_digit(2)}) % 64) AS INTEGER) AS bucket,
-                 CASE WHEN {_fh_digit(3)} < 8 THEN 1 ELSE -1 END AS sign
-          FROM tok WHERE term <> ''),
-    f AS (SELECT doc_id, bucket, CAST(SUM(sign) AS BIGINT) AS val
-          FROM m GROUP BY doc_id, bucket HAVING SUM(sign) <> 0),
-    l AS (SELECT doc_id,
-                 CAST({TQ.QUALITY_BIAS_MICRO} AS BIGINT)
-                 + CAST(SUM(val * ({_quality_weights_sql()})[bucket + 1]) AS BIGINT)
-                     AS logit_micro
-          FROM f GROUP BY doc_id),
-    lbl AS (SELECT doc_id,
-                   CASE WHEN 2 * COUNT(DISTINCT term) >= COUNT(*)
-                        THEN 1 ELSE 0 END AS label
-            FROM tok WHERE term <> '' GROUP BY doc_id),
+    WITH {_QC_LOGIT_CTES},
+    {_QC_LABEL_CTE},
     p AS (SELECT lbl.doc_id, lbl.label,
                  CASE WHEN COALESCE(l.logit_micro,
                                     CAST({TQ.QUALITY_BIAS_MICRO} AS BIGINT)) >= 0
@@ -3902,15 +3963,7 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "quality", "ml-eval"),
 )
 def q_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents")
-    scored = TQ.quality_classifier(d, "doc_id", "text")
-    toks = F.filter(D.ws_tokens("text"), lambda x: x != "")
-    lbl = d.select(
-        "doc_id",
-        F.when(
-            2 * F.size(F.array_distinct(toks)) >= F.size(toks), 1
-        ).otherwise(0).alias("label"),
-    ).where(F.size(toks) > 0)
+    scored, lbl = _qc_scored_and_labels(spark, sf_dir)
     p = lbl.join(scored.select("doc_id", "passed"), "doc_id", "left").select(
         "label", F.coalesce("passed", F.lit(0)).alias("pred")
     )
@@ -3939,22 +3992,8 @@ def _qc_scored_ctes() -> str:
     committed-weight quality-classifier logit (micro integers) against
     the lexical-diversity reference label — the q_classifier_eval frame
     with the CONTINUOUS score kept instead of the thresholded decision."""
-    return f"""tok AS (SELECT doc_id, unnest({_T}) AS term FROM documents),
-    m AS (SELECT doc_id,
-                 CAST((({_fh_digit(1)} * 16 + {_fh_digit(2)}) % 64) AS INTEGER) AS bucket,
-                 CASE WHEN {_fh_digit(3)} < 8 THEN 1 ELSE -1 END AS sign
-          FROM tok WHERE term <> ''),
-    f AS (SELECT doc_id, bucket, CAST(SUM(sign) AS BIGINT) AS val
-          FROM m GROUP BY doc_id, bucket HAVING SUM(sign) <> 0),
-    l AS (SELECT doc_id,
-                 CAST({TQ.QUALITY_BIAS_MICRO} AS BIGINT)
-                 + CAST(SUM(val * ({_quality_weights_sql()})[bucket + 1]) AS BIGINT)
-                     AS logit_micro
-          FROM f GROUP BY doc_id),
-    lbl AS (SELECT doc_id,
-                   CASE WHEN 2 * COUNT(DISTINCT term) >= COUNT(*)
-                        THEN 1 ELSE 0 END AS label
-            FROM tok WHERE term <> '' GROUP BY doc_id),
+    return f"""{_QC_LOGIT_CTES},
+    {_QC_LABEL_CTE},
     p AS (SELECT lbl.doc_id, lbl.label,
                  COALESCE(l.logit_micro,
                           CAST({TQ.QUALITY_BIAS_MICRO} AS BIGINT)) AS score
@@ -3963,15 +4002,7 @@ def _qc_scored_ctes() -> str:
 
 def _qc_scored_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of _qc_scored_ctes: (doc_id, label, score)."""
-    d = table(spark, sf_dir, "documents")
-    scored = TQ.quality_classifier(d, "doc_id", "text")
-    toks = F.filter(D.ws_tokens("text"), lambda x: x != "")
-    lbl = d.select(
-        "doc_id",
-        F.when(
-            2 * F.size(F.array_distinct(toks)) >= F.size(toks), 1
-        ).otherwise(0).alias("label"),
-    ).where(F.size(toks) > 0)
+    scored, lbl = _qc_scored_and_labels(spark, sf_dir)
     return lbl.join(scored.select("doc_id", "logit_micro"), "doc_id", "left").select(
         "doc_id", "label",
         F.coalesce("logit_micro", F.lit(int(TQ.QUALITY_BIAS_MICRO)).cast("bigint"))
@@ -4251,23 +4282,9 @@ def q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- MinHash-LSH recall/precision eval ---------------------------------------------
 
 def _minhash_recall_oracle() -> str:
-    r = _MINHASH_HASHES // _MINHASH_BANDS
-    hash_cols = ", ".join(
-        f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(_MINHASH_HASHES)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"md5(concat_ws('|', {', '.join(f'h{b * r + rr}' for rr in range(r))})) AS key FROM sig"
-        for b in range(_MINHASH_BANDS)
-    )
     return f"""
     WITH {_SHINGLE_CTE},
-    sig AS (SELECT doc_id, {hash_cols} FROM sh GROUP BY doc_id),
-    keyed AS ({band_rows}),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM keyed a JOIN keyed b ON a.band = b.band AND a.key = b.key
-                                AND a.doc_id < b.doc_id),
+    {_duck_lsh_candidates(_MINHASH_SIG_COLS_DUCK, "sh")},
     cinter AS (
       SELECT c.id_a, c.id_b, COUNT(*) AS inter
       FROM cands c JOIN sh a ON a.doc_id = c.id_a
@@ -4286,19 +4303,7 @@ def _minhash_recall_oracle() -> str:
       JOIN sz za ON id_a = za.doc_id JOIN sz zb ON id_b = zb.doc_id
       WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= {D.MINHASH_THRESHOLD}),
     s AS (
-      SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
-             CAST((SELECT COUNT(*) FROM cands) AS BIGINT) AS n_candidates,
-             CAST((SELECT COUNT(*) FROM ver) AS BIGINT) AS n_verified)
-    SELECT n_truth, n_candidates, n_verified,
-           CAST(CASE WHEN n_truth = 0 THEN 0
-                ELSE (2 * 1000000 * n_verified + n_truth) // (2 * n_truth) END
-                AS BIGINT) AS recall_micro,
-           CAST(CASE WHEN n_candidates = 0 THEN 0
-                ELSE (2 * 1000000 * n_verified + n_candidates)
-                     // (2 * n_candidates) END
-                AS BIGINT) AS cand_precision_micro
-    FROM s
-    """
+      SELECT """ + _RECALL_SELECT_DUCK
 
 
 @register(
@@ -4318,7 +4323,7 @@ def _minhash_recall_oracle() -> str:
 )
 def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.dedup import (
-        _banded_keys, _min_hash, shingle_docs,
+        _min_hash, shingle_docs,
     )
 
     d = table(spark, sf_dir, "documents")
@@ -4327,16 +4332,8 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         *[_min_hash(F.col("shingles"), i).alias(f"h{i}") for i in range(_MINHASH_HASHES)],
     )
-    keyed = _banded_keys(sig, "doc_id", _MINHASH_HASHES, _MINHASH_BANDS)
-    ka = keyed.select(F.col("doc_id").alias("id_a"), "band", "key")
-    kb = keyed.select(F.col("doc_id").alias("id_b"), "band", "key")
-    cands = (
-        ka.join(kb, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .localCheckpoint()  # feeds the count AND the verified-flag join
-    )
+    # feeds the count AND the verified-flag join
+    cands = _lsh_candidate_pairs(sig).localCheckpoint()
     # Round-12: the verify pass is DERIVED from the truth pass instead of
     # re-aggregated. ver == truth ∩ cands exactly: a candidate pair with
     # no shared shingle has jaccard 0 (fails verify) and is absent from
@@ -4371,29 +4368,7 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id_a", "id_b")
     )
-    # one aggregation yields BOTH counts: n_truth = all truth pairs,
-    # n_verified = truth pairs that are also candidates (left join against
-    # the distinct candidate set adds a 0/1 flag, never duplicates)
-    flagged = truth.join(
-        cands.withColumn("is_cand", F.lit(1)), ["id_a", "id_b"], "left"
-    )
-    stats = flagged.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_truth"),
-        F.coalesce(F.sum("is_cand"), F.lit(0)).cast("bigint").alias("n_verified"),
-    )
-    n_cands = cands.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
-    return (
-        stats.crossJoin(F.broadcast(n_cands))
-        .selectExpr(
-            "n_truth", "n_candidates", "n_verified",
-            "CAST(CASE WHEN n_truth = 0 THEN 0"
-            " ELSE (2 * 1000000 * n_verified + n_truth) div (2 * n_truth) END"
-            " AS BIGINT) AS recall_micro",
-            "CAST(CASE WHEN n_candidates = 0 THEN 0"
-            " ELSE (2 * 1000000 * n_verified + n_candidates)"
-            " div (2 * n_candidates) END AS BIGINT) AS cand_precision_micro",
-        )
-    )
+    return _recall_stats(truth, cands)
 
 
 # --- weighted MinHash (integer-weight consistent sampling) -----------------------
@@ -4419,25 +4394,13 @@ wsz AS (SELECT doc_id, CAST(SUM(w) AS BIGINT) AS s FROM wtf GROUP BY doc_id)
 
 
 def _wmh_sig_ctes() -> str:
-    r = _MINHASH_HASHES // _MINHASH_BANDS
     hash_cols = ", ".join(
         f"MIN(md5('{i}:' || g || ':' || CAST(i2 AS VARCHAR))) AS h{i}"
         for i in range(_MINHASH_HASHES)
     )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"md5(concat_ws('|', {', '.join(f'h{b * r + rr}' for rr in range(r))})) AS key"
-        " FROM sig"
-        for b in range(_MINHASH_BANDS)
-    )
     return f"""
 rep AS (SELECT doc_id, g, unnest(range(1, CAST(w + 1 AS BIGINT))) AS i2 FROM wtf),
-sig AS (SELECT doc_id, {hash_cols} FROM rep GROUP BY doc_id),
-keyed AS ({band_rows}),
-cands AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM keyed a JOIN keyed b ON a.band = b.band AND a.key = b.key
-                            AND a.doc_id < b.doc_id)
+{_duck_lsh_candidates(hash_cols, "rep")}
 """
 
 
@@ -4475,21 +4438,13 @@ cands AS (
 )
 def q_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.dedup import (
-        _banded_keys, weighted_minhash_sigs_from_tf, weighted_shingle_tf_rows,
+        weighted_minhash_sigs_from_tf, weighted_shingle_tf_rows,
     )
 
     d = table(spark, sf_dir, "documents")
     wtf = weighted_shingle_tf_rows(d, "doc_id", "text").persist()
     sig = weighted_minhash_sigs_from_tf(wtf, "doc_id", _MINHASH_HASHES)
-    keyed = _banded_keys(sig, "doc_id", _MINHASH_HASHES, _MINHASH_BANDS)
-    ka = keyed.select(F.col("doc_id").alias("id_a"), "band", "key")
-    kb = keyed.select(F.col("doc_id").alias("id_b"), "band", "key")
-    cands = (
-        ka.join(kb, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cands = _lsh_candidate_pairs(sig)
     sizes = wtf.groupBy("doc_id").agg(F.sum("w").cast("bigint").alias("s"))
     wa = wtf.select(F.col("doc_id").alias("id_a"), "g", F.col("w").alias("w_a"))
     wb = wtf.select(F.col("doc_id").alias("id_b"), "g", F.col("w").alias("w_b"))
@@ -4532,18 +4487,7 @@ def q_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth AS (SELECT id_a, id_b FROM tm
               JOIN wsz za ON id_a = za.doc_id JOIN wsz zb ON id_b = zb.doc_id
               WHERE 3 * m >= za.s + zb.s),
-    s AS (SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
-                 CAST((SELECT COUNT(*) FROM cands) AS BIGINT) AS n_candidates,
-                 CAST((SELECT COUNT(*) FROM ver) AS BIGINT) AS n_verified)
-    SELECT n_truth, n_candidates, n_verified,
-           CAST(CASE WHEN n_truth = 0 THEN 0
-                ELSE (2 * 1000000 * n_verified + n_truth) // (2 * n_truth) END
-                AS BIGINT) AS recall_micro,
-           CAST(CASE WHEN n_candidates = 0 THEN 0
-                ELSE (2 * 1000000 * n_verified + n_candidates)
-                     // (2 * n_candidates) END AS BIGINT) AS cand_precision_micro
-    FROM s
-    """,
+    s AS (SELECT """ + _RECALL_SELECT_DUCK,
     description="weighted-MinHash approximation-quality eval — the "
     "q_minhash_recall audit extended to the weighted family (r6 VERDICT "
     "ask): verified weighted-LSH pairs vs the EXACT weighted-Jaccard "
@@ -4555,22 +4499,13 @@ def q_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_weighted_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from platform_etl_backend_spark.operators.dedup import (
-        _banded_keys, weighted_minhash_sigs_from_tf, weighted_shingle_tf_rows,
+        weighted_minhash_sigs_from_tf, weighted_shingle_tf_rows,
     )
 
     d = table(spark, sf_dir, "documents")
     wtf = weighted_shingle_tf_rows(d, "doc_id", "text").persist()
     sig = weighted_minhash_sigs_from_tf(wtf, "doc_id", _MINHASH_HASHES)
-    keyed = _banded_keys(sig, "doc_id", _MINHASH_HASHES, _MINHASH_BANDS)
-    ka = keyed.select(F.col("doc_id").alias("id_a"), "band", "key")
-    kb = keyed.select(F.col("doc_id").alias("id_b"), "band", "key")
-    cands = (
-        ka.join(kb, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .localCheckpoint()  # feeds the count AND the verify join
-    )
+    cands = _lsh_candidate_pairs(sig).localCheckpoint()  # feeds the count AND the verify join
     wtf = wtf.localCheckpoint()  # feeds sig, sizes AND the all-pairs truth join
     sizes = wtf.groupBy("doc_id").agg(F.sum("w").cast("bigint").alias("s"))
     za = sizes.select(F.col("doc_id").alias("id_a"), F.col("s").alias("s_a"))
@@ -4594,26 +4529,7 @@ def q_weighted_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(3 * F.col("m") >= F.col("s_a") + F.col("s_b"))
         .select("id_a", "id_b")
     )
-    flagged = truth.join(
-        cands.withColumn("is_cand", F.lit(1)), ["id_a", "id_b"], "left"
-    )
-    stats = flagged.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_truth"),
-        F.coalesce(F.sum("is_cand"), F.lit(0)).cast("bigint").alias("n_verified"),
-    )
-    n_cands = cands.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
-    return (
-        stats.crossJoin(F.broadcast(n_cands))
-        .selectExpr(
-            "n_truth", "n_candidates", "n_verified",
-            "CAST(CASE WHEN n_truth = 0 THEN 0"
-            " ELSE (2 * 1000000 * n_verified + n_truth) div (2 * n_truth) END"
-            " AS BIGINT) AS recall_micro",
-            "CAST(CASE WHEN n_candidates = 0 THEN 0"
-            " ELSE (2 * 1000000 * n_verified + n_candidates)"
-            " div (2 * n_candidates) END AS BIGINT) AS cand_precision_micro",
-        )
-    )
+    return _recall_stats(truth, cands)
 
 
 # --- word2vec negative-sampling table ---------------------------------------------
@@ -5123,6 +5039,29 @@ _NB_PRIOR_LN = duck_portable_ln_ratio("n_s", "n_docs")
 _NB_CLASSES = tuple(f"src{i}" for i in range(20))
 
 
+def _nb_class_sums(classes: list[str]) -> list[Column]:
+    """Per class s, the doc's summed ``tf * c_s`` word costs as ``s_{s}``."""
+    return [
+        F.sum(F.col("tf") * F.col(f"c_{s}")).cast("bigint").alias(f"s_{s}")
+        for s in classes
+    ]
+
+
+def _nb_predicted(classes: list[str]) -> Column:
+    """The class with the highest ``s_{s} + p_{s}``, ties to the first of
+    ``classes`` (sorted ascending)."""
+    return F.greatest(
+        *[
+            F.struct(
+                (F.col(f"s_{s}") + F.col(f"p_{s}")).alias("score"),
+                F.lit(-i).alias("ni"),
+                F.lit(s).alias("s"),
+            )
+            for i, s in enumerate(classes)
+        ]
+    ).getField("s")
+
+
 @register(
     "q_naive_bayes",
     oracle=f"""
@@ -5254,26 +5193,11 @@ def q_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = (
         tf.join(F.broadcast(costp), "w")
         .groupBy("doc_id", F.col("source").alias("actual"))
-        .agg(
-            *[
-                F.sum(F.col("tf") * F.col(f"c_{s}")).cast("bigint").alias(f"s_{s}")
-                for s in classes
-            ]
-        )
+        .agg(*_nb_class_sums(classes))
         .crossJoin(F.broadcast(priorp))
     )
-    best = F.greatest(
-        *[
-            F.struct(
-                (F.col(f"s_{s}") + F.col(f"p_{s}")).alias("score"),
-                F.lit(-i).alias("ni"),
-                F.lit(s).alias("s"),
-            )
-            for i, s in enumerate(classes)
-        ]
-    )
     return (
-        per_doc.select("actual", best.getField("s").alias("predicted"))
+        per_doc.select("actual", _nb_predicted(classes).alias("predicted"))
         .groupBy("actual", "predicted")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         .orderBy("actual", "predicted")
@@ -5296,9 +5220,9 @@ _REVAL_W_SQL = ", ".join(f"({i + 1}, {w!r})" for i, w in enumerate(_REVAL_W))
 _REVAL_IDF = duck_portable_ln_ratio("2 * n_docs + 2", "2 * df + 1")
 
 
-@register(
-    "q_retrieval_eval",
-    oracle=f"""
+# The retrieval evals' corpus: query terms q, per-doc term counts tf, doc
+# lengths dl, term document frequencies dfreq and corpus totals g.
+_REVAL_CORPUS_DUCK = f"""
     WITH q(term) AS (SELECT unnest({list(_REVAL_TERMS)!r})),
     toks AS (SELECT doc_id, unnest({_T}) AS w FROM documents),
     tf AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf
@@ -5307,9 +5231,11 @@ _REVAL_IDF = duck_portable_ln_ratio("2 * n_docs + 2", "2 * df + 1")
     dfreq AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY w),
     g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
                  CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-    scored AS (
-      SELECT q.term, tf.doc_id, tf.tf,
-             CASE WHEN tf.tf >= 4 THEN 3 WHEN tf.tf >= 2 THEN 1 ELSE 0 END AS rel,
+"""
+
+# The rel and score columns of the scored CTE (BM25 over the corpus CTEs),
+# and its FROM clause.
+_REVAL_SCORED_DUCK = f"""             CASE WHEN tf.tf >= 4 THEN 3 WHEN tf.tf >= 2 THEN 1 ELSE 0 END AS rel,
              ROUND({_REVAL_IDF}
                    * (tf.tf * ({_REVAL_K1} + 1))
                    / (tf.tf + {_REVAL_K1} * (1 - {_REVAL_B}
@@ -5317,7 +5243,62 @@ _REVAL_IDF = duck_portable_ln_ratio("2 * n_docs + 2", "2 * df + 1")
       FROM q JOIN tf ON q.term = tf.w
       JOIN dfreq ON dfreq.w = tf.w
       JOIN dl ON dl.doc_id = tf.doc_id, g),
-    ranked AS (
+"""
+
+
+def _bm25_term_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per (query term, doc containing it): ``tf``, doc length
+    ``dl``, the term's ``df`` and the corpus ``n_docs`` and ``avgdl``."""
+    d = table(spark, sf_dir, "documents")
+    # Round-11 rewrite (guide §2.3, project/filter before the exchange):
+    # only the 8 query terms' tf rows ever reach the scoring join, and a
+    # doc's length equals size(tokens) (split of a trimmed string is never
+    # an empty list, so dl = SUM(tf) over all words = the array length).
+    # The former full-corpus (doc, word) rollup + per-doc dl rollup +
+    # full-vocab dfreq collapse to: a map-side dl column carried through
+    # the explode, a pre-shuffle isin filter down to the term set, and a
+    # term-only dfreq — the full token stream never crosses an exchange
+    # and the dl join disappears.
+    toks = d.select(
+        "doc_id",
+        F.size(D.ws_tokens("text")).cast("bigint").alias("dl"),
+        F.explode(D.ws_tokens("text")).alias("w"),
+    )
+    tf = (
+        toks.where(F.col("w").isin(*_REVAL_TERMS))
+        .groupBy("doc_id", "dl", "w")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+        .persist()  # dfreq + scored both consume it: one corpus explode
+    )
+    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+    g = d.select(F.size(D.ws_tokens("text")).cast("bigint").alias("dl")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    )
+    q = spark.createDataFrame([(t,) for t in _REVAL_TERMS], "term string")
+    return (
+        F.broadcast(q).join(tf, q.term == tf.w)
+        .join(F.broadcast(dfreq), "w")  # vocab-bounded — safe at any scale
+        .crossJoin(F.broadcast(g))
+    )
+
+
+def _bm25_score() -> Column:
+    """BM25 of a term match (portable integer-ratio idf), rounded to 6 places."""
+    idf = _portable_ln_ratio(2 * F.col("n_docs") + 2, 2 * F.col("df") + 1)
+    sat = (F.col("tf") * (_REVAL_K1 + 1)) / (
+        F.col("tf")
+        + _REVAL_K1 * (1 - _REVAL_B + _REVAL_B * F.col("dl") / F.col("avgdl"))
+    )
+    return F.round(idf * sat, 6)
+
+
+@register(
+    "q_retrieval_eval",
+    oracle=_REVAL_CORPUS_DUCK + """
+    scored AS (
+      SELECT q.term, tf.doc_id, tf.tf,
+""" + _REVAL_SCORED_DUCK + f"""    ranked AS (
       SELECT term, doc_id, rel, score,
              ROW_NUMBER() OVER (PARTITION BY term
                                 ORDER BY score DESC, doc_id) AS r
@@ -5359,50 +5340,14 @@ _REVAL_IDF = duck_portable_ln_ratio("2 * n_docs + 2", "2 * df + 1")
     tags=("text", "retrieval", "ml-eval"),
 )
 def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
-
-    d = table(spark, sf_dir, "documents")
-    # Round-11 rewrite (guide §2.3, project/filter before the exchange):
-    # only the 8 query terms' tf rows ever reach the scoring join, and a
-    # doc's length equals size(tokens) (split of a trimmed string is never
-    # an empty list, so dl = SUM(tf) over all words = the array length).
-    # The former full-corpus (doc, word) rollup + per-doc dl rollup +
-    # full-vocab dfreq collapse to: a map-side dl column carried through
-    # the explode, a pre-shuffle isin filter down to the term set, and a
-    # term-only dfreq — the full token stream never crosses an exchange
-    # and the dl join disappears.
-    toks = d.select(
-        "doc_id",
-        F.size(D.ws_tokens("text")).cast("bigint").alias("dl"),
-        F.explode(D.ws_tokens("text")).alias("w"),
-    )
-    tf = (
-        toks.where(F.col("w").isin(*_REVAL_TERMS))
-        .groupBy("doc_id", "dl", "w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .persist()  # dfreq + scored both consume it: one corpus explode
-    )
-    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    g = d.select(F.size(D.ws_tokens("text")).cast("bigint").alias("dl")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    q = spark.createDataFrame([(t,) for t in _REVAL_TERMS], "term string")
-    idf = portable_ln_ratio(2 * F.col("n_docs") + 2, 2 * F.col("df") + 1)
-    sat = (F.col("tf") * (_REVAL_K1 + 1)) / (
-        F.col("tf")
-        + _REVAL_K1 * (1 - _REVAL_B + _REVAL_B * F.col("dl") / F.col("avgdl"))
-    )
     scored = (
-        F.broadcast(q).join(tf, q.term == tf.w)
-        .join(F.broadcast(dfreq), "w")  # vocab-bounded — safe at any scale
-        .crossJoin(F.broadcast(g))
+        _bm25_term_matches(spark, sf_dir)
         .select(
             "term", "doc_id",
             F.when(F.col("tf") >= 4, 3)
             .when(F.col("tf") >= 2, 1)
             .otherwise(0).alias("rel"),
-            F.round(idf * sat, 6).alias("score"),
+            _bm25_score().alias("score"),
         )
     ).persist()
     wts = spark.createDataFrame(
@@ -5756,26 +5701,11 @@ def q_nb_crossval(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = (
         tf.join(F.broadcast(costp), ["fold", "w"])
         .groupBy("doc_id", "fold", F.col("source").alias("actual"))
-        .agg(
-            *[
-                F.sum(F.col("tf") * F.col(f"c_{s}")).cast("bigint").alias(f"s_{s}")
-                for s in classes
-            ]
-        )
+        .agg(*_nb_class_sums(classes))
         .join(F.broadcast(priorp), "fold")
     )
-    best = F.greatest(
-        *[
-            F.struct(
-                (F.col(f"s_{s}") + F.col(f"p_{s}")).alias("score"),
-                F.lit(-i).alias("ni"),
-                F.lit(s).alias("s"),
-            )
-            for i, s in enumerate(classes)
-        ]
-    )
     return (
-        per_doc.select("fold", "actual", best.getField("s").alias("predicted"))
+        per_doc.select("fold", "actual", _nb_predicted(classes).alias("predicted"))
         .groupBy("fold")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -5800,26 +5730,10 @@ _AP_LCM = 2520
 
 @register(
     "q_map_eval",
-    oracle=f"""
-    WITH q(term) AS (SELECT unnest({list(_REVAL_TERMS)!r})),
-    toks AS (SELECT doc_id, unnest({_T}) AS w FROM documents),
-    tf AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM toks GROUP BY doc_id, w),
-    dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-    dfreq AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY w),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                 CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
+    oracle=_REVAL_CORPUS_DUCK + """
     scored AS (
       SELECT q.term, tf.doc_id,
-             CASE WHEN tf.tf >= 4 THEN 3 WHEN tf.tf >= 2 THEN 1 ELSE 0 END AS rel,
-             ROUND({_REVAL_IDF}
-                   * (tf.tf * ({_REVAL_K1} + 1))
-                   / (tf.tf + {_REVAL_K1} * (1 - {_REVAL_B}
-                      + {_REVAL_B} * dl.dl / avgdl)), 6) AS score
-      FROM q JOIN tf ON q.term = tf.w
-      JOIN dfreq ON dfreq.w = tf.w
-      JOIN dl ON dl.doc_id = tf.doc_id, g),
-    ranked AS (
+""" + _REVAL_SCORED_DUCK + f"""    ranked AS (
       SELECT term, CASE WHEN rel > 0 THEN 1 ELSE 0 END AS hit,
              ROW_NUMBER() OVER (PARTITION BY term
                                 ORDER BY score DESC, doc_id) AS r
@@ -5855,44 +5769,10 @@ _AP_LCM = 2520
     tags=("text", "retrieval", "ml-eval"),
 )
 def q_map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from platform_etl_backend_spark.functions.portable_math import portable_ln_ratio
-
-    d = table(spark, sf_dir, "documents")
-    # Same round-11 shape as q_retrieval_eval: dl rides the explode
-    # map-side and the token stream is filtered to the 8 query terms
-    # BEFORE the only aggregation shuffle (dl = size(tokens) = SUM(tf)
-    # exactly; the full-vocab dfreq was only ever consumed at the terms).
-    toks = d.select(
-        "doc_id",
-        F.size(D.ws_tokens("text")).cast("bigint").alias("dl"),
-        F.explode(D.ws_tokens("text")).alias("w"),
-    )
-    tf = (
-        toks.where(F.col("w").isin(*_REVAL_TERMS))
-        .groupBy("doc_id", "dl", "w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .persist()  # dfreq + scored both consume it: one corpus explode
-    )
-    dfreq = tf.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    g = d.select(F.size(D.ws_tokens("text")).cast("bigint").alias("dl")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    q = spark.createDataFrame([(t,) for t in _REVAL_TERMS], "term string")
-    idf = portable_ln_ratio(2 * F.col("n_docs") + 2, 2 * F.col("df") + 1)
-    sat = (F.col("tf") * (_REVAL_K1 + 1)) / (
-        F.col("tf")
-        + _REVAL_K1 * (1 - _REVAL_B + _REVAL_B * F.col("dl") / F.col("avgdl"))
-    )
-    scored = (
-        F.broadcast(q).join(tf, q.term == tf.w)
-        .join(F.broadcast(dfreq), "w")
-        .crossJoin(F.broadcast(g))
-        .select(
-            "term", "doc_id",
-            F.when(F.col("tf") >= 2, 1).otherwise(0).alias("hit"),
-            F.round(idf * sat, 6).alias("score"),
-        )
+    scored = _bm25_term_matches(spark, sf_dir).select(
+        "term", "doc_id",
+        F.when(F.col("tf") >= 2, 1).otherwise(0).alias("hit"),
+        _bm25_score().alias("score"),
     )
     w_rank = Window.partitionBy("term").orderBy(F.desc("score"), "doc_id")
     ranked = scored.withColumn("r", F.row_number().over(w_rank).cast("bigint"))

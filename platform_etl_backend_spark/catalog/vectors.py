@@ -5,7 +5,7 @@ sign-bit-bucketed (LSH) approximate variant that survives 100TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
@@ -368,14 +368,18 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivf_top1(emb, cents, "vec_id", "embedding")
 
 
-def _silhouette_oracle() -> str:
-    """Centroid-based silhouette on the kmeans cells (reuses the fit CTEs)."""
-    cos = (
-        "ROUND(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
+# Cosine similarity of list expressions {a} and {b}, rounded to 6 places.
+_COS_DUCK = (
+    "ROUND(list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
+)
+
+
+def _kmeans_ranked_ctes() -> str:
+    """The k-means fit CTEs, then each vector's cosine cc to every final
+    centroid (scored), ranked best first per vector as rn (rk)."""
     fit = ",\n    ".join(_kmeans_cte_parts(_KMEANS_K, _KMEANS_ITERS, _EMB_DIM)[:-1])  # drop fasg
-    sc = cos.format(a="v.vec", b="c.cvec")
+    sc = _COS_DUCK.format(a="v.vec", b="c.cvec")
     return f"""
     WITH {fit},
     scored AS (
@@ -384,7 +388,12 @@ def _silhouette_oracle() -> str:
       SELECT vid, cell_id, cc,
              ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cc DESC, cell_id)
                AS rn
-      FROM scored),
+      FROM scored)"""
+
+
+def _silhouette_oracle() -> str:
+    """Centroid-based silhouette on the kmeans cells (reuses the fit CTEs)."""
+    return _kmeans_ranked_ctes() + f""",
     own AS (SELECT vid, cell_id, cc AS c_own FROM rk WHERE rn = 1),
     oth AS (SELECT vid, MAX(cc) AS c_oth FROM rk WHERE rn > 1 GROUP BY vid),
     sv AS (
@@ -473,22 +482,8 @@ def q_silhouette_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _davies_bouldin_oracle() -> str:
     """Davies-Bouldin index on the kmeans cells (reuses the fit CTEs)."""
-    cos = (
-        "ROUND(list_dot_product({a}, {b}) / "
-        "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-    fit = ",\n    ".join(_kmeans_cte_parts(_KMEANS_K, _KMEANS_ITERS, _EMB_DIM)[:-1])  # drop fasg
-    sc = cos.format(a="v.vec", b="c.cvec")
-    cm = cos.format(a="a.cvec", b="b.cvec")
-    return f"""
-    WITH {fit},
-    scored AS (
-      SELECT v.vid, c.cell_id, {sc} AS cc FROM v, cent{_KMEANS_ITERS} c),
-    rk AS (
-      SELECT vid, cell_id, cc,
-             ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cc DESC, cell_id)
-               AS rn
-      FROM scored),
+    cm = _COS_DUCK.format(a="a.cvec", b="b.cvec")
+    return _kmeans_ranked_ctes() + f""",
     own AS (SELECT vid, cell_id, cc FROM rk WHERE rn = 1),
     scat AS (
       SELECT cell_id, CAST(COUNT(*) AS BIGINT) AS n,
@@ -809,19 +804,46 @@ def q_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_embedding_covariance",
-    oracle="""
-    WITH x AS (SELECT vec_id,
-                      generate_subscripts(embedding, 1) - 1 AS dim,
-                      CAST(floor(unnest(embedding::DOUBLE[]) * 1000000.0) AS BIGINT) AS q
-               FROM embeddings),
+# Per embedding dimension pair i <= j: the count n and the exact power sums
+# si, sj, sij of the micro-unit quantized values.
+_COV_SUMS_DUCK = """x AS (SELECT vec_id,
+                 generate_subscripts(embedding, 1) - 1 AS dim,
+                 CAST(floor(unnest(embedding::DOUBLE[]) * 1000000.0) AS BIGINT) AS q
+          FROM embeddings),
     g AS (SELECT CAST(a.dim AS INTEGER) AS i, CAST(b.dim AS INTEGER) AS j,
                  COUNT(*) AS n,
                  CAST(SUM(a.q) AS BIGINT) AS si, CAST(SUM(b.q) AS BIGINT) AS sj,
                  CAST(SUM(a.q * b.q) AS BIGINT) AS sij
           FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.dim <= b.dim
-          GROUP BY i, j)
+          GROUP BY i, j)"""
+
+
+def _covariance_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per embedding dimension pair ``(i, j)``: the count ``n`` and the exact
+    power sums ``si``, ``sj``, ``sij`` of the micro-unit quantized values."""
+    emb = table(spark, sf_dir, "embeddings")
+    partials = S.covariance_power_sums(emb, "embedding")
+    return partials.groupBy("i", "j").agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum(F.col("si").cast("decimal(38,0)")).cast("bigint").alias("si"),
+        F.sum(F.col("sj").cast("decimal(38,0)")).cast("bigint").alias("sj"),
+        F.sum(F.col("sij").cast("decimal(38,0)")).cast("bigint").alias("sij"),
+    )
+
+
+def _covariance() -> Column:
+    """cov(i, j) from the power sums of ``_covariance_sums``."""
+    return (
+        F.col("sij").cast("double") / F.col("n")
+        - (F.col("si").cast("double") / F.col("n"))
+        * (F.col("sj").cast("double") / F.col("n"))
+    ) / F.lit(1000000000000.0)
+
+
+@register(
+    "q_embedding_covariance",
+    oracle=f"""
+    WITH {_COV_SUMS_DUCK}
     SELECT i, j, n,
            ROUND((CAST(sij AS DOUBLE) / n
                   - (CAST(si AS DOUBLE) / n) * (CAST(sj AS DOUBLE) / n))
@@ -845,19 +867,8 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emits d² partial rows per BATCH (0.5s). Quantization is bit-identical
     # (floor(v*1e6) on float64), partials are exact int64, merge sums ride
     # DECIMAL(38,0) so corpus-scale totals cannot overflow.
-    emb = table(spark, sf_dir, "embeddings")
-    partials = S.covariance_power_sums(emb, "embedding")
-    g = partials.groupBy("i", "j").agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum(F.col("si").cast("decimal(38,0)")).cast("bigint").alias("si"),
-        F.sum(F.col("sj").cast("decimal(38,0)")).cast("bigint").alias("sj"),
-        F.sum(F.col("sij").cast("decimal(38,0)")).cast("bigint").alias("sij"),
-    )
-    cov = (
-        F.col("sij").cast("double") / F.col("n")
-        - (F.col("si").cast("double") / F.col("n"))
-        * (F.col("sj").cast("double") / F.col("n"))
-    ) / F.lit(1000000000000.0)
+    g = _covariance_sums(spark, sf_dir)
+    cov = _covariance()
     return g.select("i", "j", "n", F.round(cov, 9).alias("cov"))
 
 
@@ -1278,17 +1289,8 @@ def _duck_cov_cte() -> str:
     oracle (micro-unit quantize + integer power sums, ROUND 9) plus the
     mirrored lower triangle. Both engines start power iteration from the
     IDENTICAL rounded matrix."""
-    return """
-    x AS (SELECT vec_id,
-                 generate_subscripts(embedding, 1) - 1 AS dim,
-                 CAST(floor(unnest(embedding::DOUBLE[]) * 1000000.0) AS BIGINT) AS q
-          FROM embeddings),
-    g AS (SELECT CAST(a.dim AS INTEGER) AS i, CAST(b.dim AS INTEGER) AS j,
-                 COUNT(*) AS n,
-                 CAST(SUM(a.q) AS BIGINT) AS si, CAST(SUM(b.q) AS BIGINT) AS sj,
-                 CAST(SUM(a.q * b.q) AS BIGINT) AS sij
-          FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.dim <= b.dim
-          GROUP BY i, j),
+    return f"""
+    {_COV_SUMS_DUCK},
     ut AS (SELECT i, j,
                   ROUND((CAST(sij AS DOUBLE) / n
                          - (CAST(si AS DOUBLE) / n) * (CAST(sj AS DOUBLE) / n))
@@ -1345,19 +1347,8 @@ _PCA_ITERS = 20
     tags=("vectors", "stats", "pca", "iterative"),
 )
 def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    partials = S.covariance_power_sums(emb, "embedding")
-    g = partials.groupBy("i", "j").agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum(F.col("si").cast("decimal(38,0)")).cast("bigint").alias("si"),
-        F.sum(F.col("sj").cast("decimal(38,0)")).cast("bigint").alias("sj"),
-        F.sum(F.col("sij").cast("decimal(38,0)")).cast("bigint").alias("sij"),
-    )
-    cov = (
-        F.col("sij").cast("double") / F.col("n")
-        - (F.col("si").cast("double") / F.col("n"))
-        * (F.col("sj").cast("double") / F.col("n"))
-    ) / F.lit(1000000000000.0)
+    g = _covariance_sums(spark, sf_dir)
+    cov = _covariance()
     ut = g.select("i", "j", F.round(cov, 9).alias("cov"))
     cm = ut.unionAll(
         ut.where(F.col("i") != F.col("j")).select(

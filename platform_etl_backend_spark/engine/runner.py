@@ -40,7 +40,9 @@ def run_steps(step_names: list[str], config: Mapping[str, Any],
               spark: SparkSession | None = None) -> None:
     """Run steps sequentially in the order given (Main.scala:33-40). Every
     step name and IO config block is checked before a session starts or any
-    step runs, so a bad name or key late in the list writes nothing."""
+    step runs, so a bad name or key late in the list writes nothing. A
+    configured output that the step does not return raises before that
+    step writes anything."""
     from platform_etl_backend_spark.steps import STEPS, run_step  # late: avoid cycles
 
     unknown = [n for n in step_names if n not in STEPS]
@@ -63,6 +65,12 @@ def run_steps(step_names: list[str], config: Mapping[str, Any],
             inputs = read_from(spark, in_conf)
             outputs = run_step(spark, name, {k: r.data for k, r in inputs.items()},
                                **params)
+            missing = sorted(out_conf.keys() - outputs.keys())
+            if missing:
+                raise ValueError(
+                    f"step '{name}' does not return configured output(s) {missing}; "
+                    f"it returns {sorted(outputs)}"
+                )
             write_to(
                 {
                     k: IOResource(df, out_conf[k])

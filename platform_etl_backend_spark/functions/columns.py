@@ -43,6 +43,23 @@ def flatten_cat(*array_cols: Column | str) -> Column:
     return F.array_distinct(F.filter(normed, lambda x: x.isNotNull() & (x != F.lit(""))))
 
 
+def word_ngrams_upto(toks: Column, max_n: int) -> Column:
+    """Every 1- to ``max_n``-word n-gram of the token array ``toks``, each
+    joined by single spaces, in order of n then position."""
+    return F.flatten(
+        F.transform(
+            F.sequence(F.lit(1), F.lit(max_n)),
+            lambda n: F.when(
+                F.size(toks) >= n,
+                F.transform(
+                    F.sequence(F.lit(1), F.greatest(F.size(toks) - n + 1, F.lit(1))),
+                    lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+                ),
+            ).otherwise(F.array().cast("array<string>")),
+        )
+    )
+
+
 def safe_array_union(*cols: Column | str) -> Column:
     """Null-safe n-ary array union (Helpers.scala:346-347): coalesce each
     operand with an empty array, then pairwise array_union."""

@@ -91,6 +91,19 @@ def bag_fingerprint_groups(df: DataFrame, id_col: str, text_col: str) -> DataFra
     )
 
 
+def _jaccard_at_least_half(pairs: DataFrame) -> DataFrame:
+    """``pairs`` (with ``inter``, ``sz_a``, ``sz_b``) plus ``jaccard`` =
+    inter / union rounded to 6 places, keeping pairs with jaccard >= 0.5."""
+    return pairs.withColumn(
+        "jaccard",
+        F.round(
+            F.col("inter").cast("double")
+            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+            6,
+        ),
+    ).where(F.col("jaccard") >= 0.5)
+
+
 def prefix_filtered_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
@@ -179,21 +192,8 @@ def prefix_filtered_jaccard_pairs(
         F.col(id_col).alias("id_b"), F.col("sh_arr").alias("sh_b"), F.col("n").alias("sz_b")
     )
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("bigint")
-    return (
-        cands.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b", "inter", "jaccard")
-    )
+    pairs = cands.join(da, "id_a").join(db, "id_b").withColumn("inter", inter)
+    return _jaccard_at_least_half(pairs).select("id_a", "id_b", "inter", "jaccard")
 
 
 def ngram_jaccard_pairs(
@@ -218,20 +218,8 @@ def ngram_jaccard_pairs(
     )
     za = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     zb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    jac = (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= 0.5)
-    )
-    return jac.select("id_a", "id_b", "inter", "jaccard")
+    pairs = inter.join(za, "id_a").join(zb, "id_b")
+    return _jaccard_at_least_half(pairs).select("id_a", "id_b", "inter", "jaccard")
 
 
 def decontamination_hits(
@@ -605,17 +593,6 @@ def fuzzy_pairs_damerau1(df: DataFrame, id_col: str, str_col: str) -> DataFrame:
     return accepted.distinct()
 
 
-def fuzzy_candidates_dist1(
-    df: DataFrame, id_col: str, str_col: str
-) -> DataFrame:
-    """Distinct candidate (tok_a, tok_b) pairs sharing a 1-deletion
-    variant. Kept as the public blocking API; the verifiers consume the
-    PRE-distinct :func:`_variant_pair_candidates` and dedup after their
-    filter instead, so the distinct exchange carries only accepted pairs.
-    """
-    return _variant_pair_candidates(df, id_col, str_col).distinct()
-
-
 def _variant_pair_candidates(
     df: DataFrame, id_col: str, str_col: str, max_block_cost: int | None = None
 ) -> DataFrame:
@@ -683,7 +660,7 @@ def _variant_pair_candidates(
         cost = int(cost_row["cost"] or 0)
         if cost > max_block_cost:
             raise ValueError(
-                f"fuzzy_candidates_dist1: blocking pair cost {cost} exceeds "
+                f"fuzzy_pairs_dist1: blocking pair cost {cost} exceeds "
                 f"max_block_cost={max_block_cost}; the variant-key distribution "
                 "is pathological for this input — pre-split the blocking key "
                 "(e.g. add a length or prefix component) or raise the bound"

@@ -404,6 +404,33 @@ def driver_closure(
     }
 
 
+def _distinct_edges(edges: DataFrame) -> DataFrame:
+    """The distinct ``src -> dst`` edges as ``s -> d``, checkpointed (every
+    round scans them)."""
+    return (
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _edge_nodes(e: DataFrame) -> DataFrame:
+    """Every node that ends an edge of ``e``, once."""
+    return (
+        e.select(F.col("s").alias("node"))
+        .unionByName(e.select(F.col("d").alias("node")))
+        .distinct()
+    )
+
+
+def _with_outdeg(e: DataFrame) -> DataFrame:
+    """``e`` with each source's out-degree ``outdeg``, checkpointed."""
+    return (
+        e.join(e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")), "s")
+        .localCheckpoint()
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -429,17 +456,8 @@ def pagerank(
     runs (>~20 rounds) pay in planning time.
     """
     dec = f"decimal(38,{SCORE_SCALE})"
-    e = (
-        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _distinct_edges(edges)
+    nodes = _edge_nodes(e).localCheckpoint()
     n = nodes.count()
     if n == 0:
         return nodes.select("node", F.lit(None).cast("double").alias("pr"))
@@ -449,10 +467,7 @@ def pagerank(
     # former per-iteration join(outdeg) paid one SMJ per round for a
     # value that never changes (same operands per contribution, so ranks
     # are bit-identical)
-    ed = (
-        e.join(e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")), "s")
-        .localCheckpoint()
-    )
+    ed = _with_outdeg(e)
     ranks = nodes.select("node", F.round(F.lit(1.0 / n), SCORE_SCALE).cast(dec).alias("pr"))
     for _ in range(iterations):
         contrib = (
@@ -824,16 +839,8 @@ def personalized_pagerank(
     join + one dst-keyed agg, recurrence lazy (single consumer per round).
     """
     dec = f"decimal(38,{SCORE_SCALE})"
-    e = (
-        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .distinct()
-    )
+    e = _distinct_edges(edges)
+    nodes = _edge_nodes(e)
     sd = seeds.toDF("node").distinct()
     nodes = nodes.join(
         F.broadcast(sd.select("node", F.lit(1).alias("is_seed"))), "node", "left"
@@ -844,10 +851,7 @@ def personalized_pagerank(
         return nodes.select("node", F.lit(None).cast("double").alias("ppr"))
     # outdeg attached to the edge frame once (the q_pagerank hoist) —
     # one SMJ per iteration removed, same contribution operands
-    ed = (
-        e.join(e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")), "s")
-        .localCheckpoint()
-    )
+    ed = _with_outdeg(e)
     zero = F.lit(0).cast(dec)
     seed_mass = F.round(F.lit(1.0 / ns), SCORE_SCALE).cast(dec)
     base_mass = F.round(F.lit((1.0 - DAMPING) / ns), SCORE_SCALE).cast(dec)

@@ -178,39 +178,6 @@ class _BitWriter:
         return bytes(self.buf)
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated entropy-coded segment")
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def read_symbol(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in stream")
-
-
 def _magnitude(v: int) -> tuple[int, int]:
     """(category size, appended bits) for a DC diff / AC value."""
     if v == 0:
@@ -302,28 +269,35 @@ def _quantized_grid(plane: np.ndarray, quant: np.ndarray,
     return cq.reshape(hh // 8, ww // 8, 64)[..., ZIGZAG]
 
 
-def _encode_scan(grids: list[np.ndarray],
-                 dc_tabs: list[dict], ac_tabs: list[dict],
-                 samplings: list[tuple[int, int]], dri: int = 0) -> bytes:
-    """Interleaved MCU scan for arbitrary (h, v) sampling factors — each
-    MCU carries h_i × v_i blocks per component in raster order (T.81
-    §A.2.3); 4:4:4 is the all-1x1 special case. ``dri`` > 0 emits RSTn
-    every ``dri`` MCUs with DC-predictor resets."""
+def _mcu_blocks(w: "_ProgWriter", grids: list[np.ndarray],
+                samplings: list[tuple[int, int]], dri: int, pred: list[int]):
+    """Yield ``(component, block)`` in interleaved MCU order: each MCU
+    carries h_i × v_i blocks per component in raster order (T.81 §A.2.3).
+    ``dri`` > 0 emits RSTn on ``w`` every ``dri`` MCUs and resets the DC
+    predictors in ``pred``."""
     h0, v0 = samplings[0]
     mcu_rows = grids[0].shape[0] // v0
     mcu_cols = grids[0].shape[1] // h0
-    w = _ProgWriter()
-    pred = [0] * len(grids)
     for u in range(mcu_rows * mcu_cols):
         if dri and u and u % dri == 0:
             w.restart()
-            pred = [0] * len(grids)
+            pred[:] = [0] * len(grids)
         my, mx = u // mcu_cols, u % mcu_cols
         for ci, (h_i, v_i) in enumerate(samplings):
             for by in range(v_i):
                 for bx in range(h_i):
-                    zz = grids[ci][my * v_i + by, mx * h_i + bx]
-                    _emit_block(w, zz, pred, ci, dc_tabs[ci], ac_tabs[ci])
+                    yield ci, grids[ci][my * v_i + by, mx * h_i + bx]
+
+
+def _encode_scan(grids: list[np.ndarray],
+                 dc_tabs: list[dict], ac_tabs: list[dict],
+                 samplings: list[tuple[int, int]], dri: int = 0) -> bytes:
+    """Interleaved baseline scan for arbitrary (h, v) sampling factors, in
+    :func:`_mcu_blocks` order; 4:4:4 is the all-1x1 special case."""
+    w = _ProgWriter()
+    pred = [0] * len(grids)
+    for ci, zz in _mcu_blocks(w, grids, samplings, dri, pred):
+        _emit_block(w, zz, pred, ci, dc_tabs[ci], ac_tabs[ci])
     return w.flush()
 
 
@@ -487,28 +461,18 @@ def _emit_dc_scan(
     """Interleaved progressive DC scan: first pass (Ah=0) diff-codes the
     point-transformed DC (arithmetic >> Al); refinement passes send one
     bit per block."""
-    h0, v0 = samplings[0]
-    mcu_rows = grids[0].shape[0] // v0
-    mcu_cols = grids[0].shape[1] // h0
     pred = [0] * len(grids)
-    for u in range(mcu_rows * mcu_cols):
-        if dri and u and u % dri == 0:
-            w.restart()
-            pred = [0] * len(grids)
-        my, mx = u // mcu_cols, u % mcu_cols
-        for ci, (h_i, v_i) in enumerate(samplings):
-            for by in range(v_i):
-                for bx in range(h_i):
-                    v0c = int(grids[ci][my * v_i + by, mx * h_i + bx][0])
-                    if ah == 0:
-                        d = (v0c >> al) - pred[ci]
-                        pred[ci] = v0c >> al
-                        size, bits = _magnitude(d)
-                        code, ln = dc_tabs[ci][size]
-                        w.write(code, ln)
-                        w.write(bits, size)
-                    else:
-                        w.write((v0c >> al) & 1, 1)
+    for ci, zz in _mcu_blocks(w, grids, samplings, dri, pred):
+        v0c = int(zz[0])
+        if ah == 0:
+            d = (v0c >> al) - pred[ci]
+            pred[ci] = v0c >> al
+            size, bits = _magnitude(d)
+            code, ln = dc_tabs[ci][size]
+            w.write(code, ln)
+            w.write(bits, size)
+        else:
+            w.write((v0c >> al) & 1, 1)
 
 
 def encode_jpeg(

@@ -415,6 +415,44 @@ def ivf_topk(
     )
 
 
+def _first_by_hash(v: DataFrame, k: int, *cols) -> DataFrame:
+    """The ``k`` rows of ``v`` first in md5(vid) order, numbered 0.. as
+    ``cell_id``, with ``cols``: the deterministic centroid seeding."""
+    return (
+        v.withColumn("_h", F.md5(F.col("vid").cast("string")))
+        .orderBy("_h", "vid")
+        .limit(k)
+        .select(
+            (F.row_number().over(Window.orderBy("_h", "vid")) - 1).alias("cell_id"),
+            *cols,
+        )
+    )
+
+
+def _centroid_means(assigned: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """Per ``keys`` group, the mean of the ``vec`` arrays as ``cvec`` (per
+    dimension DECIMAL sums, so the mean is order-free), checkpointed."""
+    dims = (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(
+            (
+                F.sum(F.col("val").cast("decimal(28,14)")).cast("double")
+                / F.count(F.lit(1))
+            ).alias("m")
+        )
+    )
+    return (
+        dims.groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda x: x["m"]
+            ).alias("cvec")
+        )
+        .localCheckpoint()
+    )
+
+
 def kmeans_fit(
     corpus: DataFrame,
     id_col: str,
@@ -443,16 +481,7 @@ def kmeans_fit(
     v = corpus.select(
         F.col(id_col).alias("vid"), as_double_array(vec_col).alias("vec")
     ).withColumn("vn", norm(F.col("vec")))  # one fold per vector, reused k× per iter
-    cents = (
-        v.withColumn("_h", F.md5(F.col("vid").cast("string")))
-        .orderBy("_h", "vid")
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy("_h", "vid")) - 1).alias("cell_id"),
-            F.col("vec").alias("cvec"),
-        )
-        .localCheckpoint()
-    )
+    cents = _first_by_hash(v, k, F.col("vec").alias("cvec")).localCheckpoint()
     for _ in range(iters):
         # map-side argmax over the broadcast centroid array (same ROUND(6)
         # cosine_pre per pair, (cc DESC, cell_id ASC) total order — the
@@ -471,25 +500,7 @@ def kmeans_fit(
         assigned = v.crossJoin(F.broadcast(carr)).select(
             "vid", "vec", best["cell_id"].alias("cell_id")
         )
-        dims = (
-            assigned.select("cell_id", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cell_id", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(28,14)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-        )
-        cents = (
-            dims.groupBy("cell_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda x: x["m"]
-                ).alias("cvec")
-            )
-            .localCheckpoint()
-        )
+        cents = _centroid_means(assigned, ["cell_id"], "vec")
     return cents.select("cell_id", F.col("cvec").alias("vec"))
 
 
@@ -957,6 +968,17 @@ def _best_code(cells: Column, sv: Column) -> Column:
     )
 
 
+def _subspaces(name: str) -> Column:
+    """One row ``e`` per PQ subspace of ``vec``: struct of the subspace
+    index ``s`` and its slice, named ``name``."""
+    return F.explode(
+        F.array(*[
+            F.struct(F.lit(s).alias("s"), _sub(F.col("vec"), s).alias(name))
+            for s in range(PQ_M)
+        ])
+    ).alias("e")
+
+
 def _codebook_cells(codebooks: DataFrame) -> DataFrame:
     """(s, cells): each subspace's codebook collected into one array row —
     broadcast-joined on ``s`` so code assignment is map-side."""
@@ -971,57 +993,17 @@ def pq_fit_codebooks(
     """(s, cell_id, cvec): one K-centroid codebook per subspace, fitted
     with deterministic Lloyd iterations under ROUND(6)-L2 argmin."""
     v = corpus.select(F.col(id_col).alias("vid"), as_double_array(vec_col).alias("vec"))
-    subs = v.select(
-        "vid",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(s).alias("s"), _sub(F.col("vec"), s).alias("sv"))
-                for s in range(PQ_M)
-            ])
-        ).alias("e"),
-    ).select("vid", "e.s", "e.sv")
-    init = (
-        v.withColumn("_h", F.md5(F.col("vid").cast("string")))
-        .orderBy("_h", "vid")
-        .limit(PQ_K)
-        .select(
-            (F.row_number().over(Window.orderBy("_h", "vid")) - 1).alias("cell_id"),
-            "vec",
-        )
-    )
-    cents = init.select(
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(s).alias("s"), _sub(F.col("vec"), s).alias("cvec"))
-                for s in range(PQ_M)
-            ])
-        ).alias("e"),
-        "cell_id",
-    ).select("e.s", "cell_id", "e.cvec").localCheckpoint()
+    subs = v.select("vid", _subspaces("sv")).select("vid", "e.s", "e.sv")
+    init = _first_by_hash(v, PQ_K, "vec")
+    cents = init.select(_subspaces("cvec"), "cell_id").select(
+        "e.s", "cell_id", "e.cvec"
+    ).localCheckpoint()
     for _ in range(iters):
         best = _best_code(F.col("cells"), F.col("sv"))
         assigned = subs.join(F.broadcast(_codebook_cells(cents)), "s").select(
             "vid", "s", "sv", best["cell_id"].alias("cell_id")
         )
-        dims = (
-            assigned.select("s", "cell_id", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("s", "cell_id", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(28,14)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-        )
-        cents = (
-            dims.groupBy("s", "cell_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda x: x["m"]
-                ).alias("cvec")
-            )
-            .localCheckpoint()
-        )
+        cents = _centroid_means(assigned, ["s", "cell_id"], "sv")
     return cents
 
 
@@ -1031,15 +1013,7 @@ def pq_encode(
     """(vid, s, code, sub_err): per-subspace nearest-centroid code and the
     ROUND(6) quantization error that code costs."""
     v = corpus.select(F.col(id_col).alias("vid"), as_double_array(vec_col).alias("vec"))
-    subs = v.select(
-        "vid",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(s).alias("s"), _sub(F.col("vec"), s).alias("sv"))
-                for s in range(PQ_M)
-            ])
-        ).alias("e"),
-    ).select("vid", "e.s", "e.sv")
+    subs = v.select("vid", _subspaces("sv")).select("vid", "e.s", "e.sv")
     best = _best_code(F.col("cells"), F.col("sv"))
     return (
         subs.join(F.broadcast(_codebook_cells(codebooks)), "s")

@@ -73,10 +73,6 @@ def export_vectors(model: Word2VecModel) -> DataFrame:
     )
 
 
-def synonyms(model: Word2VecModel, word: str) -> DataFrame:
-    return model.findSynonyms(word, 5)
-
-
 def embedding_step(spark, inputs, model_path: str | None = None, **w2v_params):
     """Runner-compatible step: publications(text) → tokens → Word2Vec →
     exported vectors; optionally persists the model directory

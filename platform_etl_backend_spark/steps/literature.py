@@ -19,7 +19,7 @@ from typing import Mapping
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from platform_etl_backend_spark.functions.columns import harmonic_fn
+from platform_etl_backend_spark.functions.columns import harmonic_fn, word_ngrams_upto
 from platform_etl_backend_spark.operators.nlp import label_key, reference_label_key
 
 
@@ -162,18 +162,7 @@ def match_sentences(
     Grounding.scala:232-268 produces from NER output.
     """
     toks = F.split(F.trim(F.regexp_replace(F.lower(F.col("sentence")), r"[^a-z0-9 ]", " ")), r"\s+")
-    spans = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(max_ngram)),
-            lambda n: F.when(
-                F.size(toks) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(F.size(toks) - n + 1, F.lit(1))),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        )
-    )
+    spans = word_ngrams_upto(toks, max_ngram)
     candidates = sentences.select(
         "pmid", "section", "sentence_idx", F.explode(F.array_distinct(spans)).alias("span")
     ).withColumn(

@@ -21,7 +21,7 @@ from typing import Mapping
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from platform_etl_backend_spark.functions.columns import flatten_cat
+from platform_etl_backend_spark.functions.columns import flatten_cat, word_ngrams_upto
 
 SEARCH_INDEX_COLS = (
     "id", "name", "description", "entity", "category", "keywords",
@@ -32,20 +32,7 @@ SEARCH_INDEX_COLS = (
 def word_ngrams(name: Column) -> Column:
     """Lowercased word n-grams of a label (ngram search field)."""
     toks = F.split(F.trim(F.lower(name)), r"\s+")
-    return F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(3)),
-                lambda n: F.when(
-                    F.size(toks) >= n,
-                    F.transform(
-                        F.sequence(F.lit(1), F.greatest(F.size(toks) - n + 1, F.lit(1))),
-                        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-                    ),
-                ).otherwise(F.array().cast("array<string>")),
-            )
-        )
-    )
+    return F.array_distinct(word_ngrams_upto(toks, 3))
 
 
 def banded_labels(

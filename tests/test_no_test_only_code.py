@@ -3,28 +3,27 @@ the tests.
 
 A definition that only tests call is code the engine ships but never runs:
 it has to be kept working, yet no pipeline step, catalog query, script or
-benchmark depends on it. The scan is lexical: each non-test ``.py`` file
-(the package, ``scripts/``, ``otbench/``, ``bench.py``,
-``__spark_entry__.py``) is tokenized, and a name counts as referenced when
-it appears as a whole word in code or in a string. Prose does not count:
-comments, docstrings (any bare string statement) and ``description=``
-keyword strings are skipped, so a sentence that names a function does not
-keep it alive. Other strings do count, because registration by string (a
-catalog query listed by name, otbench's query mix) is a real reference.
-Re-exports do not count either: in an ``__init__.py``, the import
-statements and the ``__all__`` list only republish a name, so a function
-that only tests import through its package is still test-only. In the
-defining file, the tokens inside the definition itself do not count, so a
-recursive call is not a caller.
+benchmark depends on it. The scan reads the syntax tree of each non-test
+``.py`` file (the package, ``scripts/``, ``otbench/``, ``bench.py``,
+``__spark_entry__.py``) and counts a name as a caller only when it
+resolves to the module that defines it: used in that module itself, bound
+by ``from module import name``, reached as an attribute of an imported
+module (``import module as M`` then ``M.name``), or imported through a
+package ``__init__`` that re-exports it from the defining module. A
+definition of the same name in another module is a different definition,
+so its uses do not count. Strings never count, prose or not: a name that
+appears in an error message or a docstring is not called by it. A
+function decorated with ``register`` (a catalog query) is registered and
+counts as used. An ``__init__.py``'s import statements and ``__all__``
+only republish a name, so a function that only tests import through its
+package is still test-only. In the defining file, uses inside the
+definition itself do not count, so a recursive call is not a caller.
 """
 
 from __future__ import annotations
 
 import ast
-import io
-import re
-import tokenize
-from collections import Counter
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -57,7 +56,7 @@ ALLOWLIST = {
     ),
 }
 
-_WORD = re.compile(r"\w+")
+PKG_NAME = PKG.name
 
 
 def _non_test_files() -> list[Path]:
@@ -70,84 +69,132 @@ def _non_test_files() -> list[Path]:
     return files
 
 
-def _is_str(node: ast.expr) -> bool:
-    return isinstance(node, ast.JoinedStr) or (
-        isinstance(node, ast.Constant) and isinstance(node.value, str)
-    )
+def _module_name(path: Path) -> str:
+    """Dotted module name (a package's ``__init__.py`` is the package)."""
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
-def _is_reexport(node: ast.AST) -> bool:
-    """An import statement or an ``__all__`` assignment."""
-    if isinstance(node, (ast.Import, ast.ImportFrom)):
-        return True
-    return isinstance(node, ast.Assign) and any(
-        isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
-    )
+class _Module:
+    """One file: its tree, its import bindings and its top-level definitions."""
+
+    def __init__(self, path: Path, modules: set[str]):
+        self.path = path
+        self.name = _module_name(path)
+        self.is_init = path.name == "__init__.py"
+        self.tree = ast.parse(path.read_text(), filename=str(path))
+        self.defs = {
+            node.name: node
+            for node in self.tree.body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        # local name -> ("mod", module) or ("obj", module, attribute)
+        self.bindings: dict[str, tuple] = {}
+        package = self.name if self.is_init else self.name.rpartition(".")[0]
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.asname:
+                        self.bindings[alias.asname] = ("mod", alias.name)
+                    else:
+                        root = alias.name.split(".")[0]
+                        self.bindings[root] = ("mod", root)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    anchor = package.split(".")
+                    anchor = anchor[: len(anchor) - node.level + 1]
+                    base = ".".join(anchor + ([base] if base else []))
+                for alias in node.names:
+                    full = f"{base}.{alias.name}"
+                    self.bindings[alias.asname or alias.name] = (
+                        ("mod", full) if full in modules else ("obj", base, alias.name)
+                    )
 
 
-def _skipped_spans(
-    tree: ast.AST, is_init: bool
-) -> list[tuple[tuple[int, int], tuple[int, int]]]:
-    """(start, end) positions of what is not a caller: prose strings (bare
-    string statements such as docstrings, and ``description=`` values) and,
-    in an ``__init__.py``, the re-export statements."""
-    spans = []
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Expr) and _is_str(node.value):
-            skip = node.value
-        elif isinstance(node, ast.keyword) and node.arg == "description":
-            skip = node.value
-        elif is_init and _is_reexport(node):
-            skip = node
-        else:
-            continue
-        spans.append(((skip.lineno, skip.col_offset), (skip.end_lineno, skip.end_col_offset)))
-    return spans
+def _resolve(modules: dict[str, _Module], module: str, name: str) -> tuple[str, str] | None:
+    """(defining module, name) for ``module.name``, following package
+    re-exports; None when it is not a package definition."""
+    for _ in range(10):
+        m = modules.get(module)
+        if m is None:
+            return None
+        if name in m.defs:
+            return module, name
+        target = m.bindings.get(name)
+        if target is None or target[0] != "obj":
+            return None
+        module, name = target[1], target[2]
+    return None
 
 
-# an f-string's literal text is one STRING token up to Python 3.11 and
-# FSTRING_MIDDLE tokens from 3.12 on
-_STRING_TOKENS = {tokenize.STRING, getattr(tokenize, "FSTRING_MIDDLE", tokenize.STRING)}
+def _registered(node: ast.AST) -> bool:
+    """A definition decorated with ``register(...)`` or ``register``."""
+    for dec in getattr(node, "decorator_list", ()):
+        f = dec.func if isinstance(dec, ast.Call) else dec
+        if (isinstance(f, ast.Name) and f.id == "register") or (
+            isinstance(f, ast.Attribute) and f.attr == "register"
+        ):
+            return True
+    return False
 
 
-def _code_words(text: str, is_init: bool = False) -> list[tuple[int, str]]:
-    """(line, word) for every name token and every word inside a non-prose
-    string; comments, prose strings and ``__init__.py`` re-exports are
-    dropped."""
-    spans = _skipped_spans(ast.parse(text), is_init)
-    words: list[tuple[int, str]] = []
-    for tok in tokenize.generate_tokens(io.StringIO(text).readline):
-        if any(a <= tok.start < b for a, b in spans):
-            continue
-        if tok.type == tokenize.NAME:
-            words.append((tok.start[0], tok.string))
-        elif tok.type in _STRING_TOKENS:
-            words.extend((tok.start[0], w) for w in _WORD.findall(tok.string))
-    return words
+def _references(modules: dict[str, _Module], m: _Module):
+    """Yield ((defining module, name), line) for every use in ``m`` of a
+    package definition."""
+    for node in ast.walk(m.tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            target = m.bindings.get(node.id)
+            if target is not None and target[0] == "obj":
+                ref = _resolve(modules, target[1], target[2])
+            elif node.id in m.defs:
+                ref = (m.name, node.id)
+            else:
+                continue
+            if ref is not None:
+                yield ref, node.lineno
+        elif isinstance(node, ast.Attribute):
+            chain = [node.attr]
+            base = node.value
+            while isinstance(base, ast.Attribute):
+                chain.append(base.attr)
+                base = base.value
+            if not isinstance(base, ast.Name):
+                continue
+            target = m.bindings.get(base.id)
+            if target is None or target[0] != "mod":
+                continue
+            module = target[1]
+            chain.reverse()
+            # walk submodules (``a.b`` then ``a.b.c``) to the attribute
+            while len(chain) > 1 and f"{module}.{chain[0]}" in modules:
+                module = f"{module}.{chain.pop(0)}"
+            ref = _resolve(modules, module, chain[0])
+            if ref is not None:
+                yield ref, node.lineno
 
 
 def _test_only_names() -> set[str]:
     """``module.name`` of every top-level package definition that nothing
     outside the tests references."""
     files = _non_test_files()
-    texts = {p: p.read_text() for p in files}
-    words = {p: _code_words(t, p.name == "__init__.py") for p, t in texts.items()}
-    total = Counter(w for ws in words.values() for _, w in ws)
+    names = {_module_name(p) for p in files}
+    modules = {m.name: m for m in (_Module(p, names) for p in files)}
+    used: dict[tuple[str, str], bool] = defaultdict(bool)
+    for m in modules.values():
+        for (module, name), line in _references(modules, m):
+            node = modules[module].defs[name]
+            if module == m.name and node.lineno <= line <= node.end_lineno:
+                continue  # a definition's use of itself
+            used[module, name] = True
 
     unused: set[str] = set()
-    for path in files:
-        if PKG not in path.parents:
+    for m in modules.values():
+        if not m.name.startswith(PKG_NAME + "."):
             continue
-        module = ".".join(path.relative_to(PKG).with_suffix("").parts)
-        for node in ast.parse(texts[path], filename=str(path)).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            own = sum(
-                1 for line, w in words[path]
-                if w == node.name and node.lineno <= line <= node.end_lineno
-            )
-            if total[node.name] == own:
-                unused.add(f"{module}.{node.name}")
+        for name, node in m.defs.items():
+            if not used[m.name, name] and not _registered(node):
+                unused.add(f"{m.name[len(PKG_NAME) + 1:]}.{name}")
     return unused
 
 

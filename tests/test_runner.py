@@ -114,6 +114,20 @@ def test_io_config_rejects_unknown_keys(spark, config):
     assert not (tmp_path / "out" / "reactome").exists()
 
 
+def test_configured_output_the_step_lacks_raises(spark, config):
+    """A misspelt output key (``gos``) raises a ValueError naming it after
+    the step builds, and none of that step's outputs is written."""
+    conf_path, tmp_path = config
+    conf = load_config(str(conf_path))
+    conf["steps"]["go"]["output"]["gos"] = {
+        "format": "json", "path": str(tmp_path / "out" / "gos"), "write_mode": "overwrite",
+    }
+    with pytest.raises(ValueError, match=r"go.*\['gos'\]"):
+        run_steps(["go"], conf, spark=spark)
+    assert not (tmp_path / "out" / "go").exists()
+    assert not (tmp_path / "out" / "gos").exists()
+
+
 def test_csv_reader_options(spark, tmp_path):
     """S2 coverage: sep/comment/nullValue/header reader options."""
     from platform_etl_backend_spark.engine.config import IOResourceConfig
