@@ -4181,12 +4181,6 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0),
         ).alias("journey"),
     )
-    chan_bit = (
-        F.when(F.col("event_type") == "click", 1)
-        .when(F.col("event_type") == "view", 2)
-        .when(F.col("event_type") == "signup", 4)
-        .otherwise(0)
-    )
     js = j.groupBy("user_id", "journey").agg(
         F.coalesce(F.expr(
             "bit_or(CASE event_type WHEN 'click' THEN 1 WHEN 'view' THEN 2 "

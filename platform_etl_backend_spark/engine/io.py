@@ -33,18 +33,6 @@ class IOResource:
     configuration: IOResourceConfig
 
 
-@dataclass
-class IOMLResource:
-    """An ML model as an IO resource (reference IOResourceML,
-    IoHelpers.scala:15,85-96): saved/loaded as a model directory."""
-
-    model: object  # any pyspark.ml model with .save/.write
-    path: str
-
-    def save(self) -> None:
-        self.model.write().overwrite().save(self.path)
-
-
 def read_single(spark: SparkSession, conf: IOResourceConfig) -> DataFrame:
     # engine-native flat-file formats the reference parsed outside Spark
     if conf.format == "obo":

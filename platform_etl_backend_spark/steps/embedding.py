@@ -75,8 +75,9 @@ def export_vectors(model: Word2VecModel) -> DataFrame:
 
 def embedding_step(spark, inputs, model_path: str | None = None, **w2v_params):
     """Runner-compatible step: publications(text) → tokens → Word2Vec →
-    exported vectors; optionally persists the model directory
-    (IOResourceML flow, Literature.scala → Embedding → Vectors)."""
+    exported vectors; optionally overwrites the model directory at
+    ``model_path`` (the reference's IOResourceML, IoHelpers.scala:15,85-96;
+    Literature.scala → Embedding → Vectors)."""
     from pyspark.sql import functions as F
 
     # No lowercasing: the reference trains over keyword-id sequences
@@ -86,7 +87,5 @@ def embedding_step(spark, inputs, model_path: str | None = None, **w2v_params):
     )
     model = train_word2vec(sentences, **w2v_params)
     if model_path:
-        from platform_etl_backend_spark.engine.io import IOMLResource
-
-        IOMLResource(model, model_path).save()
+        model.write().overwrite().save(model_path)
     return {"vectors": export_vectors(model)}

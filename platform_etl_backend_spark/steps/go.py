@@ -18,6 +18,6 @@ def go_step(
     include_obsolete: bool = False,
 ) -> Mapping[str, DataFrame]:
     terms = inputs["go_terms"]
-    if not include_obsolete and "obsolete" in terms.columns:
+    if not include_obsolete:
         terms = terms.where(~F.col("obsolete"))
     return {"go": terms.select("id", "name")}

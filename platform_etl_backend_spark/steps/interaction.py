@@ -18,9 +18,10 @@ from typing import Mapping
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 SYMMETRIC_SOURCES = ("reactome", "intact", "signor")
+# input keys whose rows come through the nested IntAct shape
+NESTED_SOURCES = ("intact", "string")
 
 _SWAP = {
     "targetA": "targetB", "targetB": "targetA",
@@ -242,15 +243,14 @@ def generate_mapping(
                 F.col("_c5").alias("gene_id"), F.col("_c0").alias("mapped_id")
             )
         )
-    if "dbXRefs" in targets.columns:
-        pieces.append(
-            targets.select(
-                F.col("id").alias("gene_id"),
-                F.explode(
-                    F.filter(F.col("dbXRefs"), lambda x: x["source"] == "HGNC")
-                ).alias("x"),
-            ).select("gene_id", F.concat(F.lit("HGNC:"), F.col("x.id")).alias("mapped_id"))
-        )
+    pieces.append(
+        targets.select(
+            F.col("id").alias("gene_id"),
+            F.explode(
+                F.filter(F.col("dbXRefs"), lambda x: x["source"] == "HGNC")
+            ).alias("x"),
+        ).select("gene_id", F.concat(F.lit("HGNC:"), F.col("x.id")).alias("mapped_id"))
+    )
     if human_mapping is not None:
         # Gene_Name links: resolve symbol groups through ids already mapped
         gene_ids = (
@@ -314,22 +314,16 @@ def remove_null_target_a(df: DataFrame) -> DataFrame:
     return df.where(F.col("targetA").isNotNull())
 
 
-def _is_struct_with(df: DataFrame, column: str, field: str) -> bool:
-    if column not in df.columns:
-        return False
-    dtype = df.schema[column].dataType
-    return isinstance(dtype, T.StructType) and field in dtype.fieldNames()
-
-
-def unmatched_report(*evidence_frames: DataFrame) -> DataFrame:
+def unmatched_report(per_source: Mapping[str, DataFrame]) -> DataFrame:
     """Interaction.scala:364-383 getUnmatch: distinct intB ids whose human
     interactor failed gene-id resolution, unioned across sources. The
-    human-taxon filter applies only when the species column is the nested
-    struct (generic pre-flattened inputs may carry opaque species)."""
+    human-taxon filter applies to the ``intact`` and ``string`` sources,
+    whose species is the nested struct; the pre-flattened ``interactions``
+    input carries an opaque species and is not filtered."""
     pieces = []
-    for df in evidence_frames:
+    for source, df in per_source.items():
         cond = F.col("targetB").isNull()
-        if _is_struct_with(df, "speciesB", "taxonId"):
+        if source in NESTED_SOURCES:
             cond = cond & (F.col("speciesB.taxonId") == 9606)
         pieces.append(df.where(cond).select("intB"))
     return reduce(lambda a, b: a.unionByName(b), pieces).distinct()
@@ -362,9 +356,7 @@ def generate_evidences(
     pieces = []
     if string_ev is not None:
         s = select_fields(string_ev)
-        if "evidence_score" in s.columns:
-            s = s.withColumn("evidence_score", F.col("evidence_score") / 1000)
-        pieces.append(s)
+        pieces.append(s.withColumn("evidence_score", F.col("evidence_score") / 1000))
     if intact_like is not None:
         pieces.append(select_fields(intact_like))
     out = pieces[0]
@@ -423,6 +415,13 @@ def interaction_step(
     sources use the generated 4-source id mapping; the STRING evidence
     filter (>0) runs after the explode; the unmatched report is computed
     BEFORE the targetA filter.
+
+    Interaction sources, each one shape: ``interactions`` (pre-flattened
+    rows with an opaque species and string evidences), ``intact`` (nested
+    IntAct JSON) and ``string`` (STRING links TSV). Only the two nested
+    sources get the unmatched report's human-taxon filter and the evidence
+    export. The id mapping is ``mapping`` (gene_id, mapped_id) or else is
+    generated from ``targets`` (``proteinIds`` and ``dbXRefs``).
     """
     if "mapping" in inputs:
         mapping = inputs["mapping"]
@@ -454,39 +453,22 @@ def interaction_step(
             string_mapping,
         ).where(F.col("evidences.evidence_score") > 0)
 
-    frames = list(per_source.values())
-    all_ev = frames[0]
-    for f in frames[1:]:
-        all_ev = all_ev.unionByName(f, allowMissingColumns=True)
+    all_ev = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), per_source.values()
+    )
     valid_ev = remove_null_target_a(all_ev)
     outputs = {
         "interaction_evidences": valid_ev,
         "interactions_agg": aggregate_interactions(valid_ev),
-        "interactions_unmatched": unmatched_report(*frames),
+        "interactions_unmatched": unmatched_report(per_source),
     }
-
-    # the index export needs the struct evidence schema + interactionResources
-    def exportable(df: DataFrame) -> bool:
-        return _is_struct_with(df, "evidences", "evidence_score") or (
-            isinstance(df.schema["evidences"].dataType, T.StructType)
-            and "interactionResources" in df.columns
-        )
-
-    intact_like = [
-        remove_null_target_a(df)
-        for name, df in per_source.items()
-        if name != "string" and exportable(df)
-    ]
-    string_export = (
-        remove_null_target_a(per_source["string"])
-        if "string" in per_source and exportable(per_source["string"])
-        else None
-    )
-    if intact_like or string_export is not None:
-        merged_intact = intact_like[0] if intact_like else None
-        for p in intact_like[1:]:
-            merged_intact = merged_intact.unionByName(p, allowMissingColumns=True)
+    # the index export needs the nested sources' struct evidences and
+    # interactionResources
+    export = {
+        k: remove_null_target_a(per_source[k]) for k in NESTED_SOURCES if k in per_source
+    }
+    if export:
         outputs["interactions_evidence_export"] = generate_evidences(
-            merged_intact, string_export
+            export.get("intact"), export.get("string")
         )
     return outputs

@@ -231,10 +231,22 @@ def openfda_step(
     sampling_dimension: str | None = None,
     sample_size: float = 0.1,
 ) -> Mapping[str, DataFrame]:
-    raw = inputs["fda_events"]
-    if "patient" in raw.columns:
-        # raw FAERS document shape → full preparation chain
+    """OpenFda.scala:36-62 compute(). Each input key has one shape; the
+    reference's raw files and the prepared tables have separate keys:
+    - ``fda_events``: prepared rows (safetyreportid, drug_name, reaction),
+      or ``fda_raw``: raw FAERS documents (``patient.drug``,
+      ``patient.reaction``, ``primarysource``), with optional
+      ``meddra_preferred``/``meddra_low_level``. ``fda_raw`` wins when
+      both are given;
+    - ``drug_list``: a ``drug_name`` column, and/or ``chembl``: ChEMBL
+      drug rows (id, name, synonyms, tradeNames);
+    - ``blacklist``: a ``reactions`` column, and/or ``blacklist_raw``: the
+      headerless one-reaction-per-line file.
+    A missing column raises Spark's ``AnalysisException`` naming it."""
+    if "fda_raw" in inputs:
+        # raw FAERS documents → full preparation chain
         # (OpenFdaDataPreparation.scala:10-27)
+        raw = inputs["fda_raw"]
         fda = prepare_adverse_event_data(pre_prep_raw_fda_data(raw))
         if {"meddra_preferred", "meddra_low_level"} <= set(inputs):
             fda = attach_meddra_data(
@@ -246,17 +258,16 @@ def openfda_step(
             F.col("reaction_reactionmeddrapt").alias("reaction"),
         ).distinct()
     else:
+        raw = inputs["fda_events"]
         events = prepare_events(raw)
     if "drug_list" in inputs:
-        drug_list = inputs["drug_list"]
-        if "tradeNames" in drug_list.columns:
-            drug_list = prepare_drug_list(drug_list)
-        events = filter_drugs(events, drug_list)
+        events = filter_drugs(events, inputs["drug_list"])
+    if "chembl" in inputs:
+        events = filter_drugs(events, prepare_drug_list(inputs["chembl"]))
     if "blacklist" in inputs:
-        bl = inputs["blacklist"]
-        if "reactions" not in bl.columns:
-            bl = prepare_blacklist_data(bl)
-        events = filter_blacklist(events, bl)
+        events = filter_blacklist(events, inputs["blacklist"])
+    if "blacklist_raw" in inputs:
+        events = filter_blacklist(events, prepare_blacklist_data(inputs["blacklist_raw"]))
 
     contingency = contingency_via_groupby(events, "report", "drug", "reaction")
     critvals = montecarlo_critical_values(
@@ -279,7 +290,7 @@ def openfda_step(
         clean = events.withColumnRenamed("report", "safetyreportid")
         sig = significant.withColumnRenamed("drug", sampling_dimension)
         out["stratifiedSampling"] = stratified_sample(
-            inputs["fda_events"],
+            raw,
             clean.withColumnRenamed("drug", sampling_dimension),
             sig,
             sampling_dimension,

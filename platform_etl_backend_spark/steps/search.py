@@ -149,10 +149,7 @@ def search_step(
         .join(d_rel, "diseaseId", "left")
         .withColumnRenamed("diseaseId", "id")
     )
-    search_diseases = _search_index(
-        disease_docs, "disease", F.lit("disease"), "description"
-        if "description" in diseases.columns else None,
-    )
+    search_diseases = _search_index(disease_docs, "disease", F.lit("disease"), "description")
 
     out = {"search_target": search_targets, "search_disease": search_diseases}
     if evidence is not None:
@@ -180,13 +177,9 @@ def variant_index(variants: DataFrame) -> DataFrame:
         .withColumn("locationDash", F.concat("chromosome", F.lit("-"), "position", F.lit("-")))
         .withColumn("locationColon", F.concat("chromosome", F.lit(":"), "position", F.lit(":")))
     )
-    xref_ids = (
-        F.col("dbXrefs.id") if "dbXrefs" in variants.columns else F.lit(None).cast("array<string>")
-    )
-    rs = F.col("rsIds") if "rsIds" in variants.columns else F.lit(None).cast("array<string>")
-    hgvs = (
-        F.array(F.col("hgvsId")) if "hgvsId" in variants.columns else F.lit(None).cast("array<string>")
-    )
+    xref_ids = F.col("dbXrefs.id")
+    rs = F.col("rsIds")
+    hgvs = F.array(F.col("hgvsId"))
     keywords = flatten_cat(
         F.array(F.col("variantId")), hgvs, xref_ids, rs,
         F.array(F.col("locationUnderscore")),
@@ -249,14 +242,12 @@ def study_index(
     empty = F.array().cast("array<string>")
     keyword_srcs = [
         F.array(F.col("studyId")),
-        F.array(F.col("pubmedId")) if "pubmedId" in studies.columns else F.lit(None).cast("array<string>"),
-        F.array(F.col("publicationFirstAuthor"))
-        if "publicationFirstAuthor" in studies.columns
-        else F.lit(None).cast("array<string>"),
+        F.array(F.col("pubmedId")),
+        F.array(F.col("publicationFirstAuthor")),
     ]
     terms = flatten_cat(
-        F.array(F.col("traitFromSource")) if "traitFromSource" in studies.columns else F.lit(None).cast("array<string>"),
-        F.col("diseaseIds") if "diseaseIds" in studies.columns else F.lit(None).cast("array<string>"),
+        F.array(F.col("traitFromSource")),
+        F.col("diseaseIds"),
         F.array(F.col("approvedSymbol")),
         F.array(F.col("targetId")),
     )
@@ -319,18 +310,14 @@ def drug_index(
         .join(d_labels, "drugId", "left")
     )
     syn = F.coalesce(F.col("synonyms"), empty)
-    trade = (
-        F.coalesce(F.col("tradeNames"), empty) if "tradeNames" in drugs.columns else empty
-    )
+    trade = F.coalesce(F.col("tradeNames"), empty)
     keywords = flatten_cat(F.array(F.col("name")), F.array(F.col("drugId")), syn, trade)
     return docs.select(
         F.col("drugId").alias("id"),
         F.col("name"),
         F.lit(None).cast("string").alias("description"),
         F.lit("drug").alias("entity"),
-        (F.col("drugType") if "drugType" in drugs.columns else F.lit("drug")).alias(
-            "category"
-        ),
+        F.col("drugType").alias("category"),
         keywords.alias("keywords"),
         F.transform(keywords, F.lower).alias("prefixes"),
         word_ngrams(F.col("name")).alias("ngrams"),

@@ -160,24 +160,16 @@ def compute_target_facets(targets: DataFrame, go: DataFrame) -> DataFrame:
         simple_facet(targets, "approvedSymbol", CATEGORIES["approvedSymbol"], "id"),
         simple_facet(targets, "approvedName", CATEGORIES["approvedName"], "id"),
     ]
-    if "go" in targets.columns and go is not None:
+    if go is not None:
         facets.append(go_facets(targets, go))
-    if "subcellularLocations" in targets.columns:
-        facets.append(
-            array_facet(targets, "id", "subcellularLocations", "x.location",
-                        CATEGORIES["subcellularLocation"], "x.termSl")
-        )
-    if "targetClass" in targets.columns:
-        facets.append(
-            array_facet(targets, "id", "targetClass", "x.label", CATEGORIES["targetClass"])
-        )
-    if "pathways" in targets.columns:
-        facets.append(
-            array_facet(targets, "id", "pathways", "x.pathway",
-                        CATEGORIES["pathways"], "x.pathwayId")
-        )
-    if "tractability" in targets.columns:
-        facets.append(tractability_facets(targets))
+    facets += [
+        array_facet(targets, "id", "subcellularLocations", "x.location",
+                    CATEGORIES["subcellularLocation"], "x.termSl"),
+        array_facet(targets, "id", "targetClass", "x.label", CATEGORIES["targetClass"]),
+        array_facet(targets, "id", "pathways", "x.pathway",
+                    CATEGORIES["pathways"], "x.pathwayId"),
+        tractability_facets(targets),
+    ]
     return reduce(lambda a, b: a.unionByName(b), facets)
 
 
@@ -221,10 +213,7 @@ def disease_name_facets(diseases: DataFrame) -> DataFrame:
 
 
 def compute_disease_facets(diseases: DataFrame) -> DataFrame:
-    facets = [disease_name_facets(diseases)]
-    if "therapeuticAreas" in diseases.columns:
-        facets.append(therapeutic_area_facets(diseases))
-    return reduce(lambda a, b: a.unionByName(b), facets)
+    return disease_name_facets(diseases).unionByName(therapeutic_area_facets(diseases))
 
 
 def search_facet_step(

@@ -204,13 +204,10 @@ def add_uniprot(
     new annotation columns. Input is the DISTRIBUTED flat-file parse
     (sources/flatfile.parse_uniprot_records), not a driver-side loop.
     """
+    from platform_etl_backend_spark.sources.flatfile import parse_uniprot_records
     from platform_etl_backend_spark.steps.target_annotations import uniprot_normalize
 
-    if "record" in uniprot.columns:
-        from platform_etl_backend_spark.sources.flatfile import parse_uniprot_records
-
-        uniprot = parse_uniprot_records(uniprot)
-    entity = uniprot_normalize(uniprot, ssl)
+    entity = uniprot_normalize(parse_uniprot_records(uniprot), ssl)
     h = hgnc.select(
         F.col("ensembl_gene_id").alias("id"),
         F.explode("uniprot_ids").alias("uniprotId"),
@@ -283,25 +280,6 @@ def add_uniprot(
     )
 
 
-def add_tss(df: DataFrame) -> DataFrame:
-    """Target.scala:181-188: transcription start site from strand — the
-    canonical transcript (GeneCode input, strand '+'/'-') when present,
-    falling back to the gene's genomic location (strand ±1)."""
-    if "canonicalTranscript" in df.columns:
-        return df.withColumn(
-            "tss",
-            F.when(
-                F.col("canonicalTranscript.strand") == "+", F.col("canonicalTranscript.start")
-            ).when(F.col("canonicalTranscript.strand") == "-", F.col("canonicalTranscript.end")),
-        )
-    return df.withColumn(
-        "tss",
-        F.when(F.col("genomicLocation.strand") == 1, F.col("genomicLocation.start")).when(
-            F.col("genomicLocation.strand") == -1, F.col("genomicLocation.end")
-        ),
-    )
-
-
 def accrete(core: DataFrame, annotations: Mapping[str, tuple[DataFrame, str]]) -> DataFrame:
     """The join-accretion chain (Target.scala:106-170): successive left
     joins of per-source annotation frames onto the ENSG-keyed core."""
@@ -321,9 +299,11 @@ def target_step(
         .transform(select_best_non_reference_gene)
         .transform(build_protein_ids)
     )
+    # the uniprot entity (and its subcellularLocations) maps through HGNC
+    with_uniprot = "hgnc" in inputs and "uniprot" in inputs
     if "hgnc" in inputs:
         core = merge_hgnc(core, inputs["hgnc"])
-        if "uniprot" in inputs:
+        if with_uniprot:
             core = add_uniprot(
                 core, inputs["uniprot"], inputs["hgnc"], inputs.get("uniprot_ssl")
             )
@@ -367,7 +347,11 @@ def target_step(
             "gwl_id",
         )
     core = core.persist()
-    lookup = TA.ensg_symbol_lookup(core)
+    # the lookup's synonyms come from HGNC; without it there are none
+    lookup = TA.ensg_symbol_lookup(
+        core if "hgnc" in inputs
+        else core.withColumn("synonyms", F.lit(None).cast("array<string>"))
+    )
     if "safety" in inputs:
         annotations["safety"] = (
             TA.safety_normalize(inputs["safety"], lookup, inputs.get("diseases")),
@@ -383,14 +367,13 @@ def target_step(
     if "ncbi" in inputs:
         annotations["ncbi"] = (TA.ncbi_normalize(inputs["ncbi"]), "ncbi_id")
     doc = accrete(core, annotations)
-    if "ncbiSynonyms" in doc.columns:
+    if "ncbi" in inputs:
         # addNcbiEntrezSynonyms (Target.scala:166): entrez labels fold into
-        # the synonym arrays; removeDuplicatedSynonyms (:193-197) dedups.
-        existing = (
-            F.coalesce(F.col("synonyms"), F.array().cast("array<string>"))
-            if "synonyms" in doc.columns
-            else F.array().cast("array<string>")
-        )
+        # the synonym arrays (HGNC's, when configured);
+        # removeDuplicatedSynonyms (:193-197) dedups.
+        existing = F.array().cast("array<string>")
+        if "hgnc" in inputs:
+            existing = F.coalesce(F.col("synonyms"), existing)
         doc = doc.withColumn(
             "synonyms",
             F.array_distinct(safe_array_union(existing, F.col("ncbiSynonyms.label"))),
@@ -407,13 +390,25 @@ def target_step(
             list(inputs.get("target_species", [])) or DEFAULT_TARGET_SPECIES,
         )
         doc = TA.add_homologues(doc, orthologs)
-    if "subcellularLocations" in doc.columns and "locations" in doc.columns:
+    if "hpa" in inputs and with_uniprot:
         # Target.scala:117-122: uniprot + HPA locations merge into one array
         doc = doc.withColumn(
             "subcellularLocations",
             mk_flatten_array(F.col("subcellularLocations"), F.col("locations")),
         ).drop("locations")
-    doc = doc.transform(add_tss)
+    # Target.scala:181-188: transcription start site from strand — the
+    # canonical transcript (GeneCode input, strand '+'/'-') when that input
+    # is configured, else the gene's genomic location (strand ±1)
+    loc, plus, minus = (
+        ("canonicalTranscript", "+", "-") if "gene_code" in inputs
+        else ("genomicLocation", 1, -1)
+    )
+    doc = doc.withColumn(
+        "tss",
+        F.when(F.col(f"{loc}.strand") == plus, F.col(f"{loc}.start")).when(
+            F.col(f"{loc}.strand") == minus, F.col(f"{loc}.end")
+        ),
+    )
     out = {"target": doc}
     if "gene_essentiality" in inputs:
         out["targetEssentiality"] = TA.gene_essentiality(inputs["gene_essentiality"], lookup)

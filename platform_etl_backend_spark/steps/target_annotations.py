@@ -353,11 +353,7 @@ def ensg_symbol_lookup(core: DataFrame) -> DataFrame:
     """Target.scala:208-230 generateEnsgToSymbolLookup, reduced to the fields
     this port carries: [ensgId, name] where name = protein ids + approved
     symbol + synonyms — the LUT non-ENSG-keyed sources join through."""
-    pieces = [F.array(F.col("approvedSymbol"))]
-    if "proteinIds" in core.columns:
-        pieces.append(F.col("proteinIds.id"))
-    if "synonyms" in core.columns:
-        pieces.append(F.col("synonyms"))
+    pieces = [F.array(F.col("approvedSymbol")), F.col("proteinIds.id"), F.col("synonyms")]
     merged = reduce(
         lambda a, b: F.array_union(a, F.coalesce(b, F.array().cast("array<string>"))), pieces
     )

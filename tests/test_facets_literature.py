@@ -109,9 +109,9 @@ def test_search_step(spark):
         "id: string, approvedSymbol: string, approvedName: string, synonyms: array<string>",
     )
     diseases = spark.createDataFrame(
-        [("EFO_1", "breast carcinoma", ["cancer of breast"]),
-         ("EFO_2", "lung carcinoma", None)],
-        "id: string, name: string, synonyms: array<string>",
+        [("EFO_1", "breast carcinoma", ["cancer of breast"], None),
+         ("EFO_2", "lung carcinoma", None, None)],
+        "id: string, name: string, synonyms: array<string>, description: string",
     )
     associations = spark.createDataFrame(
         [("ENSG1", "EFO_1", 0.9), ("ENSG1", "EFO_2", 0.4), ("ENSG2", "EFO_2", 0.7)],
@@ -149,8 +149,8 @@ def test_search_step_drug_index(spark):
         "id: string, approvedSymbol: string, approvedName: string, synonyms: array<string>",
     )
     diseases = spark.createDataFrame(
-        [("EFO_1", "breast carcinoma", None)],
-        "id: string, name: string, synonyms: array<string>",
+        [("EFO_1", "breast carcinoma", None, None)],
+        "id: string, name: string, synonyms: array<string>, description: string",
     )
     associations = spark.createDataFrame(
         [("ENSG1", "EFO_1", 0.9)], ["targetId", "diseaseId", "score"]
@@ -287,8 +287,8 @@ def test_search_variant_and_study_index(spark):
         "id: string, approvedSymbol: string, approvedName: string, synonyms: array<string>",
     )
     diseases = spark.createDataFrame(
-        [("EFO_1", "breast carcinoma", None)],
-        "id: string, name: string, synonyms: array<string>",
+        [("EFO_1", "breast carcinoma", None, None)],
+        "id: string, name: string, synonyms: array<string>, description: string",
     )
     associations = spark.createDataFrame(
         [("ENSG1", "EFO_1", 0.9)], ["targetId", "diseaseId", "score"]

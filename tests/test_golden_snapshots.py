@@ -215,9 +215,9 @@ def _inputs_search(spark, tmp_path):
             "synonyms: array<string>",
         ),
         "diseases": spark.createDataFrame(
-            [("EFO_1", "breast carcinoma", ["cancer of breast"]),
-             ("EFO_2", "lung carcinoma", None)],
-            "id: string, name: string, synonyms: array<string>",
+            [("EFO_1", "breast carcinoma", ["cancer of breast"], None),
+             ("EFO_2", "lung carcinoma", None, None)],
+            "id: string, name: string, synonyms: array<string>, description: string",
         ),
         "associations": spark.createDataFrame(
             [("ENSG1", "EFO_1", 0.9), ("ENSG1", "EFO_2", 0.4),

@@ -134,10 +134,10 @@ def test_search_step_index_shape_and_multiplier_fallback(spark):
     )
     diseases = spark.createDataFrame(
         [
-            ("EFO_0003767", "inflammatory bowel disease", ["IBD"]),
-            ("EFO_0000692", "schizophrenia", []),
+            ("EFO_0003767", "inflammatory bowel disease", ["IBD"], None),
+            ("EFO_0000692", "schizophrenia", [], None),
         ],
-        ["id", "name", "synonyms"],
+        "id: string, name: string, synonyms: array<string>, description: string",
     )
     associations = spark.createDataFrame(
         [("ENSG00000157764", "EFO_0003767", 0.5)],

@@ -161,6 +161,18 @@ def test_openfda_step(spark):
     assert all(r.llr > r.critval for r in sig)
 
 
+def test_openfda_raw_blacklist_file(spark):
+    """The headerless blacklist file (PrepareBlacklistData.scala:8-16) has
+    its own key: one positional column, lowered, trimmed, '^' -> quote."""
+    raw = spark.createDataFrame(
+        [(i, "D0", r) for i, r in enumerate(["R0", "Bad's pain", "R1"] * 10)],
+        ["safetyreportid", "drug_name", "reaction"],
+    )
+    blacklist = spark.createDataFrame([(" BAD^S PAIN ",)], ["_c0"])
+    out = run_step(spark, "openfda", {"fda_events": raw, "blacklist_raw": blacklist})
+    assert {r.reaction for r in out["unfiltered"].collect()} == {"r0", "r1"}
+
+
 def test_openfda_raw_faers_preparation(spark):
     """PrePrepRawFdaData + PrepareAdverseEventData + PrepareDrugList +
     AttachMeddraData over raw FAERS-shaped documents."""
@@ -243,7 +255,7 @@ def test_openfda_raw_faers_preparation(spark):
     ]
     out = run_step(
         spark, "openfda",
-        {"fda_events": spark.createDataFrame(rows + more, schema), "drug_list": drugs},
+        {"fda_raw": spark.createDataFrame(rows + more, schema), "chembl": drugs},
     )
     pairs = {(r.drug, r.reaction) for r in out["unfiltered"].collect()}
     assert ("aspirin", "headache's pain") in pairs
@@ -457,8 +469,9 @@ def test_interaction_string_gtf_mapping_and_export(spark):
         "string": string_df, "ensproteins": ensproteins,
         # generated-mapping path needs targets; give an empty-protein target
         "targets": spark.createDataFrame(
-            [("ENSG00000000011", None)],
-            "id: string, proteinIds: array<struct<id:string,source:string>>"),
+            [("ENSG00000000011", None, None)],
+            "id: string, proteinIds: array<struct<id:string,source:string>>, "
+            "dbXRefs: array<struct<id:string,source:string>>"),
     }, string_version="12.0")
     ev = out["interaction_evidences"].collect()
     # pair 1 resolves through the GTF LUT; pair 2 drops its zero channels

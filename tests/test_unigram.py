@@ -21,7 +21,10 @@ from platform_etl_backend_spark.operators.unigram import (
     viterbi_segment,
     word_types,
 )
+from spark_helpers import session_scoped_conf
 from tests.conftest import load
+
+TINY_INPUT_CONF = {"spark.sql.shuffle.partitions": "1", "spark.sql.adaptive.enabled": "false"}
 
 
 def py_portable_ln_ratio(a: int, b: int) -> float:
@@ -158,15 +161,18 @@ def test_em_matches_python(corpus):
 )
 def test_viterbi_property_random_words(spark, ws):
     """Random words (including chars/pieces absent from the seed vocab —
-    exercising the UNK fallback) segment identically to the python model."""
-    df = spark.createDataFrame([(i, w) for i, w in enumerate(ws)], ["doc_id", "text"])
-    words = word_types(df, "doc_id", "text")
-    vocab = seed_piece_costs(words)
-    costs = {r["piece"]: r["cost_micro"] for r in vocab.collect()}
-    for r in viterbi_segment(words, vocab).collect():
-        pieces, cost = py_viterbi(r["word"], costs)
-        assert r["pieces"] == "|".join(pieces), r["word"]
-        assert r["cost_micro"] == cost, r["word"]
+    exercising the UNK fallback) segment identically to the python model.
+    At most 12 words per example: one shuffle partition and no adaptive
+    re-planning cut the per-job overhead that dominates each example."""
+    with session_scoped_conf(spark, TINY_INPUT_CONF):
+        df = spark.createDataFrame([(i, w) for i, w in enumerate(ws)], ["doc_id", "text"])
+        words = word_types(df, "doc_id", "text")
+        vocab = seed_piece_costs(words)
+        costs = {r["piece"]: r["cost_micro"] for r in vocab.collect()}
+        for r in viterbi_segment(words, vocab).collect():
+            pieces, cost = py_viterbi(r["word"], costs)
+            assert r["pieces"] == "|".join(pieces), r["word"]
+            assert r["cost_micro"] == cost, r["word"]
 
 
 def test_tiebreak_prefers_shortest_last_piece(spark):
