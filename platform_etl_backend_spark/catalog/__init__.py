@@ -68,6 +68,10 @@ _DRIVER_WINDOW: tuple[str, ...] = (
     #    shingle window count (operators/dedup.py).
     "q_prefix_jaccard",
     "q_containment_join",
+    # -- round-13 changed plans: operators.stats.with_llr projects each
+    #    ratio log's steps separately (same llr, new plan shape).
+    "q_llr_contingency",
+    "q_montecarlo_critical",
     # -- stale rotation prefix, deterministic order (evidence round asc,
     #    then name) — derived by tests/test_evidence_freshness.py.
     # round-4-latest:
@@ -119,8 +123,6 @@ _DRIVER_WINDOW: tuple[str, ...] = (
     "q_adamic_adar",
     "q_ams_sketch",
     "q_anova_f",
-    "q_attribution",
-    "q_bh_fdr",
 )
 
 

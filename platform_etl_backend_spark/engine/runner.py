@@ -123,7 +123,6 @@ def main(argv: list[str]) -> int:
     if args.command == "run":
         run_steps(args.steps, load_config(args.config))
     elif args.command == "profile":
-        from platform_etl_backend_spark.engine.session import get_spark
         from platform_etl_backend_spark.operators.profile import profile_table
 
         spark = get_spark("profile")

@@ -16,6 +16,16 @@ Design-for-100TB notes
 - Arrow is enabled for the few pandas_udf paths (Monte-Carlo, multimodal).
 - Session timezone pinned to UTC so timestamp semantics don't depend on the
   machine the driver runs on.
+- The driver JVM runs on the C1 JIT only (``-XX:TieredStopAtLevel=1``). A
+  ``run`` or ``query`` process lives for seconds to minutes, and C2's
+  compiler threads spend more CPU optimising Spark's own code than the
+  optimised code gives back in that time (SCALE.md "Session defaults" has
+  the measured trade-off). The flag goes in
+  ``spark.driver.defaultJavaOptions``, which Spark's launcher puts before
+  ``spark.driver.extraJavaOptions``, so a caller's own extra options keep
+  it. It takes effect only when PySpark launches the driver JVM (a session
+  attached to a running JVM keeps that JVM's flags), and executors, which
+  are separate JVMs on a cluster, keep C2.
 """
 
 from __future__ import annotations
@@ -45,6 +55,7 @@ DEFAULT_CONF: dict[str, str] = {
     # and this floor is a no-op.
     "spark.sql.files.minPartitionNum": "32",
     "spark.ui.enabled": "false",
+    "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1",
 }
 
 

@@ -42,13 +42,16 @@ LN2 = 0.6931471805599453  # nearest double to ln(2); shared literal
 _COEFS = [1.0 / (2 * i + 1) for i in range(1, 12)]
 
 
-def portable_ln_ratio(a: Column, b: Column) -> Column:
-    """ln(a/b) as a Spark Column; a, b positive integral columns."""
-    a = a.cast("bigint")
-    b = b.cast("bigint")
+def ln_ratio_k(a: Column, b: Column) -> Column:
+    """Step 1 of :func:`portable_ln_ratio` over bigint ``a``, ``b``: the
+    power-of-two exponent ``k`` from the integer bit lengths."""
     la = F.length(F.bin(a)) - 1
     lb = F.length(F.bin(b)) - 1
-    k = (lb - la).cast("int")
+    return (lb - la).cast("int")
+
+
+def ln_ratio_m(a: Column, b: Column, k: Column) -> Column:
+    """Step 2: the reduced ratio ``m = (a/b) * 2^k`` in (0.5, 2)."""
     one = F.lit(1).cast("bigint")
     # F.shiftleft only takes a literal bit count — call the SQL function
     # with a Column argument instead.
@@ -56,15 +59,34 @@ def portable_ln_ratio(a: Column, b: Column) -> Column:
     p2 = F.when(k >= 0, shl(k).cast("double")).otherwise(
         F.lit(1.0) / shl(-k).cast("double")
     )
-    m = (a.cast("double") / b.cast("double")) * p2
-    z = (m - F.lit(1.0)) / (m + F.lit(1.0))
-    zz = z * z
+    return (a.cast("double") / b.cast("double")) * p2
+
+
+def ln_ratio_z(m: Column) -> Column:
+    """Step 3: the atanh argument ``z = (m-1)/(m+1)``."""
+    return (m - F.lit(1.0)) / (m + F.lit(1.0))
+
+
+def ln_ratio_finish(z: Column, zz: Column, k: Column) -> Column:
+    """Step 4: ``ln m − k·ln2`` from ``z``, ``zz = z*z`` and ``k``."""
     acc = F.lit(_COEFS[-1])
     for c in reversed(_COEFS[:-1]):
         acc = F.lit(c) + zz * acc
     poly = F.lit(1.0) + zz * acc
     lnm = (F.lit(2.0) * z) * poly
     return lnm - k.cast("double") * F.lit(LN2)
+
+
+def portable_ln_ratio(a: Column, b: Column) -> Column:
+    """ln(a/b) as a Spark Column; a, b positive integral columns. The four
+    steps are public so a caller with several ratio logs in one row can
+    compute each step in its own projection (``operators.stats.with_llr``);
+    inlined, as here, they form one expression tree."""
+    a = a.cast("bigint")
+    b = b.cast("bigint")
+    k = ln_ratio_k(a, b)
+    z = ln_ratio_z(ln_ratio_m(a, b, k))
+    return ln_ratio_finish(z, z * z, k)
 
 
 def duck_portable_ln_ratio(a: str, b: str) -> str:

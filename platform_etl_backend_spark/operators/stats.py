@@ -33,26 +33,53 @@ from pyspark.sql import types as T
 
 from platform_etl_backend_spark.functions.portable_math import (
     duck_portable_ln_ratio,
-    portable_ln_ratio,
+    ln_ratio_finish,
+    ln_ratio_k,
+    ln_ratio_m,
+    ln_ratio_z,
 )
 
 
-def _portable_llr() -> Column:
-    """LLR over A/B/C/D columns as a sum of engine-portable ratio logs.
+def with_llr(contingency: DataFrame) -> DataFrame:
+    """Append ``llr`` to an A/B/C/D contingency frame as a sum of
+    engine-portable ratio logs, each log's steps in successive projections.
 
-    Association order is fixed — ``(aterm + cterm) - acterm`` — and mirrored
-    exactly by :func:`duck_portable_llr` (SQL's left-assoc ``x + y - z``).
-    Only valid where C ≥ 1 (callers filter; A ≥ 1 by construction).
+    Inlined, the three ``portable_ln_ratio`` trees make one projection whose
+    generated code grows beyond 64 KB, so whole-stage codegen falls back to
+    interpreted code. Projecting the intermediates (the bigint operands,
+    ``k``, ``m``, ``z``, ``zz``) keeps each stage small; the operations and
+    their order are those of ``portable_ln_ratio``, so the values are
+    bit-identical. Association order is fixed — ``(aterm + cterm) -
+    acterm`` — and mirrored exactly by :func:`duck_portable_llr` (SQL's
+    left-assoc ``x + y - z``). Only valid where C ≥ 1 (callers filter;
+    A ≥ 1 by construction).
     """
     A, B, C, D = (F.col(x) for x in "ABCD")
-    aterm = A * portable_ln_ratio(A, A + B)
-    cterm = C * portable_ln_ratio(C, C + D)
-    acterm = (A + C) * portable_ln_ratio(A + C, A + B + C + D)
-    return aterm + cterm - acterm
+    ratios = {"a": (A, A + B), "c": (C, C + D), "ac": (A + C, A + B + C + D)}
+
+    def v(t: str, step: str) -> Column:
+        return F.col(f"_llr_{t}_{step}")
+
+    stages = [
+        {"num": lambda t: ratios[t][0].cast("bigint"),
+         "den": lambda t: ratios[t][1].cast("bigint")},
+        {"k": lambda t: ln_ratio_k(v(t, "num"), v(t, "den"))},
+        {"m": lambda t: ln_ratio_m(v(t, "num"), v(t, "den"), v(t, "k"))},
+        {"z": lambda t: ln_ratio_z(v(t, "m"))},
+        {"zz": lambda t: v(t, "z") * v(t, "z")},
+    ]
+    df = contingency
+    for stage in stages:
+        df = df.withColumns(
+            {f"_llr_{t}_{step}": make(t) for step, make in stage.items() for t in ratios}
+        )
+    ln = {t: ln_ratio_finish(v(t, "z"), v(t, "zz"), v(t, "k")) for t in ratios}
+    llr = A * ln["a"] + C * ln["c"] - (A + C) * ln["ac"]
+    return df.select(*contingency.columns, llr.alias("llr"))
 
 
 def duck_portable_llr() -> str:
-    """The DuckDB mirror of :func:`_portable_llr` over A/B/C/D columns."""
+    """The DuckDB mirror of :func:`with_llr` over A/B/C/D columns."""
     pl_a = duck_portable_ln_ratio("A", "A + B")
     pl_c = duck_portable_ln_ratio("C", "C + D")
     pl_ac = duck_portable_ln_ratio("A + C", "A + B + C + D")
@@ -117,7 +144,7 @@ def llr_contingency(
             F.col("uniq_report_ids_by_reaction").alias("reaction_total"),
         )
         .distinct()
-        .withColumn("llr", _portable_llr())
+        .transform(with_llr)
         .where(F.col("C") >= 1)
     )
 
@@ -186,7 +213,7 @@ def contingency_via_groupby(
             F.col("n_drug").alias("drug_total"),
             F.col("n_reaction").alias("reaction_total"),
         )
-        .withColumn("llr", _portable_llr())
+        .transform(with_llr)
         .where(F.col("C") >= 1)
     )
 

@@ -273,9 +273,17 @@ def openfda_step(
     critvals = montecarlo_critical_values(
         contingency, "drug", permutations=permutations, percentile=percentile
     )
+    # ``coalesce(llr, -inf) > critical_value`` keeps exactly the rows of
+    # ``llr > critical_value``, but Catalyst infers no ``isnotnull(llr)``
+    # from it; that inferred filter would be pushed below the LLR
+    # projections with the whole ratio-log tree inlined, and its generated
+    # code grows beyond 64 KB.
     significant = (
         contingency.join(critvals, "drug")
-        .where((F.col("llr") > F.col("critical_value")) & (F.col("A") > 2))
+        .where(
+            (F.coalesce(F.col("llr"), F.lit(float("-inf"))) > F.col("critical_value"))
+            & (F.col("A") > 2)
+        )
         .select(
             "drug",
             F.col("reaction").alias("event"),

@@ -227,6 +227,11 @@ CHANGED_CONTRACTS: dict[str, int] = {
     #   df rollup joined back (same pairs and scores, new plan shape).
     "q_prefix_jaccard": 12,
     "q_containment_join": 12,
+    # round 13: operators.stats.with_llr computes each ratio log's steps in
+    # successive projections instead of one inlined tree (bit-identical
+    # llr, new plan shape for every contingency_via_groupby consumer).
+    "q_llr_contingency": 13,
+    "q_montecarlo_critical": 13,
 }
 
 

@@ -24,7 +24,6 @@ import json
 import textwrap
 
 import pytest
-from py4j.protocol import Py4JJavaError
 
 from spark_helpers import session_scoped_conf
 from platform_etl_backend_spark.steps import run_step
@@ -417,18 +416,7 @@ def test_step_output_schema_pinned(spark, tmp_path, step):
     assert got == SCHEMA_PINS[step]
 
 
-_CODEGEN_XFAIL = {
-    "openfda": pytest.mark.xfail(
-        strict=True, raises=Py4JJavaError,
-        reason="ROADMAP item 4(a): the LLR projection's generated code grows "
-               "beyond 64 KB",
-    ),
-}
-
-
-@pytest.mark.parametrize(
-    "step", [pytest.param(s, marks=_CODEGEN_XFAIL.get(s, ())) for s in sorted(BUILDERS)]
-)
+@pytest.mark.parametrize("step", sorted(BUILDERS))
 def test_step_outputs_compile_without_codegen_fallback(spark, tmp_path, step):
     """Every output write compiles whole-stage codegen; with the fallback
     off, a plan that would drop to interpreted code fails the write."""
